@@ -309,244 +309,6 @@ if _only:
 # n=3: with min-of-2, a single noisy run still sets half the floor.
 N_RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
 
-# Pre-adjudicated round-over-round regression flags: queries whose
-# slowdown against the previous BENCH_LOCAL.json has a KNOWN cause
-# (a deliberate corpus/methodology change this round). Anything not
-# listed prints as UNEXPLAINED and must be attributed before the
-# round ships. Entries should be cleared once the new baseline is
-# committed (they adjudicate exactly one transition), EXCEPT
-# standing bistability waivers, which must pin the set of known
-# static-plan fingerprints (``pinned_fp_init``) — a waiver with no
-# pin is invalidated the moment the static plan moves (round-12
-# advice: a stale hand waiver must never mask a genuine plan change,
-# that is the exact blind spot the fingerprint exists to close).
-# Value shape: {"note": str, "pinned_fp_init": list[str] | absent}.
-_REGRESSION_ADJUDICATIONS: dict[str, dict] = {
-    # Attributed round 11 (the bar flagged it UNEXPLAINED because io
-    # moved): q21's EXISTS semi join sits at the static
-    # autoBroadcastJoinThreshold boundary for the projected lineitem
-    # side, so committed artifacts alternate between two states —
-    # statically-planned BHJ (0.67 MB shuffle) and SMJ-planned then
-    # AQE-converted-to-broadcast (10.13 MB written before the
-    # runtime conversion). Both states recur across the r8-r10
-    # committed BENCH_LOCAL.json history with bit-identical values
-    # per state and overlapping wall (1.1-1.6 s); the logical rewrite
-    # (one LeftSemi + one LeftAnti, plan-asserted) is identical in
-    # both. At 100 TB stats keep the SMJ — the declarative form is
-    # the scale-correct one; the flip is estimate noise at gate SF,
-    # not a plan defect.
-    "tpch_q21_waiting_supplier": {
-        "note": (
-            "bistable static broadcast-threshold estimate: "
-            "BHJ-planned (0.67 MB) vs SMJ-planned + AQE-converted "
-            "(10.13 MB), both states recurring across committed "
-            "r8-r10 artifacts with overlapping wall — estimate "
-            "noise at gate SF, same logical plan"
-        ),
-        # every static fingerprint observed across the committed
-        # BENCH_LOCAL.json history since the r12 fp split (the two
-        # final-plan states 90ba5945/cd75f952 share it — the flip is
-        # the AQE runtime conversion, not static planning). A run
-        # whose static plan lands OUTSIDE this set is a genuine
-        # code/stats change and escalates past this waiver.
-        "pinned_fp_init": ["fc523a44b39d330c"],
-    },
-    # (round-12's multimodal_frame_sample ambient-drift waiver and
-    # round-14's synthetic_stream_availablenow one-transition waiver
-    # were each removed per their own cleanup rule: the next
-    # committed BENCH_LOCAL.json baseline absorbs the transition.)
-}
-
-
-def regression_flag_fires(p: float | None, t: float) -> bool:
-    """The per-query flag gate: RAW wall ratio > 1.25x AND raw delta
-    > 0.3 s vs the previous artifact. Raw, not canary-adjusted
-    (round-14 verdict fix #2): normalizing the GATE by the canary
-    created flags whenever the machine sped up between runs — 51
-    auto-waived rows in the r14 driver tail, including queries that
-    got FASTER. The canary ratio is applied only downstream, to the
-    adjudication of queries this gate actually flags."""
-    return bool(p) and t > p * 1.25 and t - p > 0.3
-
-
-def adjudicate_regression(
-    name: str,
-    p: float,
-    t: float,
-    pfp: str | None,
-    nfp: str | None,
-    pfi: str | None,
-    nfi: str | None,
-    io_same: bool,
-    waivers: dict | None = None,
-):
-    """Classify a round-over-round per-query slowdown (prev wall
-    ``p`` -> now ``t``) using the dual plan fingerprints and io
-    deltas. Returns ``(adjudication, fp_moved)`` where anything
-    starting with "UNEXPLAINED" must be attributed by hand before the
-    round ships. Extracted from main() so the decision tree — in
-    particular the waiver-vs-fingerprint precedence — is unit-tested
-    (tests/test_bench_audit.py), not just exercised.
-
-    Precedence (round-12 advice): a manual waiver applies ONLY while
-    the static plan is inside the waiver's pinned set — taking the
-    waiver before the fpi check would let a stale hand entry mask a
-    genuine static-plan change, the exact blind spot the fingerprint
-    exists to close. A pin-less waiver survives only while fpi is
-    provably unmoved (False, not None/unknown).
-
-    Magnitude bound (round-13 advice): a pin says "this static plan
-    is known and fine", which is evidence about the PLAN, not about
-    runtime cost — an io-moved 10x slowdown with an unchanged static
-    plan is still a real CPU/runtime regression. So even inside the
-    pinned set the waiver only covers wall ratios up to the waiver's
-    ``wall_cap`` (default 3.0x — comfortably above every committed
-    same-plan spread: seven dedup_groups runs spanned 1.42x, q21's
-    bistable states overlap at 1.1-1.6 s); past the cap the flag
-    escalates to UNEXPLAINED."""
-    fp_moved = pfp != nfp if (pfp and nfp) else None
-    fpi_moved = pfi != nfi if (pfi and nfi) else None
-    adjudication = None
-    waiver = (_REGRESSION_ADJUDICATIONS if waivers is None
-              else waivers).get(name)
-    if waiver is not None:
-        pinned = waiver.get("pinned_fp_init")
-        fpi_ok = nfi in pinned if pinned else fpi_moved is False
-        wall_cap = waiver.get("wall_cap", 3.0)
-        if fpi_ok and t > p * wall_cap:
-            adjudication = (
-                "UNEXPLAINED (static plan inside the waiver's "
-                f"pinned set but wall moved {t / p:.2f}x > the "
-                f"{wall_cap}x waiver cap — a same-plan runtime "
-                "regression the waiver must not mask)"
-            )
-        elif fpi_ok:
-            adjudication = waiver["note"]
-        elif fpi_moved or (pinned and nfi is not None):
-            adjudication = (
-                "UNEXPLAINED (static plan fingerprint "
-                f"{pfi} -> {nfi} is outside the manual "
-                f"waiver's pinned set {pinned} — the "
-                "waiver is stale; attribute the plan "
-                "change by hand)"
-            )
-        # else: no fingerprint captured this run — fall through to
-        # the mechanical rules below, which handle the
-        # fpi_moved-is-None case explicitly
-    if adjudication is None and fpi_moved:
-        # Mechanical plan-flip detection (round-11 verdict ask #2):
-        # the STATIC (initial) plan moved — that only happens on a
-        # genuine code/plan/stats change, never on AQE runtime races
-        # — so this must be attributed by hand regardless of io,
-        # closing the CPU-only-plan-change blind spot.
-        adjudication = (
-            "UNEXPLAINED (static plan fingerprint moved "
-            f"{pfi} -> {nfi})"
-        )
-    if adjudication is None and fp_moved and fpi_moved is False:
-        # The static plan is identical but the FINAL adaptive plan
-        # differs: an AQE runtime re-plan (build-side race on ~equal
-        # broadcast candidates, stage-reuse timing, q21-class
-        # threshold conversion). Waivable only when the bytes stayed
-        # bit-identical inside the variance band; a runtime re-plan
-        # that MOVED data is exactly the q21 class and needs
-        # attribution.
-        if io_same and t <= p * 2.0:
-            adjudication = (
-                "static plan identical; AQE runtime "
-                "re-plan with bit-identical io inside "
-                "the 2x band — runtime nondeterminism, "
-                "not a code change"
-            )
-        else:
-            adjudication = (
-                "UNEXPLAINED (AQE runtime re-plan "
-                f"{pfp} -> {nfp} with moved io or >2x)"
-            )
-    if adjudication is None and fp_moved and fpi_moved is None:
-        # no initial-plan baseline yet (first round after the
-        # split): fall back to the conservative rule
-        adjudication = (
-            "UNEXPLAINED (plan fingerprint moved "
-            f"{pfp} -> {nfp})"
-        )
-    if adjudication is None:
-        # First-line auto-adjudication, the same evidence the manual
-        # r9/r10 investigations used: if the query moved EXACTLY the
-        # bytes it moved in the baseline run (shuffle/spill/input
-        # identical at 0.01 MB granularity), the plan did not change
-        # — a plan flip, corpus edit, or superstep change moves
-        # bytes; ambient machine slowness does not. Anything whose io
-        # DID move stays UNEXPLAINED and must be attributed by hand
-        # before shipping. CAPPED (round-10 advice): identical bytes
-        # rule out plan flips that MOVE data, but CPU-only changes
-        # (extra codegen stage, UDF overhead, an added local agg)
-        # move zero bytes while genuinely slowing a query — so the
-        # waiver only covers the variance band (<= 2.0x). An
-        # io-identical regression beyond 2x is not "ambient machine
-        # variance" on any box we have measured (seven committed
-        # dedup_groups runs spanned 1.42x) and stays UNEXPLAINED for
-        # hand attribution.
-        if io_same and t <= p * 2.0:
-            adjudication = (
-                "io-identical to baseline run (plan and "
-                "data volume unchanged) within the 2x "
-                "variance band — ambient machine variance"
-            )
-            if fp_moved is False:
-                adjudication = (
-                    "plan fingerprint AND io identical "
-                    "to baseline run within the 2x "
-                    "variance band — ambient machine "
-                    "variance (mechanically confirmed)"
-                )
-        else:
-            adjudication = "UNEXPLAINED"
-    return adjudication, fp_moved
-
-
-def adjudicate_throughput_floor(
-    tp_now: float,
-    floor: float,
-    canary_ratio: float,
-    silver_fpi_same: bool | None,
-    silver_io_same: bool | None,
-):
-    """Adjudicate the silver-throughput floor (round 14): the
-    dedicated throughput runs execute at the very END of the bench —
-    exactly where a slow VM phase lands hardest — and the trailing
-    driver-round comparators carry no canary, so the raw check
-    flagged ambient drift as a pipeline regression. Normalize the
-    measured figure by the canary ratio vs the previous local
-    artifact (same clamp discipline as the per-query flags) and,
-    when the normalized figure clears the floor, require the
-    mechanical plan evidence (silver_pipeline_events' static
-    fingerprint AND io identical) before waiving. Returns
-    (adjudication_or_None, tp_adjusted)."""
-    tp_adj = round(tp_now * canary_ratio)
-    if tp_now >= floor:
-        return None, tp_adj
-    if tp_adj >= floor and silver_fpi_same and silver_io_same:
-        return (
-            "below the raw floor but canary-adjusted above it "
-            f"({tp_now} raw, {tp_adj} adjusted at canary ratio "
-            f"{canary_ratio:.2f}) with silver_pipeline_events' static "
-            "plan fingerprint and io identical to the previous "
-            "artifact — ambient machine drift, not a pipeline "
-            "regression"
-        ), tp_adj
-    return (
-        "UNEXPLAINED throughput regression: "
-        f"{tp_now} raw / {tp_adj} canary-adjusted < floor "
-        f"{round(floor)}"
-        + (
-            ""
-            if (silver_fpi_same and silver_io_same)
-            else " (silver plan fingerprint or io moved, or no "
-            "previous artifact to compare)"
-        )
-    ), tp_adj
-
 
 def _bench_stream_boot(spark) -> float:
     """Time a minimal availableNow stream (1-row parquet in, parquet
@@ -1012,9 +774,8 @@ def _plan_fingerprinter(spark):
     structure (node tree, join strategies, exchange placement,
     codegen spans), so: fingerprint moved => the plan changed;
     fingerprint identical => a wall-time move is variance or
-    same-plan CPU cost. Makes plan-flip-vs-variance adjudication
-    mechanical instead of prose (it previously inferred plan identity
-    from io bytes alone, which is blind to CPU-only plan changes).
+    same-plan CPU cost (io bytes alone are blind to CPU-only plan
+    changes).
 
     TWO hashes are kept per query, because two different things can
     move a plan description (measured on this engine, round 12):
@@ -1029,10 +790,8 @@ def _plan_fingerprinter(spark):
       two ~equal 8.5 MiB broadcast candidates race; q21-class
       runtime conversions are the same family).
 
-    Adjudication reads them as: fp_init moved => real plan change,
-    attribute by hand; fp_init same + fp moved => AQE runtime
-    re-plan, waivable when io is bit-identical inside the variance
-    band; both same => strongest variance confirmation.
+    Read together: fp_init moved => real plan change; fp_init same +
+    fp moved => AQE runtime re-plan; both same => same plan.
 
     Returns poll(after_exec_id) -> (new_max_id, fp_or_None,
     fp_init_or_None); walks the executions list from the NEWEST end
@@ -1117,31 +876,6 @@ def _plan_fingerprinter(spark):
     return poll
 
 
-def _vm_canary_s() -> float:
-    """Fixed pure-CPU calibration task (round-13 verdict ask #7):
-    r11->r13 wall moved -10%/+11% on near-identical code and every
-    round's adjudication leaned on "uniform ratio + fingerprints
-    identical" INFERENCE to call it ambient VM drift. This turns
-    that inference into a measurement: a constant numpy workload —
-    no io, no Spark, no allocation growth — timed at bench start and
-    end. The ratio of this number across two artifacts is the
-    machine-speed ratio between those runs, so the regression
-    adjudicator can normalize per-query wall ratios by it before
-    flagging (a slow VM moves the canary and the queries together; a
-    code regression moves only the queries)."""
-    import numpy as np
-
-    x = np.arange(2_000_000, dtype=np.float64)
-    t0 = time.perf_counter()
-    acc = 0.0
-    for _ in range(6):
-        acc += float(np.sin(x).sum())
-    dt = time.perf_counter() - t0
-    if acc != acc:  # NaN guard keeps the work observable
-        raise AssertionError("canary produced NaN")
-    return round(dt, 4)
-
-
 def main() -> None:
     from big_data_for_smart_houses_spark.queries import QUERIES
     from big_data_for_smart_houses_spark.session import get_spark
@@ -1155,11 +889,6 @@ def main() -> None:
 
     # warm-up: JVM, codegen, parquet footer caches
     spark.read.parquet(f"{SF_DIR}/region.parquet").count()
-
-    try:
-        canary_start = _vm_canary_s()
-    except Exception:  # noqa: BLE001 - calibration is best-effort
-        canary_start = None
 
     # One failing query must not zero out the whole round's numbers
     # (round 3 lost every timing to a single AnalysisException): record
@@ -1183,15 +912,14 @@ def main() -> None:
         last_exec_id = -1
 
     def _micro_capture(name):
-        """io + plan-fingerprint capture for the micro-bench entries
-        (scan_compacted/scan_small_files/skew_join_plain/salted),
-        which execute outside the HEADLINE loop — round-12 verdict
-        ask #2: they were the only 4 timings with no query_plan_fp,
-        and their plans (compaction payoff, salt fan-out) are
-        exactly what those benchmarks exist to pin. ``name=None``
-        polls-and-discards setup executions so they are never billed
-        to the next named entry. Same capture discipline as the main
-        loop: first (cold) run only."""
+        """io + plan-fingerprint capture for one entry, polled AFTER it
+        runs so AQE plans are final. Both are properties of the plan,
+        not the run, so callers capture on the first (cold) run only:
+        each poll walks every retained StageData over py4j, and polling
+        warm runs would bill wall time to every min-of-N timing for no
+        new data. ``name=None`` polls-and-discards (setup writes, a
+        failed query) so those executions are never billed to the next
+        named entry."""
         nonlocal last_stage_id, last_exec_id, poll_stages, poll_fp
         if poll_stages is not None:
             try:
@@ -1232,46 +960,13 @@ def main() -> None:
             except Exception as exc:  # noqa: BLE001 - report, don't die
                 errors[name] = f"{type(exc).__name__}: {exc}"[:300]
                 print(f"  [{run}] {name}: ERROR {errors[name]}", file=sys.stderr)
-                # poll-and-discard the failed query's stages so its
-                # bytes are not attributed to the next query's entry
-                if run == 0 and poll_stages is not None:
-                    try:
-                        last_stage_id, _ = poll_stages(last_stage_id)
-                    except Exception:  # noqa: BLE001
-                        poll_stages = None
-                if run == 0 and poll_fp is not None:
-                    try:
-                        last_exec_id, _, _ = poll_fp(last_exec_id)
-                    except Exception:  # noqa: BLE001
-                        poll_fp = None
+                if run == 0:
+                    _micro_capture(None)
                 continue
             t = round(time.perf_counter() - t0, 3)
             timings[name] = min(timings.get(name, t), t)
-            # I/O is a property of the plan, not the run: capture it
-            # once, on the first (cold) execution of each query —
-            # and poll ONLY during run 0. Each poll walks every
-            # retained StageData over py4j (~1000 round-trips late
-            # in the bench), so polling on warm runs would bill real
-            # wall-time to every min-of-N timing for zero new data.
-            if run == 0 and poll_stages is not None:
-                try:
-                    last_stage_id, io = poll_stages(last_stage_id)
-                    if name not in query_io:
-                        query_io[name] = io
-                except Exception:  # noqa: BLE001
-                    poll_stages = None
-            # Plan fingerprint follows the same capture discipline:
-            # run 0 only (the plan is a property of the code + data,
-            # not the run), polled AFTER the query so AQE plans are
-            # final.
-            if run == 0 and poll_fp is not None:
-                try:
-                    last_exec_id, fp, fpi = poll_fp(last_exec_id)
-                    if fp is not None and name not in query_fp:
-                        query_fp[name] = fp
-                        query_fp_init[name] = fpi
-                except Exception:  # noqa: BLE001
-                    poll_fp = None
+            if run == 0:
+                _micro_capture(name)
             print(f"  [{run}] {name}: {t:.3f}s", file=sys.stderr)
 
     # Stream-boot baseline: the fixed cost every `*_availablenow`
@@ -1323,10 +1018,6 @@ def main() -> None:
         "queries": timings,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
-    # The reference's published baseline is consumer THROUGHPUT
-    # (300+ events/s, reference README.md:265); report the silver
-    # pipeline's end-to-end equivalent in the same unit so the
-    # comparison never needs hand arithmetic.
     if out_boot is not None:
         out["stream_boot_s"] = out_boot
     if scale10x is not None:
@@ -1336,24 +1027,16 @@ def main() -> None:
     if query_fp:
         out["query_plan_fp"] = query_fp
         out["query_plan_fp_init"] = query_fp_init
+    # The reference's published baseline is consumer THROUGHPUT
+    # (300+ events/s, reference README.md:265); report the silver
+    # pipeline's end-to-end equivalent in the same unit so the
+    # comparison never needs hand arithmetic.
     silver_t = timings.get("silver_pipeline_events")
     if silver_t:
-        # ADVICE r9: the best-of-6 figure is not comparable to prior
-        # rounds' min-of-3-interleaved numbers. Report BOTH for this
-        # transition round so round-over-round deltas are computed
-        # under a constant methodology.
-        n_ev_pre = spark.read.parquet(
-            f"{SF_DIR}/events.parquet"
-        ).count()
-        out["silver_throughput_interleaved_min3_events_per_s"] = round(
-            n_ev_pre / silver_t
-        )
-        # Throughput is the one headline the baseline comparison
-        # hangs on, so it gets tighter methodology than the per-query
-        # table (round-8 verdict ask #8: the r7->r8 dip was run
-        # noise): best of SIX — the three interleaved runs above plus
-        # three dedicated back-to-back runs here at end-of-bench,
-        # when the JVM/codegen/page cache are as warm as they get.
+        # Best of SIX: the three interleaved runs above plus three
+        # dedicated back-to-back runs here at end-of-bench, when the
+        # JVM/codegen/page cache are as warm as they get.
+        n_events = spark.read.parquet(f"{SF_DIR}/events.parquet").count()
         fn = QUERIES.get("silver_pipeline_events")
         for _ in range(3):
             t0 = time.perf_counter()
@@ -1361,191 +1044,9 @@ def main() -> None:
                 "noop"
             ).save()
             silver_t = min(silver_t, time.perf_counter() - t0)
-        n_events = n_ev_pre
         out["silver_throughput_events_per_s"] = round(n_events / silver_t)
-        out["silver_throughput_methodology"] = (
-            "events / best-of-6 silver_pipeline wall "
-            "(3 interleaved min-of-N runs + 3 dedicated "
-            "end-of-bench warm runs); round-over-round comparisons "
-            "use THIS best-of-6 field (the parsed "
-            "silver_throughput_events_per_s in BENCH_r{N}.json), "
-            "never the interleaved-min3 transition figure"
-        )
-        # Mechanical throughput regression bar (round-12 verdict ask
-        # #3): query wall has a per-query bar and the 10x sweep has a
-        # ratio bar, but the r11->r12 driver throughput moved -19%
-        # with no flag because throughput had none. Floor = best of
-        # the last 3 driver rounds' parsed best-of-6 figures / 1.5
-        # (the committed same-code spread is 76,977-94,344 events/s
-        # ~= 1.23x, so 1.5x separates ambient VM drift from a real
-        # pipeline regression). Below the floor the artifact carries
-        # an UNEXPLAINED flag that must be adjudicated before the
-        # round ships, exactly like a per-query regression.
-        import glob as _glob
-
-        trailing = []
-        here = os.path.dirname(os.path.abspath(__file__))
-        for f in sorted(_glob.glob(os.path.join(here, "BENCH_r*.json"))):
-            try:
-                with open(f) as fh:
-                    parsed = (json.load(fh).get("parsed") or {})
-                tp = parsed.get("silver_throughput_events_per_s")
-                if tp:
-                    trailing.append((f, tp))
-            except (OSError, ValueError):
-                continue
-        trailing = trailing[-3:]
-        if trailing:
-            best_f, best_tp = max(trailing, key=lambda x: x[1])
-            floor = best_tp / 1.5
-            out["silver_throughput_floor"] = {
-                "floor_events_per_s": round(floor),
-                "comparator": "best of trailing 3 driver rounds",
-                "best_round_file": os.path.basename(best_f),
-                "best_events_per_s": best_tp,
-            }
-            # Adjudication happens AFTER the end-of-run canary is
-            # measured (below), so the floor check can be normalized
-            # by machine speed the way the per-query flags are
-            # (round 14): the dedicated throughput runs execute at
-            # the very END of the bench, exactly where a slow VM
-            # phase lands hardest, and an un-normalized floor flags
-            # ambient drift as a pipeline regression.
     if errors:
         out["errors"] = errors
-    # Close the canary bracket at end-of-bench: two samples bound the
-    # machine's speed over the run; the MEAN is the run's calibration
-    # figure (a mid-run frequency step shows up as start/end skew in
-    # vm_canary_detail, so an adjudication can notice it).
-    try:
-        canary_end = _vm_canary_s()
-    except Exception:  # noqa: BLE001
-        canary_end = None
-    if canary_start is not None and canary_end is not None:
-        out["vm_canary_s"] = round((canary_start + canary_end) / 2, 4)
-        out["vm_canary_detail"] = {
-            "start": canary_start,
-            "end": canary_end,
-        }
-    # Round-over-round per-query regression bar (round-10 verdict ask
-    # #2 — the same discipline the 10x sweep applies to shuffle,
-    # applied to time): diff against the PREVIOUS committed
-    # BENCH_LOCAL.json before overwriting it, and flag any query
-    # slower by BOTH >1.25x AND >+0.3 s. Flags are reported in the
-    # artifact and the compact summary so COVERAGE's round-over-round
-    # claims are generated from the artifact, never hand-computed.
-    # Known methodology deltas can be pre-adjudicated in
-    # _REGRESSION_ADJUDICATIONS; everything else prints as
-    # UNEXPLAINED and should be attributed (variance? plan flip?
-    # corpus edit?) before the round ships.
-    local = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         "BENCH_LOCAL.json")
-    regressions = {}
-    try:
-        with open(local) as fh:
-            prev = json.load(fh)
-        prev_q = prev.get("queries", {})
-        prev_io = prev.get("query_io", {})
-        prev_fp = prev.get("query_plan_fp", {})
-        prev_fpi = prev.get("query_plan_fp_init", {})
-        # Ambient-drift normalization (round-13 verdict ask #7):
-        # divide each wall ratio by the machine-speed ratio the pure-
-        # CPU canary measured between the two artifacts, so a
-        # uniformly slower VM stops tripping per-query flags while a
-        # code regression (which moves queries but not the canary)
-        # still does. Clamped to [0.5, 2.0]: a canary claiming more
-        # than a 2x machine swing is itself suspect (or the workload
-        # isn't CPU-shaped), and adjudication should then see the
-        # raw ratios rather than trust it.
-        canary_ratio = 1.0
-        prev_canary = prev.get("vm_canary_s")
-        now_canary = out.get("vm_canary_s")
-        if prev_canary and now_canary:
-            canary_ratio = max(0.5, min(2.0, now_canary / prev_canary))
-            out["vm_canary_ratio_vs_prev"] = round(canary_ratio, 3)
-        # Throughput-floor adjudication, deferred to here so it can
-        # use the end-of-run canary and the previous artifact's plan
-        # fingerprints (round 14 — see adjudicate_throughput_floor).
-        flo = out.get("silver_throughput_floor")
-        tp_now = out.get("silver_throughput_events_per_s")
-        if flo and tp_now:
-            adjudication, tp_adj = adjudicate_throughput_floor(
-                tp_now,
-                flo["floor_events_per_s"],
-                canary_ratio,
-                silver_fpi_same=(
-                    prev_fpi.get("silver_pipeline_events") is not None
-                    and prev_fpi.get("silver_pipeline_events")
-                    == query_fp_init.get("silver_pipeline_events")
-                ),
-                silver_io_same=(
-                    prev_io.get("silver_pipeline_events") is not None
-                    and prev_io.get("silver_pipeline_events")
-                    == query_io.get("silver_pipeline_events")
-                ),
-            )
-            if canary_ratio != 1.0:
-                flo["throughput_canary_adjusted"] = tp_adj
-            if adjudication is not None:
-                flo["adjudication"] = adjudication
-                print(
-                    f"  THROUGHPUT FLOOR: {adjudication}",
-                    file=sys.stderr,
-                )
-        for name, t in timings.items():
-            p = prev_q.get(name)
-            t_adj = t / canary_ratio
-            # Flag on the RAW ratio only (regression_flag_fires); the
-            # canary stays as ESCALATION evidence: flagged queries are
-            # adjudicated at the normalized time, so a slow-VM run
-            # still auto-waives and a same-wall query on a faster
-            # machine still escalates.
-            if regression_flag_fires(p, t):
-                pio, nio = prev_io.get(name), query_io.get(name)
-                adjudication, fp_moved = adjudicate_regression(
-                    name,
-                    p,
-                    t_adj,
-                    pfp=prev_fp.get(name),
-                    nfp=query_fp.get(name),
-                    pfi=prev_fpi.get(name),
-                    nfi=query_fp_init.get(name),
-                    io_same=bool(pio and nio and pio == nio),
-                )
-                regressions[name] = {
-                    "prev_s": round(p, 3),
-                    "now_s": round(t, 3),
-                    "ratio": round(t / p, 2),
-                    "adjudication": adjudication,
-                }
-                if canary_ratio != 1.0:
-                    regressions[name]["ratio_canary_adjusted"] = round(
-                        t_adj / p, 2
-                    )
-                if fp_moved is not None:
-                    regressions[name]["plan_fp_moved"] = fp_moved
-    except (OSError, ValueError):
-        pass  # first run / no previous artifact: nothing to diff
-    # No previous artifact -> the floor adjudication above never ran;
-    # fall back to the raw (un-normalized) check so a below-floor
-    # figure is never silently unflagged.
-    _flo = out.get("silver_throughput_floor")
-    _tp = out.get("silver_throughput_events_per_s")
-    if _flo and _tp and "adjudication" not in _flo:
-        _adj, _ = adjudicate_throughput_floor(
-            _tp, _flo["floor_events_per_s"], 1.0, None, None
-        )
-        if _adj is not None:
-            _flo["adjudication"] = _adj
-            print(f"  THROUGHPUT FLOOR: {_adj}", file=sys.stderr)
-    if regressions:
-        out["regressions_vs_prev"] = regressions
-        for name, r in sorted(regressions.items()):
-            print(
-                f"  REGRESSION {name}: {r['prev_s']}s -> {r['now_s']}s "
-                f"({r['ratio']}x) [{r['adjudication']}]",
-                file=sys.stderr,
-            )
     payload = json.dumps(out)
     # The driver keeps only the TAIL of stdout (~2000 chars) and
     # parses the FINAL line: the full per-query JSON (250+ timings +
@@ -1554,6 +1055,8 @@ def main() -> None:
     # this script (committed per round), then print a compact summary
     # — same schema, "queries" trimmed to the slowest 5 — as the LAST
     # stdout line so the driver's parse always succeeds.
+    local = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                         "BENCH_LOCAL.json")
     with open(local, "w") as fh:
         fh.write(payload + "\n")
     slowest = dict(
@@ -1574,24 +1077,8 @@ def main() -> None:
         compact["silver_throughput_events_per_s"] = out[
             "silver_throughput_events_per_s"
         ]
-    _floor_adj = out.get("silver_throughput_floor", {}).get("adjudication")
-    if _floor_adj:
-        if _floor_adj.startswith("UNEXPLAINED"):
-            compact["silver_throughput_flag"] = _floor_adj
-        else:
-            # round-14 verdict fix #3: a WAIVED floor adjudication was
-            # invisible in the compact line the driver parses — carry a
-            # one-token marker so the external record is self-contained
-            # (the full adjudication text stays in BENCH_LOCAL.json).
-            compact["floor_waived"] = True
     if errors:
         compact["n_errors"] = len(errors)
-    if regressions:
-        compact["n_regressions_vs_prev"] = len(regressions)
-        compact["regressions_unexplained"] = sorted(
-            n for n, r in regressions.items()
-            if r["adjudication"].startswith("UNEXPLAINED")
-        )[:5]
     print(json.dumps(compact))
     if not timings:
         sys.exit(1)

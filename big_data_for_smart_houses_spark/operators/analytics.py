@@ -13,7 +13,6 @@ import datetime as dt
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.numeric import guarded_div
 from ..schemas import ENERGY_RATE_PER_KWH
 from .windows import top_k_latest
 
@@ -102,24 +101,6 @@ def kpi_with_fallback(
     )
 
 
-def kpi_last_24h_from_silver(silver: DataFrame, now: dt.datetime) -> DataFrame:
-    """KPI fallback when gold is empty: aggregate raw silver over the
-    last 24 h (reference dashboard/app.py:307-329)."""
-    cutoff = now - dt.timedelta(hours=24)
-    return silver.filter(F.col("timestamp") >= F.lit(cutoff)).agg(
-        (F.sum("energy_consumption_wh") / 1000.0).alias("total_energy_kwh"),
-        (F.sum("energy_consumption_wh") / 1000.0 * ENERGY_RATE_PER_KWH).alias(
-            "total_cost"
-        ),
-        F.countDistinct("device_id").alias("active_devices"),
-    )
-
-
-def kpi_avg_health(health: DataFrame) -> DataFrame:
-    """Average health score ×100 (reference dashboard/app.py:349-351)."""
-    return health.agg((F.avg("health_score") * 100.0).alias("avg_health_pct"))
-
-
 def energy_by_device_type(daily_energy: DataFrame) -> DataFrame:
     """Per-type energy (kWh) (reference dashboard/app.py:359-408)."""
     return daily_energy.groupBy("device_type").agg(
@@ -203,16 +184,3 @@ def data_status(tables: dict[str, DataFrame]) -> DataFrame:
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
-
-
-def combine_historical_and_recent(
-    historical: DataFrame, recent: DataFrame, keys: list[str]
-) -> DataFrame:
-    """U1 + W3 — union of the two read tiers with keep-newest dedup
-    (reference dashboard/app.py:227-256). ``unionByName`` with
-    allowMissingColumns tolerates schema drift between snapshots."""
-    merged = historical.unionByName(recent, allowMissingColumns=True)
-    from .cleaning import dedup_keep_first
-
-    order = "ingestion_time" if "ingestion_time" in merged.columns else keys[-1]
-    return dedup_keep_first(merged, keys=keys, order_col=order)

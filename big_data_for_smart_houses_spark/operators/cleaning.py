@@ -11,18 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..schemas import CRITICAL_FIELDS, NUMERIC_TELEMETRY_FIELDS, REQUIRED_TELEMETRY_FIELDS
-
-
-def validate_required_fields(df: DataFrame) -> DataFrame:
-    """P1 — keep rows with all 9 required fields present and numerics
-    parseable (reference consumer/ingest_bronze.py:67-97). With
-    ``from_json`` + explicit schema, malformed values already arrived as
-    nulls, so the check collapses to not-null predicates."""
-    cond = F.lit(True)
-    for f in REQUIRED_TELEMETRY_FIELDS:
-        cond = cond & F.col(f).isNotNull()
-    return df.filter(cond)
+from ..schemas import CRITICAL_FIELDS, NUMERIC_TELEMETRY_FIELDS
 
 
 def coerce_numerics(df: DataFrame) -> DataFrame:

@@ -3,8 +3,7 @@
 W1/W2 are 60-ROW frames per device, not time frames — the reference's
 "1-hour" rolling metrics are literally ``rolling(60)`` row windows
 (consumer/bronze_to_silver.py:246-268), so parity requires
-``rowsBetween(-59, 0)``. A time-honest variant using a range frame on
-seconds is provided alongside.
+``rowsBetween(-59, 0)``.
 
 Scale note: one shuffle on device_id for all three window columns —
 Spark computes W1/W2 and the dedup in a single Exchange when the
@@ -13,7 +12,7 @@ partition keys match.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.numeric import guarded_div
@@ -49,26 +48,6 @@ def add_rolling_metrics(df: DataFrame, frame_rows: int = ROWS_1H) -> DataFrame:
             F.sum(F.col("has_alert").cast("long")).over(w).cast("double"),
         )
     )
-
-
-def add_rolling_metrics_time_based(df: DataFrame, seconds: int = 3600) -> DataFrame:
-    """Time-honest variant of W1/W2: a true 1-hour range frame on the
-    event time. Not used for parity (the reference's frame is row-based)
-    but exposed because it is the semantically honest operator."""
-    w = (
-        Window.partitionBy("device_id")
-        .orderBy(F.unix_micros("timestamp"))
-        .rangeBetween(-seconds * 1_000_000, 0)
-    )
-    return df.withColumn("temp_1h_avg_t", F.avg("temperature").over(w)).withColumn(
-        "power_1h_avg_t", F.avg("power_usage").over(w)
-    )
-
-
-def latest_row(df: DataFrame, order_col: str | Column = "date") -> DataFrame:
-    """W4 — single latest row (reference dashboard/app.py:334)."""
-    col = F.col(order_col) if isinstance(order_col, str) else order_col
-    return df.orderBy(col.desc()).limit(1)
 
 
 def top_k_latest(

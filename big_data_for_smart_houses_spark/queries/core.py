@@ -1068,8 +1068,7 @@ GROUP BY 1, 2
 
 
 def q_rolling_time_window_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The time-HONEST rolling variant (windows.py
-    add_rolling_metrics_time_based shape): a true 1-hour range frame on
+    """The time-HONEST rolling variant: a true 1-hour range frame on
     event time per user, vs W1's literal 60-row frame. Gated on the µs
     range frame both engines define identically (inclusive bounds)."""
     ev = _t(spark, sf_dir, "events")

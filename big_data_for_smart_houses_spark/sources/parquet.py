@@ -15,7 +15,6 @@ import datetime as dt
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -83,27 +82,16 @@ def spread(df: DataFrame, spark: SparkSession) -> DataFrame:
 def read_bronze(
     spark: SparkSession,
     path: str,
-    schema: StructType | None = None,
     since: dt.date | None = None,
     until: dt.date | None = None,
-    modified_after: dt.datetime | None = None,
 ) -> DataFrame:
     """Scan the bronze layer with optional incremental pruning.
 
     ``since``/``until`` become predicates on the ``event_date``
     partition column -> Catalyst partition pruning (replaces the
     directory-walk pruning at reference consumer/bronze_to_silver.py:48-62).
-    ``modified_after`` uses the parquet reader's ``modifiedAfter`` option
-    (replaces the mtime loop at reference consumer/bronze_to_silver.py:56-62).
     """
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    if modified_after is not None:
-        reader = reader.option(
-            "modifiedAfter", modified_after.strftime("%Y-%m-%dT%H:%M:%S")
-        )
-    df = reader.parquet(path)
+    df = spark.read.parquet(path)
     if since is not None:
         df = df.filter(F.col("event_date") >= F.lit(since))
     if until is not None:

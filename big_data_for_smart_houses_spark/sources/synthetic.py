@@ -142,11 +142,17 @@ class SyntheticTelemetryStreamReader:
     def _rows(self, start: int, end: int):
         part = _Slice(start, end, self.n_devices)
         # materialized (not a generator): the engine prefetches and
-        # pickles the batch so a restarted query can replay it
-        return list(
-            SyntheticTelemetryReader(
-                {"n": str(self.n), "n_devices": str(self.n_devices)}
-            ).read(part)
+        # pickles the batch so a restarted query can replay it. Handed
+        # out as an ITERATOR over that list: once the offset stops
+        # advancing at ``n`` the engine calls next() on the batch to
+        # prove it empty, and a bare list fails that call and kills
+        # the query.
+        return iter(
+            list(
+                SyntheticTelemetryReader(
+                    {"n": str(self.n), "n_devices": str(self.n_devices)}
+                ).read(part)
+            )
         )
 
     def read(self, start):

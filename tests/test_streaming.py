@@ -245,6 +245,45 @@ def test_streaming_file_source_incremental(spark, telemetry_fixture):
     assert spark.sql("SELECT count(*) FROM inc_test").collect()[0][0] == 10
 
 
+def test_synthetic_stream_survives_exhaustion(spark):
+    """The synthetic stream source stops generating at ``n``; the
+    query must keep running after that, idle, not die. Once the offset
+    stops advancing the engine calls next() on the empty batch the
+    reader hands back, which a bare list fails with
+    PYTHON_STREAMING_DATA_SOURCE_RUNTIME_ERROR."""
+    import time
+
+    from big_data_for_smart_houses_spark.sources.synthetic import register
+
+    register(spark)
+    n = 200
+    tmp = tempfile.mkdtemp(prefix="synth_exhaust_")
+    q = (
+        spark.readStream.format("synthetic_telemetry")
+        .option("n", str(n))
+        .option("batch", "64")
+        .load()
+        .writeStream.format("parquet")
+        .option("path", f"{tmp}/out")
+        .option("checkpointLocation", f"{tmp}/ckpt")
+        .trigger(processingTime="100 milliseconds")
+        .start()
+    )
+    try:
+        deadline = time.time() + 120
+        while sum(p["numInputRows"] for p in q.recentProgress) < n:
+            assert q.exception() is None, q.exception()
+            assert time.time() < deadline, "stream never drained"
+            time.sleep(0.1)
+        # a couple of seconds of idle triggers past the end of the data
+        time.sleep(2)
+        assert q.exception() is None, q.exception()
+        assert q.isActive
+    finally:
+        q.stop()
+    assert spark.read.parquet(f"{tmp}/out").count() == n
+
+
 def _run_stream(spark, tmp, build, name):
     collected = []
     q = (
