@@ -5,9 +5,9 @@ All are single-pass hash aggregations with map-side partial aggregation
 pandas ``.round`` (SURVEY.md §2.4 rounding note); boolean means cast to
 double first (A5).
 
-Scale: A1 and A3 group on low-cardinality keys -> tiny results; the
-silver scan dominates, so A1/A2 should share one cached scan when run
-together (see ``build_gold``).
+Scale: A1 and A2 each make one plain scan of silver; A3 reads only
+the small A1/A2 outputs, so ``plans.etl.run_silver_to_gold`` builds it
+from the written tables rather than recomputing them from silver.
 """
 
 from __future__ import annotations
@@ -192,18 +192,3 @@ def daily_business_summary(
     if with_created_at:
         cols.append(F.current_timestamp().alias("created_at"))
     return out.select(*cols)
-
-
-def build_gold(silver: DataFrame) -> dict[str, DataFrame]:
-    """Run all three gold builds off one cached silver scan (the
-    reference reads the silver frame once and feeds all three,
-    consumer/silver_to_gold.py:314-348)."""
-    silver = silver.cache()
-    daily = daily_energy_consumption(silver)
-    health = device_health_metrics(silver)
-    summary = daily_business_summary(daily, health)
-    return {
-        "daily_energy_consumption": daily,
-        "device_health_metrics": health,
-        "daily_business_summary": summary,
-    }

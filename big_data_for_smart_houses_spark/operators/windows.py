@@ -33,20 +33,22 @@ def add_rolling_metrics(df: DataFrame, frame_rows: int = ROWS_1H) -> DataFrame:
     power, alert flag + rolling alert count, and guarded
     energy-efficiency (reference consumer/bronze_to_silver.py:239-275).
     min_periods=1 semantics are the default for Spark window aggregates
-    (nulls ignored, frame can be short at partition start)."""
+    (nulls ignored, frame can be short at partition start). One
+    projection, so all three frame aggregates share one ``Window``."""
     w = _device_row_window(frame_rows)
-    return (
-        df.withColumn("temp_1h_avg", F.avg("temperature").over(w))
-        .withColumn("power_1h_avg", F.avg("power_usage").over(w))
-        .withColumn(
-            "energy_efficiency",
-            guarded_div(F.col("energy_consumption_wh"), F.col("power_usage")),
-        )
-        .withColumn("has_alert", F.col("alert") != F.lit("none"))
-        .withColumn(
-            "alert_frequency_1h",
-            F.sum(F.col("has_alert").cast("long")).over(w).cast("double"),
-        )
+    has_alert = F.col("alert") != F.lit("none")
+    return df.withColumns(
+        {
+            "temp_1h_avg": F.avg("temperature").over(w),
+            "power_1h_avg": F.avg("power_usage").over(w),
+            "energy_efficiency": guarded_div(
+                F.col("energy_consumption_wh"), F.col("power_usage")
+            ),
+            "has_alert": has_alert,
+            "alert_frequency_1h": F.sum(has_alert.cast("long"))
+            .over(w)
+            .cast("double"),
+        }
     )
 
 

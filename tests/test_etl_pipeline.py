@@ -7,6 +7,12 @@ from __future__ import annotations
 
 import tempfile
 
+from big_data_for_smart_houses_spark.operators.gold import (
+    daily_business_summary,
+    daily_energy_consumption,
+    device_health_metrics,
+)
+from big_data_for_smart_houses_spark.operators.silver import bronze_to_silver
 from big_data_for_smart_houses_spark.plans import (
     run_bronze_to_silver_incremental,
     run_silver_to_gold,
@@ -61,6 +67,32 @@ def test_end_to_end_etl(spark, telemetry_fixture, catalog_fixture):
         "device_health_metrics",
         "daily_business_summary",
     }
+
+
+def test_silver_to_gold_caches_nothing_and_summary_matches(
+    spark, telemetry_fixture, catalog_fixture
+):
+    """Gold leaves nothing in the cache manager, and the summary built
+    from the written daily/health tables equals the one computed from
+    silver in memory."""
+    tmp = tempfile.mkdtemp()
+    silver_path, gold_root = f"{tmp}/silver", f"{tmp}/gold"
+    write_partitioned(
+        bronze_to_silver(telemetry_fixture, catalog_fixture), silver_path
+    )
+    spark.catalog.clearCache()
+    run_silver_to_gold(spark, silver_path, gold_root)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+    silver = spark.read.parquet(silver_path)
+    expected = daily_business_summary(
+        daily_energy_consumption(silver), device_health_metrics(silver)
+    ).drop("created_at")
+    written = spark.read.parquet(f"{gold_root}/daily_business_summary")
+    assert written.columns[-1] == "created_at"
+    assert sorted(written.drop("created_at").collect()) == sorted(
+        expected.collect()
+    )
 
 
 def test_cli_parser_smoke():

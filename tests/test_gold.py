@@ -6,14 +6,24 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from big_data_for_smart_houses_spark.operators.gold import build_gold
+from big_data_for_smart_houses_spark.operators.gold import (
+    daily_business_summary,
+    daily_energy_consumption,
+    device_health_metrics,
+)
 from big_data_for_smart_houses_spark.operators.silver import bronze_to_silver
 
 
 @pytest.fixture(scope="module")
 def gold(spark, telemetry_fixture, catalog_fixture):
     silver = bronze_to_silver(telemetry_fixture, catalog_fixture)
-    return build_gold(silver)
+    daily = daily_energy_consumption(silver)
+    health = device_health_metrics(silver)
+    return {
+        "daily_energy_consumption": daily,
+        "device_health_metrics": health,
+        "daily_business_summary": daily_business_summary(daily, health),
+    }
 
 
 def test_daily_energy(gold):

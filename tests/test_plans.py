@@ -51,6 +51,18 @@ def test_silver_pipeline_single_exchange(spark):
     assert plan.count("Exchange") == 1, plan
 
 
+def test_silver_rolling_metrics_single_window(spark):
+    """The three 60-row rolling aggregates (temperature, power, alert
+    count) share one frame, so they must plan as ONE Window operator,
+    not one per projection."""
+    plan = _plan(spark, "silver_pipeline_events")
+    rolling = [
+        ln for ln in plan.splitlines()
+        if ln.lstrip(" +-").startswith("Window [") and "RowFrame, -59" in ln
+    ]
+    assert len(rolling) == 1, plan
+
+
 def test_sessionize_single_exchange(spark):
     """Sessionization: lag window + running sum + session aggregate
     share the key shuffle."""
