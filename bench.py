@@ -37,7 +37,6 @@ HEADLINE = [
     "gold_daily_energy_events",
     "sessionize_events",
     "purchase_asof_click",
-    "pricing_rollup",
     "minhash_dedup_documents",
     "simhash_dedup_documents",
     "embedding_cosine_topk",
@@ -77,7 +76,6 @@ HEADLINE = [
     "zorder_key_events",
     "click_asof_next_purchase",
     "hash_sample_per_lang",
-    "quantile_normalize_events",
     "weighted_sample_wor_documents",
     "packed_sequence_offsets",
     "cdc_crossdoc_documents",
@@ -124,14 +122,11 @@ HEADLINE = [
     "gini_customer_orders",
     "ks_statistic_events",
     "percentile_within_group_events",
-    "bitwise_aggs_events",
-    "csv_malformed_modes_events",
     "asof_nearest_events",
     "trailing_active_users_events",
     "mad_outliers_events",
     "ntile_scan_orders",
     "skyline3d_parts",
-    "session_stream_availablenow",
     "setops_events",
     "stream_join_availablenow",
     "stream_dedup_availablenow",
@@ -146,7 +141,6 @@ HEADLINE = [
     "stream_merge_availablenow",
     "snapshot_diff_orders",
     "rolling_median_events",
-    "stream_enrich_availablenow",
     "source_kl_documents",
     "label_centroids_embeddings",
     "stats_moments_lineitem",
@@ -168,27 +162,14 @@ HEADLINE = [
     "zipf_slope_documents",
     "curation_funnel_report",
     "stream_restart_availablenow",
-    "business_summary_approx_gate",
-    "variant_functions_events",
-    "try_functions_events",
-    "xml_functions_events",
-    "lateral_topk_orders",
-    "sliding_chunks_documents",
-    "observe_metrics_orders",
     "compaction_roundtrip_events",
-    "stream_fanout_availablenow",
     "stream_rocksdb_availablenow",
-    "collation_group_events",
     "tpch_q4_order_priority",
     "tpch_q14_promo_revenue",
     "tpch_q19_disjunctive",
     "tpch_q22_global_balance",
     "window_completeness_events",
     "time_travel_orders",
-    "udtf_sentences_documents",
-    "runtime_bloom_join_lineitem",
-    "sql_udf_functions_events",
-    "null_aware_notin_orders",
     "tpch_q2_min_acctbal_supplier",
     "tpch_q6_forecast_revenue",
     "tpch_q8_market_share",
@@ -202,15 +183,6 @@ HEADLINE = [
     "tpch_q20_excess_supply",
     "tpch_q21_waiting_supplier",
     "agg_completeness_lineitem",
-    "url_functions_orders",
-    "statestore_read_availablenow",
-    "statestore_join_availablenow",
-    "stream_chained_availablenow",
-    "transpose_summary_lineitem",
-    "pipe_syntax_lineitem",
-    "parameterized_sql_orders",
-    "sugar_syntax_orders",
-    "mapinarrow_tokens_documents",
     "stream_upsert_availablenow",
     "stream_upsert_restart_availablenow",
     "datetime_functions_events",
@@ -220,7 +192,6 @@ HEADLINE = [
     "bfs_distances_transitions",
     "triangle_count_transitions",
     "vacuum_retention_orders",
-    "stream_multiwatermark_availablenow",
     "stream_timeout_sessions_availablenow",
     "stream_device_sessions_availablenow",
     "statestore_sessions_availablenow",
@@ -232,60 +203,34 @@ HEADLINE = [
     "bpe_rankmap_documents",
     "pysink_roundtrip_orders",
     "copurchase_lift_parts",
-    "agg_pushdown_events",
-    "stream_sliding_availablenow",
-    "stream_interval_enrich_availablenow",
     "approx_topk_events",
-    "identifier_clause_orders",
     "kmv_jaccard_events",
     "hdr_quantile_sketch_events",
     "hdr_quantile_error_bound_events",
     "hdr_sketch_stream_availablenow",
     "stream_update_mode_availablenow",
-    "xml_roundtrip_events",
-    "json_roundtrip_events",
     "binaryfile_bmp_assets",
     "sssp_weighted_transitions",
     "map_hof_functions_events",
     "kmeans_embeddings",
-    "dynamic_partition_overwrite_events",
-    "cogroup_asof_events",
     "stream_fullouter_join_availablenow",
-    "session_variables_orders",
-    "sql_scripting_orders",
-    "polymorphic_udtf_events",
     "theta_sketch_events",
     "explode_outer_events",
     "llm_corpus_pipeline_documents",
-    "file_metadata_events",
     "join_types_orders",
     "bucketed_join_orders",
-    "recursive_cte_hierarchy",
-    "listagg_events",
     "stream_outer_join_availablenow",
-    "dynamic_session_window_events",
     "logreg_quality_planted",
-    "embedding_int8_quantize",
-    "orc_roundtrip_events",
-    "csv_roundtrip_customers",
     "expectations_events",
     "synthetic_stream_availablenow",
     "gapfill_linear_events",
-    "table_checksum_orders",
-    "mergeschema_read_events",
-    "rle_segments_events",
     "stream_restart_pystate_availablenow",
-    "stream_observe_availablenow",
-    "referential_check_orders",
-    "nullsafe_join_events",
     "bmp_decode_assets",
     "wav_decode_assets",
     "avi_frame_sample_assets",
     "funnel_three_step_events",
     "argmax_functions_events",
-    "dynamic_partition_pruning_events",
     "pandas_udaf_geomean_events",
-    "bitmap_distinct_events",
     "stream_torture_availablenow",
     "billing_reconciliation_events",
     "billing_unbilled_events",
@@ -412,7 +357,6 @@ SCALE10X_PROBES = [
     "embedding_neardup_pairs",
     "simhash_dedup_documents",
     "minhash_dedup_documents",
-    "recursive_cte_hierarchy",
     "pagerank_user_transitions",
     "dedup_groups_documents",
     "embedding_ann_ivf",
@@ -440,16 +384,12 @@ SCALE10X_PROBES = [
     # round-7 late wave: streaming execution gates scale with STATE
     # and staged input; join_types with both join sides
     "stream_upsert_availablenow",
-    "statestore_read_availablenow",
-    "statestore_join_availablenow",
-    "stream_chained_availablenow",
     "join_types_orders",
     # round-7 fifth wave: new iterative supersteps (k-means broadcast
-    # assignment, Bellman-Ford frontier), the cogrouped pandas as-of,
-    # and the full-outer stream join's two-sided state
+    # assignment, Bellman-Ford frontier) and the full-outer stream
+    # join's two-sided state
     "kmeans_embeddings",
     "sssp_weighted_transitions",
-    "cogroup_asof_events",
     "stream_fullouter_join_availablenow",
     # round-7 sixth wave: prefix-filter candidate volume (PPJoin),
     # the distributed scan family (2 balanced shuffles — must stay

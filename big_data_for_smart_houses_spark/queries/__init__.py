@@ -1,165 +1,82 @@
 """Driver-facing query registry.
 
-Each query is a named (Spark callable, DuckDB oracle SQL) pair running
-the engine's operators (SURVEY.md §2) against the driver testdata
-tables (TESTDATA.md). Queries without an oracle are genuinely
+Each query is a named (Spark callable, DuckDB oracle SQL) pair that
+runs package operators (SURVEY.md §2) against the testdata tables
+(TESTDATA.md). Queries without an oracle are genuinely
 non-SQL-expressible (hash-seeded sketches) and get rows-only checks.
+A gate must reach package code beyond the table loaders;
+``tests/test_registry.py`` enforces that and names the few reference
+operations allowed to stay as plain Spark.
 
 ORDER MATTERS: the external driver certifies the first 50 entries by
-insertion order.
+insertion order. That front is computed by
+``certification.next_front``, not curated: the gates whose executed
+code this round touched (``_TOUCHED_THIS_ROUND``), then
+never-certified gates, then oldest-green-first from
+``certification.LAST_CERTIFIED``. A seated rows-only sketch brings
+its hash-certified recall companion
+(``certification.ROWS_ONLY_COMPANIONS``).
 
-ROTATION POLICY (round-10 verdict ask #1): the front is COMPUTED by
-``certification.next_front`` from per-query provenance, not curated —
-
-1. every gate whose code or corpus this round TOUCHED (the
-   ``_TOUCHED_R12`` list below is the one per-round human input);
-2. every never-certified query (new gates this round) — detected
-   mechanically as names absent from ``certification.LAST_CERTIFIED``;
-3. remaining slots fill oldest-green-first, so stale rows rotate
-   forward mechanically;
-and whenever a rows-only sketch is seated by any rule, its
-hash-certified recall companion seats immediately after it
-(``certification.ROWS_ONLY_COMPANIONS`` — round-10 verdict ask #7),
-so the weaker rows-only row never certifies alone.
-
-``certification.LAST_CERTIFIED`` records, for every registered query,
-the most recent round with a green driver row in
-``CORRECTNESS_r{N}.json``; a registry test re-derives it from the
-artifacts (clamped at the map's own max round — the driver writes
-each round's artifact AFTER the builder's final commit, round-10
-verdict finding #1) so the static map can never drift. The remaining
-rows-only entries are the 4 structural sketches (minhash/simhash/
-ann_lsh/ann_ivf), each carrying a hash-gated recall companion that
-IS driver-certified.
-
-END-OF-ROUND-15 STATE: LAST_CERTIFIED regenerated from
-CORRECTNESS_r14.json (the mechanical ROUND-15 PROCEDURE step 1; the
-r6 bucket is fully retired, oldest certification in the registry is
-now the remaining r7 block). Round 15 is the second OPTIMIZATION
-round: no new gates; the touched list is the set of gates whose
-EXECUTED operator code this round's optimizations edited (lineage
-cuts and expression staging — outputs proven identical, but the
-executed code changed, so their old green rows are evidence about
-code that no longer exists).
-ROUND-16 PROCEDURE: (1) regenerate LAST_CERTIFIED from the new
-CORRECTNESS_r15.json (``python -m ...queries.certification``, paste,
-test re-derives); (2) replace _TOUCHED_R15 with the round-16 touched
-list; next_front() does the rest — refresh priority continues with
-the remaining r7 block (tests/test_registry.py recomputes the exact
-seating).
+Per round: regenerate ``LAST_CERTIFIED`` from the newest
+``CORRECTNESS_r{N}.json`` (``python -m
+big_data_for_smart_houses_spark.queries.certification``; the registry
+test re-derives it) and replace the touched list below.
 """
 
 from __future__ import annotations
 
-from .analytics_gate import ORACLES as _GATE_ORACLES
-from .assembly_gate import ORACLES as _ASM_ORACLES
-from .assembly_gate import QUERIES as _ASM_QUERIES
-from .analytics_gate import QUERIES as _GATE_QUERIES
-from .core import ORACLES as _CORE_ORACLES
-from .core import QUERIES as _CORE_QUERIES
-from .curation import ORACLES as _CUR_ORACLES
-from .curation import QUERIES as _CUR_QUERIES
-from .extensions import ORACLES as _EXT_ORACLES
-from .incremental_gate import ORACLES as _INC_ORACLES
-from .incremental_gate import QUERIES as _INC_QUERIES
-from .extensions import QUERIES as _EXT_QUERIES
-from .llm_ops import ORACLES as _LLM_ORACLES
-from .llm_ops import QUERIES as _LLM_QUERIES
-from .modern_gate import ORACLES as _MODERN_ORACLES
-from .modern_gate import QUERIES as _MODERN_QUERIES
-from .pipeline import ORACLES as _PIPE_ORACLES
-from .pipeline import QUERIES as _PIPE_QUERIES
-from .stats_gate import ORACLES as _STATS_ORACLES
-from .stats_gate import QUERIES as _STATS_QUERIES
-from .streaming_gate import ORACLES as _STREAM_ORACLES
-from .streaming_gate import QUERIES as _STREAM_QUERIES
-from .tpch_gate import ORACLES as _TPCH_ORACLES
-from .tpch_gate import QUERIES as _TPCH_QUERIES
-
-# A name registered in two modules silently overwrites on merge —
-# assert disjointness so a collision is an import error, not a
-# shadowed gate (round 7 caught one: a late HOF gate landed on a
-# round-5 name and hid it until the bench-dedupe test flagged it).
-_MODULE_DICTS = (
-    _CORE_QUERIES, _PIPE_QUERIES, _GATE_QUERIES, _EXT_QUERIES,
-    _LLM_QUERIES, _CUR_QUERIES, _STATS_QUERIES, _ASM_QUERIES,
-    _INC_QUERIES, _STREAM_QUERIES, _MODERN_QUERIES, _TPCH_QUERIES,
+from . import (
+    analytics_gate,
+    assembly_gate,
+    core,
+    curation,
+    extensions,
+    incremental_gate,
+    llm_ops,
+    modern_gate,
+    pipeline,
+    stats_gate,
+    streaming_gate,
+    tpch_gate,
 )
-_name_counts: dict = {}
-for _d in _MODULE_DICTS:
-    for _k in _d:
-        _name_counts[_k] = _name_counts.get(_k, 0) + 1
-_dups = sorted(k for k, v in _name_counts.items() if v > 1)
-assert not _dups, f"query name registered in two modules: {_dups}"
+from .certification import next_front as _next_front
 
-_ALL_QUERIES = {
-    **_CORE_QUERIES,
-    **_PIPE_QUERIES,
-    **_GATE_QUERIES,
-    **_EXT_QUERIES,
-    **_LLM_QUERIES,
-    **_CUR_QUERIES,
-    **_STATS_QUERIES,
-    **_ASM_QUERIES,
-    **_INC_QUERIES,
-    **_STREAM_QUERIES,
-    **_MODERN_QUERIES,
-    **_TPCH_QUERIES,
-}
-ORACLES = {
-    **_CORE_ORACLES,
-    **_PIPE_ORACLES,
-    **_GATE_ORACLES,
-    **_EXT_ORACLES,
-    **_LLM_ORACLES,
-    **_CUR_ORACLES,
-    **_STATS_ORACLES,
-    **_ASM_ORACLES,
-    **_INC_ORACLES,
-    **_STREAM_ORACLES,
-    **_MODERN_ORACLES,
-    **_TPCH_ORACLES,
-}
+_MODULES = (
+    core, pipeline, analytics_gate, extensions, llm_ops, curation,
+    stats_gate, assembly_gate, incremental_gate, streaming_gate,
+    modern_gate, tpch_gate,
+)
 
-# Round-15 rotation: the front is COMPUTED, not curated — touched
-# gates first (rows-only sketches bring their recall companions,
-# certification.ROWS_ONLY_COMPANIONS), then never-certified new
-# gates, then oldest-green-first from certification.LAST_CERTIFIED.
-# The touched list is the one per-round input a human supplies:
-# every gate whose EXECUTED code or corpus this round edited.
-# (Populated as the optimization round proceeds — every gate whose
-# operator code an accepted optimization edits is appended here.)
+# A name registered in two modules would silently overwrite on merge;
+# make a collision an import error instead of a shadowed gate.
+_ALL_QUERIES: dict = {}
+ORACLES: dict = {}
+for _m in _MODULES:
+    _dups = sorted(set(_m.QUERIES) & set(_ALL_QUERIES))
+    assert not _dups, f"query name registered in two modules: {_dups}"
+    _ALL_QUERIES.update(_m.QUERIES)
+    ORACLES.update(_m.ORACLES)
+
+# Every gate whose EXECUTED operator code this round edited: its old
+# green row is evidence about code that no longer exists.
 # - cdc_chunk/crossdoc: text.cdc_chunk_documents staged its expression
 #   pipeline (md5 boundary scan 6x -> 1x per row, posexplode_outer);
 # - dedup_groups/semantic_dedup: dedup.dedup_groups cut the pair
-#   generator's lineage before the edge union (computed once, not
-#   twice). Outputs proven identical (interleaved A/B collects +
-#   sf0.01 exact oracle), but the executed code changed.
-_TOUCHED_R15: list = [
+#   generator's lineage before the edge union.
+_TOUCHED_THIS_ROUND: list = [
     "cdc_chunk_documents",
     "cdc_crossdoc_documents",
     "dedup_groups_documents",
     "semantic_dedup_embeddings",
 ]
 
-# round-agnostic alias: tests and tooling read this name, so next
-# round only renames the list above
-_TOUCHED_THIS_ROUND = _TOUCHED_R15
-
-from .certification import next_front as _next_front  # noqa: E402
-
 _CERTIFICATION_FRONT = _next_front(
     _ALL_QUERIES, _TOUCHED_THIS_ROUND, size=50
 )
-
-assert len(_CERTIFICATION_FRONT) == 50, len(_CERTIFICATION_FRONT)
-assert len(set(_CERTIFICATION_FRONT)) == 50
-_missing = [n for n in _CERTIFICATION_FRONT if n not in _ALL_QUERIES]
-assert not _missing, _missing
+assert len(_CERTIFICATION_FRONT) == len(set(_CERTIFICATION_FRONT)) == 50
 
 QUERIES = {n: _ALL_QUERIES[n] for n in _CERTIFICATION_FRONT}
 for _n, _fn in _ALL_QUERIES.items():
-    if _n not in QUERIES:
-        QUERIES[_n] = _fn
+    QUERIES.setdefault(_n, _fn)
 
 __all__ = ["QUERIES", "ORACLES"]

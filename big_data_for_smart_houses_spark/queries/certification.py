@@ -42,7 +42,6 @@ LAST_CERTIFIED: dict[str, int] = {
     "ab_lift_events": 13,
     "abc_customers": 11,
     "agg_completeness_lineitem": 9,
-    "agg_pushdown_events": 8,
     "analytics_daily_cost_trend": 12,
     "analytics_daily_energy_trend": 12,
     "analytics_data_status": 12,
@@ -67,8 +66,6 @@ LAST_CERTIFIED: dict[str, int] = {
     "billing_stream_availablenow": 14,
     "billing_unbilled_events": 14,
     "binaryfile_bmp_assets": 8,
-    "bitmap_distinct_events": 14,
-    "bitwise_aggs_events": 8,
     "bloom_probe_customers": 12,
     "bm25_documents": 10,
     "bmp_decode_assets": 14,
@@ -78,16 +75,13 @@ LAST_CERTIFIED: dict[str, int] = {
     "bpe_rankmap_documents": 10,
     "bpe_train_documents": 8,
     "bucketed_join_orders": 14,
-    "business_summary_approx_gate": 11,
     "catalog_enrichment_events": 12,
     "cdc_chunk_documents": 10,
     "cdc_crossdoc_documents": 8,
     "chunk_documents": 10,
     "click_asof_next_purchase": 11,
     "cms_token_counts": 11,
-    "cogroup_asof_events": 8,
     "cohort_retention_events": 12,
-    "collation_group_events": 13,
     "compaction_roundtrip_events": 14,
     "concurrency_sweepline_events": 11,
     "conditional_aggs_by_type": 11,
@@ -96,12 +90,8 @@ LAST_CERTIFIED: dict[str, int] = {
     "contrastive_triplets_documents": 10,
     "copurchase_lift_parts": 8,
     "corpus_shuffle_documents": 10,
-    "csv_malformed_modes_events": 8,
-    "csv_roundtrip_customers": 14,
     "curation_funnel_report": 13,
     "customer_enrichment": 11,
-    "customers_with_orders": 12,
-    "customers_without_orders": 12,
     "daily_user_rollup": 12,
     "daily_value_pop_change": 12,
     "dataset_split_documents": 10,
@@ -113,26 +103,19 @@ LAST_CERTIFIED: dict[str, int] = {
     "dedup_groups_documents": 9,
     "dedup_incremental_documents": 9,
     "doc_fingerprint": 10,
-    "dynamic_partition_overwrite_events": 8,
-    "dynamic_partition_pruning_events": 14,
-    "dynamic_session_window_events": 9,
     "edit1_neighborhood_customer": 10,
     "editdist_recall_planted": 9,
     "embedding_ann_ivf": 10,
     "embedding_ann_lsh": 11,
     "embedding_cosine_topk": 11,
-    "embedding_int8_quantize": 14,
     "embedding_neardup_pairs": 9,
     "event_quality_score": 12,
-    "event_transition_counts": 12,
-    "event_type_pivot": 12,
     "events_cube": 12,
     "events_in_session_range": 13,
     "ewma_events": 11,
     "ewma_stream_availablenow": 11,
     "expectations_events": 14,
     "explode_outer_events": 9,
-    "file_metadata_events": 8,
     "funnel_click_purchase": 13,
     "funnel_three_step_events": 14,
     "gapfill_linear_events": 14,
@@ -153,14 +136,12 @@ LAST_CERTIFIED: dict[str, int] = {
     "hof_functions_documents": 13,
     "hopping_window_events": 12,
     "hourly_event_window": 13,
-    "identifier_clause_orders": 9,
     "incremental_energy_state": 12,
     "incremental_join_view_orders": 13,
     "inverted_index_documents": 10,
     "join_types_orders": 8,
     "json_null_functions_events": 12,
     "json_props_extract": 13,
-    "json_roundtrip_events": 8,
     "json_schema_profile_events": 13,
     "kmeans_embeddings": 8,
     "kmv_distinct_events": 8,
@@ -170,21 +151,17 @@ LAST_CERTIFIED: dict[str, int] = {
     "label_centroids_embeddings": 13,
     "language_guess": 11,
     "late_shipment_flag": 13,
-    "lateral_topk_orders": 13,
     "latest_event_per_user": 13,
     "latest_events_topk": 12,
     "length_bucketed_packing": 11,
-    "listagg_events": 14,
     "llm_corpus_pipeline_documents": 10,
     "locf_stream_availablenow": 12,
     "logreg_quality_planted": 9,
     "mad_outliers_events": 8,
     "map_functions_events": 13,
     "map_hof_functions_events": 9,
-    "mapinarrow_tokens_documents": 8,
     "math_functions_events": 13,
     "merge_upsert_orders": 12,
-    "mergeschema_read_events": 14,
     "minhash_dedup_documents": 9,
     "minhash_incremental_recall": 9,
     "minhash_recall_exact_dups": 9,
@@ -195,22 +172,14 @@ LAST_CERTIFIED: dict[str, int] = {
     "navigation_functions_events": 13,
     "ngram_jaccard_pairs": 13,
     "ntile_scan_orders": 11,
-    "null_aware_notin_orders": 14,
-    "nullsafe_join_events": 14,
-    "observe_metrics_orders": 13,
-    "orc_roundtrip_events": 14,
     "orders_business_summary": 12,
     "packed_sequence_offsets": 10,
     "pagerank_user_transitions": 9,
     "pandas_udaf_geomean_events": 14,
-    "parameterized_sql_orders": 9,
     "part_value_density": 13,
     "percentile_within_group_events": 8,
     "pii_scrub_documents": 11,
-    "pipe_syntax_lineitem": 9,
-    "polymorphic_udtf_events": 8,
     "ppjoin_pairs_documents": 8,
-    "pricing_rollup": 13,
     "pricing_summary": 9,
     "profile_documents": 11,
     "profile_drift_documents": 13,
@@ -218,31 +187,24 @@ LAST_CERTIFIED: dict[str, int] = {
     "pysink_roundtrip_orders": 9,
     "quality_topk_approx_pct": 13,
     "quality_topk_per_lang": 11,
-    "quantile_normalize_events": 12,
     "ranking_functions_events": 12,
     "rate_of_change_events": 12,
     "ratio_to_report_events": 12,
     "readability_documents": 13,
-    "recursive_cte_hierarchy": 14,
-    "referential_check_orders": 14,
     "regexp_functions_documents": 13,
     "regression_drift_events": 12,
     "revenue_vs_global": 13,
-    "rle_segments_events": 14,
     "rocksdb_pysessions_availablenow": 10,
     "rolling_event_metrics": 12,
     "rolling_median_events": 13,
     "rolling_time_window_events": 13,
     "rollup_navigate_events": 8,
-    "runtime_bloom_join_lineitem": 14,
     "salted_join_orders": 13,
     "scd2_asof_lookup": 9,
     "scd2_customer_orders": 12,
     "semantic_dedup_embeddings": 9,
     "sentence_dedup_documents": 9,
     "session_paths": 12,
-    "session_stream_availablenow": 10,
-    "session_variables_orders": 9,
     "session_window_events": 12,
     "sessionize_events": 12,
     "setops_events": 13,
@@ -251,39 +213,27 @@ LAST_CERTIFIED: dict[str, int] = {
     "simhash_recall_exact_dups": 11,
     "skyline3d_parts": 11,
     "skyline_parts": 11,
-    "sliding_chunks_documents": 13,
     "snapshot_diff_orders": 13,
     "source_cap_documents": 11,
     "source_cap_two_phase": 11,
     "source_kl_documents": 13,
     "span_masks_documents": 13,
-    "sql_scripting_orders": 9,
-    "sql_udf_functions_events": 14,
     "sssp_weighted_transitions": 8,
-    "statestore_join_availablenow": 8,
-    "statestore_read_availablenow": 14,
     "statestore_sessions_availablenow": 10,
     "statestore_timeout_rearm_availablenow": 10,
     "stats_moments_lineitem": 13,
     "stratified_sample_events": 11,
-    "stream_chained_availablenow": 8,
     "stream_dedup_availablenow": 10,
     "stream_device_sessions_availablenow": 10,
-    "stream_enrich_availablenow": 13,
-    "stream_fanout_availablenow": 13,
     "stream_fullouter_join_availablenow": 10,
-    "stream_interval_enrich_availablenow": 8,
     "stream_join_availablenow": 13,
     "stream_left_anti_availablenow": 10,
     "stream_merge_availablenow": 14,
-    "stream_multiwatermark_availablenow": 10,
-    "stream_observe_availablenow": 14,
     "stream_outer_join_availablenow": 10,
     "stream_restart_availablenow": 14,
     "stream_restart_pystate_availablenow": 12,
     "stream_rocksdb_availablenow": 10,
     "stream_semi_join_availablenow": 8,
-    "stream_sliding_availablenow": 8,
     "stream_timeout_sessions_availablenow": 10,
     "stream_torture_availablenow": 10,
     "stream_tumbling_availablenow": 14,
@@ -291,11 +241,9 @@ LAST_CERTIFIED: dict[str, int] = {
     "stream_upsert_availablenow": 14,
     "stream_upsert_restart_availablenow": 8,
     "string_functions_documents": 12,
-    "sugar_syntax_orders": 9,
     "supplier_health_scores": 14,
     "synthetic_source_telemetry": 14,
     "synthetic_stream_availablenow": 14,
-    "table_checksum_orders": 14,
     "temperature_mix_documents": 11,
     "text_quality_score": 11,
     "text_stats": 11,
@@ -306,7 +254,6 @@ LAST_CERTIFIED: dict[str, int] = {
     "token_batch_packing": 10,
     "token_heavy_hitters": 11,
     "token_stats_by_lang": 11,
-    "top_orders_per_customer": 13,
     "tpch_q10_returned_items": 14,
     "tpch_q11_important_stock": 14,
     "tpch_q12_priority_shipping": 8,
@@ -330,28 +277,20 @@ LAST_CERTIFIED: dict[str, int] = {
     "tpch_q8_market_share": 7,
     "tpch_q9_product_profit": 7,
     "trailing_active_users_events": 8,
-    "transpose_summary_lineitem": 9,
     "trending_types_hourly": 12,
     "triangle_count_transitions": 8,
-    "try_functions_events": 14,
     "two_phase_agg_orders": 13,
-    "udtf_sentences_documents": 7,
     "union_dedup_orders": 13,
     "unpivot_daily_metrics": 12,
-    "url_functions_orders": 9,
-    "user_event_type_sets": 13,
     "vacuum_retention_orders": 8,
     "value_histogram_events": 11,
     "value_percentiles": 13,
-    "variant_functions_events": 14,
     "wav_decode_assets": 7,
     "weighted_corpus_mix": 11,
     "weighted_quantiles_orders": 11,
     "weighted_sample_wor_documents": 12,
     "window_completeness_events": 7,
     "winsorize_events": 11,
-    "xml_functions_events": 7,
-    "xml_roundtrip_events": 8,
     "zipf_slope_documents": 14,
     "zorder3_key_events": 12,
     "zorder_key_events": 13,

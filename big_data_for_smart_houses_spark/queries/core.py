@@ -537,34 +537,6 @@ FROM events GROUP BY 1
 
 
 # ---------------------------------------------------------------------------
-# Top-k per group (guide OLAP pattern; dashboard O2 generalized)
-# ---------------------------------------------------------------------------
-
-def q_top_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-3 orders by price per customer — rank window over one
-    shuffle on the group key."""
-    o = _t(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.col("o_totalprice").desc(), F.col("o_orderkey")
-    )
-    return (
-        o.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select("o_custkey", "o_orderkey", "o_totalprice", "rank")
-    )
-
-
-ORACLE_TOP_ORDERS_PER_CUSTOMER = """
-SELECT o_custkey, o_orderkey, o_totalprice, rank FROM (
-  SELECT o_custkey, o_orderkey, o_totalprice,
-         row_number() OVER (PARTITION BY o_custkey
-                            ORDER BY o_totalprice DESC, o_orderkey) AS rank
-  FROM orders
-) WHERE rank <= 3
-"""
-
-
-# ---------------------------------------------------------------------------
 # F9: JSON extraction at the event boundary
 # ---------------------------------------------------------------------------
 
@@ -590,40 +562,6 @@ SELECT CAST(json_extract_string(props, '$.k') AS INT) % 10 AS k_bucket,
        count(*) AS n_events,
        CAST(CAST(avg(value) AS REAL) AS DOUBLE) AS value_mean,
        max(CAST(json_extract_string(props, '$.k') AS INT)) AS k_max
-FROM events GROUP BY 1
-"""
-
-
-# ---------------------------------------------------------------------------
-# Pivot (guide OLAP pattern) with a fixed value list
-# ---------------------------------------------------------------------------
-
-EVENT_TYPES = ["click", "view", "purchase", "signup", "error"]
-
-
-def q_event_type_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pivot per-date event counts into fixed columns. Supplying the
-    value list avoids the extra distinct-scan Spark otherwise runs."""
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.to_date("ts").alias("event_date"))
-        .pivot("event_type", EVENT_TYPES)
-        .agg(F.count(F.lit(1)))
-        .na.fill(0, EVENT_TYPES)
-        .select(
-            "event_date",
-            *[F.col(t).cast("long").alias(f"n_{t}") for t in EVENT_TYPES],
-        )
-    )
-
-
-ORACLE_EVENT_TYPE_PIVOT = """
-SELECT CAST(ts AS DATE) AS event_date,
-       count(*) FILTER (WHERE event_type = 'click') AS n_click,
-       count(*) FILTER (WHERE event_type = 'view') AS n_view,
-       count(*) FILTER (WHERE event_type = 'purchase') AS n_purchase,
-       count(*) FILTER (WHERE event_type = 'signup') AS n_signup,
-       count(*) FILTER (WHERE event_type = 'error') AS n_error
 FROM events GROUP BY 1
 """
 
@@ -720,9 +658,8 @@ def q_business_summary_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct (date, key) pair; the sketch keeps the shuffle at one
     fixed-size HLL register set per group. Library operator, NOT in
     the driver registry (the sketch value is not SQL-replayable, so
-    a registry row could only ever report rows-only);
-    ``business_summary_approx_gate`` carries the hash-checked 3σ
-    invariant and the unit suite bounds the error vs exact."""
+    a registry row could only ever report rows-only); the unit suite
+    bounds the error vs exact."""
     o = _t(spark, sf_dir, "orders")
     return (
         o.groupBy(F.to_date("o_orderdate").alias("order_date"))
@@ -737,157 +674,19 @@ def q_business_summary_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 APPROX_CD_RSD = 0.02
-# FAMILY-WISE sigmas, not per-group (round-11 corpus-robustness
-# sweep): the gate hashes one boolean PER DATE and there are
-# thousands of dates, so a per-group 3-sigma bound is EXPECTED to
-# fail somewhere — at sf0.1 the per-date cardinalities (~30-90)
-# leave HLL++'s exact sparse regime and 4 of 2,405 dates measured
-# out at up to 3.8 sigma, precisely the ~6 violations 2,405
-# Gaussian-ish trials predict (the r10 watermark-oracle lesson in
-# sketch form: the certified corpus hid it because sf0.01
-# cardinalities stay exact-mode). 5 sigma puts the family-wise
-# failure odds ~1.4e-3 at 2,405 groups while remaining a real bound
-# (10% at rsd=0.02; the observed tail is 7.7%). Verified bit-exact
-# at sf0.001 / sf0.01 / sf0.1.
+# FAMILY-WISE sigmas, not per-group: the error bound is checked once
+# PER DATE and there are thousands of dates, so a per-group 3-sigma
+# bound is EXPECTED to fail somewhere — at sf0.1 the per-date
+# cardinalities (~30-90) leave HLL++'s exact sparse regime and 4 of
+# 2,405 dates measured out at up to 3.8 sigma, precisely the ~6
+# violations 2,405 Gaussian-ish trials predict. 5 sigma puts the
+# family-wise failure odds ~1.4e-3 at 2,405 groups while remaining a
+# real bound (10% at rsd=0.02; the observed tail is 7.7%).
 APPROX_CD_BOUND_SIGMAS = 5.0
 APPROX_CD_ABS_SLACK = 2
 
 
-def q_business_summary_approx_gate(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Hash-checkable invariant companion to
-    ``business_summary_approx`` (the hll_reach_events pattern): the
-    HLL++ estimate itself is not SQL-replayable, so the gate hashes
-    the exact per-date distinct-customer count PLUS a boolean
-    asserting the ``approx_count_distinct(rsd=0.02)`` estimate lands
-    within max(5·rsd·exact, 2) of exact — the 5 is FAMILY-WISE over
-    the thousands of hashed per-date booleans (see the constant's
-    comment; a per-group 3σ provably trips on large corpora). One
-    lost date or an out-of-bound sketch is a row / hash mismatch.
-
-    Revenue is summed in INTEGER CENTS (round-11 corpus-robustness
-    sweep): the previous float32-quantized double sum fluttered by
-    one ulp on 5 of 2,405 dates at sf0.1 — double addition is not
-    associative, so Spark's partition order and DuckDB's scan order
-    can land a boundary-straddling sum on adjacent float32 values.
-    Per-row cents are identical bigints on both engines (same double
-    input, same *100, same half-away round), and an integer sum is
-    order-free — bit-equal at ANY scale factor and partitioning, the
-    same arithmetic-exactness discipline as the sampling and HDR
-    families."""
-    o = _t(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
-    agg = o.groupBy(F.to_date("o_orderdate").alias("order_date")).agg(
-        F.sum(cents).alias("revenue_cents"),
-        F.approx_count_distinct("o_custkey", rsd=APPROX_CD_RSD).alias(
-            "approx_customers"
-        ),
-        F.countDistinct("o_custkey").alias("exact_customers"),
-        F.count(F.lit(1)).alias("n_orders"),
-    )
-    bound = F.greatest(
-        F.lit(APPROX_CD_BOUND_SIGMAS * APPROX_CD_RSD)
-        * F.col("exact_customers"),
-        F.lit(float(APPROX_CD_ABS_SLACK)),
-    )
-    return agg.select(
-        "order_date",
-        "revenue_cents",
-        "exact_customers",
-        "n_orders",
-        (
-            F.abs(
-                F.col("approx_customers").cast("double")
-                - F.col("exact_customers").cast("double")
-            )
-            <= bound
-        ).alias("approx_in_bound"),
-    )
-
-
-ORACLE_BUSINESS_SUMMARY_APPROX_GATE = """
-SELECT CAST(o_orderdate AS DATE) AS order_date,
-       CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-         AS revenue_cents,
-       CAST(count(DISTINCT o_custkey) AS BIGINT) AS exact_customers,
-       count(*) AS n_orders,
-       true AS approx_in_bound
-FROM orders GROUP BY 1
-"""
-
-
-# ---------------------------------------------------------------------------
-# Join surface beyond the reference (SURVEY.md §2.3: semi/anti/as-of
-# absent there; the engine exposes them as first-class)
-# ---------------------------------------------------------------------------
-
-def q_customers_with_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LEFT SEMI join: existence filter with no right-side columns and
-    no duplicate explosion — at scale this shuffles only the key."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    return c.join(o, c.c_custkey == o.o_custkey, "left_semi").select(
-        "c_custkey", "c_name", "c_acctbal"
-    )
-
-
-ORACLE_CUSTOMERS_WITH_ORDERS = """
-SELECT c_custkey, c_name, c_acctbal
-FROM customer WHERE c_custkey IN (SELECT o_custkey FROM orders)
-"""
-
-
 BIG_ORDER_THRESHOLD = 300_000
-
-
-def q_customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LEFT ANTI join: customers with no order above the threshold —
-    the not-exists complement, with the filter pushed into the right
-    side before the anti shuffle."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(
-        F.col("o_totalprice") > BIG_ORDER_THRESHOLD
-    )
-    return c.join(o, c.c_custkey == o.o_custkey, "left_anti").select(
-        "c_custkey", "c_name", "c_acctbal"
-    )
-
-
-ORACLE_CUSTOMERS_WITHOUT_ORDERS = f"""
-SELECT c_custkey, c_name, c_acctbal
-FROM customer WHERE c_custkey NOT IN
-  (SELECT o_custkey FROM orders WHERE o_totalprice > {BIG_ORDER_THRESHOLD})
-"""
-
-
-def q_pricing_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROLLUP over (returnflag, linestatus): subtotals + grand total in
-    one pass (null group keys coalesced to 'ALL' for engine-neutral
-    output). The reference has no grouping sets; Spark gives them free."""
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.rollup("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum("l_quantity").alias("sum_qty"),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
-        .select(
-            F.coalesce("l_returnflag", F.lit("ALL")).alias("returnflag"),
-            F.coalesce("l_linestatus", F.lit("ALL")).alias("linestatus"),
-            "sum_qty",
-            "n_rows",
-        )
-    )
-
-
-ORACLE_PRICING_ROLLUP = """
-SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
-       coalesce(l_linestatus, 'ALL') AS linestatus,
-       sum(l_quantity) AS sum_qty,
-       count(*) AS n_rows
-FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-"""
 
 
 def q_purchase_asof_click(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1039,34 +838,6 @@ FROM events GROUP BY 1
 """
 
 
-def q_event_transition_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """lag/lead window surface (beyond the reference, SURVEY.md §2.5
-    note): per-user event-type transition counts — lag(event_type)
-    over the user timeline, then a (prev, next) aggregation. The same
-    single user_id shuffle serves the window and the groupBy."""
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(F.col("ts"), F.col("event_id"))
-    return (
-        ev.withColumn("prev_type", F.lag("event_type").over(w))
-        .filter(F.col("prev_type").isNotNull())
-        .groupBy("prev_type", F.col("event_type").alias("next_type"))
-        .agg(F.count(F.lit(1)).alias("n_transitions"))
-    )
-
-
-ORACLE_EVENT_TRANSITION_COUNTS = """
-SELECT prev_type, event_type AS next_type, count(*) AS n_transitions
-FROM (
-  SELECT event_type,
-         lag(event_type) OVER (PARTITION BY user_id
-                               ORDER BY ts, event_id) AS prev_type
-  FROM events
-)
-WHERE prev_type IS NOT NULL
-GROUP BY 1, 2
-"""
-
-
 def q_rolling_time_window_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The time-HONEST rolling variant: a true 1-hour range frame on
     event time per user, vs W1's literal 60-row frame. Gated on the µs
@@ -1093,29 +864,6 @@ SELECT event_id, user_id, ts,
 FROM events
 WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
              RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
-"""
-
-
-def q_user_event_type_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """collect_set surface (beyond reference): per-user distinct event
-    types as a canonical sorted CSV. Set aggregation is shuffle-light
-    (map-side partial sets merge); the sort + concat makes the
-    nondeterministically-ordered set comparable across engines."""
-    ev = _t(spark, sf_dir, "events")
-    return ev.groupBy("user_id").agg(
-        F.concat_ws(",", F.array_sort(F.collect_set("event_type"))).alias(
-            "event_types_csv"
-        ),
-        F.countDistinct("event_type").alias("n_types"),
-    )
-
-
-ORACLE_USER_EVENT_TYPE_SETS = """
-SELECT user_id,
-       string_agg(DISTINCT event_type, ',' ORDER BY event_type)
-         AS event_types_csv,
-       count(DISTINCT event_type) AS n_types
-FROM events GROUP BY 1
 """
 
 
@@ -1200,24 +948,16 @@ QUERIES = {
     "orders_business_summary": q_orders_business_summary,
     "supplier_health_scores": q_supplier_health_scores,
     "hourly_event_window": q_hourly_event_window,
-    "top_orders_per_customer": q_top_orders_per_customer,
     "json_props_extract": q_json_props_extract,
-    "event_type_pivot": q_event_type_pivot,
     "part_value_density": q_part_value_density,
     "sessionize_events": q_sessionize_events,
-    "business_summary_approx_gate": q_business_summary_approx_gate,
-    "customers_with_orders": q_customers_with_orders,
-    "customers_without_orders": q_customers_without_orders,
-    "pricing_rollup": q_pricing_rollup,
     "purchase_asof_click": q_purchase_asof_click,
     "events_in_session_range": q_events_in_session_range,
     "events_cube": q_events_cube,
     "value_percentiles": q_value_percentiles,
     "salted_join_orders": q_salted_join_orders,
     "two_phase_agg_orders": q_two_phase_agg_orders,
-    "event_transition_counts": q_event_transition_counts,
     "rolling_time_window_events": q_rolling_time_window_events,
-    "user_event_type_sets": q_user_event_type_sets,
 }
 
 ORACLES = {
@@ -1235,24 +975,16 @@ ORACLES = {
     "orders_business_summary": ORACLE_ORDERS_BUSINESS_SUMMARY,
     "supplier_health_scores": ORACLE_SUPPLIER_HEALTH_SCORES,
     "hourly_event_window": ORACLE_HOURLY_EVENT_WINDOW,
-    "top_orders_per_customer": ORACLE_TOP_ORDERS_PER_CUSTOMER,
     "json_props_extract": ORACLE_JSON_PROPS_EXTRACT,
-    "event_type_pivot": ORACLE_EVENT_TYPE_PIVOT,
     "part_value_density": ORACLE_PART_VALUE_DENSITY,
     "sessionize_events": ORACLE_SESSIONIZE_EVENTS,
-    "business_summary_approx_gate": ORACLE_BUSINESS_SUMMARY_APPROX_GATE,
-    "customers_with_orders": ORACLE_CUSTOMERS_WITH_ORDERS,
-    "customers_without_orders": ORACLE_CUSTOMERS_WITHOUT_ORDERS,
-    "pricing_rollup": ORACLE_PRICING_ROLLUP,
     "purchase_asof_click": ORACLE_PURCHASE_ASOF_CLICK,
     "events_in_session_range": ORACLE_EVENTS_IN_SESSION_RANGE,
     "events_cube": ORACLE_EVENTS_CUBE,
     "value_percentiles": ORACLE_VALUE_PERCENTILES,
     "salted_join_orders": ORACLE_SALTED_JOIN_ORDERS,
     "two_phase_agg_orders": ORACLE_TWO_PHASE_AGG_ORDERS,
-    "event_transition_counts": ORACLE_EVENT_TRANSITION_COUNTS,
     "rolling_time_window_events": ORACLE_ROLLING_TIME_WINDOW_EVENTS,
-    "user_event_type_sets": ORACLE_USER_EVENT_TYPE_SETS,
 }
 
 
@@ -1824,9 +1556,8 @@ def q_tpch_q22_global_balance(
     """TPC-H Q22 shape: customers whose balance exceeds the global
     positive-balance average AND who have no large order (every
     synthetic customer has SOME order, so the anti-join predicate is
-    "no order above the big-order threshold" — the same adaptation
-    customers_without_orders documents) — scalar subquery + anti join
-    + aggregate. The average is compared in EXACT decimal arithmetic
+    "no order above the big-order threshold") — scalar subquery +
+    anti join + aggregate. The average is compared in EXACT decimal arithmetic
     rearranged as ``bal * n > total`` (no double division anywhere
     near the threshold), so a borderline customer can never flip
     between engines; the 1-row aggregate broadcasts (J2 shape), the

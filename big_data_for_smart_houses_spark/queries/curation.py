@@ -632,32 +632,6 @@ SELECT doc_id, lang, sample_rank FROM (
 """
 
 
-def q_quantile_normalize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quantile normalization: per-type percent_rank maps values onto
-    [0, 1] uniformly — the rank-based feature transform robust to any
-    distribution shape. percent_rank is (rank-1)/(n-1), a division of
-    exact ints, and ties on the raw double compare identically on both
-    engines — no quantization needed anywhere."""
-    from pyspark.sql import Window
-
-    ev = _events(spark, sf_dir)
-    w = Window.partitionBy("event_type").orderBy(F.col("value"))
-    return ev.select(
-        "event_id",
-        "event_type",
-        "value",
-        F.percent_rank().over(w).alias("value_quantile"),
-    )
-
-
-ORACLE_QUANTILE_NORMALIZE_EVENTS = """
-SELECT event_id, event_type, value,
-       percent_rank() OVER (PARTITION BY event_type ORDER BY value)
-         AS value_quantile
-FROM events
-"""
-
-
 QUERIES = {
     "sentence_dedup_documents": q_sentence_dedup_documents,
     "semantic_dedup_embeddings": q_semantic_dedup_embeddings,
@@ -674,7 +648,6 @@ QUERIES = {
     "source_cap_two_phase": q_source_cap_two_phase,
     "click_asof_next_purchase": q_click_asof_next_purchase,
     "hash_sample_per_lang": q_hash_sample_per_lang,
-    "quantile_normalize_events": q_quantile_normalize_events,
 }
 
 ORACLES = {
@@ -695,7 +668,6 @@ ORACLES = {
     "source_cap_two_phase": ORACLE_SOURCE_CAP_DOCUMENTS,
     "click_asof_next_purchase": ORACLE_CLICK_ASOF_NEXT_PURCHASE,
     "hash_sample_per_lang": ORACLE_HASH_SAMPLE_PER_LANG,
-    "quantile_normalize_events": ORACLE_QUANTILE_NORMALIZE_EVENTS,
 }
 
 

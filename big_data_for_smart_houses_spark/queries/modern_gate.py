@@ -1,30 +1,15 @@
-"""Round-6 modern-surface gates: the Spark 4 API families and
-infrastructure operators a user migrating from the reference (or any
-earlier JSON/string pipeline) adopts at scale, each hash-gated
-against a DuckDB oracle.
-
-SQL/DataFrame surfaces: VARIANT binary JSON (`parse_json` /
-`variant_get`), `try_`-family ANSI-safe arithmetic, XML roundtrip +
-xpath, correlated LATERAL top-k (decorrelation plan-asserted),
-recursive CTE hierarchy walks, ordered `listagg`, collation-aware
-grouping (UTF8_LCASE), `max_by`/`min_by` argmax family, null-safe
-equality joins (`<=>`), dynamic-gap session windows, a grouped-agg
-pandas UDAF (the custom-aggregate extension point), and
-`DataFrame.observe` single-pass metrics.
+"""Infrastructure and multimodal gates, each hash-gated against a
+DuckDB oracle.
 
 Infrastructure: small-file compaction roundtrip, bucketed co-located
-joins (gate RAISES on any Exchange), mergeSchema evolution reads,
-dynamic partition pruning (gate RAISES without the runtime filter),
-table checksums (anti-entropy reconciliation), declarative
-expectations with quarantine, referential-integrity audits, ORC/CSV
-format roundtrips, and REAL stdlib media codecs (BMP image, WAV
-audio, raw-frame AVI video) through the multimodal mapInPandas
-shape.
+joins (gate RAISES on any Exchange) and declarative expectations with
+quarantine. Aggregates: a grouped-agg pandas UDAF (the
+custom-aggregate extension point) and ordered-set percentiles.
 
-LLM-pipeline adds: sliding token-window chunking with overlap (RAG
-prep), int8 embedding quantization (FAISS-SQ8 shape), and
-distributed hashed-bag logistic-regression training under the
-planted-recovery gate pattern.
+Multimodal: REAL stdlib media codecs (BMP image, WAV audio, raw-frame
+AVI video) and the binaryFile blob source through the multimodal
+mapInPandas shape. LLM pipeline: distributed hashed-bag
+logistic-regression training under the planted-recovery gate pattern.
 
 Everything stays JVM-side codegen except the documented
 mapInPandas/UDAF surfaces — no row-at-a-time Python anywhere.
@@ -45,392 +30,6 @@ ORACLES: dict = {}
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     configure_for_oracle_parity(spark)
     return load_table(spark, sf_dir, name)
-
-
-# ---------------------------------------------------------------------------
-# VARIANT: parse_json / variant_get / schema_of_variant / try_parse_json
-# ---------------------------------------------------------------------------
-
-def q_variant_functions_events(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Spark 4 VARIANT path over the events props JSON: parse once
-    into the binary variant encoding, then typed path extraction
-    (`variant_get` int and string casts of ``$.k``), the inferred
-    variant schema string, and the `try_parse_json` null contract on
-    a deliberately-corrupted copy (leading garbage — Spark's parser
-    tolerates TRAILING garbage after a complete JSON value, so the
-    corruption must precede it).
-    At 100 TB this is THE json strategy: one parse, shredded columnar
-    access, no per-query string re-scan."""
-    ev = _t(spark, sf_dir, "events")
-    v = F.parse_json("props")
-    corrupt = F.try_parse_json(F.concat(F.lit("x"), F.col("props")))
-    return ev.select(
-        "event_id",
-        F.variant_get(v, "$.k", "bigint").alias("k_int"),
-        F.variant_get(v, "$.k", "string").alias("k_str"),
-        F.variant_get(v, "$.missing", "string").isNull()
-        .alias("missing_is_null"),
-        F.schema_of_variant(v).alias("var_schema"),
-        F.is_variant_null(v).alias("top_is_json_null"),
-        corrupt.isNull().alias("corrupt_dropped"),
-    )
-
-
-ORACLE_VARIANT_FUNCTIONS_EVENTS = """
-SELECT event_id,
-       CAST(props::JSON->>'k' AS BIGINT) AS k_int,
-       props::JSON->>'k' AS k_str,
-       true AS missing_is_null,
-       'OBJECT<k: BIGINT>' AS var_schema,
-       false AS top_is_json_null,
-       true AS corrupt_dropped
-FROM events
-"""
-
-QUERIES["variant_functions_events"] = q_variant_functions_events
-ORACLES["variant_functions_events"] = ORACLE_VARIANT_FUNCTIONS_EVENTS
-
-
-# ---------------------------------------------------------------------------
-# try_-family ANSI-safe arithmetic
-# ---------------------------------------------------------------------------
-
-_BIGINT_MAX = 9223372036854775807
-
-
-def q_try_functions_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANSI-mode-safe arithmetic: `try_divide` (null on zero),
-    `try_add`/`try_multiply` (null on bigint overflow), `try_to_number`
-    (null on format mismatch), `try_element_at` (null out of bounds),
-    `try_to_timestamp` (null on garbage) — the declarative replacement
-    for the reference's per-field try/except validator
-    (consumer/ingest_bronze.py:86-95). Division results are
-    order-insensitive scalars (single multiply/divide per row), so no
-    quantization is needed."""
-    ev = _t(spark, sf_dir, "events")
-    k = F.variant_get(F.parse_json("props"), "$.k", "bigint")
-    arr = F.array(F.lit(10), F.lit(20))
-    return ev.select(
-        "event_id",
-        F.try_divide(F.col("value"), k.cast("double")).alias("div_by_k"),
-        F.try_add(F.lit(_BIGINT_MAX).cast("long"), F.col("event_id"))
-        .isNotNull()
-        .alias("add_ok"),
-        F.try_multiply(
-            F.lit(_BIGINT_MAX).cast("long"),
-            F.col("event_id") + F.lit(2),
-        ).isNull()
-        .alias("mul_overflowed"),
-        F.try_to_number(
-            F.format_string("%.2f", "value"), F.lit("999999.99")
-        ).cast("double").alias("num_ok"),
-        F.try_to_number(F.col("event_type"), F.lit("999")).isNull()
-        .alias("num_bad_null"),
-        F.try_element_at(arr, (F.col("event_id") % 4 + 1).cast("int"))
-        .alias("elem_maybe"),
-        F.try_to_timestamp(F.col("event_type")).isNull().alias("ts_bad_null"),
-    )
-
-
-ORACLE_TRY_FUNCTIONS_EVENTS = f"""
-SELECT event_id,
-       CASE WHEN CAST(props::JSON->>'k' AS BIGINT) = 0 THEN NULL
-            ELSE value / CAST(props::JSON->>'k' AS DOUBLE) END
-         AS div_by_k,
-       event_id = 0 AS add_ok,
-       true AS mul_overflowed,
-       CAST(printf('%.2f', value) AS DOUBLE) AS num_ok,
-       true AS num_bad_null,
-       CASE WHEN event_id % 4 + 1 <= 2
-            THEN (event_id % 4 + 1) * 10 END AS elem_maybe,
-       true AS ts_bad_null
-FROM events
-"""
-
-QUERIES["try_functions_events"] = q_try_functions_events
-ORACLES["try_functions_events"] = ORACLE_TRY_FUNCTIONS_EVENTS
-
-
-# ---------------------------------------------------------------------------
-# XML: to_xml exact format + from_xml roundtrip + xpath extraction
-# ---------------------------------------------------------------------------
-
-def q_xml_functions_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """XML wire format: `to_xml` of a (event_id, event_type) struct —
-    the exact serialized string is hashed, so the formatting contract
-    (ROW root, 4-space indent, newlines) is pinned — then `from_xml`
-    parses it back (roundtrip fields must equal the originals) and
-    `xpath_string`/`xpath_long` extract from the raw string. Only
-    deterministic-format fields (long, string) ride in the payload;
-    float formatting stays out by design.
-
-    Runs on the deterministic `event_id % 23 == 0` slice (~4% of
-    rows, oracle-replayable): a format-contract gate needs enough
-    rows to pin the serializer, not every row — at full sf0.1 the
-    three DOM parses per row made this the slowest bench entry
-    (10.4 s) for zero extra signal. Production guidance for bulk
-    XML stays in SCALE.md (parse once via from_xml; xpath re-parses
-    the string each call)."""
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    ev = _t(spark, sf_dir, "events").filter(
-        F.col("event_id") % 23 == 0
-    )
-    xml = F.to_xml(
-        F.struct(
-            F.col("event_id").alias("eid"),
-            F.col("event_type").alias("etype"),
-        )
-    )
-    back_schema = StructType(
-        [
-            StructField("eid", LongType()),
-            StructField("etype", StringType()),
-        ]
-    )
-    withx = ev.select("event_id", "event_type", xml.alias("xml"))
-    return withx.select(
-        "event_id",
-        "xml",
-        F.from_xml("xml", back_schema).alias("m"),
-        F.expr("xpath_string(xml, '/ROW/etype')").alias("xp_type"),
-        F.expr("xpath_long(xml, '/ROW/eid')").alias("xp_id"),
-    ).select(
-        "event_id",
-        "xml",
-        F.col("m.eid").alias("rt_id"),
-        F.col("m.etype").alias("rt_type"),
-        "xp_type",
-        "xp_id",
-    )
-
-
-ORACLE_XML_FUNCTIONS_EVENTS = """
-SELECT event_id,
-       '<ROW>' || chr(10) ||
-       '    <eid>' || event_id || '</eid>' || chr(10) ||
-       '    <etype>' || event_type || '</etype>' || chr(10) ||
-       '</ROW>' AS xml,
-       event_id AS rt_id,
-       event_type AS rt_type,
-       event_type AS xp_type,
-       event_id AS xp_id
-FROM events
-WHERE event_id % 23 = 0
-"""
-
-QUERIES["xml_functions_events"] = q_xml_functions_events
-ORACLES["xml_functions_events"] = ORACLE_XML_FUNCTIONS_EVENTS
-
-
-# ---------------------------------------------------------------------------
-# Correlated LATERAL subquery join
-# ---------------------------------------------------------------------------
-
-LATERAL_TOPK = 2
-
-
-def q_lateral_topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-customer top-2 orders via a correlated LATERAL subquery —
-    the dependent-join SQL surface (distinct from the window-function
-    top-k already gated by top_orders_per_customer: same answer,
-    different operator). Catalyst decorrelates the LATERAL into a
-    ranked join, so the plan scales as one keyed exchange, not a
-    per-row subquery execution."""
-    configure_for_oracle_parity(spark)
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView(
-        "_lat_customer"
-    )
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "_lat_orders"
-    )
-    return spark.sql(
-        f"""
-        SELECT c.c_custkey, c.c_mktsegment,
-               l.o_orderkey, l.o_totalprice
-        FROM _lat_customer c,
-        LATERAL (
-          SELECT o_orderkey, o_totalprice
-          FROM _lat_orders o
-          WHERE o.o_custkey = c.c_custkey
-          ORDER BY o_totalprice DESC, o_orderkey
-          LIMIT {LATERAL_TOPK}
-        ) l
-        """
-    )
-
-
-ORACLE_LATERAL_TOPK_ORDERS = f"""
-SELECT c.c_custkey, c.c_mktsegment, l.o_orderkey, l.o_totalprice
-FROM customer c,
-LATERAL (
-  SELECT o_orderkey, o_totalprice
-  FROM orders o
-  WHERE o.o_custkey = c.c_custkey
-  ORDER BY o_totalprice DESC, o_orderkey
-  LIMIT {LATERAL_TOPK}
-) l
-"""
-
-QUERIES["lateral_topk_orders"] = q_lateral_topk_orders
-ORACLES["lateral_topk_orders"] = ORACLE_LATERAL_TOPK_ORDERS
-
-
-# ---------------------------------------------------------------------------
-# Sliding token-window chunking with overlap (RAG prep)
-# ---------------------------------------------------------------------------
-
-CHUNK_WINDOW = 64
-CHUNK_STRIDE = 48
-
-
-def q_sliding_chunks_documents(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Fixed-size token windows with stride (64-token windows every
-    48 tokens → 16-token overlap) — the standard retrieval-chunking
-    shape next to the content-defined CDC chunker
-    (extensions/text.py). Pure row-local codegen: tokenize, generate
-    window starts with `sequence`, explode, `slice` — the fan-out is
-    ~n/stride rows per doc and NOTHING shuffles; at 100 TB the chunk
-    table partitions by doc hash exactly like its input. Tokens keep
-    their original case — a retrieval chunker must not normalize the
-    text it re-emits (unlike the counting paths in
-    extensions/vocab.py, which lower)."""
-    d = _t(spark, sf_dir, "documents")
-    toks = F.filter(
-        F.split(F.col("text"), r"\s+"), lambda x: x != F.lit("")
-    )
-    n = F.size(toks)
-    starts = F.sequence(
-        F.lit(0),
-        F.greatest(n - 1, F.lit(0)),
-        F.lit(CHUNK_STRIDE),
-    )
-    return (
-        d.select(
-            "doc_id",
-            toks.alias("toks"),
-            n.alias("n_tokens"),
-            F.explode(starts).alias("start"),
-        )
-        .filter((F.col("start") == 0) | (F.col("start") < F.col("n_tokens")))
-        .select(
-            "doc_id",
-            (F.col("start") / CHUNK_STRIDE).cast("bigint").alias("chunk_id"),
-            "start",
-            F.least(
-                F.lit(CHUNK_WINDOW), F.col("n_tokens") - F.col("start")
-            ).cast("bigint").alias("chunk_len"),
-            F.array_join(
-                F.slice(F.col("toks"), F.col("start") + 1, F.lit(CHUNK_WINDOW)),
-                " ",
-            ).alias("chunk_text"),
-        )
-    )
-
-
-ORACLE_SLIDING_CHUNKS_DOCUMENTS = rf"""
-WITH tok AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS toks
-  FROM documents
-),
-sized AS (
-  SELECT doc_id, toks, len(toks) AS n_tokens FROM tok
-),
-starts AS (
-  SELECT doc_id, toks, n_tokens, unnest(
-           range(0, greatest(n_tokens, 1), {CHUNK_STRIDE})) AS start
-  FROM sized
-)
-SELECT doc_id,
-       CAST(start // {CHUNK_STRIDE} AS BIGINT) AS chunk_id,
-       start,
-       CAST(least({CHUNK_WINDOW}, n_tokens - start) AS BIGINT) AS chunk_len,
-       array_to_string(toks[start + 1 : start + {CHUNK_WINDOW}], ' ')
-         AS chunk_text
-FROM starts
-WHERE start = 0 OR start < n_tokens
-"""
-
-QUERIES["sliding_chunks_documents"] = q_sliding_chunks_documents
-ORACLES["sliding_chunks_documents"] = ORACLE_SLIDING_CHUNKS_DOCUMENTS
-
-
-# ---------------------------------------------------------------------------
-# Observation API: single-pass pipeline metrics
-# ---------------------------------------------------------------------------
-
-def q_observe_metrics_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`DataFrame.observe` — accumulator-backed pipeline metrics
-    computed DURING a pass the job was already making (here a noop
-    sink), not by a second scan. This is how a 100 TB ETL job reports
-    row counts / sums / bounds for free; the reference recomputes its
-    "data status" numbers with separate pandas passes
-    (dashboard/app.py KPI reads). The observed metrics come back as
-    driver scalars by design (that is the API's contract — metrics,
-    not data), and the gate re-emits them as a 1-row DataFrame whose
-    hash the oracle must match. The accumulator sum is
-    order-insensitive only through the float32 gate quantization."""
-    import numpy as np
-    from pyspark.sql import Observation
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    o = _t(spark, sf_dir, "orders")
-    obs = Observation("gate_metrics")
-    observed = o.observe(
-        obs,
-        F.count(F.lit(1)).alias("n_orders"),
-        F.sum("o_totalprice").alias("revenue"),
-        F.min("o_totalprice").alias("min_price"),
-        F.max("o_totalprice").alias("max_price"),
-    )
-    observed.write.format("noop").mode("overwrite").save()
-    m = obs.get
-    schema = StructType(
-        [
-            StructField("n_orders", LongType()),
-            StructField("revenue", DoubleType()),
-            StructField("min_price", DoubleType()),
-            StructField("max_price", DoubleType()),
-        ]
-    )
-    return spark.createDataFrame(
-        [
-            (
-                int(m["n_orders"]),
-                float(np.float32(m["revenue"])),
-                float(m["min_price"]),
-                float(m["max_price"]),
-            )
-        ],
-        schema,
-    )
-
-
-ORACLE_OBSERVE_METRICS_ORDERS = """
-SELECT CAST(count(*) AS BIGINT) AS n_orders,
-       CAST(CAST(sum(o_totalprice) AS REAL) AS DOUBLE) AS revenue,
-       min(o_totalprice) AS min_price,
-       max(o_totalprice) AS max_price
-FROM orders
-"""
-
-QUERIES["observe_metrics_orders"] = q_observe_metrics_orders
-ORACLES["observe_metrics_orders"] = ORACLE_OBSERVE_METRICS_ORDERS
 
 
 # ---------------------------------------------------------------------------
@@ -478,149 +77,6 @@ SELECT event_id, ts, user_id, event_type, value, props FROM events
 
 QUERIES["compaction_roundtrip_events"] = q_compaction_roundtrip_events
 ORACLES["compaction_roundtrip_events"] = ORACLE_COMPACTION_ROUNDTRIP_EVENTS
-
-
-# ---------------------------------------------------------------------------
-# Streaming multi-sink fanout (foreachBatch)
-# ---------------------------------------------------------------------------
-
-def q_stream_fanout_availablenow(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Multi-sink fanout — the production pattern a single
-    `writeStream` cannot express: each micro-batch lands in TWO sinks
-    (raw rows + per-type partial counts) inside one `foreachBatch`,
-    sharing one source read via `persist`. The gate returns the
-    per-type totals computed from BOTH sinks side by side; they must
-    agree with each other and with the batch oracle, so a batch that
-    landed in one sink but not the other — the failure mode fanout
-    invites — is a hash mismatch. Each sink writes per-batch
-    directories (idempotent on retry), the stream runs one file per
-    trigger, and partial counts roll up by sum (mergeable-monoid
-    discipline, the CMS/partial-agg story)."""
-    import tempfile
-
-    configure_for_oracle_parity(spark)
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "event_type", "value"
-    )
-    tmp = tempfile.mkdtemp(prefix="stream_fanout_gate_")
-    staged = f"{tmp}/staged"
-    raw_dir = f"{tmp}/raw"
-    agg_dir = f"{tmp}/agg"
-    half = F.pmod(F.hash("event_id"), F.lit(2))
-    for h in (0, 1):
-        ev.filter(half == h).coalesce(1).write.mode("overwrite").parquet(
-            f"{staged}/half={h}"
-        )
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("recursiveFileLookup", "true")
-        .parquet(staged)
-    )
-
-    def _fanout(batch_df, batch_id: int) -> None:
-        batch_df.persist()
-        try:
-            batch_df.write.mode("overwrite").parquet(
-                f"{raw_dir}/batch={batch_id}"
-            )
-            batch_df.groupBy("event_type").agg(
-                F.count(F.lit(1)).alias("partial_n")
-            ).write.mode("overwrite").parquet(f"{agg_dir}/batch={batch_id}")
-        finally:
-            batch_df.unpersist()
-
-    q = (
-        stream.writeStream.foreachBatch(_fanout)
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("fanout availableNow run exceeded 300s")
-    raw_counts = (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(raw_dir)
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n_raw"))
-    )
-    agg_counts = (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(agg_dir)
-        .groupBy("event_type")
-        .agg(F.sum("partial_n").alias("n_agg"))
-    )
-    return raw_counts.join(agg_counts, "event_type")
-
-
-ORACLE_STREAM_FANOUT_AVAILABLENOW = """
-SELECT event_type,
-       CAST(count(*) AS BIGINT) AS n_raw,
-       CAST(count(*) AS BIGINT) AS n_agg
-FROM events GROUP BY 1
-"""
-
-QUERIES["stream_fanout_availablenow"] = q_stream_fanout_availablenow
-ORACLES["stream_fanout_availablenow"] = ORACLE_STREAM_FANOUT_AVAILABLENOW
-
-
-# ---------------------------------------------------------------------------
-# Collation-aware string semantics
-# ---------------------------------------------------------------------------
-
-def q_collation_group_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark 4 string collations: a case-mangled copy of event_type
-    (every even event_id upper-cased) is grouped under the
-    ``UTF8_LCASE`` collation — case variants must land in ONE group
-    with no `lower()` rewrite of the data — plus collated equality
-    and prefix predicates. Collated groupBy keeps an ARBITRARY case
-    representative per group, so the gate emits ``lower(key)`` (a
-    deterministic projection of that representative), the count, and
-    the predicate tallies. At 100 TB collation-aware grouping hashes
-    the collation key directly — same shuffle as any groupBy, no
-    expression rewrite, and the optimizer keeps pushdown on the
-    collated column."""
-    ev = _t(spark, sf_dir, "events")
-    mangled = F.when(
-        F.col("event_id") % 2 == 0, F.upper("event_type")
-    ).otherwise(F.col("event_type"))
-    lcase = F.collate(mangled, "UTF8_LCASE")
-    return (
-        ev.select(
-            lcase.alias("k"),
-            (lcase == F.lit("CLICK")).alias("is_click_ci"),
-            F.startswith(lcase, F.lit("P")).alias("p_prefix_ci"),
-        )
-        .groupBy("k")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("is_click_ci").cast("bigint")).alias("n_click_ci"),
-            F.sum(F.col("p_prefix_ci").cast("bigint")).alias("n_p_prefix"),
-        )
-        .select(
-            F.lower(F.col("k")).alias("etype"),
-            "n",
-            "n_click_ci",
-            "n_p_prefix",
-        )
-    )
-
-
-ORACLE_COLLATION_GROUP_EVENTS = """
-SELECT lower(event_type) AS etype,
-       count(*) AS n,
-       CAST(sum(CASE WHEN lower(event_type) = 'click'
-                     THEN 1 ELSE 0 END) AS BIGINT) AS n_click_ci,
-       CAST(sum(CASE WHEN lower(event_type) LIKE 'p%'
-                     THEN 1 ELSE 0 END) AS BIGINT) AS n_p_prefix
-FROM events GROUP BY 1
-"""
-
-QUERIES["collation_group_events"] = q_collation_group_events
-ORACLES["collation_group_events"] = ORACLE_COLLATION_GROUP_EVENTS
 
 
 # ---------------------------------------------------------------------------
@@ -698,190 +154,6 @@ ORACLES["bucketed_join_orders"] = ORACLE_BUCKETED_JOIN_ORDERS
 
 
 # ---------------------------------------------------------------------------
-# Recursive CTE (iterative SQL surface)
-# ---------------------------------------------------------------------------
-
-def q_recursive_cte_hierarchy(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """WITH RECURSIVE — the iterative SQL surface (Spark 4): walk the
-    implicit binary-tree hierarchy parent(c) = c DIV 2 over the
-    customer table from the roots down, then profile each depth.
-    Every recursion step is ONE equi-join of the frontier against the
-    base table and the depth is log2(|customers|), so the plan is a
-    bounded Pregel loop in pure SQL — the declarative sibling of the
-    DataFrame PageRank loop (extensions/graph.py), with Catalyst
-    handling the per-step plans. Counts/min/max only: everything
-    hash-exact."""
-    configure_for_oracle_parity(spark)
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView(
-        "_rec_customer"
-    )
-    return spark.sql(
-        """
-        WITH RECURSIVE anc(custkey, depth) AS (
-          SELECT c_custkey, 0 FROM _rec_customer WHERE c_custkey <= 1
-          UNION ALL
-          SELECT c.c_custkey, a.depth + 1
-          FROM _rec_customer c JOIN anc a ON c.c_custkey DIV 2 = a.custkey
-          WHERE c.c_custkey > 1
-        )
-        SELECT depth,
-               COUNT(*) AS n_nodes,
-               MIN(custkey) AS min_key,
-               MAX(custkey) AS max_key
-        FROM anc GROUP BY depth
-        """
-    )
-
-
-ORACLE_RECURSIVE_CTE_HIERARCHY = """
-WITH RECURSIVE anc(custkey, depth) AS (
-  SELECT c_custkey, 0 FROM customer WHERE c_custkey <= 1
-  UNION ALL
-  SELECT c.c_custkey, a.depth + 1
-  FROM customer c JOIN anc a ON c.c_custkey // 2 = a.custkey
-  WHERE c.c_custkey > 1
-)
-SELECT depth,
-       count(*) AS n_nodes,
-       CAST(min(custkey) AS BIGINT) AS min_key,
-       CAST(max(custkey) AS BIGINT) AS max_key
-FROM anc GROUP BY depth
-"""
-
-QUERIES["recursive_cte_hierarchy"] = q_recursive_cte_hierarchy
-ORACLES["recursive_cte_hierarchy"] = ORACLE_RECURSIVE_CTE_HIERARCHY
-
-
-# ---------------------------------------------------------------------------
-# Ordered string aggregation (listagg WITHIN GROUP)
-# ---------------------------------------------------------------------------
-
-def q_listagg_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`listagg ... WITHIN GROUP (ORDER BY ...)` (Spark 4): the
-    ordered string aggregation every report/export pipeline wants —
-    per user, the event-type sequence in (ts, event_id) order plus a
-    de-duplicated sorted type list. The within-group sort happens
-    inside the aggregate on each user's rows (no global sort); at
-    100 TB this is one keyed exchange like any groupBy, with per-key
-    payload bounded by the concatenated string. The deterministic
-    ORDER BY is what makes the result hashable — bare listagg order
-    is engine-arbitrary and would never gate."""
-    ev = _t(spark, sf_dir, "events")
-    ev.createOrReplaceTempView("_la_events")
-    return spark.sql(
-        """
-        SELECT user_id,
-               listagg(event_type, '>')
-                 WITHIN GROUP (ORDER BY ts, event_id) AS journey,
-               listagg(DISTINCT event_type, ',')
-                 WITHIN GROUP (ORDER BY event_type) AS type_set,
-               COUNT(*) AS n_events
-        FROM _la_events
-        GROUP BY user_id
-        """
-    )
-
-
-ORACLE_LISTAGG_EVENTS = """
-SELECT user_id,
-       string_agg(event_type, '>' ORDER BY ts, event_id) AS journey,
-       string_agg(DISTINCT event_type, ',' ORDER BY event_type)
-         AS type_set,
-       count(*) AS n_events
-FROM events
-GROUP BY user_id
-"""
-
-QUERIES["listagg_events"] = q_listagg_events
-ORACLES["listagg_events"] = ORACLE_LISTAGG_EVENTS
-
-
-# ---------------------------------------------------------------------------
-# Dynamic-gap session windows
-# ---------------------------------------------------------------------------
-
-PURCHASE_GAP_S = 7200
-DEFAULT_GAP_S = 1800
-
-
-def q_dynamic_session_window_events(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """`session_window` with a PER-EVENT gap expression (purchases
-    hold a session open 2 h, everything else 30 min) — the
-    activity-aware sessionization the fixed-gap operator
-    (session_window_events) can't express. Each event contributes
-    the half-open range [ts, ts+gap); overlapping ranges merge, and
-    an event at exactly a session's end starts a NEW session. The
-    DuckDB oracle replays that contract with a running max of
-    lagged range-ends per user (pure integer microsecond
-    comparisons — no float anywhere). One keyed exchange at scale,
-    like any sessionizer."""
-    ev = _t(spark, sf_dir, "events")
-    gap = F.when(
-        F.col("event_type") == "purchase", F.lit(f"{PURCHASE_GAP_S} seconds")
-    ).otherwise(F.lit(f"{DEFAULT_GAP_S} seconds"))
-    return (
-        ev.groupBy(F.session_window("ts", gap), "user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum((F.col("event_type") == "purchase").cast("bigint")).alias(
-                "n_purchases"
-            ),
-        )
-        .select(
-            "user_id",
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            "n_events",
-            "n_purchases",
-        )
-    )
-
-
-ORACLE_DYNAMIC_SESSION_WINDOW_EVENTS = f"""
-WITH e AS (
-  SELECT user_id, ts, event_type,
-         ts + to_microseconds(CAST(CASE WHEN event_type = 'purchase'
-                                        THEN {PURCHASE_GAP_S}
-                                        ELSE {DEFAULT_GAP_S}
-                                   END AS BIGINT) * 1000000) AS range_end
-  FROM events
-),
-flagged AS (
-  SELECT user_id, ts, event_type, range_end,
-         CASE WHEN max(range_end) OVER (
-                PARTITION BY user_id ORDER BY ts, range_end
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-              > ts THEN 0 ELSE 1 END AS is_new
-  FROM e
-),
-sessions AS (
-  SELECT user_id, ts, event_type, range_end,
-         CAST(sum(is_new) OVER (
-           PARTITION BY user_id ORDER BY ts, range_end
-           ROWS UNBOUNDED PRECEDING) AS BIGINT) AS sid
-  FROM flagged
-)
-SELECT user_id,
-       min(ts) AS session_start,
-       max(range_end) AS session_end,
-       count(*) AS n_events,
-       CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_purchases
-FROM sessions
-GROUP BY user_id, sid
-"""
-
-QUERIES["dynamic_session_window_events"] = q_dynamic_session_window_events
-ORACLES["dynamic_session_window_events"] = (
-    ORACLE_DYNAMIC_SESSION_WINDOW_EVENTS
-)
-
-
-# ---------------------------------------------------------------------------
 # Distributed quality-classifier training (planted-recovery gate)
 # ---------------------------------------------------------------------------
 
@@ -947,224 +219,6 @@ FROM documents
 
 QUERIES["logreg_quality_planted"] = q_logreg_quality_planted
 ORACLES["logreg_quality_planted"] = ORACLE_LOGREG_QUALITY_PLANTED
-
-
-# ---------------------------------------------------------------------------
-# Int8 embedding quantization (ANN memory-compression path)
-# ---------------------------------------------------------------------------
-
-INT8_COS_BOUND = 0.999
-
-
-def q_embedding_int8_quantize(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Scalar int8 quantization of the embedding column — the 4×
-    memory compression every large ANN index applies before search
-    (FAISS SQ8): per-DIMENSION min/max ranges (one 64-row aggregate,
-    broadcast back), each value rounded to its 0-255 code, then
-    dequantized and compared to the original by cosine. The gate
-    hashes the exact integer CODE SUM per vector (quantization is
-    deterministic integer arithmetic) plus the invariant that
-    reconstruction cosine stays above 0.999 — the bound that makes
-    SQ8 shortlists safe to re-rank exactly. All per-element math is
-    row-local; the only exchanges are the 64-row stats aggregate and
-    the per-vector re-aggregation."""
-    emb = _t(spark, sf_dir, "embeddings")
-    ex = emb.select(
-        "vec_id", F.posexplode("embedding").alias("pos", "x")
-    ).withColumn("x", F.col("x").cast("double"))
-    stats = ex.groupBy("pos").agg(
-        F.min("x").alias("lo"), F.max("x").alias("hi")
-    )
-    q = (
-        ex.join(F.broadcast(stats), "pos")
-        .withColumn(
-            "code",
-            F.when(F.col("hi") == F.col("lo"), F.lit(0))
-            .otherwise(
-                F.round(
-                    (F.col("x") - F.col("lo"))
-                    / (F.col("hi") - F.col("lo"))
-                    * 255.0
-                )
-            )
-            .cast("int"),
-        )
-        .withColumn(
-            "xq",
-            F.col("lo")
-            + F.col("code").cast("double")
-            / 255.0
-            * (F.col("hi") - F.col("lo")),
-        )
-    )
-    per_vec = q.groupBy("vec_id").agg(
-        F.sum("code").cast("bigint").alias("code_sum"),
-        F.count(F.lit(1)).cast("int").alias("n_dims"),
-        F.sum(F.col("x") * F.col("xq")).alias("_xy"),
-        F.sum(F.col("x") * F.col("x")).alias("_xx"),
-        F.sum(F.col("xq") * F.col("xq")).alias("_qq"),
-    )
-    cos = F.col("_xy") / F.sqrt(F.col("_xx") * F.col("_qq"))
-    return per_vec.select(
-        "vec_id",
-        "code_sum",
-        "n_dims",
-        (cos > INT8_COS_BOUND).alias("cos_ok"),
-    )
-
-
-ORACLE_EMBEDDING_INT8_QUANTIZE = """
-WITH ex AS (
-  SELECT vec_id, i - 1 AS pos, CAST(embedding[i] AS DOUBLE) AS x
-  FROM embeddings,
-       unnest(range(1, len(embedding) + 1)) AS t(i)
-),
-stats AS (
-  SELECT pos, min(x) AS lo, max(x) AS hi FROM ex GROUP BY pos
-),
-q AS (
-  SELECT e.vec_id,
-         CASE WHEN s.hi = s.lo THEN 0
-              ELSE CAST(round((e.x - s.lo) / (s.hi - s.lo) * 255.0)
-                        AS INT) END AS code
-  FROM ex e JOIN stats s USING (pos)
-)
-SELECT vec_id,
-       CAST(sum(code) AS BIGINT) AS code_sum,
-       CAST(count(*) AS INT) AS n_dims,
-       true AS cos_ok
-FROM q GROUP BY vec_id
-"""
-
-QUERIES["embedding_int8_quantize"] = q_embedding_int8_quantize
-ORACLES["embedding_int8_quantize"] = ORACLE_EMBEDDING_INT8_QUANTIZE
-
-
-# ---------------------------------------------------------------------------
-# Storage-format roundtrips: ORC and CSV sinks/sources
-# ---------------------------------------------------------------------------
-
-def q_orc_roundtrip_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ORC sink + source (§2.1 beyond-parquet format coverage): the
-    events table written as ORC — Spark's other built-in columnar
-    format, zlib-compressed with min/max stripe statistics — and read
-    back through an explicit schema; the contents must hash-match the
-    parquet original byte for byte (timestamps survive at µs
-    precision, doubles bit-exactly). Predicate pushdown and column
-    pruning work on ORC scans the same way the parquet plan tests
-    assert."""
-    import tempfile
-
-    ev = _t(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="orc_gate_")
-    ev.write.mode("overwrite").orc(tmp)
-    return spark.read.schema(ev.schema).orc(tmp)
-
-
-ORACLE_ORC_ROUNDTRIP_EVENTS = """
-SELECT event_id, ts, user_id, event_type, value, props FROM events
-"""
-
-QUERIES["orc_roundtrip_events"] = q_orc_roundtrip_events
-ORACLES["orc_roundtrip_events"] = ORACLE_ORC_ROUNDTRIP_EVENTS
-
-
-def q_xml_roundtrip_events(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Native XML sink + source (Spark 4 absorbed spark-xml as a
-    built-in format — §2.1's remaining text format next to the ORC
-    and CSV round-trips; `xml_functions_events` covers the
-    expression surface, this covers the FILE source/sink): events
-    written with a row tag and read back through an EXPLICIT schema
-    (inference on XML is an extra full scan, same rule as CSV).
-    Doubles survive the text round-trip bit-exactly (shortest-repr
-    serialization parses back to the identical IEEE value — verified
-    empirically, zero mismatches), the JSON-bearing props string
-    exercises XML entity escaping both directions, and the
-    timestamp rides as explicit epoch-µs to keep the contract
-    format-independent. Hash-equal to the parquet original."""
-    import tempfile
-
-    ev = _t(spark, sf_dir, "events").select(
-        "event_id",
-        F.unix_micros("ts").alias("ts_us"),
-        "user_id",
-        "event_type",
-        "value",
-        "props",
-    )
-    tmp = tempfile.mkdtemp(prefix="xml_rt_gate_")
-    ev.write.format("xml").option("rowTag", "event").mode(
-        "overwrite"
-    ).save(tmp)
-    return (
-        spark.read.schema(ev.schema)
-        .format("xml")
-        .option("rowTag", "event")
-        .load(tmp)
-    )
-
-
-ORACLE_XML_ROUNDTRIP_EVENTS = """
-SELECT event_id, epoch_us(ts) AS ts_us, user_id, event_type,
-       value, props
-FROM events
-"""
-
-QUERIES["xml_roundtrip_events"] = q_xml_roundtrip_events
-ORACLES["xml_roundtrip_events"] = ORACLE_XML_ROUNDTRIP_EVENTS
-
-
-def q_csv_roundtrip_customers(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """CSV sink + source (S4's write half): the customer dimension
-    written as headered CSV and read back through an EXPLICIT schema
-    (no inferSchema pass — at scale schema inference is a full extra
-    scan). c_acctbal rides as a 2-decimal string format so the text
-    roundtrip is exact by construction; quoting/escaping is exercised
-    by c_name (commas never appear, but the reader runs the full
-    parser path either way)."""
-    import tempfile
-
-    c = _t(spark, sf_dir, "customer").select(
-        "c_custkey",
-        "c_name",
-        "c_nationkey",
-        F.format_string("%.2f", "c_acctbal").alias("c_acctbal_s"),
-        "c_mktsegment",
-    )
-    tmp = tempfile.mkdtemp(prefix="csv_gate_")
-    c.write.mode("overwrite").option("header", "true").csv(tmp)
-    back = (
-        spark.read.schema(
-            "c_custkey long, c_name string, c_nationkey long, "
-            "c_acctbal_s string, c_mktsegment string"
-        )
-        .option("header", "true")
-        .csv(tmp)
-    )
-    return back.select(
-        "c_custkey",
-        "c_name",
-        "c_nationkey",
-        F.col("c_acctbal_s").cast("double").alias("c_acctbal"),
-        "c_mktsegment",
-    )
-
-
-ORACLE_CSV_ROUNDTRIP_CUSTOMERS = """
-SELECT c_custkey, c_name, c_nationkey,
-       CAST(printf('%.2f', c_acctbal) AS DOUBLE) AS c_acctbal,
-       c_mktsegment
-FROM customer
-"""
-
-QUERIES["csv_roundtrip_customers"] = q_csv_roundtrip_customers
-ORACLES["csv_roundtrip_customers"] = ORACLE_CSV_ROUNDTRIP_CUSTOMERS
 
 
 # ---------------------------------------------------------------------------
@@ -1253,306 +307,6 @@ WHERE v_range OR v_type OR v_ts OR v_id
 
 QUERIES["expectations_events"] = q_expectations_events
 ORACLES["expectations_events"] = ORACLE_EXPECTATIONS_EVENTS
-
-
-# ---------------------------------------------------------------------------
-# Table checksums (cross-system reconciliation)
-# ---------------------------------------------------------------------------
-
-CHECKSUM_BUCKETS = 32
-
-
-def q_table_checksum_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Content checksums for table reconciliation — the anti-entropy
-    primitive for comparing a 100 TB table against its replica
-    without moving data: each row hashes canonically (md5 of a
-    delimited rendering, first 15 hex digits as a bigint), rows
-    bucket by key hash, and each bucket emits (row count, hash sum) —
-    a |buckets|-row summary whose mismatch pinpoints the divergent
-    key range. Row order inside a bucket is canonicalized by SORTING
-    the row digests before the bucket digest (row order is physical
-    noise, not content), so the summary is engine- and
-    partitioning-independent by construction; the float column rides
-    as its exact 2-decimal string rendering."""
-    o = _t(spark, sf_dir, "orders")
-    canon = F.concat_ws(
-        "|",
-        F.col("o_orderkey").cast("string"),
-        F.col("o_custkey").cast("string"),
-        F.col("o_orderstatus"),
-        F.format_string("%.2f", "o_totalprice"),
-        F.date_format("o_orderdate", "yyyy-MM-dd HH:mm:ss"),
-        F.col("o_orderpriority"),
-    )
-    bucket = F.pmod(F.col("o_orderkey"), F.lit(CHECKSUM_BUCKETS))
-    per_row = o.select(bucket.alias("bucket"), F.md5(canon).alias("rh"))
-    return per_row.groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.md5(
-            F.array_join(F.array_sort(F.collect_list("rh")), "")
-        ).alias("bucket_digest"),
-    )
-
-
-ORACLE_TABLE_CHECKSUM_ORDERS = f"""
-WITH h AS (
-  SELECT o_orderkey % {CHECKSUM_BUCKETS} AS bucket,
-         md5(CAST(o_orderkey AS VARCHAR) || '|' ||
-             CAST(o_custkey AS VARCHAR) || '|' ||
-             o_orderstatus || '|' ||
-             printf('%.2f', o_totalprice) || '|' ||
-             strftime(o_orderdate, '%Y-%m-%d %H:%M:%S') || '|' ||
-             o_orderpriority) AS rh
-  FROM orders
-)
-SELECT bucket, count(*) AS n_rows,
-       md5(string_agg(rh, '' ORDER BY rh)) AS bucket_digest
-FROM h GROUP BY bucket
-"""
-
-QUERIES["table_checksum_orders"] = q_table_checksum_orders
-ORACLES["table_checksum_orders"] = ORACLE_TABLE_CHECKSUM_ORDERS
-
-
-# ---------------------------------------------------------------------------
-# Schema-evolution read (mergeSchema)
-# ---------------------------------------------------------------------------
-
-def q_mergeschema_read_events(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Schema evolution at the scan (§2.1): two parquet generations —
-    an old one WITHOUT the props column and a new one with it — read
-    as one table via ``mergeSchema``; old rows surface NULL props
-    (additive evolution, the only kind a 100 TB table can afford —
-    schema-on-read, no rewrite of historical files). The conform
-    operator (sources/conform.py) handles the harder drift cases;
-    this gate pins the scan-level contract."""
-    import tempfile
-
-    ev = _t(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="mergeschema_gate_")
-    old = ev.filter(F.col("event_id") % 2 == 0).drop("props")
-    new = ev.filter(F.col("event_id") % 2 == 1)
-    old.write.mode("overwrite").parquet(f"{tmp}/gen=old")
-    new.write.mode("overwrite").parquet(f"{tmp}/gen=new")
-    merged = (
-        spark.read.option("mergeSchema", "true")
-        .option("recursiveFileLookup", "true")
-        .parquet(tmp)
-    )
-    return merged.select(
-        "event_id", "ts", "user_id", "event_type", "value", "props"
-    )
-
-
-ORACLE_MERGESCHEMA_READ_EVENTS = """
-SELECT event_id, ts, user_id, event_type, value,
-       CASE WHEN event_id % 2 = 1 THEN props END AS props
-FROM events
-"""
-
-QUERIES["mergeschema_read_events"] = q_mergeschema_read_events
-ORACLES["mergeschema_read_events"] = ORACLE_MERGESCHEMA_READ_EVENTS
-
-
-# ---------------------------------------------------------------------------
-# Gaps-and-islands run-length segments
-# ---------------------------------------------------------------------------
-
-def q_rle_segments_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gaps-and-islands: collapse each user's consecutive runs of the
-    same event_type into (start, end, length) segments — the
-    run-length encoding IoT pipelines apply to steady sensor states
-    and the canonical islands idiom: island id = running count of
-    change points (one lag + one running sum over the same key
-    window, then one aggregate — a single exchange end to end)."""
-    from pyspark.sql.window import Window
-
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    changed = (
-        F.lag("event_type").over(w).isNull()
-        | (F.lag("event_type").over(w) != F.col("event_type"))
-    ).cast("bigint")
-    wsum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    seg = ev.withColumn("_island", F.sum(changed).over(wsum))
-    return seg.groupBy("user_id", "_island").agg(
-        F.first("event_type").alias("event_type"),
-        F.min("ts").alias("seg_start"),
-        F.max("ts").alias("seg_end"),
-        F.count(F.lit(1)).alias("run_len"),
-    ).select(
-        "user_id",
-        F.col("_island").alias("island"),
-        "event_type",
-        "seg_start",
-        "seg_end",
-        "run_len",
-    )
-
-
-ORACLE_RLE_SEGMENTS_EVENTS = """
-WITH flagged AS (
-  SELECT user_id, ts, event_id, event_type,
-         CASE WHEN lag(event_type) OVER w IS NULL
-                OR lag(event_type) OVER w <> event_type
-              THEN 1 ELSE 0 END AS chg
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-islands AS (
-  SELECT user_id, ts, event_type,
-         CAST(sum(chg) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                             ROWS UNBOUNDED PRECEDING) AS BIGINT)
-           AS island
-  FROM flagged
-)
-SELECT user_id, island,
-       min(event_type) AS event_type,
-       min(ts) AS seg_start,
-       max(ts) AS seg_end,
-       count(*) AS run_len
-FROM islands
-GROUP BY user_id, island
-"""
-
-QUERIES["rle_segments_events"] = q_rle_segments_events
-ORACLES["rle_segments_events"] = ORACLE_RLE_SEGMENTS_EVENTS
-
-
-# ---------------------------------------------------------------------------
-# Referential-integrity audit
-# ---------------------------------------------------------------------------
-
-def q_referential_check_orders(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Cross-table referential audit — the relational half of the
-    expectations family: orphan counts for each FK edge of the spine
-    (lineitem→orders, orders→customer) plus a PLANTED violation
-    (orders checked against only the even-keyed half of customer, so
-    odd-custkey orders are orphans by construction — the real edges
-    are clean in this data and a gate that can only ever see zero
-    proves nothing). Each check is one left-anti join that shuffles
-    only the key column; the three counts union into one audit
-    report, the shape a 100 TB conformance job emits per load."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = _t(spark, sf_dir, "customer").select("c_custkey")
-    c_half = c.filter(F.col("c_custkey") % 2 == 0)
-
-    def _audit(name, child, parent, cond):
-        return (
-            child.join(parent, cond, "left_anti")
-            .agg(F.count(F.lit(1)).alias("n_orphans"))
-            .select(F.lit(name).alias("fk_edge"), "n_orphans")
-        )
-
-    return (
-        _audit(
-            "lineitem->orders",
-            li,
-            o,
-            li["l_orderkey"] == o["o_orderkey"],
-        )
-        .unionByName(
-            _audit(
-                "orders->customer",
-                o,
-                c,
-                o["o_custkey"] == c["c_custkey"],
-            )
-        )
-        .unionByName(
-            _audit(
-                "orders->customer_even_only",
-                o,
-                c_half,
-                o["o_custkey"] == c_half["c_custkey"],
-            )
-        )
-    )
-
-
-ORACLE_REFERENTIAL_CHECK_ORDERS = """
-SELECT 'lineitem->orders' AS fk_edge,
-       (SELECT count(*) FROM lineitem l
-        WHERE NOT EXISTS (SELECT 1 FROM orders o
-                          WHERE o.o_orderkey = l.l_orderkey))
-         AS n_orphans
-UNION ALL
-SELECT 'orders->customer',
-       (SELECT count(*) FROM orders o
-        WHERE NOT EXISTS (SELECT 1 FROM customer c
-                          WHERE c.c_custkey = o.o_custkey))
-UNION ALL
-SELECT 'orders->customer_even_only',
-       (SELECT count(*) FROM orders o
-        WHERE NOT EXISTS (SELECT 1 FROM customer c
-                          WHERE c.c_custkey = o.o_custkey
-                            AND c.c_custkey % 2 = 0))
-"""
-
-QUERIES["referential_check_orders"] = q_referential_check_orders
-ORACLES["referential_check_orders"] = ORACLE_REFERENTIAL_CHECK_ORDERS
-
-
-# ---------------------------------------------------------------------------
-# Null-safe equality join (<=>)
-# ---------------------------------------------------------------------------
-
-def q_nullsafe_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Null-safe equality join (`<=>` / eqNullSafe — SQL's IS NOT
-    DISTINCT FROM): a derived nullable key (props' k, nulled for
-    every third event) joined against a distinct key table that
-    includes the NULL key — under plain `=` the NULL rows silently
-    drop out of the join; under `<=>` they match the NULL dimension
-    row, which is exactly the semantics a late-dimension pipeline
-    wants for its "unknown" bucket. Plan-wise `<=>` stays a HASH
-    join key (null hashes like any value), so this costs the same
-    one exchange as an equi-join — no fallback to nested loops."""
-    ev = _t(spark, sf_dir, "events")
-    k = F.when(
-        F.col("event_id") % 3 != 0,
-        F.variant_get(F.parse_json("props"), "$.k", "bigint"),
-    )
-    fact = ev.select("event_id", k.alias("k"))
-    # dim derives from fact, so its key is RENAMED to break the
-    # self-join column lineage ambiguity
-    dim = (
-        fact.select(F.col("k").alias("k_dim"))
-        .distinct()
-        .withColumn(
-            "k_label",
-            F.coalesce(
-                F.concat(F.lit("k="), F.col("k_dim").cast("string")),
-                F.lit("unknown"),
-            ),
-        )
-    )
-    return fact.join(
-        dim, F.col("k").eqNullSafe(F.col("k_dim"))
-    ).select("event_id", "k", "k_label")
-
-
-ORACLE_NULLSAFE_JOIN_EVENTS = """
-WITH fact AS (
-  SELECT event_id,
-         CASE WHEN event_id % 3 <> 0
-              THEN CAST(props::JSON->>'k' AS BIGINT) END AS k
-  FROM events
-),
-dim AS (
-  SELECT k, coalesce('k=' || CAST(k AS VARCHAR), 'unknown') AS k_label
-  FROM (SELECT DISTINCT k FROM fact)
-)
-SELECT f.event_id, f.k, d.k_label
-FROM fact f JOIN dim d ON f.k IS NOT DISTINCT FROM d.k
-"""
-
-QUERIES["nullsafe_join_events"] = q_nullsafe_join_events
-ORACLES["nullsafe_join_events"] = ORACLE_NULLSAFE_JOIN_EVENTS
 
 
 # ---------------------------------------------------------------------------
@@ -1728,125 +482,6 @@ ORACLES["avi_frame_sample_assets"] = ORACLE_AVI_FRAME_SAMPLE_ASSETS
 
 
 # ---------------------------------------------------------------------------
-# Dynamic partition pruning
-# ---------------------------------------------------------------------------
-
-def q_dynamic_partition_pruning_events(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Dynamic partition pruning on the hash path: the events table
-    is staged PARTITIONED BY event_date, then joined to a small
-    filtered date dimension (every 6th day) — Catalyst must inject
-    the dim's build-side keys as a runtime partition filter on the
-    fact scan, so only matching date directories are read at all.
-    This is THE star-schema scan killer at 100 TB (a static planner
-    reads every partition; DPP reads |selected dates|/|dates|). The
-    gate RAISES unless the physical plan carries the
-    `dynamicpruning` subquery on the fact's partition column; values
-    are verified by the oracle's closed-form date filter."""
-    import tempfile
-
-    ev = _t(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="dpp_gate_")
-    ev.withColumn("event_date", F.to_date("ts")).write.mode(
-        "overwrite"
-    ).partitionBy("event_date").parquet(tmp)
-    fact = spark.read.parquet(tmp)
-    dim = (
-        fact.select("event_date")
-        .distinct()
-        .filter(F.dayofmonth("event_date") % 6 == 0)
-        .withColumn("is_sampled_day", F.lit(True))
-    )
-    joined = fact.join(F.broadcast(dim), "event_date")
-    plan = joined._jdf.queryExecution().executedPlan().toString()
-    if "dynamicpruning" not in plan.lower():
-        raise AssertionError(
-            f"no dynamic partition pruning in the fact scan:\n{plan}"
-        )
-    return joined.select(
-        "event_id", "event_date", "user_id", "event_type", "value"
-    )
-
-
-ORACLE_DYNAMIC_PARTITION_PRUNING_EVENTS = """
-SELECT event_id,
-       CAST(ts AS DATE) AS event_date,
-       user_id, event_type, value
-FROM events
-WHERE day(CAST(ts AS DATE)) % 6 = 0
-"""
-
-QUERIES["dynamic_partition_pruning_events"] = (
-    q_dynamic_partition_pruning_events
-)
-ORACLES["dynamic_partition_pruning_events"] = (
-    ORACLE_DYNAMIC_PARTITION_PRUNING_EVENTS
-)
-
-
-def q_agg_pushdown_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Parquet AGGREGATE pushdown on the hash path — the scan-level
-    optimization where COUNT/MIN/MAX are answered from parquet
-    row-group STATISTICS (footer metadata) without decoding a single
-    data page: at 100 TB the difference between a full-table scan and
-    a footer read per file. Requires the DSv2 parquet reader
-    (`useV1SourceList` minus parquet) plus
-    `spark.sql.parquet.aggregatePushdown`; the gate RAISES unless the
-    BatchScan carries the full `PushedAggregation: [COUNT(*),
-    MIN/MAX(...)]` list (float/double columns are deliberately
-    absent — Spark refuses their min/max pushdown because parquet NaN
-    stats ordering is unreliable, so asking for `value` would
-    silently fall back to a scan). The result is computed UNDER the
-    scoped confs and returned as a literal row; both confs are
-    restored either way so no other gate inherits the V2 reader."""
-    configure_for_oracle_parity(spark)
-    prev_pd = spark.conf.get("spark.sql.parquet.aggregatePushdown")
-    prev_v1 = spark.conf.get("spark.sql.sources.useV1SourceList")
-    try:
-        spark.conf.set("spark.sql.parquet.aggregatePushdown", "true")
-        spark.conf.set(
-            "spark.sql.sources.useV1SourceList",
-            ",".join(
-                s for s in prev_v1.split(",") if s.strip() != "parquet"
-            ),
-        )
-        agg = spark.read.parquet(f"{sf_dir}/events.parquet").agg(
-            F.count("*").alias("n_rows"),
-            F.min("user_id").alias("min_user"),
-            F.max("user_id").alias("max_user"),
-            F.min("event_id").alias("min_event"),
-            F.max("event_id").alias("max_event"),
-        )
-        plan = agg._jdf.queryExecution().executedPlan().toString()
-        if (
-            "PushedAggregation: [COUNT(*), MIN(user_id), MAX(user_id),"
-            " MIN(event_id), MAX(event_id)]" not in plan
-        ):
-            raise AssertionError(
-                f"aggregate not pushed into the parquet scan:\n{plan}"
-            )
-        rows = agg.collect()
-    finally:
-        spark.conf.set("spark.sql.parquet.aggregatePushdown", prev_pd)
-        spark.conf.set("spark.sql.sources.useV1SourceList", prev_v1)
-    return spark.createDataFrame(rows, agg.schema)
-
-
-ORACLE_AGG_PUSHDOWN_EVENTS = """
-SELECT CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(min(user_id) AS BIGINT) AS min_user,
-       CAST(max(user_id) AS BIGINT) AS max_user,
-       CAST(min(event_id) AS BIGINT) AS min_event,
-       CAST(max(event_id) AS BIGINT) AS max_event
-FROM events
-"""
-
-QUERIES["agg_pushdown_events"] = q_agg_pushdown_events
-ORACLES["agg_pushdown_events"] = ORACLE_AGG_PUSHDOWN_EVENTS
-
-
-# ---------------------------------------------------------------------------
 # Arrow-batched grouped-agg pandas UDAF (the extension-point surface)
 # ---------------------------------------------------------------------------
 
@@ -1899,770 +534,6 @@ GROUP BY event_type
 
 QUERIES["pandas_udaf_geomean_events"] = q_pandas_udaf_geomean_events
 ORACLES["pandas_udaf_geomean_events"] = ORACLE_PANDAS_UDAF_GEOMEAN_EVENTS
-
-
-# ---------------------------------------------------------------------------
-# Bitmap aggregates (exact-distinct acceleration)
-# ---------------------------------------------------------------------------
-
-def q_bitmap_distinct_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bitmap aggregate family (`bitmap_bit_position` /
-    `bitmap_construct_agg` / `bitmap_count` / `bitmap_or_agg`) — the
-    EXACT distinct-count accelerator between plain countDistinct and
-    the HLL sketch: per-group roaring-style bitmaps are mergeable
-    fixed-size state (the CMS/HLL partial-agg story) but lose
-    nothing, so daily per-type bitmaps OR-merge into exact per-type
-    reach with no rescan. The gate computes both the direct and the
-    daily-merged bitmap counts and hashes them against plain
-    count(DISTINCT) — bitmap arithmetic must be EXACTLY the set
-    cardinality or the row fails.
-
-    Domain contract (learned the hash-mismatch way): positions are
-    1-BASED — `bitmap_bit_position(0)` lands outside the first
-    bucket and silently drops id 0 — so ids shift by +1 here; and
-    one bitmap covers one 32768-wide bucket, so the aggregation
-    ALSO groups by `bitmap_bucket_number` and sums the per-bucket
-    counts — correct at ANY id range, not just ids that happen to
-    fit one bucket (that cross-bucket sum is exactly how a
-    warehouse-scale exact-reach rollup shards its bitmap state)."""
-    ev = _t(spark, sf_dir, "events")
-    pos = F.bitmap_bit_position(F.col("user_id") + 1)
-    bucket = F.bitmap_bucket_number(F.col("user_id") + 1).alias("bkt")
-    direct = (
-        ev.groupBy("event_type", bucket)
-        .agg(F.bitmap_count(F.bitmap_construct_agg(pos)).alias("c"))
-        .groupBy("event_type")
-        .agg(F.sum("c").alias("nd_direct"))
-    )
-    exact = ev.groupBy("event_type").agg(
-        F.countDistinct("user_id").alias("nd_exact")
-    )
-    merged = (
-        ev.groupBy("event_type", F.to_date("ts").alias("d"), bucket)
-        .agg(F.bitmap_construct_agg(pos).alias("bm"))
-        .groupBy("event_type", "bkt")
-        .agg(F.bitmap_count(F.bitmap_or_agg("bm")).alias("c"))
-        .groupBy("event_type")
-        .agg(F.sum("c").alias("nd_merged"))
-    )
-    return (
-        exact.join(direct, "event_type")
-        .join(merged, "event_type")
-        .select("event_type", "nd_exact", "nd_direct", "nd_merged")
-    )
-
-
-ORACLE_BITMAP_DISTINCT_EVENTS = """
-SELECT event_type,
-       CAST(count(DISTINCT user_id) AS BIGINT) AS nd_exact,
-       CAST(count(DISTINCT user_id) AS BIGINT) AS nd_direct,
-       CAST(count(DISTINCT user_id) AS BIGINT) AS nd_merged
-FROM events GROUP BY event_type
-"""
-
-QUERIES["bitmap_distinct_events"] = q_bitmap_distinct_events
-ORACLES["bitmap_distinct_events"] = ORACLE_BITMAP_DISTINCT_EVENTS
-
-
-# ---------------------------------------------------------------------------
-# Python UDTF (Spark 4 user-defined TABLE function) — round 7
-# ---------------------------------------------------------------------------
-
-def q_udtf_sentences_documents(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The Python UDTF surface — Spark 4's user-defined TABLE
-    function, the 1:N extension point that completes the UDF family
-    demos (scalar pandas UDF → GROUPED_AGG UDAF
-    (`pandas_udaf_geomean_events`) → custom DataSource → this): a
-    sentence-splitting UDTF applied via correlated LATERAL join, one
-    output row per non-empty '.'-separated sentence with its
-    per-document index and length. Like the UDAF demo this is the
-    EXTENSION-POINT gate, not the recommended plan — the same
-    semantics compile natively to explode(split()) (zero Python,
-    whole-stage codegen) and `sliding_chunks_documents` gates that
-    path; a real UDTF earns its process boundary with logic SQL
-    can't express. The DuckDB oracle replays the exact split/trim/
-    index contract (string_split + 1-indexed list slots + filtered
-    row_number), so the Python row fan-out is value-pinned, not just
-    shape-checked. Scale: the UDTF runs row-local in the scan stage —
-    zero shuffles; cost is the Python boundary itself."""
-    from pyspark.sql.functions import udtf
-
-    @udtf(returnType="sent_idx int, sentence string, n_chars int")
-    class SplitSentences:
-        def eval(self, text: str):
-            i = 0
-            for part in (text or "").split("."):
-                p = part.strip(" ")
-                if p:
-                    yield (i, p, len(p))
-                    i += 1
-
-    configure_for_oracle_parity(spark)
-    spark.udtf.register("split_sentences_gate", SplitSentences)
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "_udtf_documents"
-    )
-    return spark.sql(
-        """
-        SELECT d.doc_id, s.sent_idx, s.sentence, s.n_chars
-        FROM _udtf_documents d,
-        LATERAL split_sentences_gate(d.text) s
-        """
-    )
-
-
-ORACLE_UDTF_SENTENCES_DOCUMENTS = """
-WITH parts AS (
-  SELECT doc_id, string_split(text, '.') AS ps FROM documents
-),
-slots AS (
-  SELECT doc_id, trim(ps[i], ' ') AS sentence, i
-  FROM parts, unnest(range(1, len(ps) + 1)) t(i)
-)
-SELECT doc_id,
-       CAST(row_number() OVER (PARTITION BY doc_id ORDER BY i) - 1
-            AS INT) AS sent_idx,
-       sentence,
-       CAST(length(sentence) AS INT) AS n_chars
-FROM slots WHERE sentence <> ''
-"""
-
-QUERIES["udtf_sentences_documents"] = q_udtf_sentences_documents
-ORACLES["udtf_sentences_documents"] = ORACLE_UDTF_SENTENCES_DOCUMENTS
-
-
-# ---------------------------------------------------------------------------
-# Runtime bloom-filter join pruning (round 7) — DPP's sibling for
-# NON-partition join keys
-# ---------------------------------------------------------------------------
-
-def q_runtime_bloom_join_lineitem(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Runtime bloom-filter injection on the hash path — the
-    shuffle-join reducer for keys that are NOT the partition layout
-    (DPP's sibling: DPP prunes directories via the partition column;
-    this prunes ROWS of the big side before its shuffle by testing
-    the join key against a bloom filter aggregated from the small
-    side's keys at runtime). On a 100 TB fact⋈filtered-dim shuffle
-    join this is the difference between shuffling every fact row and
-    shuffling only probable matches — exchange bytes drop by the
-    filter's selectivity, at the cost of one KB-scale bloom
-    broadcast. The gate RAISES unless the physical plan carries the
-    injected ``might_contain(... bloom_filter_agg ...)`` on
-    l_orderkey, and the DuckDB oracle pins the values (bloom false
-    positives affect only pre-shuffle volume, never the join result
-    — the equality condition still decides). Gate-scale knobs: the
-    application-side size threshold drops to 0 (at real scale the
-    default 10 GB threshold triggers on its own) and broadcast is
-    disabled so a shuffle join exists to optimize; both confs are
-    restored."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders").filter(
-        F.col("o_orderpriority") == "1-URGENT"
-    )
-    prev_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    prev_thr = spark.conf.get(
-        "spark.sql.optimizer.runtime.bloomFilter."
-        "applicationSideScanSizeThreshold"
-    )
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set(
-            "spark.sql.optimizer.runtime.bloomFilter."
-            "applicationSideScanSizeThreshold",
-            "0",
-        )
-        joined = li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        if "might_contain" not in plan:
-            raise AssertionError(
-                f"no runtime bloom filter injected on the fact "
-                f"side:\n{plan}"
-            )
-        price = F.col("l_extendedprice").cast("decimal(18,2)")
-        disc = F.col("l_discount").cast("decimal(18,2)")
-        one = F.lit(1).cast("decimal(18,2)")
-        out = joined.groupBy("l_returnflag").agg(
-            F.count(F.lit(1)).alias("n_lines"),
-            F.sum(price * (one - disc)).cast("double").alias("revenue"),
-        )
-        # force materialization INSIDE the conf scope so the bloom
-        # plan (already asserted above) is what actually executes
-        out = out.localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bc)
-        spark.conf.set(
-            "spark.sql.optimizer.runtime.bloomFilter."
-            "applicationSideScanSizeThreshold",
-            prev_thr,
-        )
-    return out
-
-
-ORACLE_RUNTIME_BLOOM_JOIN_LINEITEM = """
-SELECT l_returnflag,
-       count(*) AS n_lines,
-       CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
-                * (CAST(1 AS DECIMAL(18,2))
-                   - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE)
-         AS revenue
-FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-WHERE o_orderpriority = '1-URGENT'
-GROUP BY l_returnflag
-"""
-
-QUERIES["runtime_bloom_join_lineitem"] = q_runtime_bloom_join_lineitem
-ORACLES["runtime_bloom_join_lineitem"] = ORACLE_RUNTIME_BLOOM_JOIN_LINEITEM
-
-
-# ---------------------------------------------------------------------------
-# SQL UDFs (Spark 4 CREATE FUNCTION ... RETURN) — scalar + table
-# ---------------------------------------------------------------------------
-
-def q_sql_udf_functions_events(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Spark 4 SQL UDFs — `CREATE FUNCTION ... RETURN <expr>` scalar
-    and `... RETURNS TABLE ... RETURN SELECT` table functions — the
-    catalog-resident reuse surface that, unlike Python UDFs, INLINES
-    into the plan (the scalar body becomes a codegen'd CASE, the
-    table body a correlated lateral explode — zero process
-    boundaries, full Catalyst visibility). The gate banded-labels
-    every event and fans each out via a correlated LATERAL call of
-    the table UDF; the DuckDB oracle states the inlined semantics
-    directly, so the function-resolution layer is value-pinned."""
-    configure_for_oracle_parity(spark)
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION value_band(v DOUBLE) "
-        "RETURNS STRING RETURN CASE WHEN v < 25 THEN 'low' "
-        "WHEN v < 75 THEN 'mid' ELSE 'high' END"
-    )
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION repeat_part(n INT) "
-        "RETURNS TABLE(i INT) "
-        "RETURN SELECT explode(sequence(1, n)) AS i"
-    )
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "_sqludf_events"
-    )
-    return spark.sql(
-        """
-        SELECT e.event_id,
-               value_band(e.value) AS band,
-               r.i AS part_idx
-        FROM _sqludf_events e,
-        LATERAL repeat_part(CAST(e.event_id % 3 AS INT) + 1) r
-        """
-    )
-
-
-ORACLE_SQL_UDF_FUNCTIONS_EVENTS = """
-SELECT event_id,
-       CASE WHEN value < 25 THEN 'low'
-            WHEN value < 75 THEN 'mid'
-            ELSE 'high' END AS band,
-       CAST(i AS INT) AS part_idx
-FROM events, unnest(range(1, CAST(event_id % 3 AS INT) + 2)) t(i)
-"""
-
-QUERIES["sql_udf_functions_events"] = q_sql_udf_functions_events
-ORACLES["sql_udf_functions_events"] = ORACLE_SQL_UDF_FUNCTIONS_EVENTS
-
-
-# ---------------------------------------------------------------------------
-# Null-aware NOT IN (the ANSI three-valued-logic join trap)
-# ---------------------------------------------------------------------------
-
-NOTIN_BIG_ORDER = 300_000
-
-_NOTIN_SQL = f"""
-WITH bigs AS (
-  SELECT CASE WHEN o_orderkey %% 97 = 0 THEN NULL
-              ELSE o_custkey END AS k
-  FROM %T%orders WHERE o_totalprice > {NOTIN_BIG_ORDER}
-)
-SELECT
-  (SELECT count(*) FROM %T%customer
-   WHERE c_custkey NOT IN (SELECT k FROM bigs)) AS n_with_null,
-  (SELECT count(*) FROM %T%customer
-   WHERE c_custkey NOT IN (SELECT k FROM bigs WHERE k IS NOT NULL))
-    AS n_null_free
-"""
-
-
-def q_null_aware_notin_orders(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """NOT IN under ANSI three-valued logic — the classic silent-
-    wrong-answer trap: one NULL in the subquery list makes
-    ``x NOT IN (...)`` never-true (x <> NULL is UNKNOWN), so the
-    whole filter yields ZERO rows; the null-FREE variant of the same
-    subquery is an ordinary anti join. Spark plans the nullable case
-    as a null-aware anti join (the BuildRight `true` flag on the
-    LeftAnti) rather than mis-rewriting it to a plain anti; the gate
-    hashes BOTH counts — n_with_null must be exactly 0 and
-    n_null_free exactly the customers without big orders — so an
-    engine that drops the null semantics fails the row. Scale note:
-    the null-aware variant requires a broadcast (every probe row
-    must see every build NULL); `nullsafe_join_events` gates the
-    eqNullSafe alternative that shuffles normally, and Q16 documents
-    why production NOT IN lists should be null-free by
-    construction."""
-    configure_for_oracle_parity(spark)
-    for t in ("orders", "customer"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(
-            f"_notin_{t}"
-        )
-    return spark.sql(
-        _NOTIN_SQL.replace("%T%", "_notin_").replace("%%", "%")
-    )
-
-
-ORACLES["null_aware_notin_orders"] = _NOTIN_SQL.replace(
-    "%T%", ""
-).replace("%%", "%")
-QUERIES["null_aware_notin_orders"] = q_null_aware_notin_orders
-
-
-# ---------------------------------------------------------------------------
-# URL / formatting / checksum scalar-function completeness
-# ---------------------------------------------------------------------------
-
-def q_url_functions_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The URL-handling and formatting scalar family a clickstream /
-    web-log user reaches for first: ``parse_url`` (HOST / PATH /
-    QUERY-key extraction), ``url_encode`` / ``url_decode``
-    (round-trip gated), ``format_number`` locale grouping,
-    ``luhn_check`` account-number validation, and sha2-256/md5
-    digests. URLs are built from order columns so every value is
-    data-derived (nothing constant-folds away). Determinism notes:
-    url_encode's only non-safe character in o_orderpriority is the
-    space ('+' form), which the oracle reproduces with a replace
-    chain; format_number runs on key+0.25 — an exact binary fraction
-    — so no rounding-mode parity is at stake, only the grouping
-    format; luhn_check runs on the zero-padded 12-digit order key
-    (valid to SF ~1600), which the oracle replays as the closed-form
-    doubled-digit sum. All row-local codegen — zero shuffles."""
-    o = _t(spark, sf_dir, "orders")
-    url = F.concat(
-        F.lit("https://shop.example.com/"),
-        F.replace(F.col("o_orderpriority"), F.lit(" "), F.lit("_")),
-        F.lit("/item?id="),
-        F.col("o_orderkey").cast("string"),
-        F.lit("&prio="),
-        F.url_encode("o_orderpriority"),
-    )
-    return o.select(
-        "o_orderkey",
-        F.parse_url(url, F.lit("HOST")).alias("host"),
-        F.parse_url(url, F.lit("PATH")).alias("path"),
-        F.parse_url(url, F.lit("QUERY"), F.lit("id")).alias("qid"),
-        F.url_encode("o_orderpriority").alias("prio_enc"),
-        F.url_decode(F.url_encode("o_orderpriority")).alias("prio_rt"),
-        F.format_number(
-            F.col("o_orderkey").cast("double") + F.lit(0.25), 2
-        ).alias("fmt_key"),
-        # no Python wrapper for luhn_check in pyspark 4.1 — SQL expr
-        F.expr(
-            "luhn_check(lpad(cast(o_orderkey as string), 12, '0'))"
-        ).alias("luhn_ok"),
-        F.sha2(
-            F.concat(
-                F.col("o_orderpriority"),
-                F.lit("|"),
-                F.col("o_orderkey").cast("string"),
-            ),
-            256,
-        ).alias("digest"),
-        F.md5(F.col("o_orderpriority")).alias("prio_md5"),
-    )
-
-
-def luhn_sql(expr: str) -> str:
-    """Closed-form Luhn validity of a 12-digit string expression in
-    DuckDB SQL (doubled-digit sum, every 2nd from the right). Shared
-    by the gate oracle below AND the property test that defends the
-    emulation (tests/test_function_gate_props.py) — one copy, so the
-    tested fragment can never drift from the live oracle."""
-    return """(list_sum(list_transform(range(1, 13), i ->
-          CASE WHEN i % 2 = 0 THEN
-            CASE WHEN 2 * CAST(substring(%X%, 13 - i, 1) AS INTEGER) >= 10
-                 THEN 2 * CAST(substring(%X%, 13 - i, 1) AS INTEGER) - 9
-                 ELSE 2 * CAST(substring(%X%, 13 - i, 1) AS INTEGER) END
-          ELSE CAST(substring(%X%, 13 - i, 1) AS INTEGER) END
-        )) % 10) = 0""".replace("%X%", expr)
-
-
-# DuckDB has no parse_url/url_encode/format_number/luhn_check: the
-# oracle builds the identical URL string and replays each function in
-# closed form — regexp extraction for the URL parts, a replace chain
-# for the (space-only) encoding, %,d grouping plus the exact '.25'
-# fraction, and the Luhn doubled-digit sum over the padded key.
-ORACLE_URL_FUNCTIONS_ORDERS = f"""
-WITH u AS (
-  SELECT o_orderkey, o_orderpriority,
-         lpad(CAST(o_orderkey AS VARCHAR), 12, '0') AS acct,
-         'https://shop.example.com/'
-           || replace(o_orderpriority, ' ', '_')
-           || '/item?id=' || CAST(o_orderkey AS VARCHAR)
-           || '&prio=' || replace(o_orderpriority, ' ', '+') AS url
-  FROM orders
-)
-SELECT o_orderkey,
-       regexp_extract(url, '^https://([^/]+)', 1) AS host,
-       regexp_extract(url, '^https://[^/]+([^?]*)', 1) AS path,
-       regexp_extract(url, '[?&]id=([^&]*)', 1) AS qid,
-       replace(o_orderpriority, ' ', '+') AS prio_enc,
-       o_orderpriority AS prio_rt,
-       printf('%,d', o_orderkey) || '.25' AS fmt_key,
-       {luhn_sql("acct")} AS luhn_ok,
-       sha256(o_orderpriority || '|' || CAST(o_orderkey AS VARCHAR))
-         AS digest,
-       md5(o_orderpriority) AS prio_md5
-FROM u
-"""
-
-QUERIES["url_functions_orders"] = q_url_functions_orders
-ORACLES["url_functions_orders"] = ORACLE_URL_FUNCTIONS_ORDERS
-
-
-# ---------------------------------------------------------------------------
-# Spark 4 API surfaces: DataFrame.transpose, SQL pipe syntax,
-# parameterized SQL
-# ---------------------------------------------------------------------------
-
-def q_transpose_summary_lineitem(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """``DataFrame.transpose`` (new in Spark 4.0) — rows become
-    columns, the index column's values become column names: the
-    report-shaping step that turns a per-flag summary into a
-    metrics-by-flag matrix without N pivot expressions. The input is
-    a 3-row aggregate (one per l_returnflag), all metric columns
-    cast to the common DOUBLE type transpose requires; sums are
-    integer-valued (quantities) or counts, so every transposed cell
-    is order-independent exact. The oracle rebuilds the transposed
-    matrix in closed form: one row per metric name, one
-    filtered-aggregate column per flag value."""
-    configure_for_oracle_parity(spark)
-    li = _t(spark, sf_dir, "lineitem")
-    wide = (
-        li.groupBy(F.col("l_returnflag").alias("rf"))
-        .agg(
-            F.sum("l_quantity").cast("double").alias("sum_qty"),
-            F.count(F.lit(1)).cast("double").alias("n_rows"),
-            F.countDistinct("l_orderkey").cast("double").alias(
-                "n_orders"
-            ),
-            F.max("l_quantity").cast("double").alias("max_qty"),
-        )
-        .orderBy("rf")
-    )
-    t = wide.transpose()
-    return t.withColumnRenamed("key", "metric")
-
-
-ORACLE_TRANSPOSE_SUMMARY_LINEITEM = """
-WITH w AS (
-  SELECT l_returnflag AS rf,
-         CAST(SUM(l_quantity) AS DOUBLE) AS sum_qty,
-         CAST(COUNT(*) AS DOUBLE) AS n_rows,
-         CAST(COUNT(DISTINCT l_orderkey) AS DOUBLE) AS n_orders,
-         CAST(MAX(l_quantity) AS DOUBLE) AS max_qty
-  FROM lineitem GROUP BY l_returnflag
-)
-SELECT m.metric,
-       (SELECT CASE m.metric WHEN 'sum_qty' THEN sum_qty
-                WHEN 'n_rows' THEN n_rows
-                WHEN 'n_orders' THEN n_orders
-                ELSE max_qty END FROM w WHERE rf = 'A') AS "A",
-       (SELECT CASE m.metric WHEN 'sum_qty' THEN sum_qty
-                WHEN 'n_rows' THEN n_rows
-                WHEN 'n_orders' THEN n_orders
-                ELSE max_qty END FROM w WHERE rf = 'N') AS "N",
-       (SELECT CASE m.metric WHEN 'sum_qty' THEN sum_qty
-                WHEN 'n_rows' THEN n_rows
-                WHEN 'n_orders' THEN n_orders
-                ELSE max_qty END FROM w WHERE rf = 'R') AS "R"
-FROM (VALUES ('sum_qty'), ('n_rows'), ('n_orders'), ('max_qty'))
-  m(metric)
-"""
-
-QUERIES["transpose_summary_lineitem"] = q_transpose_summary_lineitem
-ORACLES["transpose_summary_lineitem"] = (
-    ORACLE_TRANSPOSE_SUMMARY_LINEITEM
-)
-
-
-_PIPE_SQL_SPARK = """
-FROM %T%lineitem
-|> WHERE l_quantity >= 5
-|> AGGREGATE CAST(SUM(l_quantity) AS DOUBLE) AS sum_qty,
-             CAST(COUNT(*) AS BIGINT) AS n
-   GROUP BY l_returnflag, l_linestatus
-|> WHERE n > 10
-|> SELECT l_returnflag AS rf, l_linestatus AS ls, sum_qty, n
-"""
-
-
-def q_pipe_syntax_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SQL pipe syntax (`|>`, new in Spark 4.0): the linear
-    filter→aggregate→having→project chain written in execution
-    order. Semantically identical to the ANSI nesting the oracle
-    runs — the gate pins that the pipe front-end compiles to the
-    same plan contract (sum of integral quantities is exact in any
-    order, so no quantization). DuckDB has no pipe syntax; the
-    oracle is the equivalent ANSI query."""
-    configure_for_oracle_parity(spark)
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "_pipe_lineitem"
-    )
-    return spark.sql(_PIPE_SQL_SPARK.replace("%T%", "_pipe_"))
-
-
-ORACLE_PIPE_SYNTAX_LINEITEM = """
-SELECT l_returnflag AS rf, l_linestatus AS ls,
-       CAST(SUM(l_quantity) AS DOUBLE) AS sum_qty,
-       CAST(COUNT(*) AS BIGINT) AS n
-FROM lineitem
-WHERE l_quantity >= 5
-GROUP BY l_returnflag, l_linestatus
-HAVING CAST(COUNT(*) AS BIGINT) > 10
-"""
-
-QUERIES["pipe_syntax_lineitem"] = q_pipe_syntax_lineitem
-ORACLES["pipe_syntax_lineitem"] = ORACLE_PIPE_SYNTAX_LINEITEM
-
-
-PARAM_MIN_PRICE = 150_000.0
-PARAM_STATUS = "F"
-
-
-def q_parameterized_sql_orders(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Parameterized SQL with named markers plus a DataFrame passed
-    as a TABLE argument (`spark.sql(..., args=..., df=df)`) — the
-    injection-safe query interface (Spark 3.4+/4.0). The parameters
-    bind server-side as typed literals; the oracle replays the same
-    constants inline. Counts and min/max only — exact at any
-    scale."""
-    configure_for_oracle_parity(spark)
-    orders = load_table(spark, sf_dir, "orders")
-    return spark.sql(
-        """
-        SELECT o_orderpriority AS prio,
-               CAST(count(*) AS BIGINT) AS n,
-               min(o_totalprice) AS min_price,
-               max(o_totalprice) AS max_price
-        FROM {o}
-        WHERE o_totalprice > :minp AND o_orderstatus = :st
-        GROUP BY o_orderpriority
-        """,
-        args={"minp": PARAM_MIN_PRICE, "st": PARAM_STATUS},
-        o=orders,
-    )
-
-
-ORACLE_PARAMETERIZED_SQL_ORDERS = f"""
-SELECT o_orderpriority AS prio,
-       CAST(count(*) AS BIGINT) AS n,
-       min(o_totalprice) AS min_price,
-       max(o_totalprice) AS max_price
-FROM orders
-WHERE o_totalprice > {PARAM_MIN_PRICE!r} AND o_orderstatus = '{PARAM_STATUS}'
-GROUP BY o_orderpriority
-"""
-
-QUERIES["parameterized_sql_orders"] = q_parameterized_sql_orders
-ORACLES["parameterized_sql_orders"] = ORACLE_PARAMETERIZED_SQL_ORDERS
-
-
-def q_identifier_clause_orders(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The IDENTIFIER clause (Spark 3.5+/4): table AND column names
-    bound from parameters/constants instead of spliced into SQL text
-    — the injection-safe half of dynamic SQL that
-    `parameterized_sql_orders` (value markers) cannot express. The
-    table name binds via a named arg, the grouping and aggregated
-    columns via IDENTIFIER literals; the oracle is the equivalent
-    static SQL, which is the contract: name binding must change
-    nothing about the result. Counts/min/max only — exact."""
-    configure_for_oracle_parity(spark)
-    _t(spark, sf_dir, "orders").createOrReplaceTempView(
-        "_ident_orders"
-    )
-    return spark.sql(
-        """
-        SELECT IDENTIFIER('o_orderstatus') AS status,
-               CAST(count(*) AS BIGINT) AS n,
-               min(IDENTIFIER('o_totalprice')) AS min_price,
-               max(IDENTIFIER('o_totalprice')) AS max_price
-        FROM IDENTIFIER(:tab)
-        GROUP BY IDENTIFIER('o_orderstatus')
-        """,
-        args={"tab": "_ident_orders"},
-    )
-
-
-ORACLE_IDENTIFIER_CLAUSE_ORDERS = """
-SELECT o_orderstatus AS status,
-       CAST(count(*) AS BIGINT) AS n,
-       min(o_totalprice) AS min_price,
-       max(o_totalprice) AS max_price
-FROM orders
-GROUP BY o_orderstatus
-"""
-
-QUERIES["identifier_clause_orders"] = q_identifier_clause_orders
-ORACLES["identifier_clause_orders"] = ORACLE_IDENTIFIER_CLAUSE_ORDERS
-
-
-# ---------------------------------------------------------------------------
-# SQL syntax sugar: GROUP BY ALL / ORDER BY ALL / star-EXCEPT
-# ---------------------------------------------------------------------------
-
-def q_sugar_syntax_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The analyst-ergonomics syntax Spark 4 shares with DuckDB:
-    ``GROUP BY ALL`` (infer grouping keys from the non-aggregate
-    select items), ``ORDER BY ALL``, and star-projection exclusion —
-    Spark spells it ``* EXCEPT (cols)``, DuckDB ``* EXCLUDE (cols)``;
-    the oracle uses its own spelling, which is the point: same
-    relational result from each engine's sugar. Counts and min only —
-    exact at any scale; one partial-aggregated shuffle."""
-    configure_for_oracle_parity(spark)
-    _t(spark, sf_dir, "orders").createOrReplaceTempView(
-        "_sugar_orders"
-    )
-    return spark.sql(
-        """
-        SELECT o_orderstatus, o_orderpriority,
-               CAST(count(*) AS BIGINT) AS n,
-               min(o_totalprice) AS min_price
-        FROM (SELECT * EXCEPT (o_orderdate) FROM _sugar_orders)
-        GROUP BY ALL
-        ORDER BY ALL
-        """
-    )
-
-
-ORACLE_SUGAR_SYNTAX_ORDERS = """
-SELECT o_orderstatus, o_orderpriority,
-       CAST(count(*) AS BIGINT) AS n,
-       min(o_totalprice) AS min_price
-FROM (SELECT * EXCLUDE (o_orderdate) FROM orders)
-GROUP BY ALL
-ORDER BY ALL
-"""
-
-QUERIES["sugar_syntax_orders"] = q_sugar_syntax_orders
-ORACLES["sugar_syntax_orders"] = ORACLE_SUGAR_SYNTAX_ORDERS
-
-
-# ---------------------------------------------------------------------------
-# mapInArrow: the zero-copy Arrow-batch Python boundary
-# ---------------------------------------------------------------------------
-
-def q_mapinarrow_tokens_documents(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """``mapInArrow`` — the lowest-overhead Python boundary Spark
-    offers (RecordBatch in, RecordBatch out, no pandas
-    materialization), completing the gated extension-point family
-    (scalar/UDAF pandas UDFs, UDTF, applyInPandas[WithState],
-    mapInPandas). The batch fn computes whitespace token counts and
-    total byte length with pyarrow.compute kernels only — vectorized
-    C++ on Arrow buffers, no per-row Python — exactly how a
-    tokenizer-adjacent hot loop should cross into Python at 100 TB
-    when it must. Oracle replays with string arithmetic."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    configure_for_oracle_parity(spark)
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text"
-    )
-
-    def batches(it):
-        for rb in it:
-            text = rb.column(1)
-            # tokens = whitespace splits; count = split length
-            n_tok = pc.list_value_length(
-                pc.split_pattern(text, " ")
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    rb.column(0),
-                    pc.cast(n_tok, pa.int64()),
-                    pc.cast(pc.binary_length(text), pa.int64()),
-                ],
-                names=["doc_id", "n_tokens", "n_bytes"],
-            )
-
-    return docs.mapInArrow(
-        batches, "doc_id BIGINT, n_tokens BIGINT, n_bytes BIGINT"
-    )
-
-
-# token count == space count + 1 (documents are single-spaced,
-# non-empty); n_bytes is the UTF-8 byte length (strlen in DuckDB).
-ORACLE_MAPINARROW_TOKENS_DOCUMENTS = """
-SELECT doc_id,
-       CAST(length(text) - length(replace(text, ' ', '')) + 1
-         AS BIGINT) AS n_tokens,
-       CAST(strlen(text) AS BIGINT) AS n_bytes
-FROM documents
-"""
-
-QUERIES["mapinarrow_tokens_documents"] = q_mapinarrow_tokens_documents
-ORACLES["mapinarrow_tokens_documents"] = (
-    ORACLE_MAPINARROW_TOKENS_DOCUMENTS
-)
-
-
-# ---------------------------------------------------------------------------
-# JSON-lines file sink/source roundtrip (the remaining built-in text format)
-# ---------------------------------------------------------------------------
-
-def q_json_roundtrip_events(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """JSON-lines sink + source (§2.1 format coverage beside the
-    parquet/ORC/CSV/XML round-trips — the wire format the reference
-    ingests from Kafka, consumer/ingest_bronze.py:46-58, here as the
-    batch FILE source): events written as newline-delimited JSON and
-    read back through an EXPLICIT schema (inference is an extra full
-    scan, same rule as CSV/XML). Two contracts ride on the hash:
-    doubles survive Jackson's shortest-repr serialization bit-exactly
-    (same IEEE guarantee the XML gate proved for text formats), and
-    the timestamp round-trips at FULL µs precision only because the
-    gate pins ``timestampFormat`` with six sub-second digits — the
-    default write format truncates to millis, a real silent-precision
-    trap this gate exists to document. The JSON-in-JSON props string
-    exercises quote escaping both directions."""
-    import tempfile
-
-    ev = _t(spark, sf_dir, "events")
-    fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-    tmp = tempfile.mkdtemp(prefix="json_rt_gate_")
-    ev.write.mode("overwrite").option("timestampFormat", fmt).json(tmp)
-    return (
-        spark.read.schema(ev.schema)
-        .option("timestampFormat", fmt)
-        .json(tmp)
-    )
-
-
-ORACLE_JSON_ROUNDTRIP_EVENTS = """
-SELECT event_id, ts, user_id, event_type, value, props FROM events
-"""
-
-QUERIES["json_roundtrip_events"] = q_json_roundtrip_events
-ORACLES["json_roundtrip_events"] = ORACLE_JSON_ROUNDTRIP_EVENTS
 
 
 # ---------------------------------------------------------------------------
@@ -2749,509 +620,6 @@ ORACLES["binaryfile_bmp_assets"] = ORACLE_BINARYFILE_BMP_ASSETS
 
 
 # ---------------------------------------------------------------------------
-# Dynamic partition overwrite: INSERT OVERWRITE that replaces only the
-# partitions present in the incoming batch
-# ---------------------------------------------------------------------------
-
-def q_dynamic_partition_overwrite_events(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """`partitionOverwriteMode=dynamic` — the backfill primitive on
-    partitioned parquet: a corrected batch for ONE partition value
-    replaces exactly that partition and leaves every other partition's
-    files untouched (static mode would truncate the whole table — at
-    100 TB the difference between rewriting one day and rewriting the
-    lake). The gate seeds a table partitioned by event_type, then
-    overwrites with a patch containing only the 'click' partition
-    (value doubled — a power-of-two scale, so IEEE-exact with no
-    quantization), and returns the read-back: clicks must carry the
-    patch, all other types the original rows. The session conf is
-    restored in a finally block — dynamic overwrite leaks into any
-    later partitioned overwrite on the shared driver session
-    otherwise (partitions absent from a "full" rewrite would silently
-    survive)."""
-    import tempfile
-
-    ev = _t(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="dpo_gate_")
-    prev = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "STATIC"
-    )
-    try:
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
-        ev.write.partitionBy("event_type").mode("overwrite").parquet(
-            tmp
-        )
-        patch = ev.filter(F.col("event_type") == "click").withColumn(
-            "value", F.col("value") * F.lit(2.0)
-        )
-        patch.write.partitionBy("event_type").mode(
-            "overwrite"
-        ).parquet(tmp)
-    finally:
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", prev
-        )
-    return spark.read.parquet(tmp).select(
-        "event_id", "ts", "user_id", "event_type", "value", "props"
-    )
-
-
-ORACLE_DYNAMIC_PARTITION_OVERWRITE_EVENTS = """
-SELECT event_id, ts, user_id, event_type,
-       CASE WHEN event_type = 'click' THEN value * 2
-            ELSE value END AS value,
-       props
-FROM events
-"""
-
-QUERIES["dynamic_partition_overwrite_events"] = (
-    q_dynamic_partition_overwrite_events
-)
-ORACLES["dynamic_partition_overwrite_events"] = (
-    ORACLE_DYNAMIC_PARTITION_OVERWRITE_EVENTS
-)
-
-
-# ---------------------------------------------------------------------------
-# Cogrouped applyInPandas: the two-sided grouped-map extension point
-# ---------------------------------------------------------------------------
-
-COGROUP_N_BUCKETS = 64
-
-
-def q_cogroup_asof_events(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """`groupBy(k).cogroup(other.groupBy(k)).applyInPandas` — the
-    two-DataFrame Python extension point (the shape a pandas
-    `merge_asof`/custom-reconciliation kernel plugs into when the
-    per-key pair of frames is what the algorithm needs; one Arrow
-    exchange per side, both shuffled on the SAME key so the pandas
-    function sees co-located partitions). Per user, every purchase is
-    matched to the latest click at-or-before it with pandas
-    `merge_asof` (backward, exact matches allowed, `by=user_id`;
-    click side sorted by (click_ts, click_id) so an equal-timestamp
-    tie deterministically takes the larger click id — the rule the
-    SQL oracle replays with a composite arg_max key). Two scale
-    lessons are load-bearing here, both measured at sf0.1:
-
-    * cogroup on a BUCKET (user_id % 64), not the raw user — the
-      per-group Python invocation costs ~3-5 ms, so 1500 tiny
-      user-groups spent 6-9 s in pure machinery while the same work
-      in 64 bucketed groups with a vectorized `by=`-key merge runs
-      ~10× faster; at 100 TB, millions of micro-groups would be
-      fatal (bound groups by parallelism, let pandas vectorize the
-      per-key logic);
-    * the two sides carry DISTINCT column names — both derive from
-      the same events scan, and with identical names Catalyst's
-      attribute deduplication pruned the right cogroup side down to
-      its key (observed on the 1500-user plan).
-
-    Covers the one-sided contract too: users with purchases but no
-    clicks emit NULL click_id/gap, click-only users emit nothing.
-    The oracle is the standard as-of LEFT JOIN + arg_max in SQL, so
-    the pandas kernel is value-checked row for row, not just
-    executed."""
-    import pandas as pd
-
-    bucket = (F.col("user_id") % COGROUP_N_BUCKETS).alias("bucket")
-    # two INDEPENDENT relations on purpose: deriving both cogroup
-    # sides from one scan shares attribute ids, and Catalyst's
-    # attribute deduplication then prunes the right side's non-key
-    # columns out of the Arrow batch (observed at sf0.1 as pandas
-    # KeyErrors); a second load is a second scan of the same files —
-    # cheap — with fresh attributes
-    ev_p = _t(spark, sf_dir, "events")
-    ev_c = load_table(spark, sf_dir, "events")
-    clicks = ev_c.filter(F.col("event_type") == "click").select(
-        bucket,
-        "user_id",
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-    )
-    purchases = ev_p.filter(F.col("event_type") == "purchase").select(
-        bucket,
-        "user_id",
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("purchase_ts"),
-    )
-
-    def asof(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        # left = purchases, right = clicks for ONE user bucket
-        if left.empty:
-            return pd.DataFrame(
-                {
-                    "user_id": pd.Series(dtype="int64"),
-                    "purchase_id": pd.Series(dtype="int64"),
-                    "click_id": pd.Series(dtype="Int64"),
-                    "gap_us": pd.Series(dtype="Int64"),
-                }
-            )
-        lp = left.sort_values(
-            ["purchase_ts", "purchase_id"]
-        ).reset_index(drop=True)
-        if right.empty:
-            out = lp.assign(click_ts=pd.NaT, click_id=pd.NA)
-        else:
-            rp = right.sort_values(
-                ["click_ts", "click_id"]
-            ).reset_index(drop=True)
-            out = pd.merge_asof(
-                lp,
-                rp.drop(columns=["bucket"]),
-                left_on="purchase_ts",
-                right_on="click_ts",
-                by="user_id",
-                direction="backward",
-                allow_exact_matches=True,
-            )
-        gap = (
-            out["purchase_ts"].astype("int64")
-            - out["click_ts"].astype("int64")
-        ) // 1000
-        return pd.DataFrame(
-            {
-                "user_id": out["user_id"].astype("int64"),
-                "purchase_id": out["purchase_id"].astype("int64"),
-                "click_id": out["click_id"].astype("Int64"),
-                "gap_us": gap.where(out["click_ts"].notna()).astype(
-                    "Int64"
-                ),
-            }
-        )
-
-    return (
-        purchases.groupBy("bucket")
-        .cogroup(clicks.groupBy("bucket"))
-        .applyInPandas(
-            asof,
-            "user_id long, purchase_id long, click_id long, "
-            "gap_us long",
-        )
-    )
-
-
-ORACLE_COGROUP_ASOF_EVENTS = """
-WITH clicks AS (
-  SELECT user_id, event_id, ts,
-         CAST(epoch_us(ts) AS HUGEINT) * 10000000000 + event_id
-           AS okey
-  FROM events WHERE event_type = 'click'
-),
-purchases AS (
-  SELECT user_id, event_id, ts
-  FROM events WHERE event_type = 'purchase'
-)
-SELECT p.user_id,
-       p.event_id AS purchase_id,
-       arg_max(c.event_id, c.okey) AS click_id,
-       epoch_us(p.ts) - arg_max(epoch_us(c.ts), c.okey) AS gap_us
-FROM purchases p
-LEFT JOIN clicks c
-  ON c.user_id = p.user_id AND c.ts <= p.ts
-GROUP BY p.user_id, p.event_id, p.ts
-"""
-
-QUERIES["cogroup_asof_events"] = q_cogroup_asof_events
-ORACLES["cogroup_asof_events"] = ORACLE_COGROUP_ASOF_EVENTS
-
-
-# ---------------------------------------------------------------------------
-# SQL session variables + EXECUTE IMMEDIATE INTO (Spark 4 ANSI surface)
-# ---------------------------------------------------------------------------
-
-def q_session_variables_orders(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """SQL session variables (`DECLARE` / `SET VARIABLE`) driving a
-    data-dependent dynamic query through `EXECUTE IMMEDIATE ... INTO
-    ... USING` — the parameter-passing workflow BI layers and
-    migration scripts lean on (compute a threshold once, bind it
-    into later statements without string splicing). The threshold is
-    an INTEGER `div` so no float crosses an engine boundary;
-    `DECLARE OR REPLACE` keeps the gate idempotent on the shared
-    driver session (the driver calls every query twice). The oracle
-    inlines the same two-step computation as nested subqueries —
-    value-identical, mechanism-free."""
-    configure_for_oracle_parity(spark)
-    _t(spark, sf_dir, "orders").createOrReplaceTempView(
-        "_sessvar_orders"
-    )
-    spark.sql(
-        "DECLARE OR REPLACE VARIABLE _sv_thr BIGINT DEFAULT 0"
-    )
-    spark.sql(
-        "SET VARIABLE _sv_thr = "
-        "(SELECT max(o_custkey) div 2 FROM _sessvar_orders)"
-    )
-    spark.sql(
-        "DECLARE OR REPLACE VARIABLE _sv_cnt BIGINT DEFAULT 0"
-    )
-    spark.sql(
-        "EXECUTE IMMEDIATE "
-        "'SELECT count(*) FROM _sessvar_orders "
-        "WHERE o_custkey > ?' INTO _sv_cnt USING _sv_thr"
-    )
-    return spark.sql(
-        """
-        SELECT _sv_thr AS thr,
-               _sv_cnt AS n_above,
-               CAST(CAST(sum(o_totalprice * CAST(o_custkey > _sv_thr
-                 AS INT)) AS FLOAT) AS DOUBLE) AS price_above
-        FROM _sessvar_orders
-        """
-    )
-
-
-# price_above is an order-sensitive double sum -> float32 quantized
-# on both sides (the standard gate-parity contract).
-ORACLE_SESSION_VARIABLES_ORDERS = """
-WITH thr AS (SELECT max(o_custkey) // 2 AS t FROM orders)
-SELECT t AS thr,
-       (SELECT count(*) FROM orders WHERE o_custkey > t) AS n_above,
-       (SELECT CAST(CAST(sum(o_totalprice *
-            CAST(o_custkey > t AS INT)) AS REAL) AS DOUBLE)
-        FROM orders) AS price_above
-FROM thr
-"""
-
-QUERIES["session_variables_orders"] = q_session_variables_orders
-ORACLES["session_variables_orders"] = ORACLE_SESSION_VARIABLES_ORDERS
-
-
-# ---------------------------------------------------------------------------
-# SQL scripting: BEGIN/DECLARE/WHILE procedural blocks (Spark 4.0)
-# ---------------------------------------------------------------------------
-
-def q_sql_scripting_orders(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """SQL scripting (`BEGIN … END` with script-local `DECLARE`,
-    `SET`, and a `WHILE` loop — Spark 4.0's procedural surface): the
-    migration shape for stored-procedure logic. The script folds five
-    data-dependent aggregates through a loop-carried accumulator
-    (acc = acc*2 + countₖ over custkey buckets), which only a
-    procedural block can express statement-by-statement; the oracle
-    states the UNROLLED closed form (Σ nᵦ·2⁴⁻ᵇ via integer shifts —
-    bit-exact, no floats). Script variables are block-scoped, so
-    nothing leaks into the shared session."""
-    configure_for_oracle_parity(spark)
-    _t(spark, sf_dir, "orders").createOrReplaceTempView(
-        "_script_orders"
-    )
-    spark.conf.set("spark.sql.scripting.enabled", "true")
-    return spark.sql(
-        """
-        BEGIN
-          DECLARE acc BIGINT DEFAULT 0;
-          DECLARE i INT DEFAULT 0;
-          WHILE i < 5 DO
-            SET acc = acc * 2 + (
-              SELECT count(*) FROM _script_orders
-              WHERE o_custkey % 5 = i
-            );
-            SET i = i + 1;
-          END WHILE;
-          SELECT acc AS folded, CAST(i AS INT) AS n_rounds;
-        END
-        """
-    )
-
-
-ORACLE_SQL_SCRIPTING_ORDERS = """
-WITH buckets AS (
-  SELECT o_custkey % 5 AS b, count(*) AS n
-  FROM orders GROUP BY 1
-)
-SELECT CAST(sum(n * (1 << (4 - b))) AS BIGINT) AS folded,
-       CAST(5 AS INT) AS n_rounds
-FROM buckets
-"""
-
-QUERIES["sql_scripting_orders"] = q_sql_scripting_orders
-ORACLES["sql_scripting_orders"] = ORACLE_SQL_SCRIPTING_ORDERS
-
-
-# ---------------------------------------------------------------------------
-# Polymorphic UDTF: analyze()-derived schema + TABLE argument with
-# PARTITION BY / ORDER BY (the other half of the UDTF surface)
-# ---------------------------------------------------------------------------
-
-def q_polymorphic_udtf_events(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The POLYMORPHIC Python UDTF surface — the two Spark 4 features
-    `udtf_sentences_documents` (static schema, scalar argument)
-    leaves uncovered: (1) `analyze()` computing the OUTPUT schema
-    from the input's schema at plan time (here: one `sum_<col>`
-    column per numeric column of whatever table is passed — the
-    generic-aggregator shape that makes a UDTF reusable across
-    tables), and (2) a TABLE argument with `PARTITION BY … ORDER
-    BY …`, which hands `eval()` whole co-located partitions in a
-    guaranteed row order and fires `terminate()` once per partition
-    — the SQL-level per-key table processor. Per user it folds row
-    count plus the sum of every numeric column; the double sum is
-    accumulated in the bound order and float32-quantized at emit so
-    the oracle's unordered aggregate collapses to the same IEEE
-    value. Scale: one key-exchange per TABLE argument, Python sees
-    each partition once — the same cost envelope as grouped-map
-    applyInPandas."""
-    from pyspark.sql.functions import udtf
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructType,
-    )
-    from pyspark.sql.udtf import AnalyzeArgument, AnalyzeResult
-
-    class PartitionSums:
-        @staticmethod
-        def analyze(t: AnalyzeArgument) -> AnalyzeResult:
-            schema = (
-                StructType()
-                .add("user_id", LongType())
-                .add("n_rows", LongType())
-            )
-            for f in t.dataType.fields:
-                if f.name == "user_id":
-                    continue
-                if isinstance(f.dataType, LongType):
-                    schema = schema.add("sum_" + f.name, LongType())
-                elif isinstance(f.dataType, DoubleType):
-                    schema = schema.add("sum_" + f.name, DoubleType())
-            return AnalyzeResult(schema=schema)
-
-        def __init__(self):
-            self._key = None
-            self._n = 0
-            self._cols = None
-            self._sums = None
-
-        def eval(self, row):
-            if self._cols is None:
-                self._cols = [
-                    c for c in row.__fields__ if c != "user_id"
-                ]
-                self._sums = {c: 0 for c in self._cols}
-            self._key = row["user_id"]
-            self._n += 1
-            for c in self._cols:
-                self._sums[c] += row[c]
-
-        def terminate(self):
-            import numpy as np
-
-            if self._key is None:
-                return
-            out = [self._key, self._n]
-            for c in self._cols:
-                v = self._sums[c]
-                out.append(
-                    float(np.float32(v))
-                    if isinstance(v, float)
-                    else v
-                )
-            yield tuple(out)
-
-    configure_for_oracle_parity(spark)
-    spark.udtf.register("partition_sums_gate", udtf(PartitionSums))
-    _t(spark, sf_dir, "events").selectExpr(
-        "user_id", "event_id", "value"
-    ).createOrReplaceTempView("_pudtf_events")
-    return spark.sql(
-        """
-        SELECT * FROM partition_sums_gate(
-          TABLE(_pudtf_events)
-          PARTITION BY user_id ORDER BY event_id
-        )
-        """
-    )
-
-
-ORACLE_POLYMORPHIC_UDTF_EVENTS = """
-SELECT user_id,
-       CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(sum(event_id) AS BIGINT) AS sum_event_id,
-       CAST(CAST(sum(value) AS REAL) AS DOUBLE) AS sum_value
-FROM events
-GROUP BY user_id
-"""
-
-QUERIES["polymorphic_udtf_events"] = q_polymorphic_udtf_events
-ORACLES["polymorphic_udtf_events"] = ORACLE_POLYMORPHIC_UDTF_EVENTS
-
-
-# ---------------------------------------------------------------------------
-# Hidden _metadata columns: file lineage on every scan
-# ---------------------------------------------------------------------------
-
-def q_file_metadata_events(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The hidden `_metadata` struct every file scan carries
-    (`file_name` / `file_size` / `row_index` / ...) — the zero-cost
-    lineage surface: audit which file produced a row, debug a bad
-    batch, build incremental bookkeeping WITHOUT a lineage column
-    baked into the data. The gate stages events partitioned by
-    event_type with `repartition(event_type)` so each partition dir
-    holds EXACTLY one file, then pins the contract per type: one
-    distinct file, `.parquet` suffix, positive size, and
-    `sum(row_index) == n(n-1)/2` — the closed form that proves
-    row_index is a dense 0-based per-file counter (any gap, repeat,
-    or cross-file bleed breaks the triangular number). File names
-    and sizes are environment-dependent, so the hash carries their
-    INVARIANTS, not their values."""
-    import os
-    import tempfile
-
-    ev = _t(spark, sf_dir, "events")
-    tmp = os.path.join(
-        tempfile.mkdtemp(prefix="meta_gate_"), "t"
-    )
-    ev.repartition("event_type").write.partitionBy(
-        "event_type"
-    ).parquet(tmp)
-    back = spark.read.parquet(tmp)
-    return (
-        back.select(
-            "event_type",
-            F.col("_metadata.file_name").alias("fn"),
-            F.col("_metadata.row_index").alias("ri"),
-            F.col("_metadata.file_size").alias("fs"),
-        )
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.countDistinct("fn").cast("bigint").alias("n_files"),
-            F.sum("ri").cast("bigint").alias("sum_row_index"),
-            F.min(F.col("fn").endswith(".parquet")).alias(
-                "parquet_suffix"
-            ),
-            F.min(F.col("fs") > 0).alias("size_positive"),
-        )
-    )
-
-
-ORACLE_FILE_METADATA_EVENTS = """
-SELECT event_type,
-       CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(1 AS BIGINT) AS n_files,
-       CAST(count(*) * (count(*) - 1) / 2 AS BIGINT)
-         AS sum_row_index,
-       true AS parquet_suffix,
-       true AS size_positive
-FROM events
-GROUP BY event_type
-"""
-
-QUERIES["file_metadata_events"] = q_file_metadata_events
-ORACLES["file_metadata_events"] = ORACLE_FILE_METADATA_EVENTS
-
-
-# ---------------------------------------------------------------------------
 # Ordered-set aggregates: percentile_cont / percentile_disc WITHIN GROUP
 # ---------------------------------------------------------------------------
 
@@ -3302,190 +670,3 @@ QUERIES["percentile_within_group_events"] = q_percentile_within_group_events
 ORACLES["percentile_within_group_events"] = (
     ORACLE_PERCENTILE_WITHIN_GROUP_EVENTS
 )
-
-
-# ---------------------------------------------------------------------------
-# Bitwise aggregates: bit_and / bit_or / bit_xor
-# ---------------------------------------------------------------------------
-
-def q_bitwise_aggs_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`bit_and` / `bit_or` / `bit_xor` aggregates per event type over
-    a 16-bit field derived from user_id — permission-mask folding
-    (AND), capability union (OR), and parity checksum (XOR), all
-    integer-exact and order-insensitive by algebra. The same
-    function names exist in DuckDB, so the oracle is a literal
-    replay."""
-    ev = _t(spark, sf_dir, "events")
-    masked = ev.select(
-        "event_type",
-        ((F.col("user_id") * 2654435761) % 65536).alias("mask"),
-    )
-    return masked.groupBy("event_type").agg(
-        F.bit_and("mask").alias("mask_and"),
-        F.bit_or("mask").alias("mask_or"),
-        F.bit_xor("mask").alias("mask_xor"),
-        F.count(F.lit(1)).alias("n"),
-    )
-
-
-ORACLE_BITWISE_AGGS_EVENTS = """
-WITH m AS (
-  SELECT event_type,
-         (user_id * 2654435761) % 65536 AS mask
-  FROM events
-)
-SELECT event_type,
-       CAST(bit_and(mask) AS BIGINT) AS mask_and,
-       CAST(bit_or(mask) AS BIGINT) AS mask_or,
-       CAST(bit_xor(mask) AS BIGINT) AS mask_xor,
-       count(*) AS n
-FROM m
-GROUP BY event_type
-"""
-
-QUERIES["bitwise_aggs_events"] = q_bitwise_aggs_events
-ORACLES["bitwise_aggs_events"] = ORACLE_BITWISE_AGGS_EVENTS
-
-
-# ---------------------------------------------------------------------------
-# CSV malformed-row modes: PERMISSIVE / DROPMALFORMED / FAILFAST
-# ---------------------------------------------------------------------------
-
-def q_csv_malformed_modes_events(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Schema enforcement on messy CSV — the three parser modes in
-    one accounting row. Events are serialized to raw CSV text with a
-    DETERMINISTIC corruption (every event_id % 13 == 0 row gets a
-    non-numeric value field), then read back three ways: PERMISSIVE
-    captures each bad row in columnNameOfCorruptRecord while keeping
-    its parseable fields (corrupt rows still contribute their
-    event_id), DROPMALFORMED silently sheds them, FAILFAST raises on
-    first touch. All accounting is INTEGER (counts + event_id sums —
-    the corrupted field never aggregates), so the closed-form oracle
-    replays the corruption rule on the parquet table and the gate is
-    hash-exact with zero float round-trip risk."""
-    import tempfile
-
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-    from pyspark.sql.utils import CapturedException
-
-    ev = _t(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="csv_modes_gate_")
-    lines = ev.select(
-        F.concat_ws(
-            ",",
-            F.col("event_id"),
-            F.col("user_id"),
-            F.when(
-                F.col("event_id") % 13 == 0,
-                F.concat(F.lit("oops"), F.col("user_id")),
-            ).otherwise(F.col("value").cast("string")),
-        ).alias("value")
-    )
-    lines.write.mode("overwrite").format("text").save(f"{tmp}/csv")
-
-    schema = StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("user_id", LongType()),
-            StructField("value", DoubleType()),
-            StructField("_bad", StringType()),
-        ]
-    )
-
-    def _read(mode: str):
-        return (
-            spark.read.schema(schema)
-            .option("mode", mode)
-            .option("columnNameOfCorruptRecord", "_bad")
-            .csv(f"{tmp}/csv")
-        )
-
-    # CSV column pruning (on by default) silently defeats ALL THREE
-    # modes here: any plan that doesn't read the double column never
-    # parses it, so no row is ever malformed — _bad stays NULL,
-    # DROPMALFORMED drops nothing, FAILFAST never fires. The knob is
-    # the point of this gate as much as the modes are; a production
-    # job validating messy feeds must turn it off (or touch every
-    # column) or its quarantine counts read zero.
-    # Second trap: Spark DISALLOWS querying the corrupt column off a
-    # raw CSV scan (it would see post-pruning NULLs) — the documented
-    # contract is cache/persist the parsed frame FIRST, then query.
-    # At cluster scale the analog is writing the parsed+quarantined
-    # frame to a table and counting from there, which is what a real
-    # ingestion boundary does anyway.
-    prune_conf = "spark.sql.csv.parser.columnPruning.enabled"
-    prev = spark.conf.get(prune_conf)
-    spark.conf.set(prune_conf, "false")
-    perm_df = _read("PERMISSIVE").cache()
-    try:
-        perm = perm_df.agg(
-            F.count(F.lit(1)).alias("n_total"),
-            F.sum(F.when(F.col("_bad").isNotNull(), 1).otherwise(0))
-            .cast("long")
-            .alias("n_corrupt"),
-            F.sum(F.when(F.col("_bad").isNull(), F.col("event_id")))
-            .alias("sum_ids_clean"),
-            F.sum(F.when(F.col("_bad").isNotNull(), F.col("event_id")))
-            .alias("sum_ids_corrupt"),
-        )
-        # count() alone short-circuits the parse even with pruning
-        # off; aggregating the value column forces every row through
-        # the converter so malformed rows actually drop
-        n_drop = (
-            _read("DROPMALFORMED")
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("_f"))
-            .first()
-            .n
-        )
-        try:
-            _read("FAILFAST").agg(F.sum("value")).collect()
-            failfast_raised = False
-        except Exception as exc:  # noqa: BLE001 — Py4JJavaError, not
-            # a CapturedException: the malformed-record SparkException
-            # surfaces from the executor wrapped at the Py4J boundary
-            failfast_raised = "MALFORMED" in str(exc).upper() or (
-                "FAILFAST" in str(exc).upper()
-            )
-            if not failfast_raised:
-                raise
-        out = perm.select(
-            "n_total",
-            "n_corrupt",
-            "sum_ids_clean",
-            "sum_ids_corrupt",
-            F.lit(int(n_drop)).cast("long").alias("n_dropmalformed"),
-            F.lit(failfast_raised).alias("failfast_raised"),
-        )
-        # materialize before the conf is restored: the returned frame
-        # must not depend on session state the caller no longer holds
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        perm_df.unpersist()
-        spark.conf.set(prune_conf, prev)
-
-
-ORACLE_CSV_MALFORMED_MODES_EVENTS = """
-SELECT count(*) AS n_total,
-       CAST(SUM(CASE WHEN event_id % 13 = 0 THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_corrupt,
-       CAST(SUM(CASE WHEN event_id % 13 <> 0 THEN event_id END) AS BIGINT)
-         AS sum_ids_clean,
-       CAST(SUM(CASE WHEN event_id % 13 = 0 THEN event_id END) AS BIGINT)
-         AS sum_ids_corrupt,
-       CAST(SUM(CASE WHEN event_id % 13 <> 0 THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_dropmalformed,
-       TRUE AS failfast_raised
-FROM events
-"""
-
-QUERIES["csv_malformed_modes_events"] = q_csv_malformed_modes_events
-ORACLES["csv_malformed_modes_events"] = ORACLE_CSV_MALFORMED_MODES_EVENTS

@@ -6,8 +6,7 @@ Four new operator families, each oracle-gated bit-exact:
   ``regr_*`` aggregate family (operators/stats.py:regression_per_key).
 * ``gapfill_locf_events`` — regular-grid resampling with
   last-observation-carried-forward (operators/stats.py:gap_fill_locf).
-* ``unpivot_daily_metrics`` — wide->long ``DataFrame.unpivot`` (melt),
-  the inverse of ``event_type_pivot``.
+* ``unpivot_daily_metrics`` — wide->long ``DataFrame.unpivot`` (melt).
 * ``zorder_key_events`` — Morton-key computation for multi-dimensional
   layout clustering (extensions/layout.py). The gate checks the pure
   key arithmetic; the repartitionByRange re-layout around it is
@@ -144,8 +143,8 @@ LEFT JOIN per_bucket p USING (user_id, bucket_ts)
 
 def q_unpivot_daily_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wide per-(user, day) metrics melted to long form with
-    ``DataFrame.unpivot`` — the tidy-data inverse of
-    ``event_type_pivot``. One aggregate shuffle; the melt itself is a
+    ``DataFrame.unpivot`` — the tidy-data inverse of a pivot. One
+    aggregate shuffle; the melt itself is a
     row-local 1:3 expand (Catalyst ``Expand``), no extra exchange."""
     daily = (
         _events(spark, sf_dir)

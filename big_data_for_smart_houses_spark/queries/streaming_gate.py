@@ -3,10 +3,10 @@ actual Structured Streaming runs, not batch plans. Started round 5
 with the stateful LOCF gate; the family now covers stateful
 EWMA/LOCF/session ops, watermarked tumbling aggregation (default AND
 RocksDB state stores), stream-stream interval joins (inner,
-left-outer, full-outer, and left-semi), cross-batch dedup, stream-static enrichment,
-foreachBatch MERGE and multi-sink fanout, per-batch observe metrics,
-the Python data source's streaming reader, and two crash-injected
-restart-recovery gates (SQL state and applyInPandasWithState).
+left-outer, full-outer, left-semi and left-anti), cross-batch dedup,
+foreachBatch MERGE, the Python data source's streaming reader, and
+crash-injected restart-recovery gates (SQL state and
+applyInPandasWithState).
 
 ``locf_stream_availablenow`` drives the stateful streaming LOCF
 operator (streaming/stateful.py:locf_stream — applyInPandasWithState,
@@ -245,105 +245,6 @@ s(user_id, ts, event_id, value, rn, ewma) AS (
 SELECT user_id, ts, event_id, value,
        CAST(CAST(ewma AS REAL) AS DOUBLE) AS ewma
 FROM s
-"""
-
-SESSION_GAP_S = 300
-SESSION_WM_S = 600
-
-
-def q_session_stream_availablenow(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Built-in ``session_window`` aggregation executed as a WATERMARKED
-    stream — the gate that puts Spark's event-time watermark machinery
-    itself on the hash path. availableNow processes the staged file,
-    then the no-data micro-batch advances the watermark to
-    ``max(ts) - 600 s`` and append mode emits exactly the sessions
-    whose end <= watermark (inclusive — probed empirically with a
-    boundary-exact session; the final session(s) of the stream's most
-    recent users stay withheld in state). The DuckDB oracle replays
-    the batch session-islands computation filtered by that same
-    closure predicate."""
-    configure_for_oracle_parity(spark)
-    ev = load_table(spark, sf_dir, "events").select("user_id", "ts")
-    tmp = tempfile.mkdtemp(prefix="session_stream_gate_")
-    staged = f"{tmp}/staged"
-    out_dir = f"{tmp}/out"
-    # arrow staging (round 14): same bytes/schema, milliseconds
-    # instead of a Spark write job — see _arrow_stage
-    _arrow_stage(staged, (_arrow_events(sf_dir, ev.schema.names),))
-    stream = spark.readStream.schema(ev.schema).parquet(staged)
-    agg = (
-        stream.withWatermark("ts", f"{SESSION_WM_S} seconds")
-        .groupBy(
-            "user_id", F.session_window("ts", f"{SESSION_GAP_S} seconds")
-        )
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            "n_events",
-        )
-    )
-    with _stream_state_partitions(spark):
-        q = (
-            agg.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(_AWAIT_S):
-            q.stop()
-            raise TimeoutError(
-                f"session_window availableNow run exceeded {_AWAIT_S}s"
-            )
-    return spark.read.parquet(out_dir).select(
-        "user_id", "session_start", "session_end", "n_events"
-    )
-
-
-ORACLE_SESSION_STREAM_AVAILABLENOW = f"""
-WITH ordered AS (
-  SELECT user_id, ts,
-         CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER (
-                PARTITION BY user_id ORDER BY ts) > {SESSION_GAP_S * 1_000_000}
-              THEN 1 ELSE 0 END AS new_session
-  FROM events
-),
-islands AS (
-  SELECT user_id, ts,
-         sum(new_session) OVER (
-           PARTITION BY user_id ORDER BY ts
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_seq
-  FROM ordered
-),
-sessions AS (
-  SELECT user_id,
-         min(ts) AS session_start,
-         max(ts) + INTERVAL {SESSION_GAP_S} SECOND AS session_end,
-         CAST(count(*) AS BIGINT) AS n_events
-  FROM islands
-  GROUP BY user_id, session_seq
-),
-wm AS (
-  -- the ENGINE's bound, measured at sub-ms (see the session-window
-  -- boundary test in tests/test_streaming.py): Spark's event-time
-  -- stats are MILLISECONDS, so the watermark is the ms-FLOORED max
-  -- minus the delay, and a closed session emits iff its µs-precision
-  -- end is <= that (non-strict; aggregates carry no -1 ms join-state
-  -- conservatism). session_end = last event + gap has µs precision,
-  -- so the raw max(ts)-delay form would over-emit sessions ending in
-  -- the trailing sub-ms slice.
-  SELECT (epoch_us(max(ts)) // 1000) * 1000
-           - {SESSION_WM_S * 1000000} AS w_us
-  FROM events
-)
-SELECT s.user_id, s.session_start, s.session_end, s.n_events
-FROM sessions s CROSS JOIN wm
-WHERE epoch_us(s.session_end) <= wm.w_us
 """
 
 STREAM_JOIN_LOOKBACK_S = 6 * 3600
@@ -750,66 +651,6 @@ FROM orders
 """
 
 
-def q_stream_enrich_availablenow(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Stream-static broadcast enrichment — the fourth canonical
-    Structured Streaming shape after windowed agg, stream-stream join,
-    and stateful ops: a streaming fact (events) joined to a STATIC
-    dimension (customer) inside a real availableNow run. Stream-static
-    joins are stateless — the dimension is just re-planned per
-    micro-batch, and a broadcast hint keeps it a map-side hash join on
-    every batch, so enrichment costs zero shuffles of the stream at
-    any scale (J1's contract, held under streaming execution)."""
-    configure_for_oracle_parity(spark)
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "value"
-    )
-    dim = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("user_id"),
-        F.col("c_mktsegment").alias("segment"),
-        F.col("c_acctbal").alias("acctbal"),
-    )
-    tmp = tempfile.mkdtemp(prefix="stream_enrich_gate_")
-    staged = f"{tmp}/staged"
-    out_dir = f"{tmp}/out"
-    # arrow staging (round 14): same bytes/schema, milliseconds
-    # instead of a Spark write job — see _arrow_stage
-    _arrow_stage(staged, (_arrow_events(sf_dir, ev.schema.names),))
-    stream = spark.readStream.schema(ev.schema).parquet(staged)
-    # no forced broadcast: the dimension is |customers|-scaled, the
-    # round-4-verdict class of hint that OOMs executors at 100 TB; the
-    # static planner broadcasts it when its stats say it fits
-    enriched = stream.join(dim, "user_id", "left").select(
-        "event_id", "user_id", "value", "segment", "acctbal"
-    )
-    with _stream_state_partitions(spark):
-        q = (
-            enriched.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(_AWAIT_S):
-            q.stop()
-            raise TimeoutError(
-                f"stream-static enrichment availableNow run exceeded {_AWAIT_S}s"
-            )
-    return spark.read.parquet(out_dir).select(
-        "event_id", "user_id", "value", "segment", "acctbal"
-    )
-
-
-ORACLE_STREAM_ENRICH_AVAILABLENOW = """
-SELECT e.event_id, e.user_id, e.value,
-       c.c_mktsegment AS segment,
-       c.c_acctbal AS acctbal
-FROM events e LEFT JOIN customer c ON e.user_id = c.c_custkey
-"""
-
-
 RESTART_WM_S = 3600
 
 
@@ -1024,12 +865,10 @@ def q_stream_rocksdb_availablenow(
 QUERIES = {
     "locf_stream_availablenow": q_locf_stream_availablenow,
     "ewma_stream_availablenow": q_ewma_stream_availablenow,
-    "session_stream_availablenow": q_session_stream_availablenow,
     "stream_join_availablenow": q_stream_join_availablenow,
     "stream_dedup_availablenow": q_stream_dedup_availablenow,
     "stream_tumbling_availablenow": q_stream_tumbling_availablenow,
     "stream_merge_availablenow": q_stream_merge_availablenow,
-    "stream_enrich_availablenow": q_stream_enrich_availablenow,
     "stream_restart_availablenow": q_stream_restart_availablenow,
     "stream_rocksdb_availablenow": q_stream_rocksdb_availablenow,
     "stream_outer_join_availablenow": q_stream_outer_join_availablenow,
@@ -1038,12 +877,10 @@ QUERIES = {
 ORACLES = {
     "locf_stream_availablenow": ORACLE_LOCF_STREAM_AVAILABLENOW,
     "ewma_stream_availablenow": ORACLE_EWMA_STREAM_AVAILABLENOW,
-    "session_stream_availablenow": ORACLE_SESSION_STREAM_AVAILABLENOW,
     "stream_join_availablenow": ORACLE_STREAM_JOIN_AVAILABLENOW,
     "stream_dedup_availablenow": ORACLE_STREAM_DEDUP_AVAILABLENOW,
     "stream_tumbling_availablenow": ORACLE_STREAM_TUMBLING_AVAILABLENOW,
     "stream_merge_availablenow": ORACLE_STREAM_MERGE_AVAILABLENOW,
-    "stream_enrich_availablenow": ORACLE_STREAM_ENRICH_AVAILABLENOW,
     "stream_restart_availablenow": ORACLE_STREAM_RESTART_AVAILABLENOW,
     # provider swap must be value-invariant: same oracle as tumbling
     "stream_rocksdb_availablenow": ORACLE_STREAM_TUMBLING_AVAILABLENOW,
@@ -1060,27 +897,12 @@ def q_synthetic_stream_availablenow(
 ) -> DataFrame:
     """The custom Python Data Source's STREAMING half
     (sources/synthetic.py:SyntheticTelemetryStreamReader — Spark 4's
-    ``SimpleDataSourceStreamReader``): row-index offsets, prefetched
-    micro-batches of the same RNG-free row function the batch reader
-    plans, generation stopping at ``n``. The run is a real
-    multi-batch processingTime stream (4 batches of 512; availableNow
-    on this API drains only the first prefetch, so the gate watches
-    the query's OWN progress feed to the KNOWN deterministic end and
-    stops). Append-only disjoint offset ranges mean the sink holds
-    exactly rows [0, n) whenever generation has drained — the same
+    ``DataSourceStreamReader``): row-index offsets with the latest
+    offset at ``n``, read as 512-row input partitions of the same
+    RNG-free row function the batch reader plans. An availableNow run
+    drains exactly rows [0, n) and stops, so the sink holds the same
     generate_series oracle as the batch gate, at stream n. sf_dir is
-    unused: the source IS the data.
-
-    The drain check reads ``q.recentProgress`` — DRIVER-side JSON
-    from completed micro-batches — never a Spark query over the sink
-    (round-13 verdict ask #2: each ``spark.read...count()`` poll was
-    an extra SQL execution, and the timing-dependent NUMBER of polls
-    made this gate's bench plan-fingerprint run-varying — the one
-    blind spot in the plan-flip detector; a batch's progress row
-    lands only after its sink commit, so the counter never runs
-    ahead of the data)."""
-    import time
-
+    unused: the source IS the data."""
     from ..sources.synthetic import register
 
     configure_for_oracle_parity(spark)
@@ -1095,22 +917,14 @@ def q_synthetic_stream_availablenow(
         .writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", f"{tmp}/ckpt")
-        .trigger(processingTime="100 milliseconds")
+        .trigger(availableNow=True)
         .start()
     )
-    try:
-        deadline = time.time() + _AWAIT_S
-        while time.time() < deadline:
-            ingested = sum(p["numInputRows"] for p in q.recentProgress)
-            if ingested >= SYNTH_STREAM_N:
-                break
-            time.sleep(0.1)
-        else:
-            raise TimeoutError(
-                f"synthetic stream never drained {SYNTH_STREAM_N} rows"
-            )
-    finally:
+    if not q.awaitTermination(_AWAIT_S):
         q.stop()
+        raise TimeoutError(
+            f"synthetic stream availableNow run exceeded {_AWAIT_S}s"
+        )
     return spark.read.parquet(out_dir)
 
 
@@ -1244,102 +1058,6 @@ ORACLES["stream_restart_pystate_availablenow"] = (
 )
 
 
-def q_stream_observe_availablenow(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Streaming observability — `observe` metrics accumulated PER
-    MICRO-BATCH and read back through the query's progress events
-    (batch `observe_metrics_orders`' streaming sibling): the events
-    table arrives as two parity-split files, one per trigger, each
-    batch reporting its own row count and value sum for free during
-    the pass it was already making; the gate re-emits the per-batch
-    metrics as rows. Batch boundaries are deterministic (one file per
-    trigger), so the metric rows hash against the closed-form oracle
-    — which is the whole point: at 100 TB these are the numbers a
-    pipeline health dashboard reads per batch without a second scan.
-    Metric sums ride the float32 gate quantization."""
-    import numpy as np
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    configure_for_oracle_parity(spark)
-    ev = load_table(spark, sf_dir, "events").select("event_id", "value")
-    import os
-
-    tmp = tempfile.mkdtemp(prefix="stream_observe_gate_")
-    staged = f"{tmp}/staged"
-    # engine-portable event_id % 2 split (oracle replays it), staged
-    # in arrow (round 14): no Spark write job per half
-    for h in (0, 1):
-        path = f"{staged}/half={h}"
-        _arrow_stage(
-            path,
-            (_arrow_events_parity(sf_dir, ["event_id", "value"],
-                                  "event_id", h),),
-        )
-        os.utime(f"{path}/batch0.parquet", (1000 + h, 1000 + h))
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("recursiveFileLookup", "true")
-        .parquet(staged)
-    )
-    observed = stream.observe(
-        "gate_metrics",
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum("value").alias("value_sum"),
-        F.max("event_id").alias("max_id"),
-    )
-    q = (
-        observed.writeStream.format("noop")
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(_AWAIT_S):
-        q.stop()
-        raise TimeoutError(
-            f"observe availableNow run exceeded {_AWAIT_S}s"
-        )
-    rows = []
-    for p in q.recentProgress:
-        m = (p.get("observedMetrics") or {}).get("gate_metrics")
-        if m is not None and p.get("numInputRows", 0) > 0:
-            rows.append(
-                (
-                    int(p["batchId"]),
-                    int(m["n_rows"]),
-                    float(np.float32(m["value_sum"])),
-                    int(m["max_id"]),
-                )
-            )
-    schema = StructType(
-        [
-            StructField("batch_id", LongType()),
-            StructField("n_rows", LongType()),
-            StructField("value_sum", DoubleType()),
-            StructField("max_id", LongType()),
-        ]
-    )
-    return spark.createDataFrame(rows, schema)
-
-
-ORACLE_STREAM_OBSERVE_AVAILABLENOW = """
-SELECT CAST(event_id % 2 AS BIGINT) AS batch_id,
-       count(*) AS n_rows,
-       CAST(CAST(sum(value) AS REAL) AS DOUBLE) AS value_sum,
-       CAST(max(event_id) AS BIGINT) AS max_id
-FROM events GROUP BY 1
-"""
-
-QUERIES["stream_observe_availablenow"] = q_stream_observe_availablenow
-ORACLES["stream_observe_availablenow"] = ORACLE_STREAM_OBSERVE_AVAILABLENOW
-
-
 def q_stream_torture_availablenow(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1470,81 +1188,6 @@ ORACLES["stream_torture_availablenow"] = (
 )
 
 
-
-
-
-# ---------------------------------------------------------------------------
-# State Data Source: read the streaming state store itself (Spark 4)
-# ---------------------------------------------------------------------------
-
-def q_statestore_read_availablenow(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Spark 4's State Data Source, the state-debugging surface a
-    production streaming operator lives on: run a stateful streaming
-    aggregation to its checkpoint, then read the STATE STORE itself
-    back as a batch DataFrame (``spark.read.format("statestore")``)
-    and hash-gate its contents against the batch answer. This is the
-    strongest possible check on streaming-aggregation state: not the
-    sink rows but the per-key agg buffers (count/min/max) as
-    physically persisted per shuffle partition. The sink is ``noop``
-    — the state is the output under test. Buffer field names come
-    from the physical agg functions (count/min/max), not the column
-    aliases; min/max of doubles copy values bit-exact, so the gate
-    needs no quantization. Registered with the ``_availablenow``
-    suffix so the session memo returns the first run's result on the
-    driver's second call."""
-    configure_for_oracle_parity(spark)
-    ev = load_table(spark, sf_dir, "events").select("user_id", "value")
-    tmp = tempfile.mkdtemp(prefix="statestore_gate_")
-    staged = f"{tmp}/staged"
-    ck = f"{tmp}/ckpt"
-    # arrow staging (round 14): same bytes/schema, milliseconds
-    # instead of a Spark write job — see _arrow_stage
-    _arrow_stage(staged, (_arrow_events(sf_dir, ev.schema.names),))
-    stream = spark.readStream.schema(ev.schema).parquet(staged)
-    agg = stream.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("value").alias("vmin"),
-        F.max("value").alias("vmax"),
-    )
-    with _stream_state_partitions(spark):
-        q = (
-            agg.writeStream.format("noop")
-            .outputMode("update")
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(_AWAIT_S):
-            q.stop()
-            raise TimeoutError(
-                f"statestore gate run exceeded {_AWAIT_S}s"
-            )
-    st = spark.read.format("statestore").option("path", ck).load()
-    return st.select(
-        F.col("key.user_id").alias("user_id"),
-        F.col("value.count").alias("n"),
-        F.col("value.min").alias("vmin"),
-        F.col("value.max").alias("vmax"),
-    )
-
-
-ORACLE_STATESTORE_READ_AVAILABLENOW = """
-SELECT user_id,
-       CAST(count(*) AS BIGINT) AS n,
-       min(value) AS vmin,
-       max(value) AS vmax
-FROM events
-GROUP BY user_id
-"""
-
-QUERIES["statestore_read_availablenow"] = q_statestore_read_availablenow
-ORACLES["statestore_read_availablenow"] = (
-    ORACLE_STATESTORE_READ_AVAILABLENOW
-)
-
-
 # ---------------------------------------------------------------------------
 # Streaming CDC apply: foreachBatch + merge_upsert into a versioned table
 # ---------------------------------------------------------------------------
@@ -1589,7 +1232,6 @@ def _upsert_final_state(spark, table_path: str):
         F.col("o_totalprice").alias("price"),
         F.col("version").cast("int").alias("version"),
     )
-
 
 
 def q_stream_upsert_availablenow(
@@ -1793,298 +1435,6 @@ ORACLES["stream_upsert_restart_availablenow"] = (
 )
 
 
-def q_statestore_join_availablenow(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """State Data Source over STREAM-STREAM JOIN state (the
-    ``joinSide`` option): run an interval join between the even- and
-    odd-keyed halves of the events table under a 35-day watermark —
-    longer than the table's 30-day span, so NO buffered row is ever
-    evicted — then read each side's join state back and prove it is
-    EXACTLY the staged input of that side. This is the operational
-    question a stream-join owner actually asks ("what is this join
-    holding, and why is state growing"), answered bit-exact: the
-    oracle is just the two side filters of the batch table. The join
-    OUTPUT goes to noop — the state is the artifact under test."""
-    configure_for_oracle_parity(spark)
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "ts", "value"
-    )
-    tmp = tempfile.mkdtemp(prefix="statestore_join_gate_")
-    ck = f"{tmp}/ckpt"
-    sides = {}
-    for name, parity in (("left", 0), ("right", 1)):
-        path = f"{tmp}/{name}"
-        # arrow staging (round 14): event_id % 2 side split without a
-        # Spark write job per side
-        _arrow_stage(
-            path,
-            (_arrow_events_parity(sf_dir, ["user_id", "ts", "value"],
-                                  "event_id", parity),),
-        )
-        sides[name] = path
-    schema = "user_id BIGINT, ts TIMESTAMP, value DOUBLE"
-    ls = (
-        spark.readStream.schema(schema)
-        .parquet(sides["left"])
-        .withWatermark("ts", "35 days")
-        .alias("l")
-    )
-    rs = (
-        spark.readStream.schema(schema)
-        .parquet(sides["right"])
-        .withWatermark("ts", "35 days")
-        .alias("r")
-    )
-    joined = ls.join(
-        rs,
-        (F.col("l.user_id") == F.col("r.user_id"))
-        & (
-            F.col("r.ts").between(
-                F.col("l.ts"),
-                F.col("l.ts") + F.expr("interval 1 hour"),
-            )
-        ),
-    )
-    with _stream_state_partitions(spark):
-        q = (
-            joined.writeStream.format("noop")
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(_AWAIT_S):
-            q.stop()
-            raise TimeoutError(
-                f"statestore join gate exceeded {_AWAIT_S}s"
-            )
-    parts = []
-    for side in ("left", "right"):
-        st = (
-            spark.read.format("statestore")
-            .option("path", ck)
-            .option("joinSide", side)
-            .load()
-        )
-        parts.append(
-            st.select(
-                F.lit(side).alias("side"),
-                F.col("value.user_id").alias("user_id"),
-                F.col("value.ts").alias("ts"),
-                F.col("value.value").alias("value"),
-            )
-        )
-    return parts[0].unionByName(parts[1])
-
-
-ORACLE_STATESTORE_JOIN_AVAILABLENOW = """
-SELECT 'left' AS side, user_id, ts, value
-FROM events WHERE event_id % 2 = 0
-UNION ALL
-SELECT 'right' AS side, user_id, ts, value
-FROM events WHERE event_id % 2 = 1
-"""
-
-QUERIES["statestore_join_availablenow"] = (
-    q_statestore_join_availablenow
-)
-ORACLES["statestore_join_availablenow"] = (
-    ORACLE_STATESTORE_JOIN_AVAILABLENOW
-)
-
-
-def q_stream_chained_availablenow(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """TWO stateful operators chained in ONE streaming query
-    (Spark 3.5+/4 multiple-stateful-operator support):
-    ``dropDuplicatesWithinWatermark`` feeding a tumbling daily
-    count — the at-least-once → effectively-once → aggregate
-    pipeline every production ingest wants as a single query instead
-    of two jobs with an intermediate topic. The events table is
-    staged TWICE (full redelivery) one file per micro-batch: batch
-    2's rows are eliminated either as state-store duplicates (recent
-    keys) or as late data (older than the advanced watermark) —
-    both paths land on the same answer, counts over one copy.
-    Append mode emits exactly the day windows whose end has passed
-    the final watermark (max ts − 1 h), which the oracle replays in
-    closed form. Two state stores, one checkpoint, one lineage."""
-    configure_for_oracle_parity(spark)
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "ts"
-    )
-    tmp = tempfile.mkdtemp(prefix="stream_chained_gate_")
-    staged = f"{tmp}/staged"
-    out_dir = f"{tmp}/out"
-    # arrow staging (round 14): two mtime-ordered copies, no Spark
-    # write jobs; recursiveFileLookup lists both, maxFilesPerTrigger=1
-    # delivers them in mtime order exactly as the Spark writes did
-    import os
-
-    src = _arrow_events(sf_dir, ev.schema.names)
-    _arrow_stage(f"{staged}/copy=1", (src,))
-    _arrow_stage(f"{staged}/copy=2", (src,))
-    os.utime(f"{staged}/copy=2/batch0.parquet", (2000, 2000))
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("recursiveFileLookup", "true")
-        .parquet(staged)
-    )
-    deduped = stream.withWatermark(
-        "ts", "1 hour"
-    ).dropDuplicatesWithinWatermark(["event_id"])
-    daily = (
-        deduped.groupBy(F.window("ts", "1 day").alias("w"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.col("w.start").alias("day_start"),
-            F.col("n"),
-        )
-    )
-    with _stream_state_partitions(spark):
-        q = (
-            daily.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(_AWAIT_S):
-            q.stop()
-            raise TimeoutError(
-                f"chained stateful gate exceeded {_AWAIT_S}s"
-            )
-    return spark.read.parquet(out_dir).select("day_start", "n")
-
-
-ORACLE_STREAM_CHAINED_AVAILABLENOW = """
-WITH days AS (
-  SELECT date_trunc('day', ts) AS day_start,
-         CAST(count(*) AS BIGINT) AS n
-  FROM events GROUP BY 1
-)
-SELECT CAST(day_start AS TIMESTAMP) AS day_start, n
-FROM days
-WHERE day_start + INTERVAL 1 DAY
-      <= (SELECT max(ts) FROM events) - INTERVAL 1 HOUR
-"""
-
-QUERIES["stream_chained_availablenow"] = q_stream_chained_availablenow
-ORACLES["stream_chained_availablenow"] = (
-    ORACLE_STREAM_CHAINED_AVAILABLENOW
-)
-
-
-# ---------------------------------------------------------------------------
-# Multi-watermark union: the min-watermark policy executed
-# ---------------------------------------------------------------------------
-
-MW_DELAY_A_S = 3600
-MW_DELAY_B_S = 10800
-
-
-def q_stream_multiwatermark_availablenow(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """TWO source streams with DIFFERENT watermark delays unioned into
-    one windowed aggregate — the multi-watermark surface none of the
-    single-source gates touch. Spark's default
-    ``multipleWatermarkPolicy = min`` sets the global watermark to the
-    LAGGING source's (here the odd-user stream, 3 h delay, vs 1 h on
-    the even-user stream), so append mode withholds every window the
-    slow source might still back-fill, even where the fast source is
-    hours past it. The oracle states that closure in closed form:
-    windows with end <= least(max(ts_even) - 1 h, max(ts_odd) - 3 h).
-    A broken policy (max instead of min, one source's watermark
-    ignored, per-source emission) changes the emitted window set and
-    hash-fails. Counts and max only — engine-exact."""
-    configure_for_oracle_parity(spark)
-    ev = load_table(spark, sf_dir, "events").select(
-        "ts", "user_id", "value"
-    )
-    tmp = tempfile.mkdtemp(prefix="stream_mw_gate_")
-    out_dir = f"{tmp}/out"
-    # arrow staging (round 14): user_id % 2 source split without a
-    # Spark write job per source
-    _arrow_stage(
-        f"{tmp}/staged_a",
-        (_arrow_events_parity(sf_dir, ["ts", "user_id", "value"],
-                              "user_id", 0),),
-    )
-    _arrow_stage(
-        f"{tmp}/staged_b",
-        (_arrow_events_parity(sf_dir, ["ts", "user_id", "value"],
-                              "user_id", 1),),
-    )
-    sa = (
-        spark.readStream.schema(ev.schema)
-        .parquet(f"{tmp}/staged_a")
-        .withWatermark("ts", f"{MW_DELAY_A_S} seconds")
-    )
-    sb = (
-        spark.readStream.schema(ev.schema)
-        .parquet(f"{tmp}/staged_b")
-        .withWatermark("ts", f"{MW_DELAY_B_S} seconds")
-    )
-    agg = (
-        sa.unionByName(sb)
-        .groupBy(F.window("ts", "1 hour"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.max("value").alias("value_max"),
-        )
-        .select(
-            F.col("window.start").alias("window_start"),
-            "n_events",
-            "value_max",
-        )
-    )
-    with _stream_state_partitions(spark):
-        q = (
-            agg.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(_AWAIT_S):
-            q.stop()
-            raise TimeoutError(
-                f"multi-watermark availableNow run exceeded {_AWAIT_S}s"
-            )
-    return spark.read.parquet(out_dir).select(
-        "window_start", "n_events", "value_max"
-    )
-
-
-ORACLE_STREAM_MULTIWATERMARK_AVAILABLENOW = f"""
-WITH wm AS (
-  SELECT least(
-    (SELECT max(ts) FROM events WHERE user_id % 2 = 0)
-      - INTERVAL {MW_DELAY_A_S} SECOND,
-    (SELECT max(ts) FROM events WHERE user_id % 2 <> 0)
-      - INTERVAL {MW_DELAY_B_S} SECOND
-  ) AS w
-)
-SELECT date_trunc('hour', ts) AS window_start,
-       CAST(count(*) AS BIGINT) AS n_events,
-       max(value) AS value_max
-FROM events CROSS JOIN wm
-GROUP BY 1, wm.w
-HAVING window_start + INTERVAL 1 HOUR <= wm.w
-"""
-
-QUERIES["stream_multiwatermark_availablenow"] = (
-    q_stream_multiwatermark_availablenow
-)
-ORACLES["stream_multiwatermark_availablenow"] = (
-    ORACLE_STREAM_MULTIWATERMARK_AVAILABLENOW
-)
-
-
 # ---------------------------------------------------------------------------
 # Event-time timeout: the state-lifecycle branch executed
 # ---------------------------------------------------------------------------
@@ -2233,30 +1583,6 @@ def _arrow_events_side(sf_dir: str, kind: str, id_alias: str, ts_alias: str):
     return t.select(["user_id", "event_id", "ts"]).rename_columns(
         ["user_id", id_alias, ts_alias]
     )
-
-
-def _arrow_events_parity(sf_dir: str, columns, parity_col: str, parity: int):
-    """events columns with ``parity_col % 2 == parity`` (ids are
-    non-negative, so the bit test IS the modulo), minus the parity
-    column itself — the statestore-join / observe-gate side staging
-    in arrow. The non-negativity assumption is ASSERTED (round-14
-    advice): for a negative odd id Spark's ``%`` yields -1 — the old
-    Spark staging dropped such rows from BOTH halves, while the bit
-    test would route them to parity 1 — so a future signed-id corpus
-    must fail loudly here instead of silently reshaping the split."""
-    import pyarrow.compute as pc
-
-    t = _arrow_events(sf_dir, list(dict.fromkeys([*columns, parity_col])))
-    mn = pc.min(t.column(parity_col)).as_py()
-    if mn is not None and mn < 0:
-        raise ValueError(
-            f"_arrow_events_parity: {parity_col} has negative values "
-            f"(min {mn}); the bit-test parity split assumes "
-            "non-negative ids — use an explicit pmod split for a "
-            "signed-id corpus"
-        )
-    mask = pc.equal(pc.bit_wise_and(t.column(parity_col), 1), parity)
-    return t.filter(mask).select(list(columns))
 
 
 def _plant_rows(src, offsets, uid=TIMEOUT_PLANT_UID):
@@ -2791,208 +2117,6 @@ QUERIES["statestore_sessions_availablenow"] = (
 )
 ORACLES["statestore_sessions_availablenow"] = (
     ORACLE_STATESTORE_SESSIONS_AVAILABLENOW
-)
-
-
-# ---------------------------------------------------------------------------
-# Sliding (overlapping) windows: each event in multiple window states
-# ---------------------------------------------------------------------------
-
-SLIDE_LEN_S = 7200
-SLIDE_STEP_S = 3600
-SLIDE_WM_S = 3600
-
-
-def q_stream_sliding_availablenow(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """SLIDING event-time windows executed as a stream (2 h windows
-    every 1 h): unlike the tumbling gate, every event lands in TWO
-    overlapping window states, so the state layout, the per-window
-    emission decision, and the append closure are all exercised on
-    window sets that share rows — the surface where an off-by-one in
-    window assignment double-counts or drops the overlap. Append
-    emits windows with end <= max(ts) - 1 h; the oracle enumerates
-    both covering windows per event (hour-truncate, minus one step)
-    and applies the same closure. Counts and max only — exact."""
-    configure_for_oracle_parity(spark)
-    ev = load_table(spark, sf_dir, "events").select(
-        "ts", "event_type", "value"
-    )
-    tmp = tempfile.mkdtemp(prefix="stream_slide_gate_")
-    staged = f"{tmp}/staged"
-    out_dir = f"{tmp}/out"
-    # arrow staging (round 14): same bytes/schema, milliseconds
-    # instead of a Spark write job — see _arrow_stage
-    _arrow_stage(staged, (_arrow_events(sf_dir, ev.schema.names),))
-    stream = spark.readStream.schema(ev.schema).parquet(staged)
-    agg = (
-        stream.withWatermark("ts", f"{SLIDE_WM_S} seconds")
-        .groupBy(
-            F.window("ts", f"{SLIDE_LEN_S} seconds",
-                     f"{SLIDE_STEP_S} seconds"),
-            "event_type",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.max("value").alias("value_max"),
-        )
-        .select(
-            F.col("window.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "value_max",
-        )
-    )
-    with _stream_state_partitions(spark):
-        q = (
-            agg.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(_AWAIT_S):
-            q.stop()
-            raise TimeoutError(
-                f"sliding window availableNow run exceeded {_AWAIT_S}s"
-            )
-    return spark.read.parquet(out_dir).select(
-        "window_start", "event_type", "n_events", "value_max"
-    )
-
-
-ORACLE_STREAM_SLIDING_AVAILABLENOW = f"""
-WITH cover AS (
-  SELECT date_trunc('hour', ts) AS w0, ts, event_type, value
-  FROM events
-),
-assigned AS (
-  SELECT w0 AS window_start, event_type, value FROM cover
-  UNION ALL
-  SELECT w0 - INTERVAL {SLIDE_STEP_S} SECOND AS window_start,
-         event_type, value
-  FROM cover
-),
-agg AS (
-  SELECT window_start, event_type,
-         CAST(count(*) AS BIGINT) AS n_events,
-         max(value) AS value_max
-  FROM assigned GROUP BY 1, 2
-),
-wm AS (
-  SELECT max(ts) - INTERVAL {SLIDE_WM_S} SECOND AS w FROM events
-)
-SELECT a.window_start, a.event_type, a.n_events, a.value_max
-FROM agg a CROSS JOIN wm
-WHERE a.window_start + INTERVAL {SLIDE_LEN_S} SECOND <= wm.w
-"""
-
-QUERIES["stream_sliding_availablenow"] = q_stream_sliding_availablenow
-ORACLES["stream_sliding_availablenow"] = (
-    ORACLE_STREAM_SLIDING_AVAILABLENOW
-)
-
-
-# ---------------------------------------------------------------------------
-# Stream-static NON-EQUI (interval) join: the stateless range lookup
-# ---------------------------------------------------------------------------
-
-def q_stream_interval_enrich_availablenow(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Stream-static join on a RANGE condition — the join mode
-    `stream_enrich_availablenow` (equi-key broadcast) does not touch:
-    each streamed event matches the static dimension row whose
-    validity interval contains its event time (type equality + ts in
-    [day, day+1) — the SCD2-lookup shape executed against a live
-    stream). Stream-static joins are STATELESS (the static side is
-    re-planned per micro-batch, no watermark, no state store), so
-    unlike the stream-stream interval gates this proves the
-    batch-side non-equi condition composes with streaming execution,
-    not state eviction. The dimension is the per-(type, day) daily
-    profile computed from the same table in batch — deterministic,
-    and the oracle replays the join as a plain SQL interval join.
-    Counts and an exact single-division share only."""
-    configure_for_oracle_parity(spark)
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "event_type", "value"
-    )
-    dim = (
-        ev.groupBy(
-            "event_type", F.date_trunc("day", "ts").alias("day_start")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("day_n"),
-            F.max("value").alias("day_max"),
-        )
-        .withColumn(
-            "day_end", F.col("day_start") + F.expr("INTERVAL 1 DAY")
-        )
-    )
-    tmp = tempfile.mkdtemp(prefix="stream_ivenrich_gate_")
-    staged = f"{tmp}/staged"
-    out_dir = f"{tmp}/out"
-    # arrow staging (round 14): same bytes/schema, milliseconds
-    # instead of a Spark write job — see _arrow_stage
-    _arrow_stage(staged, (_arrow_events(sf_dir, ev.schema.names),))
-    stream = spark.readStream.schema(ev.schema).parquet(staged)
-    joined = stream.join(
-        dim,
-        (stream["event_type"] == dim["event_type"])
-        & (stream["ts"] >= dim["day_start"])
-        & (stream["ts"] < dim["day_end"]),
-        "inner",
-    ).select(
-        stream["event_id"],
-        stream["event_type"],
-        "day_start",
-        "day_n",
-        (F.col("value") / F.col("day_max")).alias("value_share"),
-    )
-    with _stream_state_partitions(spark):
-        q = (
-            joined.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(_AWAIT_S):
-            q.stop()
-            raise TimeoutError(
-                f"interval enrich availableNow run exceeded {_AWAIT_S}s"
-            )
-    return spark.read.parquet(out_dir).select(
-        "event_id", "event_type", "day_start", "day_n", "value_share"
-    )
-
-
-ORACLE_STREAM_INTERVAL_ENRICH_AVAILABLENOW = """
-WITH dim AS (
-  SELECT event_type,
-         date_trunc('day', ts) AS day_start,
-         CAST(count(*) AS BIGINT) AS day_n,
-         max(value) AS day_max
-  FROM events
-  GROUP BY 1, 2
-)
-SELECT e.event_id, e.event_type, d.day_start, d.day_n,
-       e.value / d.day_max AS value_share
-FROM events e
-JOIN dim d
-  ON e.event_type = d.event_type
- AND e.ts >= d.day_start
- AND e.ts < d.day_start + INTERVAL 1 DAY
-"""
-
-QUERIES["stream_interval_enrich_availablenow"] = (
-    q_stream_interval_enrich_availablenow
-)
-ORACLES["stream_interval_enrich_availablenow"] = (
-    ORACLE_STREAM_INTERVAL_ENRICH_AVAILABLENOW
 )
 
 

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
+    DataSourceStreamReader,
     InputPartition,
 )
 from pyspark.sql.types import StructType
@@ -53,7 +54,8 @@ STEP_US = 1_000_000  # one event per device-second, reference cadence
 class SyntheticTelemetryDataSource(DataSource):
     """`spark.read.format("synthetic_telemetry")` options:
     ``n`` total rows (default 1000), ``n_devices`` (default 10),
-    ``partitions`` parallel slices (default 8)."""
+    ``partitions`` parallel slices (default 8); streaming reads take
+    ``batch`` rows per input partition (default 500)."""
 
     @classmethod
     def name(cls) -> str:
@@ -65,11 +67,11 @@ class SyntheticTelemetryDataSource(DataSource):
     def reader(self, schema: StructType) -> "SyntheticTelemetryReader":
         return SyntheticTelemetryReader(self.options)
 
-    def simpleStreamReader(
+    def streamReader(
         self, schema: StructType
     ) -> "SyntheticTelemetryStreamReader":
-        # same format name serves spark.readStream (micro-batched
-        # offsets over the identical deterministic row function)
+        # same format name serves spark.readStream (row-index offsets
+        # over the identical deterministic row function)
         return SyntheticTelemetryStreamReader(self.options)
 
 
@@ -94,26 +96,30 @@ class SyntheticTelemetryReader(DataSourceReader):
         ]
 
     def read(self, partition: _Slice):
-        import datetime as dt
+        return _generate(partition)
 
-        n_dev = partition.n_devices
-        n_types = len(DEVICE_TYPES)
-        for i in range(partition.start, partition.end):
-            dev = i % n_dev
-            # multiplicative hash -> [0, 1000) "power permille", the
-            # same arithmetic the DuckDB oracle replays verbatim
-            h = (i * KNUTH) % 1000
-            ts = dt.datetime.utcfromtimestamp(
-                (BASE_EPOCH_US + i * STEP_US) / 1_000_000
-            )
-            yield (
-                i,
-                f"device_{dev:03d}",
-                DEVICE_TYPES[dev % n_types],
-                f"user_{dev % 2:03d}",
-                ts,
-                float(h) / 10.0,
-            )
+
+def _generate(partition: _Slice):
+    import datetime as dt
+
+    n_dev = partition.n_devices
+    n_types = len(DEVICE_TYPES)
+    for i in range(partition.start, partition.end):
+        dev = i % n_dev
+        # multiplicative hash -> [0, 1000) "power permille", the
+        # same arithmetic the DuckDB oracle replays verbatim
+        h = (i * KNUTH) % 1000
+        ts = dt.datetime.utcfromtimestamp(
+            (BASE_EPOCH_US + i * STEP_US) / 1_000_000
+        )
+        yield (
+            i,
+            f"device_{dev:03d}",
+            DEVICE_TYPES[dev % n_types],
+            f"user_{dev % 2:03d}",
+            ts,
+            float(h) / 10.0,
+        )
 
 
 def register(spark) -> None:
@@ -121,50 +127,35 @@ def register(spark) -> None:
     spark.dataSource.register(SyntheticTelemetryDataSource)
 
 
-class SyntheticTelemetryStreamReader:
-    """Streaming half of the source (Spark 4
-    ``SimpleDataSourceStreamReader``): offsets are plain row indices,
-    each micro-batch serves ``batch`` rows of the SAME deterministic
-    row function the batch reader uses, and generation stops at ``n``
-    — so an availableNow run drains exactly rows [0, n) and a restart
-    replays any offset range byte-identically
-    (``readBetweenOffsets`` is the same arithmetic — the property
-    that makes checkpoint recovery safe for a custom source)."""
+class SyntheticTelemetryStreamReader(DataSourceStreamReader):
+    """Streaming half of the source: offsets are plain row indices and
+    the latest offset is ``n``, so an availableNow run drains exactly
+    rows [0, n) and then stops. A micro-batch's offset range is split
+    into ``batch``-row input partitions of the SAME deterministic row
+    function the batch reader uses, so a restart replays any offset
+    range byte-identically (the property that makes checkpoint
+    recovery safe for a custom source)."""
 
     def __init__(self, options):
         self.n = int(options.get("n", "1000"))
         self.n_devices = int(options.get("n_devices", "10"))
-        self.batch = int(options.get("batch", "500"))
+        self.batch = max(1, int(options.get("batch", "500")))
 
     def initialOffset(self):
         return {"i": 0}
 
-    def _rows(self, start: int, end: int):
-        part = _Slice(start, end, self.n_devices)
-        # materialized (not a generator): the engine prefetches and
-        # pickles the batch so a restarted query can replay it. Handed
-        # out as an ITERATOR over that list: once the offset stops
-        # advancing at ``n`` the engine calls next() on the batch to
-        # prove it empty, and a bare list fails that call and kills
-        # the query.
-        return iter(
-            list(
-                SyntheticTelemetryReader(
-                    {"n": str(self.n), "n_devices": str(self.n_devices)}
-                ).read(part)
-            )
-        )
+    def latestOffset(self):
+        return {"i": self.n}
 
-    def read(self, start):
-        lo = start["i"]
-        hi = min(lo + self.batch, self.n)
-        return (self._rows(lo, hi), {"i": hi})
+    def partitions(self, start, end):
+        lo, hi = start["i"], end["i"]
+        return [
+            _Slice(s, min(s + self.batch, hi), self.n_devices)
+            for s in range(lo, hi, self.batch)
+        ]
 
-    def readBetweenOffsets(self, start, end):
-        return self._rows(start["i"], end["i"])
-
-    def commit(self, end):
-        pass
+    def read(self, partition: _Slice):
+        return _generate(partition)
 
 
 # ---------------------------------------------------------------------------

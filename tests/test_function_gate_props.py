@@ -1,4 +1,4 @@
-"""Property tests defending the round-7 function gates' ORACLE
+"""Property tests defending the function gates' ORACLE
 emulations — the gates hash Spark against DuckDB, so a bug that hits
 both sides identically would slip through; these pin each emulation
 against an independent pure-Python reference on adversarial inputs.
@@ -20,36 +20,6 @@ import os
 _DEEP = os.environ.get("HYPOTHESIS_PROFILE", "") == "deep"
 _N = 600 if _DEEP else 300
 from hypothesis import strategies as st
-
-
-def _luhn_ref(s: str) -> bool:
-    """Textbook Luhn validity (independent of both engines)."""
-    total = 0
-    for i, ch in enumerate(reversed(s), start=1):
-        d = int(ch)
-        if i % 2 == 0:
-            d *= 2
-            if d > 9:
-                d -= 9
-        total += d
-    return total % 10 == 0
-
-
-@given(st.integers(min_value=0, max_value=999_999_999_999))
-@settings(max_examples=_N, deadline=None)
-def test_luhn_oracle_emulation_matches_reference(n):
-    # the LIVE fragment the gate oracle is built from — not a copy
-    from big_data_for_smart_houses_spark.queries.modern_gate import (
-        luhn_sql,
-    )
-
-    s = str(n).zfill(12)
-    con = duckdb.connect()
-    got = con.execute(
-        f"SELECT {luhn_sql(repr(s))}"
-    ).fetchone()[0]
-    con.close()
-    assert got == _luhn_ref(s), s
 
 
 def _width_bucket_ref(x: float, lo: float, hi: float, n: int) -> int:

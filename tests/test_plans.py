@@ -134,8 +134,7 @@ def test_approx_count_distinct_error_bound(spark):
     of the exact distinct count — 5x rsd, not 3x, because the
     assertion runs once per date and a per-group 3-sigma provably
     trips by multiplicity on corpora with thousands of dates whose
-    cardinalities leave HLL's exact sparse mode (the round-11
-    business_summary_approx_gate finding; same constant)."""
+    cardinalities leave HLL's exact sparse mode."""
     from big_data_for_smart_houses_spark.queries.core import (
         APPROX_CD_ABS_SLACK,
         APPROX_CD_BOUND_SIGMAS,
@@ -586,31 +585,6 @@ def test_round5_gate_shuffle_budgets(spark):
         assert "CartesianProduct" not in p, name
 
 
-def test_round6_gate_plan_shapes(spark):
-    """Round-6 surfaces: the VARIANT, try_, XML, and sliding-chunk
-    families are pure row-local codegen (zero exchanges, no Python
-    evaluation — variant shredding and XML formatting run JVM-side);
-    the correlated LATERAL subquery must DECORRELATE into a ranked
-    join (WindowGroupLimit + one join), never a per-row subquery or
-    cartesian product — the difference between one keyed exchange and
-    |customers| subquery executions at 100 TB."""
-    for name in (
-        "variant_functions_events",
-        "try_functions_events",
-        "xml_functions_events",
-        "sliding_chunks_documents",
-    ):
-        p = _plan(spark, name)
-        assert "Exchange" not in p, (name, p)
-        assert "BatchEvalPython" not in p, (name, p)
-        assert "ArrowEvalPython" not in p, (name, p)
-
-    p = _plan(spark, "lateral_topk_orders")
-    assert "WindowGroupLimit" in p, p
-    assert "CartesianProduct" not in p, p
-    assert "BroadcastNestedLoopJoin" not in p, p
-
-
 def test_round6_tpch_shapes(spark):
     """Q19's disjunctive envelope must push into BOTH scans (the
     quantity OR-bounds reach lineitem, the brand/size OR-bounds reach
@@ -633,15 +607,9 @@ def test_round6_tpch_shapes(spark):
 
 
 def test_round6_analytic_shuffle_budgets(spark):
-    """Islands RLE and the bucket checksum are single-exchange (the
-    change-point window, the island aggregate, and the checksum
-    bucket agg each reuse one keyed clustering); linear gap-fill
-    stays within the LOCF family's documented budget; the dynamic
-    session window is one keyed exchange like any sessionizer."""
+    """Linear gap-fill stays within the LOCF family's documented
+    budget; the three-step funnel is single-exchange."""
     for name, budget in (
-        ("rle_segments_events", 1),
-        ("table_checksum_orders", 1),
-        ("dynamic_session_window_events", 1),
         ("gapfill_linear_events", 3),
         # three funnel steps, ONE exchange (running-flag windows +
         # conditional agg share the user clustering) — the property
@@ -699,53 +667,13 @@ def test_tpch_q6_pushdown_and_q16_antijoin(spark):
     assert "BroadcastNestedLoopJoin" not in p, p
 
 
-def test_round7_extension_gate_plan_shapes(spark):
-    """SQL UDFs must INLINE (their whole point vs Python UDFs): the
-    scalar body becomes codegen'd expression work and the table body
-    a native Generate/explode — zero Python eval nodes. The Python
-    UDTF is the opposite contract: a real Python boundary
-    (BatchEvalPythonUDTF) fanning out rows. The null-aware NOT IN
-    compiles to an anti join (never a per-row subquery), and the
-    runtime-bloom gate self-asserts its might_contain injection (it
-    RAISES without it — executing it here IS the assertion)."""
-    p = _plan(spark, "sql_udf_functions_events")
-    assert "Python" not in p, p
-    assert "Generate" in p, p
-
-    p = _plan(spark, "udtf_sentences_documents")
-    assert "BatchEvalPythonUDTF" in p, p
-
-    p = _plan(spark, "null_aware_notin_orders")
-    assert "LeftAnti" in p, p
-    assert "CartesianProduct" not in p, p
-
-    QUERIES["runtime_bloom_join_lineitem"](spark, SF_DIR)
-
-
 def test_round7_function_gate_plan_shapes(spark):
-    """The new function-family gates keep their scale contracts:
-    url_functions is pure row-local codegen (zero exchanges, zero
-    Python); agg_completeness is one partial-aggregated shuffle of 3
-    grouping keys; the pipe-syntax front-end compiles to the same
-    partial-agg + single-exchange shape as its ANSI twin (pipes are
-    syntax, not a different engine); parameterized SQL binds typed
-    literals that still PUSH DOWN to the parquet scan."""
-    p = _plan(spark, "url_functions_orders")
-    assert "Exchange" not in p, p
-    assert "Python" not in p, p
-    # '*' prefixes mark whole-stage-codegen'd nodes in this format
-    assert "*(1) Project" in p, p
-
+    """The function-family gates keep their scale contracts:
+    agg_completeness is one partial-aggregated shuffle of 3 grouping
+    keys."""
     p = _plan(spark, "agg_completeness_lineitem")
     assert p.count("Exchange") == 1, p
     assert "partial_" in p, p
-
-    p = _plan(spark, "pipe_syntax_lineitem")
-    assert p.count("Exchange") == 1, p
-    assert "partial_" in p, p
-
-    p = _plan(spark, "parameterized_sql_orders")
-    assert "PushedFilters" in p and "GreaterThan(o_totalprice" in p, p
 
 
 def test_cbo_analyze_statistics_flip_join_strategy(spark):
@@ -1059,7 +987,8 @@ def test_synthetic_stream_static_fingerprint_is_run_stable(spark):
     gate's STATIC plan fingerprint must be identical across two fresh
     gate executions (it was run-varying through r13 because the
     sink-poll count() queries added a timing-dependent number of SQL
-    executions; the gate now watches q.recentProgress driver-side).
+    executions; the gate now runs one availableNow drain and polls
+    nothing).
     Uses bench's own fingerprinter + execution pattern so the value
     asserted here is the value bench records in query_plan_fp_init."""
     import os

@@ -536,42 +536,6 @@ def test_incremental_join_matches_recompute(spark, a_old, da, b_old, db):
     assert sorted(map(tuple, maintained)) == sorted(map(tuple, recomputed))
 
 
-@settings(max_examples=_ex(8), deadline=None)
-@given(_corpus)
-def test_sliding_chunks_cover_and_overlap(spark, docs):
-    """Sliding-window chunking invariants (modern_gate): every token
-    index is covered by >= 1 chunk; chunk_id is dense from 0; each
-    full-stride successor overlaps its predecessor by exactly
-    window - stride tokens; rejoining chunk tokens at stride offsets
-    reproduces the document."""
-    from big_data_for_smart_houses_spark.queries import modern_gate as mg
-
-    W, S = mg.CHUNK_WINDOW, mg.CHUNK_STRIDE
-    df = spark.createDataFrame(
-        list(enumerate(docs)), "doc_id long, text string"
-    )
-    import tempfile
-
-    sf = tempfile.mkdtemp(prefix="slide_prop_")
-    df.write.mode("overwrite").parquet(f"{sf}/documents.parquet")
-    out = mg.q_sliding_chunks_documents(spark, sf).collect()
-    by_doc: dict[int, list] = {}
-    for r in out:
-        by_doc.setdefault(r.doc_id, []).append(r)
-    assert set(by_doc) == set(range(len(docs)))
-    for i, doc in enumerate(docs):
-        toks = doc.split()
-        rows = sorted(by_doc[i], key=lambda r: r.chunk_id)
-        assert [r.chunk_id for r in rows] == list(range(len(rows)))
-        covered = set()
-        for r in rows:
-            chunk_toks = r.chunk_text.split() if r.chunk_text else []
-            assert chunk_toks == toks[r.start : r.start + W]
-            assert r.chunk_len == len(chunk_toks)
-            covered.update(range(r.start, r.start + len(chunk_toks)))
-        assert covered == set(range(len(toks)))
-
-
 @settings(max_examples=_ex(6), deadline=None)
 @given(st.integers(min_value=1, max_value=6))
 def test_compaction_preserves_rows_and_reduces_files(spark, n_small):

@@ -5,6 +5,10 @@ driver's round artifact)."""
 
 from __future__ import annotations
 
+import ast
+import importlib
+import inspect
+
 from big_data_for_smart_houses_spark.queries import ORACLES, QUERIES
 
 TABLES = {
@@ -295,3 +299,122 @@ def test_next_front_pair_cannot_be_starved():
     for sk, c in (("s1", "c1"), ("s2", "c2")):
         if sk in front:
             assert c in front, front
+
+
+# Plain Spark kept: sole expressions of SURVEY.md J1/W3/W4/O2/P13/U1.
+PLAIN_SPARK_GATES = frozenset({
+    "customer_enrichment",
+    "dedup_events_keepfirst",
+    "latest_event_per_user",
+    "latest_events_topk",
+    "late_shipment_flag",
+    "union_dedup_orders",
+})
+# Plain Spark still registered and due for deletion: TPC-H
+# (core.py, tpch_gate.py) and the stats_gate function surfaces.
+# Shrink-only: delete a gate together with its name here.
+PENDING_DELETION = frozenset({
+    "agg_completeness_lineitem",
+    "approx_topk_events",
+    "argmax_functions_events",
+    "array_functions_documents",
+    "array_sort_hof_documents",
+    "cohort_retention_events",
+    "date_functions_events",
+    "datetime_functions_events",
+    "explode_outer_events",
+    "funnel_click_purchase",
+    "funnel_three_step_events",
+    "generator_functions_documents",
+    "hll_reach_events",
+    "hof_functions_documents",
+    "join_types_orders",
+    "json_null_functions_events",
+    "json_schema_profile_events",
+    "kmv_distinct_events",
+    "kmv_jaccard_events",
+    "kmv_merge_events",
+    "mad_outliers_events",
+    "map_functions_events",
+    "map_hof_functions_events",
+    "navigation_functions_events",
+    "regexp_functions_documents",
+    "session_window_events",
+    "setops_events",
+    "string_functions_documents",
+    "theta_sketch_events",
+    "tpch_q10_returned_items",
+    "tpch_q11_important_stock",
+    "tpch_q12_priority_shipping",
+    "tpch_q13_order_distribution",
+    "tpch_q14_promo_revenue",
+    "tpch_q15_top_supplier",
+    "tpch_q16_supplier_counts",
+    "tpch_q17_small_qty_revenue",
+    "tpch_q18_large_orders",
+    "tpch_q19_disjunctive",
+    "tpch_q20_excess_supply",
+    "tpch_q21_waiting_supplier",
+    "tpch_q22_global_balance",
+    "tpch_q2_min_acctbal_supplier",
+    "tpch_q3_shipping_priority",
+    "tpch_q4_order_priority",
+    "tpch_q5_region_volume",
+    "tpch_q6_forecast_revenue",
+    "tpch_q7_volume_shipping",
+    "tpch_q8_market_share",
+    "tpch_q9_product_profit",
+    "trending_types_hourly",
+    "window_completeness_events",
+})
+_PKG = "big_data_for_smart_houses_spark"
+_LOADERS = {"load_table", "configure_for_oracle_parity"}
+
+
+def _package_imports(nodes) -> dict:
+    """local name -> imported name, for imports from this package."""
+    out = {}
+    for node in nodes:
+        if isinstance(node, ast.ImportFrom) and (
+            node.level or (node.module or "").startswith(_PKG)
+        ):
+            for alias in node.names:
+                out[alias.asname or alias.name] = alias.name
+    return out
+
+
+def _reaches_package_code(fn) -> bool:
+    """Walk ``fn`` and the module-local functions it calls; True when
+    any of them references a package name other than the loaders."""
+    module = importlib.import_module(fn.__module__)
+    tree = ast.parse(inspect.getsource(module))
+    module_imports = _package_imports(tree.body)
+    funcs = {n.name: n for n in tree.body if isinstance(n, ast.FunctionDef)}
+    seen, todo = set(), [fn.__name__]
+    while todo:
+        name = todo.pop()
+        if name in seen:
+            continue
+        seen.add(name)
+        body = funcs[name]
+        imports = {**module_imports, **_package_imports(ast.walk(body))}
+        for node in ast.walk(body):
+            if not isinstance(node, ast.Name):
+                continue
+            if node.id in imports and imports[node.id] not in _LOADERS:
+                return True
+            if node.id in funcs:
+                todo.append(node.id)
+    return False
+
+
+def test_every_gate_reaches_package_code():
+    """A gate that only loads tables and calls Spark re-tests Spark,
+    not this package."""
+    from big_data_for_smart_houses_spark.queries import _ALL_QUERIES
+
+    plain = {
+        n for n, fn in _ALL_QUERIES.items() if not _reaches_package_code(fn)
+    }
+    allowed = PLAIN_SPARK_GATES | PENDING_DELETION
+    assert plain == allowed, sorted(plain ^ allowed)

@@ -284,6 +284,33 @@ def test_synthetic_stream_survives_exhaustion(spark):
     assert spark.read.parquet(f"{tmp}/out").count() == n
 
 
+def test_synthetic_stream_availablenow_drains_all_rows(spark):
+    """An availableNow run over the synthetic source must drain every
+    row up to ``n`` in one run and stop cleanly, not end after the
+    first prefetch."""
+    from big_data_for_smart_houses_spark.sources.synthetic import register
+
+    register(spark)
+    n = 2000
+    tmp = tempfile.mkdtemp(prefix="synth_drain_")
+    q = (
+        spark.readStream.format("synthetic_telemetry")
+        .option("n", str(n))
+        .option("batch", "512")
+        .load()
+        .writeStream.format("parquet")
+        .option("path", f"{tmp}/out")
+        .option("checkpointLocation", f"{tmp}/ckpt")
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120)
+    assert q.exception() is None, q.exception()
+    out = spark.read.parquet(f"{tmp}/out")
+    assert out.count() == n
+    assert out.selectExpr("count(DISTINCT row_id)").first()[0] == n
+
+
 def _run_stream(spark, tmp, build, name):
     collected = []
     q = (
