@@ -83,33 +83,22 @@ HEADLINE = [
     "incremental_energy_state",
     "cms_token_counts",
     "scd2_customer_orders",
-    "session_window_events",
     "time_weighted_avg_events",
     "rate_of_change_events",
     "ratio_to_report_events",
-    "funnel_click_purchase",
-    "cohort_retention_events",
     "zorder3_key_events",
     "hopping_window_events",
     "grouping_sets_events",
-    "trending_types_hourly",
     "profile_drift_documents",
     "daily_value_pop_change",
     "session_paths",
     "abc_customers",
     "conditional_aggs_by_type",
-    "string_functions_documents",
-    "date_functions_events",
-    "array_functions_documents",
     "ranking_functions_events",
-    "json_null_functions_events",
-    "map_functions_events",
     "quality_topk_approx_pct",
     "scd2_asof_lookup",
     "locf_stream_availablenow",
     "ewma_stream_availablenow",
-    "generator_functions_documents",
-    "hof_functions_documents",
     "bloom_probe_customers",
     "editdist_recall_planted",
     "ppjoin_pairs_documents",
@@ -124,10 +113,8 @@ HEADLINE = [
     "percentile_within_group_events",
     "asof_nearest_events",
     "trailing_active_users_events",
-    "mad_outliers_events",
     "ntile_scan_orders",
     "skyline3d_parts",
-    "setops_events",
     "stream_join_availablenow",
     "stream_dedup_availablenow",
     "stream_tumbling_availablenow",
@@ -136,7 +123,6 @@ HEADLINE = [
     "inverted_index_documents",
     "rollup_navigate_events",
     "pagerank_user_transitions",
-    "regexp_functions_documents",
     "math_functions_events",
     "stream_merge_availablenow",
     "snapshot_diff_orders",
@@ -144,18 +130,10 @@ HEADLINE = [
     "source_kl_documents",
     "label_centroids_embeddings",
     "stats_moments_lineitem",
-    "navigation_functions_events",
-    "hll_reach_events",
-    "tpch_q3_shipping_priority",
-    "tpch_q5_region_volume",
     "ab_lift_events",
-    "json_schema_profile_events",
     "contrastive_triplets_documents",
     "incremental_join_view_orders",
-    "tpch_q10_returned_items",
     "span_masks_documents",
-    "tpch_q7_volume_shipping",
-    "tpch_q18_large_orders",
     "conform_union_sources",
     "synthetic_source_telemetry",
     "readability_documents",
@@ -164,31 +142,9 @@ HEADLINE = [
     "stream_restart_availablenow",
     "compaction_roundtrip_events",
     "stream_rocksdb_availablenow",
-    "tpch_q4_order_priority",
-    "tpch_q14_promo_revenue",
-    "tpch_q19_disjunctive",
-    "tpch_q22_global_balance",
-    "window_completeness_events",
     "time_travel_orders",
-    "tpch_q2_min_acctbal_supplier",
-    "tpch_q6_forecast_revenue",
-    "tpch_q8_market_share",
-    "tpch_q9_product_profit",
-    "tpch_q11_important_stock",
-    "tpch_q12_priority_shipping",
-    "tpch_q13_order_distribution",
-    "tpch_q15_top_supplier",
-    "tpch_q16_supplier_counts",
-    "tpch_q17_small_qty_revenue",
-    "tpch_q20_excess_supply",
-    "tpch_q21_waiting_supplier",
-    "agg_completeness_lineitem",
     "stream_upsert_availablenow",
     "stream_upsert_restart_availablenow",
-    "datetime_functions_events",
-    "array_sort_hof_documents",
-    "kmv_distinct_events",
-    "kmv_merge_events",
     "bfs_distances_transitions",
     "triangle_count_transitions",
     "vacuum_retention_orders",
@@ -203,21 +159,15 @@ HEADLINE = [
     "bpe_rankmap_documents",
     "pysink_roundtrip_orders",
     "copurchase_lift_parts",
-    "approx_topk_events",
-    "kmv_jaccard_events",
     "hdr_quantile_sketch_events",
     "hdr_quantile_error_bound_events",
     "hdr_sketch_stream_availablenow",
     "stream_update_mode_availablenow",
     "binaryfile_bmp_assets",
     "sssp_weighted_transitions",
-    "map_hof_functions_events",
     "kmeans_embeddings",
     "stream_fullouter_join_availablenow",
-    "theta_sketch_events",
-    "explode_outer_events",
     "llm_corpus_pipeline_documents",
-    "join_types_orders",
     "bucketed_join_orders",
     "stream_outer_join_availablenow",
     "logreg_quality_planted",
@@ -228,8 +178,6 @@ HEADLINE = [
     "bmp_decode_assets",
     "wav_decode_assets",
     "avi_frame_sample_assets",
-    "funnel_three_step_events",
-    "argmax_functions_events",
     "pandas_udaf_geomean_events",
     "stream_torture_availablenow",
     "billing_reconciliation_events",
@@ -370,10 +318,6 @@ SCALE10X_PROBES = [
     "bigram_lm_documents",
     "source_kl_documents",
     "dedup_exact_documents",
-    "tpch_q7_volume_shipping",
-    "tpch_q17_small_qty_revenue",
-    "tpch_q20_excess_supply",
-    "tpch_q21_waiting_supplier",
     "zipf_slope_documents",
     "bpe_pair_counts_documents",
     "bpe_train_documents",
@@ -382,9 +326,8 @@ SCALE10X_PROBES = [
     "gapfill_linear_events",
     "rolling_median_events",
     # round-7 late wave: streaming execution gates scale with STATE
-    # and staged input; join_types with both join sides
+    # and staged input
     "stream_upsert_availablenow",
-    "join_types_orders",
     # round-7 fifth wave: new iterative supersteps (k-means broadcast
     # assignment, Bellman-Ford frontier) and the full-outer stream
     # join's two-sided state
@@ -708,7 +651,7 @@ def _plan_fingerprinter(spark):
     every SQL execution the query ran, read back from the JVM
     SQLAppStatusStore AFTER the query completes — so under AQE the
     description holds the FINAL adaptive plan, which is exactly where
-    the q21-class broadcast-threshold bistability shows up.
+    broadcast-threshold bistability shows up.
     Canonicalization strips run-varying tokens (expression ids,
     Statistics(...) estimates, filesystem/tempdir paths) and keeps
     structure (node tree, join strategies, exchange placement,
@@ -727,8 +670,7 @@ def _plan_fingerprinter(spark):
       same code and stats, so this hash moves ONLY on a genuine
       code/plan/stats change — it is immune to AQE runtime races
       (ks_statistic_events flips BHJ build side run-to-run because
-      two ~equal 8.5 MiB broadcast candidates race; q21-class
-      runtime conversions are the same family).
+      two ~equal 8.5 MiB broadcast candidates race).
 
     Read together: fp_init moved => real plan change; fp_init same +
     fp moved => AQE runtime re-plan; both same => same plan.

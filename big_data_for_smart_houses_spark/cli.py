@@ -16,7 +16,6 @@ scheduler, dashboard):
 from __future__ import annotations
 
 import argparse
-import os
 import sys
 
 
@@ -131,47 +130,18 @@ def main(argv: list[str] | None = None) -> int:
 
     from pyspark.sql.functions import col as F_col
 
-    from .session import get_spark
+    from .session import get_spark, scale_profile
 
     spark = get_spark(args.app_name)
     import datetime as dt
 
-    # Input-volume-aware shuffle layout (round-11 verdict ask #4): a
-    # CLI user pointing these ops at a 100 TB table gets the measured
-    # partition profile without reading SCALE.md. The CLI owns its
-    # session and exits afterwards, so the fire-and-forget form is
-    # right here. Tiny inputs floor at the default layout — behavior
-    # on test data is unchanged.
-    #
-    # NOT applied for silver/gold/etl (round-12 advice): those entry
-    # points already wrap each phase in plans/etl.py's restoring
-    # ``scale_profile`` blocks, sized per-phase from the volume that
-    # phase actually reads. A session-level bronze-derived count here
-    # would become every inner block's FLOOR (the context manager
-    # floors at the session's current value), so etl's silver->gold
-    # phase could never size DOWN to silver's much smaller volume —
-    # and the same paths would be sized twice.
-    if args.cmd not in ("silver", "gold", "etl"):
-        from .session import apply_scale_profile
-
-        _sizing_inputs = [
-            p
-            for p in (
-                getattr(args, "bronze", None)
-                if args.cmd != "simulate"
-                else None,
-                getattr(args, "gold", None)
-                if args.cmd == "analytics"
-                else None,
-                getattr(args, "input", None),
-                getattr(args, "test_input", None),
-                getattr(args, "b_input", None),
-            )
-            if p is not None and os.path.exists(p)
-        ]
-        if _sizing_inputs:
-            apply_scale_profile(spark, *_sizing_inputs)
-
+    # analytics and dataprep size their shuffle layout from their input
+    # volume inside a restoring ``scale_profile`` block: pointed at a
+    # 100 TB table they get the measured partition profile, and tiny
+    # inputs keep the session's layout. silver/gold/etl are not
+    # wrapped — plans/etl.py sizes each of their phases from the
+    # volume that phase reads, and an outer block would become every
+    # inner block's floor.
     if args.cmd == "simulate":
         from .streaming.ingest import write_bronze_stream
         from .streaming.simulator import telemetry_stream_from_rate
@@ -212,214 +182,227 @@ def main(argv: list[str] | None = None) -> int:
             health_scatter,
         )
 
-        daily = spark.read.parquet(f"{args.gold}/daily_energy_consumption")
-        health = spark.read.parquet(f"{args.gold}/device_health_metrics")
-        energy_by_device_type(daily).show(truncate=False)
-        daily_energy_trend(daily).show(truncate=False)
-        health_scatter(health).show(truncate=False)
+        with scale_profile(spark, args.gold):
+            daily = spark.read.parquet(
+                f"{args.gold}/daily_energy_consumption"
+            )
+            health = spark.read.parquet(f"{args.gold}/device_health_metrics")
+            energy_by_device_type(daily).show(truncate=False)
+            daily_energy_trend(daily).show(truncate=False)
+            health_scatter(health).show(truncate=False)
     elif args.cmd == "dataprep":
-        docs = spark.read.parquet(args.input)
-        if args.op == "dedup-exact":
-            from .extensions.dedup import exact_dedup
+        inputs = [p for p in (args.input, args.test_input, args.b_input) if p]
+        with scale_profile(spark, *inputs):
+            docs = spark.read.parquet(args.input)
+            if args.op == "dedup-exact":
+                from .extensions.dedup import exact_dedup
 
-            # keep one row per fingerprint: join keepers back to docs
-            keepers = exact_dedup(docs).select(
-                F_col("keeper_id").alias("doc_id")
-            )
-            out = docs.join(keepers, "doc_id", "left_semi")
-        elif args.op in ("dedup-minhash", "dedup-simhash"):
-            from .extensions.dedup import (
-                dedup_groups,
-                minhash_lsh_pairs,
-                simhash_neardup_pairs,
-            )
-
-            pairs = (
-                minhash_lsh_pairs(docs)
-                if args.op == "dedup-minhash"
-                else simhash_neardup_pairs(docs)
-            ).select("id1", "id2")
-            groups = dedup_groups(docs, pairs)
-            out = docs.join(groups, "doc_id").filter(
-                F_col("doc_id") == F_col("group_id")
-            ).drop("group_id")
-        elif args.op == "split":
-            from .extensions.sampling import deterministic_split
-
-            out = deterministic_split(docs, salt=args.salt)
-        elif args.op == "shuffle":
-            from .extensions.sampling import deterministic_shuffle
-
-            out = deterministic_shuffle(docs, salt=args.salt)
-        elif args.op == "scrub-pii":
-            from .extensions.text import scrub_pii
-
-            out = scrub_pii(docs)
-        elif args.op == "dedup-sentence":
-            from .extensions.text import sentence_dedup
-
-            out = sentence_dedup(docs)
-        elif args.op == "quality":
-            from .extensions.text import gopher_quality_flags
-
-            out = gopher_quality_flags(docs)
-        elif args.op == "profile":
-            from .extensions.profiling import profile_columns
-
-            out = profile_columns(docs, docs.columns)
-        elif args.op == "chunk-cdc":
-            from .extensions.text import cdc_chunk_documents
-
-            out = cdc_chunk_documents(docs)
-        elif args.op == "lm-score":
-            from .extensions.ranking import bigram_lm_scores
-
-            out = bigram_lm_scores(docs)
-        elif args.op == "dedup-cdc-crossdoc":
-            from .extensions.text import cdc_crossdoc_stats
-
-            stats = cdc_crossdoc_stats(docs).filter(~F_col("mostly_shared"))
-            out = docs.join(
-                stats.select("doc_id"), "doc_id", "left_semi"
-            )
-        elif args.op == "sample-wor":
-            from .extensions.sampling import weighted_sample_wor
-
-            out = weighted_sample_wor(
-                docs, args.weight_col, args.k, salt=args.salt
-            )
-        elif args.op == "pack-offsets":
-            from .extensions.sampling import pack_with_offsets
-            from .extensions.text import token_count
-
-            staged = docs.withColumn(
-                "n_tokens", token_count(F_col("text")).cast("long")
-            )
-            out = pack_with_offsets(
-                staged, "n_tokens", args.budget, shard_col=args.shard_col
-            )
-        elif args.op == "zorder":
-            from .extensions.layout import (
-                ZORDER_BITS,
-                cluster_by_zorder,
-                zorder_key_nd,
-            )
-
-            cols = [c.strip() for c in args.cols.split(",") if c.strip()]
-            if len(cols) < 2:
-                parser.error(
-                    "--op zorder needs at least two comma-separated "
-                    f"columns in --cols (got {args.cols!r})"
+                # keep one row per fingerprint: join keepers back to docs
+                keepers = exact_dedup(docs).select(
+                    F_col("keeper_id").alias("doc_id")
                 )
-            if len(cols) == 2:
-                out = cluster_by_zorder(docs, cols[0], cols[1])
-            else:
-                # N-dim route: shrink bits so the interleave fits a long
-                bits = min(ZORDER_BITS, 62 // len(cols))
+                out = docs.join(keepers, "doc_id", "left_semi")
+            elif args.op in ("dedup-minhash", "dedup-simhash"):
+                from .extensions.dedup import (
+                    dedup_groups,
+                    minhash_lsh_pairs,
+                    simhash_neardup_pairs,
+                )
+
+                pairs = (
+                    minhash_lsh_pairs(docs)
+                    if args.op == "dedup-minhash"
+                    else simhash_neardup_pairs(docs)
+                ).select("id1", "id2")
+                groups = dedup_groups(docs, pairs)
+                out = docs.join(groups, "doc_id").filter(
+                    F_col("doc_id") == F_col("group_id")
+                ).drop("group_id")
+            elif args.op == "split":
+                from .extensions.sampling import deterministic_split
+
+                out = deterministic_split(docs, salt=args.salt)
+            elif args.op == "shuffle":
+                from .extensions.sampling import deterministic_shuffle
+
+                out = deterministic_shuffle(docs, salt=args.salt)
+            elif args.op == "scrub-pii":
+                from .extensions.text import scrub_pii
+
+                out = scrub_pii(docs)
+            elif args.op == "dedup-sentence":
+                from .extensions.text import sentence_dedup
+
+                out = sentence_dedup(docs)
+            elif args.op == "quality":
+                from .extensions.text import gopher_quality_flags
+
+                out = gopher_quality_flags(docs)
+            elif args.op == "profile":
+                from .extensions.profiling import profile_columns
+
+                out = profile_columns(docs, docs.columns)
+            elif args.op == "chunk-cdc":
+                from .extensions.text import cdc_chunk_documents
+
+                out = cdc_chunk_documents(docs)
+            elif args.op == "lm-score":
+                from .extensions.ranking import bigram_lm_scores
+
+                out = bigram_lm_scores(docs)
+            elif args.op == "dedup-cdc-crossdoc":
+                from .extensions.text import cdc_crossdoc_stats
+
+                stats = cdc_crossdoc_stats(docs).filter(
+                    ~F_col("mostly_shared")
+                )
+                out = docs.join(
+                    stats.select("doc_id"), "doc_id", "left_semi"
+                )
+            elif args.op == "sample-wor":
+                from .extensions.sampling import weighted_sample_wor
+
+                out = weighted_sample_wor(
+                    docs, args.weight_col, args.k, salt=args.salt
+                )
+            elif args.op == "pack-offsets":
+                from .extensions.sampling import pack_with_offsets
+                from .extensions.text import token_count
+
+                staged = docs.withColumn(
+                    "n_tokens", token_count(F_col("text")).cast("long")
+                )
+                out = pack_with_offsets(
+                    staged, "n_tokens", args.budget, shard_col=args.shard_col
+                )
+            elif args.op == "zorder":
+                from .extensions.layout import (
+                    ZORDER_BITS,
+                    cluster_by_zorder,
+                    zorder_key_nd,
+                )
+
+                cols = [c.strip() for c in args.cols.split(",") if c.strip()]
+                if len(cols) < 2:
+                    parser.error(
+                        "--op zorder needs at least two comma-separated "
+                        f"columns in --cols (got {args.cols!r})"
+                    )
+                if len(cols) == 2:
+                    out = cluster_by_zorder(docs, cols[0], cols[1])
+                else:
+                    # N-dim route: shrink bits so the interleave fits a long
+                    bits = min(ZORDER_BITS, 62 // len(cols))
+                    out = (
+                        zorder_key_nd(docs, cols, bits)
+                        .repartitionByRange(32, "zorder_key")
+                        .sortWithinPartitions("zorder_key")
+                    )
+            elif args.op == "bloom-probe":
+                # membership filter: keys from --input, probe --b-input;
+                # output = probe rows that MIGHT be members (no false
+                # negatives; survivors feed an exact semi-join)
+                if not args.b_input:
+                    parser.error("--op bloom-probe requires --b-input")
+                from .extensions.sketches import (
+                    bloom_build,
+                    bloom_might_contain,
+                )
+
+                key_col = args.cols.split(",")[0].strip()
+                if not key_col:
+                    parser.error(
+                        "--op bloom-probe needs a key column in --cols"
+                    )
+                members = docs.select(
+                    F_col(key_col).cast("string").alias("_bf_key")
+                ).distinct()
+                probe = spark.read.parquet(args.b_input)
+                keyed = probe.withColumn(
+                    "_bf_key", F_col(key_col).cast("string")
+                )
+                verdicts = bloom_might_contain(
+                    bloom_build(members, "_bf_key"),
+                    keyed.select("_bf_key").distinct(),
+                    "_bf_key",
+                )
                 out = (
-                    zorder_key_nd(docs, cols, bits)
-                    .repartitionByRange(32, "zorder_key")
-                    .sortWithinPartitions("zorder_key")
+                    keyed.join(verdicts, "_bf_key")
+                    .filter(F_col("might_contain"))
+                    .drop("_bf_key", "might_contain")
                 )
-        elif args.op == "bloom-probe":
-            # membership filter: keys from --input, probe --b-input;
-            # output = probe rows that MIGHT be members (no false
-            # negatives; survivors feed an exact semi-join)
-            if not args.b_input:
-                parser.error("--op bloom-probe requires --b-input")
-            from .extensions.sketches import (
-                bloom_build,
-                bloom_might_contain,
-            )
+            elif args.op == "vocab-bpe":
+                from .extensions.vocab import bpe_pair_counts
 
-            key_col = args.cols.split(",")[0].strip()
-            if not key_col:
-                parser.error("--op bloom-probe needs a key column in --cols")
-            members = docs.select(
-                F_col(key_col).cast("string").alias("_bf_key")
-            ).distinct()
-            probe = spark.read.parquet(args.b_input)
-            keyed = probe.withColumn(
-                "_bf_key", F_col(key_col).cast("string")
-            )
-            verdicts = bloom_might_contain(
-                bloom_build(members, "_bf_key"),
-                keyed.select("_bf_key").distinct(),
-                "_bf_key",
-            )
-            out = (
-                keyed.join(verdicts, "_bf_key")
-                .filter(F_col("might_contain"))
-                .drop("_bf_key", "might_contain")
-            )
-        elif args.op == "vocab-bpe":
-            from .extensions.vocab import bpe_pair_counts
+                out = bpe_pair_counts(docs, top_k=args.k)
+            elif args.op == "invindex":
+                from .extensions.vocab import inverted_index
 
-            out = bpe_pair_counts(docs, top_k=args.k)
-        elif args.op == "invindex":
-            from .extensions.vocab import inverted_index
+                out = inverted_index(docs, max_postings=args.k)
+            elif args.op == "kl":
+                # group column = first --cols entry (default doc_id makes
+                # no sense for KL; pass e.g. --cols source)
+                from .extensions.profiling import token_kl_by_group
 
-            out = inverted_index(docs, max_postings=args.k)
-        elif args.op == "kl":
-            # group column = first --cols entry (default doc_id makes
-            # no sense for KL; pass e.g. --cols source)
-            from .extensions.profiling import token_kl_by_group
+                grp = args.cols.split(",")[0].strip()
+                if not grp:
+                    parser.error("--op kl needs a group column in --cols")
+                out = token_kl_by_group(docs, group_col=grp)
+            elif args.op == "pagerank":
+                # --cols src,dst[,weight] over an EDGE-LIST parquet
+                from .extensions.graph import pagerank
 
-            grp = args.cols.split(",")[0].strip()
-            if not grp:
-                parser.error("--op kl needs a group column in --cols")
-            out = token_kl_by_group(docs, group_col=grp)
-        elif args.op == "pagerank":
-            # --cols src,dst[,weight] over an EDGE-LIST parquet
-            from .extensions.graph import pagerank
-
-            pr_cols = [c.strip() for c in args.cols.split(",") if c.strip()]
-            if len(pr_cols) not in (2, 3):
-                parser.error(
-                    "--op pagerank needs --cols src,dst[,weight] "
-                    f"(got {args.cols!r})"
+                pr_cols = [
+                    c.strip() for c in args.cols.split(",") if c.strip()
+                ]
+                if len(pr_cols) not in (2, 3):
+                    parser.error(
+                        "--op pagerank needs --cols src,dst[,weight] "
+                        f"(got {args.cols!r})"
+                    )
+                out = pagerank(
+                    docs,
+                    src=pr_cols[0],
+                    dst=pr_cols[1],
+                    weight=pr_cols[2] if len(pr_cols) == 3 else None,
                 )
-            out = pagerank(
-                docs,
-                src=pr_cols[0],
-                dst=pr_cols[1],
-                weight=pr_cols[2] if len(pr_cols) == 3 else None,
-            )
-        elif args.op == "snapshot-diff":
-            # keys = --cols; every other shared column is compared
-            if not args.b_input:
-                parser.error("--op snapshot-diff requires --b-input")
-            from .operators.merge import snapshot_diff
+            elif args.op == "snapshot-diff":
+                # keys = --cols; every other shared column is compared
+                if not args.b_input:
+                    parser.error("--op snapshot-diff requires --b-input")
+                from .operators.merge import snapshot_diff
 
-            keys = [c.strip() for c in args.cols.split(",") if c.strip()]
-            b_snap = spark.read.parquet(args.b_input)
-            shared = [
-                c
-                for c in docs.columns
-                if c in set(b_snap.columns) and c not in keys
-            ]
-            if not keys or not shared:
-                parser.error(
-                    "--op snapshot-diff needs key columns in --cols and "
-                    "at least one shared non-key column to compare"
+                keys = [c.strip() for c in args.cols.split(",") if c.strip()]
+                b_snap = spark.read.parquet(args.b_input)
+                shared = [
+                    c
+                    for c in docs.columns
+                    if c in set(b_snap.columns) and c not in keys
+                ]
+                if not keys or not shared:
+                    parser.error(
+                        "--op snapshot-diff needs key columns in --cols and "
+                        "at least one shared non-key column to compare"
+                    )
+                out = snapshot_diff(
+                    docs, b_snap, keys=keys, compare_cols=shared
                 )
-            out = snapshot_diff(docs, b_snap, keys=keys, compare_cols=shared)
-        elif args.op == "drift":
-            if not args.b_input:
-                parser.error("--op drift requires --b-input")
-            from .extensions.profiling import profile_drift
+            elif args.op == "drift":
+                if not args.b_input:
+                    parser.error("--op drift requires --b-input")
+                from .extensions.profiling import profile_drift
 
-            b_snap = spark.read.parquet(args.b_input)
-            shared = [c for c in docs.columns if c in set(b_snap.columns)]
-            out = profile_drift(docs, b_snap, shared)
-        else:  # decontam
-            if not args.test_input:
-                parser.error("--op decontam requires --test-input")
-            from .extensions.decontam import decontaminate
+                b_snap = spark.read.parquet(args.b_input)
+                shared = [c for c in docs.columns if c in set(b_snap.columns)]
+                out = profile_drift(docs, b_snap, shared)
+            else:  # decontam
+                if not args.test_input:
+                    parser.error("--op decontam requires --test-input")
+                from .extensions.decontam import decontaminate
 
-            test = spark.read.parquet(args.test_input)
-            out = decontaminate(docs, test, threshold=args.threshold)
-        out.write.mode("overwrite").parquet(args.out)
+                test = spark.read.parquet(args.test_input)
+                out = decontaminate(docs, test, threshold=args.threshold)
+            out.write.mode("overwrite").parquet(args.out)
     return 0
 
 

@@ -334,8 +334,8 @@ def bpe_apply_tokens(
     )
     chars = F.filter(F.split(F.col("word"), ""), lambda x: x != F.lit(""))
     seqs = words.select("word", chars.alias("seq"))
-    # Rule loop cost envelope (round-10 measurement, SCALE.md
-    # §Round-10 bpe_apply): the cost is DRIVER-side per-rule plan
+    # Rule loop cost envelope (round-10 measurement, in SCALE.md's
+    # git history): the cost is DRIVER-side per-rule plan
     # analysis, ~55-60 ms/rule, linear in |rules| and independent of
     # vocab size (50k-word table measured: 1k rules ≈ 60 s, 8k ≈
     # 8 min; a 32k-merge production vocabulary ≈ 30 min of driver
@@ -411,7 +411,7 @@ def bpe_apply_rankmap(
     """BPE inference via the GREEDY RANK-MAP algorithm — the
     real-vocabulary scale path :func:`bpe_apply_tokens` honestly
     cannot be (its driver loop is linear in |rules|, ~60 ms/rule —
-    SCALE.md §Round-10): per word, repeatedly merge the
+    round-10 measurement): per word, repeatedly merge the
     lowest-ranked adjacent pair present (leftmost on ties) until no
     rule applies — the priority-queue inference every production BPE
     tokenizer runs. Plan depth is O(1) REGARDLESS of |rules|: the

@@ -37,14 +37,13 @@ from . import (
     pipeline,
     stats_gate,
     streaming_gate,
-    tpch_gate,
 )
 from .certification import next_front as _next_front
 
 _MODULES = (
     core, pipeline, analytics_gate, extensions, llm_ops, curation,
     stats_gate, assembly_gate, incremental_gate, streaming_gate,
-    modern_gate, tpch_gate,
+    modern_gate,
 )
 
 # A name registered in two modules would silently overwrite on merge;

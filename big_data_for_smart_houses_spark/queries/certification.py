@@ -41,7 +41,6 @@ import re
 LAST_CERTIFIED: dict[str, int] = {
     "ab_lift_events": 13,
     "abc_customers": 11,
-    "agg_completeness_lineitem": 9,
     "analytics_daily_cost_trend": 12,
     "analytics_daily_energy_trend": 12,
     "analytics_data_status": 12,
@@ -54,10 +53,6 @@ LAST_CERTIFIED: dict[str, int] = {
     "analytics_live_readings": 12,
     "ann_ivf_recall_planted": 9,
     "ann_lsh_recall_planted": 11,
-    "approx_topk_events": 9,
-    "argmax_functions_events": 14,
-    "array_functions_documents": 11,
-    "array_sort_hof_documents": 9,
     "asof_nearest_events": 8,
     "avi_frame_sample_assets": 14,
     "bfs_distances_transitions": 8,
@@ -81,7 +76,6 @@ LAST_CERTIFIED: dict[str, int] = {
     "chunk_documents": 10,
     "click_asof_next_purchase": 11,
     "cms_token_counts": 11,
-    "cohort_retention_events": 12,
     "compaction_roundtrip_events": 14,
     "concurrency_sweepline_events": 11,
     "conditional_aggs_by_type": 11,
@@ -95,8 +89,6 @@ LAST_CERTIFIED: dict[str, int] = {
     "daily_user_rollup": 12,
     "daily_value_pop_change": 12,
     "dataset_split_documents": 10,
-    "date_functions_events": 12,
-    "datetime_functions_events": 9,
     "decontaminated_train_docs": 10,
     "dedup_events_keepfirst": 12,
     "dedup_exact_documents": 12,
@@ -115,12 +107,8 @@ LAST_CERTIFIED: dict[str, int] = {
     "ewma_events": 11,
     "ewma_stream_availablenow": 11,
     "expectations_events": 14,
-    "explode_outer_events": 9,
-    "funnel_click_purchase": 13,
-    "funnel_three_step_events": 14,
     "gapfill_linear_events": 14,
     "gapfill_locf_events": 9,
-    "generator_functions_documents": 13,
     "gini_customer_orders": 11,
     "global_rownum_orders": 11,
     "gold_business_summary_events": 12,
@@ -132,21 +120,13 @@ LAST_CERTIFIED: dict[str, int] = {
     "hdr_quantile_error_bound_events": 11,
     "hdr_quantile_sketch_events": 11,
     "hdr_sketch_stream_availablenow": 11,
-    "hll_reach_events": 13,
-    "hof_functions_documents": 13,
     "hopping_window_events": 12,
     "hourly_event_window": 13,
     "incremental_energy_state": 12,
     "incremental_join_view_orders": 13,
     "inverted_index_documents": 10,
-    "join_types_orders": 8,
-    "json_null_functions_events": 12,
     "json_props_extract": 13,
-    "json_schema_profile_events": 13,
     "kmeans_embeddings": 8,
-    "kmv_distinct_events": 8,
-    "kmv_jaccard_events": 8,
-    "kmv_merge_events": 8,
     "ks_statistic_events": 11,
     "label_centroids_embeddings": 13,
     "language_guess": 11,
@@ -157,9 +137,6 @@ LAST_CERTIFIED: dict[str, int] = {
     "llm_corpus_pipeline_documents": 10,
     "locf_stream_availablenow": 12,
     "logreg_quality_planted": 9,
-    "mad_outliers_events": 8,
-    "map_functions_events": 13,
-    "map_hof_functions_events": 9,
     "math_functions_events": 13,
     "merge_upsert_orders": 12,
     "minhash_dedup_documents": 9,
@@ -169,7 +146,6 @@ LAST_CERTIFIED: dict[str, int] = {
     "multimodal_decode": 11,
     "multimodal_features": 11,
     "multimodal_frame_sample": 11,
-    "navigation_functions_events": 13,
     "ngram_jaccard_pairs": 13,
     "ntile_scan_orders": 11,
     "orders_business_summary": 12,
@@ -191,7 +167,6 @@ LAST_CERTIFIED: dict[str, int] = {
     "rate_of_change_events": 12,
     "ratio_to_report_events": 12,
     "readability_documents": 13,
-    "regexp_functions_documents": 13,
     "regression_drift_events": 12,
     "revenue_vs_global": 13,
     "rocksdb_pysessions_availablenow": 10,
@@ -205,9 +180,7 @@ LAST_CERTIFIED: dict[str, int] = {
     "semantic_dedup_embeddings": 9,
     "sentence_dedup_documents": 9,
     "session_paths": 12,
-    "session_window_events": 12,
     "sessionize_events": 12,
-    "setops_events": 13,
     "silver_pipeline_events": 9,
     "simhash_dedup_documents": 11,
     "simhash_recall_exact_dups": 11,
@@ -240,7 +213,6 @@ LAST_CERTIFIED: dict[str, int] = {
     "stream_update_mode_availablenow": 8,
     "stream_upsert_availablenow": 14,
     "stream_upsert_restart_availablenow": 8,
-    "string_functions_documents": 12,
     "supplier_health_scores": 14,
     "synthetic_source_telemetry": 14,
     "synthetic_stream_availablenow": 14,
@@ -248,36 +220,12 @@ LAST_CERTIFIED: dict[str, int] = {
     "text_quality_score": 11,
     "text_stats": 11,
     "tfidf_top_terms": 11,
-    "theta_sketch_events": 8,
     "time_travel_orders": 14,
     "time_weighted_avg_events": 12,
     "token_batch_packing": 10,
     "token_heavy_hitters": 11,
     "token_stats_by_lang": 11,
-    "tpch_q10_returned_items": 14,
-    "tpch_q11_important_stock": 14,
-    "tpch_q12_priority_shipping": 8,
-    "tpch_q13_order_distribution": 7,
-    "tpch_q14_promo_revenue": 14,
-    "tpch_q15_top_supplier": 7,
-    "tpch_q16_supplier_counts": 7,
-    "tpch_q17_small_qty_revenue": 9,
-    "tpch_q18_large_orders": 14,
-    "tpch_q19_disjunctive": 14,
-    "tpch_q1_pricing_summary": 9,
-    "tpch_q20_excess_supply": 7,
-    "tpch_q21_waiting_supplier": 7,
-    "tpch_q22_global_balance": 14,
-    "tpch_q2_min_acctbal_supplier": 7,
-    "tpch_q3_shipping_priority": 14,
-    "tpch_q4_order_priority": 14,
-    "tpch_q5_region_volume": 14,
-    "tpch_q6_forecast_revenue": 7,
-    "tpch_q7_volume_shipping": 14,
-    "tpch_q8_market_share": 7,
-    "tpch_q9_product_profit": 7,
     "trailing_active_users_events": 8,
-    "trending_types_hourly": 12,
     "triangle_count_transitions": 8,
     "two_phase_agg_orders": 13,
     "union_dedup_orders": 13,
@@ -289,7 +237,6 @@ LAST_CERTIFIED: dict[str, int] = {
     "weighted_corpus_mix": 11,
     "weighted_quantiles_orders": 11,
     "weighted_sample_wor_documents": 12,
-    "window_completeness_events": 7,
     "winsorize_events": 11,
     "zipf_slope_documents": 14,
     "zorder3_key_events": 12,

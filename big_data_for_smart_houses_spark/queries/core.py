@@ -686,9 +686,6 @@ APPROX_CD_BOUND_SIGMAS = 5.0
 APPROX_CD_ABS_SLACK = 2
 
 
-BIG_ORDER_THRESHOLD = 300_000
-
-
 def q_purchase_asof_click(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join: each purchase event joined to the user's latest
     click at-or-before it — single-shuffle union form
@@ -989,337 +986,8 @@ ORACLES = {
 
 
 # ---------------------------------------------------------------------------
-# Classic multi-join analytics: TPC-H Q3 / Q5 shapes on the driver
-# schema (o_orderpriority stands in for Q3's o_shippriority; the
-# driver tables carry no comment/phone columns — scan stays pruned)
+# Python Data Source reader and writer on the hash path
 # ---------------------------------------------------------------------------
-
-
-# Revenue sums add thousands of double products per group; quantizing
-# the SUM still risks a float32 boundary straddle (observed once at
-# sf0.01 on the Q7 shape: 1-ulp double difference, adjacent float32
-# cells). Decimal arithmetic removes the order-dependence instead of
-# hiding it: the 2-decimal factors cast exactly, the 4-decimal product
-# and its sum are exact in scaled decimal on BOTH engines, and the
-# final cast back to double is lossless at these magnitudes.
-def _exact_revenue():
-    from pyspark.sql import functions as F
-
-    price = F.col("l_extendedprice").cast("decimal(18,2)")
-    disc = F.col("l_discount").cast("decimal(18,2)")
-    one = F.lit(1).cast("decimal(18,2)")
-    return F.sum(price * (one - disc)).cast("double")
-
-
-_SQL_EXACT_REVENUE = (
-    "CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))"
-    " * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))"
-    " AS DOUBLE)"
-)
-
-Q3_SEGMENT = "BUILDING"
-Q3_DATE = "1998-06-30"
-Q3_TOPK = 10
-
-
-def q_tpch_q3_shipping_priority(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """TPC-H Q3 shape: revenue of unshipped orders for one market
-    segment — selective dimension filter (customer) broadcast into
-    the orders ⋈ lineitem fact join, one (orderkey, date, priority)
-    aggregation, top-10 by revenue. Revenue is quantized BEFORE the
-    rank so a 1-ulp cross-engine sum difference cannot flip the
-    cut; ties break by order key. The only big exchange is the
-    fact-fact join on orderkey; customer reaches it as a broadcast."""
-    from pyspark.sql import functions as F
-
-    cust = _t(spark, sf_dir, "customer").filter(
-        F.col("c_mktsegment") == Q3_SEGMENT
-    )
-    orders = _t(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") < Q3_DATE
-    )
-    li = _t(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") > Q3_DATE
-    )
-    rev = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .join(cust, orders["o_custkey"] == cust["c_custkey"])
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(
-            _exact_revenue().alias("revenue")
-        )
-    )
-    return rev.orderBy(
-        F.col("revenue").desc(), F.col("o_orderdate"), F.col("l_orderkey")
-    ).limit(Q3_TOPK)
-
-
-ORACLE_TPCH_Q3_SHIPPING_PRIORITY = f"""
-SELECT l_orderkey, o_orderdate, o_orderpriority,
-       {_SQL_EXACT_REVENUE} AS revenue
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-WHERE c_mktsegment = '{Q3_SEGMENT}'
-  AND o_orderdate < TIMESTAMP '{Q3_DATE}'
-  AND l_shipdate > TIMESTAMP '{Q3_DATE}'
-GROUP BY l_orderkey, o_orderdate, o_orderpriority
-ORDER BY revenue DESC, o_orderdate, l_orderkey
-LIMIT {Q3_TOPK}
-"""
-
-Q5_REGION = "ASIA"
-Q5_YEAR = 1997
-
-
-def q_tpch_q5_region_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5 shape: revenue by nation for one region-year, the
-    6-table join with the local-supplier condition (customer and
-    supplier in the SAME nation). region→nation→supplier is a
-    broadcast chain pruning the fact side; the customer⋈orders⋈
-    lineitem spine shuffles on its keys once each. Revenue quantized."""
-    from pyspark.sql import functions as F
-
-    region = _t(spark, sf_dir, "region").filter(
-        F.col("r_name") == Q5_REGION
-    )
-    nation = _t(spark, sf_dir, "nation").join(
-        F.broadcast(region),
-        F.col("n_regionkey") == F.col("r_regionkey"),
-    )
-    supp = _t(spark, sf_dir, "supplier").join(
-        F.broadcast(nation),
-        F.col("s_nationkey") == F.col("n_nationkey"),
-    )
-    orders = _t(spark, sf_dir, "orders").filter(
-        F.year("o_orderdate") == Q5_YEAR
-    )
-    li = _t(spark, sf_dir, "lineitem")
-    cust = _t(spark, sf_dir, "customer")
-    j = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .join(cust, orders["o_custkey"] == cust["c_custkey"])
-        .join(
-            supp,
-            (li["l_suppkey"] == supp["s_suppkey"])
-            & (cust["c_nationkey"] == supp["s_nationkey"]),
-        )
-    )
-    return (
-        j.groupBy("n_name")
-        .agg(
-            _exact_revenue().alias("revenue")
-        )
-        .select("n_name", "revenue")
-    )
-
-
-ORACLE_TPCH_Q5_REGION_VOLUME = f"""
-SELECT n_name,
-       {_SQL_EXACT_REVENUE} AS revenue
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN supplier ON l_suppkey = s_suppkey
-             AND c_nationkey = s_nationkey
-JOIN nation ON s_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-WHERE r_name = '{Q5_REGION}'
-  AND year(o_orderdate) = {Q5_YEAR}
-GROUP BY n_name
-"""
-
-QUERIES["tpch_q3_shipping_priority"] = q_tpch_q3_shipping_priority
-QUERIES["tpch_q5_region_volume"] = q_tpch_q5_region_volume
-ORACLES["tpch_q3_shipping_priority"] = ORACLE_TPCH_Q3_SHIPPING_PRIORITY
-ORACLES["tpch_q5_region_volume"] = ORACLE_TPCH_Q5_REGION_VOLUME
-
-
-Q10_START = "1997-01-01"
-Q10_END = "1997-07-01"
-Q10_TOPK = 20
-
-
-def q_tpch_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q10 shape: customers who returned the most revenue in a
-    half-year window — lineitem filtered to returnflag 'R', joined to
-    the date-windowed orders, grouped by customer, top-20, then the
-    customer and nation dimensions joined AFTER the cut so the
-    dimension join touches 20 rows, not |customers| (the
-    aggregate-then-enrich ordering that matters at scale). Revenue
-    quantized before the rank; ties break by custkey."""
-    from pyspark.sql import functions as F
-
-    orders = _t(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= Q10_START)
-        & (F.col("o_orderdate") < Q10_END)
-    )
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    top = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .groupBy("o_custkey")
-        .agg(
-            _exact_revenue().alias("revenue")
-        )
-        .orderBy(F.col("revenue").desc(), F.col("o_custkey"))
-        .limit(Q10_TOPK)
-    )
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    return (
-        top.join(cust, top["o_custkey"] == cust["c_custkey"])
-        .join(
-            F.broadcast(nation),
-            cust["c_nationkey"] == nation["n_nationkey"],
-        )
-        .select(
-            F.col("o_custkey").alias("c_custkey"),
-            "c_name",
-            "n_name",
-            "c_acctbal",
-            "revenue",
-        )
-    )
-
-
-ORACLE_TPCH_Q10_RETURNED_ITEMS = f"""
-WITH top AS (
-  SELECT o_custkey,
-         {_SQL_EXACT_REVENUE} AS revenue
-  FROM lineitem
-  JOIN orders ON l_orderkey = o_orderkey
-  WHERE l_returnflag = 'R'
-    AND o_orderdate >= TIMESTAMP '{Q10_START}'
-    AND o_orderdate < TIMESTAMP '{Q10_END}'
-  GROUP BY o_custkey
-  ORDER BY revenue DESC, o_custkey
-  LIMIT {Q10_TOPK}
-)
-SELECT o_custkey AS c_custkey, c_name, n_name, c_acctbal, revenue
-FROM top
-JOIN customer ON o_custkey = c_custkey
-JOIN nation ON c_nationkey = n_nationkey
-"""
-
-QUERIES["tpch_q10_returned_items"] = q_tpch_q10_returned_items
-ORACLES["tpch_q10_returned_items"] = ORACLE_TPCH_Q10_RETURNED_ITEMS
-
-
-def q_tpch_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q7 shape: cross-border trade — revenue shipped between
-    DIFFERENT nations by year, where the nation dimension joins the
-    fact spine TWICE (once through supplier, once through customer;
-    the classic query restricts to one nation pair, but the driver's
-    small SFs concentrate suppliers in one nation, so the gate keeps
-    every cross-border pair — the join shape is identical). Both
-    nation sides broadcast; the only large exchanges are the
-    lineitem⋈orders and ⋈customer key joins."""
-    from pyspark.sql import functions as F
-
-    nation = _t(spark, sf_dir, "nation")
-    supp = _t(spark, sf_dir, "supplier").join(
-        F.broadcast(nation),
-        F.col("s_nationkey") == F.col("n_nationkey"),
-    ).select("s_suppkey", F.col("n_name").alias("supp_nation"))
-    cust = _t(spark, sf_dir, "customer").join(
-        F.broadcast(
-            nation.select(
-                F.col("n_nationkey").alias("cn_key"),
-                F.col("n_name").alias("cust_nation"),
-            )
-        ),
-        F.col("c_nationkey") == F.col("cn_key"),
-    ).select("c_custkey", "cust_nation")
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    j = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .join(supp, li["l_suppkey"] == supp["s_suppkey"])
-        .join(cust, orders["o_custkey"] == cust["c_custkey"])
-        .filter(F.col("supp_nation") != F.col("cust_nation"))
-    )
-    return (
-        j.groupBy(
-            "supp_nation",
-            "cust_nation",
-            F.year("l_shipdate").alias("l_year"),
-        )
-        .agg(
-            _exact_revenue().alias("revenue")
-        )
-    )
-
-
-ORACLE_TPCH_Q7_VOLUME_SHIPPING = f"""
-SELECT sn.n_name AS supp_nation,
-       cn.n_name AS cust_nation,
-       CAST(year(l_shipdate) AS INT) AS l_year,
-       {_SQL_EXACT_REVENUE} AS revenue
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation sn ON s_nationkey = sn.n_nationkey
-JOIN nation cn ON c_nationkey = cn.n_nationkey
-WHERE sn.n_name <> cn.n_name
-GROUP BY 1, 2, 3
-"""
-
-Q18_QTY_THRESHOLD = 250
-
-
-def q_tpch_q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q18 shape: large-volume orders — a HAVING aggregate over
-    lineitem selects the heavy order keys, which then SEMI-join back
-    into the orders⋈customer spine (the keys table is tiny after the
-    threshold, so it broadcasts; the fact table is never scanned
-    twice for the filter). Total quantity is an exact double sum of
-    integral quantities — no quantization needed."""
-    from pyspark.sql import functions as F
-
-    li = _t(spark, sf_dir, "lineitem")
-    heavy = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("total_qty"))
-        .filter(F.col("total_qty") > Q18_QTY_THRESHOLD)
-    )
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    return (
-        orders.join(
-            heavy, orders["o_orderkey"] == heavy["l_orderkey"]
-        )
-        .join(cust, orders["o_custkey"] == cust["c_custkey"])
-        .select(
-            "c_custkey",
-            "c_name",
-            "o_orderkey",
-            "o_orderdate",
-            "o_totalprice",
-            "total_qty",
-        )
-    )
-
-
-ORACLE_TPCH_Q18_LARGE_ORDERS = f"""
-WITH heavy AS (
-  SELECT l_orderkey, sum(l_quantity) AS total_qty
-  FROM lineitem GROUP BY 1
-  HAVING sum(l_quantity) > {Q18_QTY_THRESHOLD}
-)
-SELECT c_custkey, c_name, o_orderkey, o_orderdate, o_totalprice,
-       total_qty
-FROM heavy
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-"""
-
-QUERIES["tpch_q7_volume_shipping"] = q_tpch_q7_volume_shipping
-QUERIES["tpch_q18_large_orders"] = q_tpch_q18_large_orders
-ORACLES["tpch_q7_volume_shipping"] = ORACLE_TPCH_Q7_VOLUME_SHIPPING
-ORACLES["tpch_q18_large_orders"] = ORACLE_TPCH_Q18_LARGE_ORDERS
 
 
 SYNTH_N = 5000
@@ -1405,211 +1073,3 @@ FROM orders
 
 QUERIES["pysink_roundtrip_orders"] = q_pysink_roundtrip_orders
 ORACLES["pysink_roundtrip_orders"] = ORACLE_PYSINK_ROUNDTRIP_ORDERS
-
-
-# ---------------------------------------------------------------------------
-# TPC-H shapes, round 6: Q4 (EXISTS-driven agg), Q14 (conditional
-# ratio), Q19 (disjunctive multi-branch pushdown), Q22 (scalar
-# subquery + anti join). Adapted to the driver tables' reduced
-# columns (no commitdate/receiptdate/shipmode/phone), preserving each
-# query's defining OPERATOR shape.
-# ---------------------------------------------------------------------------
-
-Q4_YEAR = 1997
-Q4_QUARTER = 3
-
-
-def q_tpch_q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q4 shape: order-priority counts for one quarter where a
-    correlated EXISTS holds (here: some line shipped AFTER the order
-    date — the reduced schema's analog of commit<receipt). The EXISTS
-    compiles to a LEFT SEMI join whose condition spans both sides;
-    at scale the semi join shuffles only the orderkey + the two
-    compared columns and never duplicates orders (the reason Q4 is
-    the canonical semi-join benchmark)."""
-    o = _t(spark, sf_dir, "orders").filter(
-        (F.year("o_orderdate") == Q4_YEAR)
-        & (F.quarter("o_orderdate") == Q4_QUARTER)
-    )
-    li = _t(spark, sf_dir, "lineitem")
-    sel = o.join(
-        li,
-        (o["o_orderkey"] == li["l_orderkey"])
-        & (li["l_shipdate"] > o["o_orderdate"]),
-        "left_semi",
-    )
-    return (
-        sel.groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("order_count"))
-    )
-
-
-ORACLE_TPCH_Q4_ORDER_PRIORITY = f"""
-SELECT o_orderpriority, count(*) AS order_count
-FROM orders o
-WHERE year(o_orderdate) = {Q4_YEAR}
-  AND quarter(o_orderdate) = {Q4_QUARTER}
-  AND EXISTS (SELECT 1 FROM lineitem l
-              WHERE l.l_orderkey = o.o_orderkey
-                AND l.l_shipdate > o.o_orderdate)
-GROUP BY o_orderpriority
-"""
-
-
-Q14_YEAR = 1998
-Q14_MONTH = 3
-
-
-def q_tpch_q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14 shape: promo-revenue share for one month — a
-    conditional aggregate RATIO over a fact⋈part join. Both numerator
-    and denominator come out of ONE pass (no second scan, no
-    self-join); revenue stays decimal-exact to the division, and only
-    the final ratio (one divide) ships as double. The date filter
-    prunes the fact scan; part is joined for its type flag only."""
-    li = _t(spark, sf_dir, "lineitem").filter(
-        (F.year("l_shipdate") == Q14_YEAR)
-        & (F.month("l_shipdate") == Q14_MONTH)
-    )
-    p = _t(spark, sf_dir, "part")
-    j = li.join(p, li["l_partkey"] == p["p_partkey"])
-    price = F.col("l_extendedprice").cast("decimal(18,2)")
-    disc = F.col("l_discount").cast("decimal(18,2)")
-    one = F.lit(1).cast("decimal(18,2)")
-    rev = price * (one - disc)
-    promo = F.sum(F.when(F.col("p_type") == "PROMO", rev))
-    total = F.sum(rev)
-    out = j.agg(
-        promo.alias("_promo"), total.alias("_total")
-    ).select(
-        (
-            F.lit(100.0)
-            * F.coalesce(F.col("_promo"), F.lit(0).cast("decimal(18,2)"))
-            .cast("double")
-            / F.col("_total").cast("double")
-        ).alias("promo_pct"),
-        F.col("_total").cast("double").alias("total_revenue"),
-    )
-    return out
-
-
-ORACLE_TPCH_Q14_PROMO_REVENUE = f"""
-SELECT 100.0 * CAST(coalesce(sum(CASE WHEN p_type = 'PROMO'
-                 THEN CAST(l_extendedprice AS DECIMAL(18,2))
-                      * (CAST(1 AS DECIMAL(18,2))
-                         - CAST(l_discount AS DECIMAL(18,2))) END),
-               0) AS DOUBLE)
-       / CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
-                  * (CAST(1 AS DECIMAL(18,2))
-                     - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE)
-         AS promo_pct,
-       CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
-                * (CAST(1 AS DECIMAL(18,2))
-                   - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE)
-         AS total_revenue
-FROM lineitem JOIN part ON l_partkey = p_partkey
-WHERE year(l_shipdate) = {Q14_YEAR} AND month(l_shipdate) = {Q14_MONTH}
-"""
-
-
-def q_tpch_q19_disjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q19 shape: revenue under an OR of three (brand, size
-    range, quantity range) conjunctions — the disjunctive-predicate
-    benchmark. The brand/size branches bind to part and the quantity
-    bounds to lineitem, so the optimizer must push the COMMON
-    envelope of each side's disjuncts into the scans and evaluate
-    the cross-table residual on the joined row; a naive engine
-    evaluates nothing until after the join. Revenue decimal-exact."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
-    j = li.join(p, li["l_partkey"] == p["p_partkey"])
-    qty = F.col("l_quantity")
-    size = F.col("p_size")
-    brand = F.col("p_brand")
-    cond = (
-        ((brand == "Brand#1") & size.between(1, 15) & qty.between(1, 15))
-        | ((brand == "Brand#2") & size.between(1, 25) & qty.between(10, 25))
-        | ((brand == "Brand#3") & size.between(1, 35) & qty.between(20, 35))
-    )
-    return j.filter(cond).agg(
-        _exact_revenue().alias("revenue"),
-        F.count(F.lit(1)).alias("n_lines"),
-    )
-
-
-ORACLE_TPCH_Q19_DISJUNCTIVE = f"""
-SELECT {_SQL_EXACT_REVENUE} AS revenue,
-       count(*) AS n_lines
-FROM lineitem JOIN part ON l_partkey = p_partkey
-WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15
-       AND l_quantity BETWEEN 1 AND 15)
-   OR (p_brand = 'Brand#2' AND p_size BETWEEN 1 AND 25
-       AND l_quantity BETWEEN 10 AND 25)
-   OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 35
-       AND l_quantity BETWEEN 20 AND 35)
-"""
-
-
-def q_tpch_q22_global_balance(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """TPC-H Q22 shape: customers whose balance exceeds the global
-    positive-balance average AND who have no large order (every
-    synthetic customer has SOME order, so the anti-join predicate is
-    "no order above the big-order threshold") — scalar subquery +
-    anti join + aggregate. The average is compared in EXACT decimal arithmetic
-    rearranged as ``bal * n > total`` (no double division anywhere
-    near the threshold), so a borderline customer can never flip
-    between engines; the 1-row aggregate broadcasts (J2 shape), the
-    price filter pushes into the orders scan, and the anti join
-    shuffles only the key column."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(
-        F.col("o_totalprice") > BIG_ORDER_THRESHOLD
-    )
-    bal = F.col("c_acctbal").cast("decimal(18,2)")
-    stats = c.filter(F.col("c_acctbal") > 0).agg(
-        F.sum(bal).alias("_total"),
-        F.count(F.lit(1)).alias("_n"),
-    )
-    rich = (
-        c.crossJoin(F.broadcast(stats))
-        .filter(
-            bal * F.col("_n").cast("decimal(18,0)")
-            > F.col("_total").cast("decimal(38,2)")
-        )
-        .join(o, c["c_custkey"] == o["o_custkey"], "left_anti")
-    )
-    return rich.groupBy("c_mktsegment").agg(
-        F.count(F.lit(1)).alias("n_customers"),
-        F.sum(bal).cast("double").alias("total_acctbal"),
-    )
-
-
-ORACLE_TPCH_Q22_GLOBAL_BALANCE = """
-WITH stats AS (
-  SELECT sum(CAST(c_acctbal AS DECIMAL(18,2))) AS total_bal,
-         count(*) AS n
-  FROM customer WHERE c_acctbal > 0
-)
-SELECT c_mktsegment,
-       count(*) AS n_customers,
-       CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE)
-         AS total_acctbal
-FROM customer c CROSS JOIN stats
-WHERE CAST(c_acctbal AS DECIMAL(18,2)) * n > total_bal
-  AND NOT EXISTS (SELECT 1 FROM orders o
-                  WHERE o.o_custkey = c.c_custkey
-                    AND o.o_totalprice > {thr})
-GROUP BY c_mktsegment
-""".format(thr=BIG_ORDER_THRESHOLD)
-
-
-QUERIES["tpch_q4_order_priority"] = q_tpch_q4_order_priority
-QUERIES["tpch_q14_promo_revenue"] = q_tpch_q14_promo_revenue
-QUERIES["tpch_q19_disjunctive"] = q_tpch_q19_disjunctive
-QUERIES["tpch_q22_global_balance"] = q_tpch_q22_global_balance
-ORACLES["tpch_q4_order_priority"] = ORACLE_TPCH_Q4_ORDER_PRIORITY
-ORACLES["tpch_q14_promo_revenue"] = ORACLE_TPCH_Q14_PROMO_REVENUE
-ORACLES["tpch_q19_disjunctive"] = ORACLE_TPCH_Q19_DISJUNCTIVE
-ORACLES["tpch_q22_global_balance"] = ORACLE_TPCH_Q22_GLOBAL_BALANCE

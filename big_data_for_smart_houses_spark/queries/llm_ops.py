@@ -1188,7 +1188,7 @@ def q_bpe_rankmap_documents(
     """BPE inference through the RANK-MAP path (extensions/vocab.py:
     bpe_apply_rankmap — the O(1)-plan-depth greedy lowest-rank
     tokenizer that carries real 32k-merge vocabularies where the
-    fold path's per-rule driver loop cannot, SCALE.md §Round-10):
+    fold path's per-rule driver loop cannot, round-10 measurement):
     train the same rules as bpe_apply_documents, tokenize every
     document via the Arrow-batched mapInPandas segmenter over the
     distinct-word table, and hash the reassembled streams. On a

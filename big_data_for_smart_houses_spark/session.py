@@ -44,10 +44,10 @@ def scale_shuffle_partitions(
 ) -> int:
     """Shuffle-partition count for a job reading ``input_bytes`` of
     columnar input: one partition per TARGET bytes of estimated
-    shuffle payload, clamped to [floor, cap]. The 1000x flagship
-    probe validates the formula end-to-end (11 GB lineitem ->
-    ~246 partitions -> the measured q17 win); at gate SF it returns
-    the floor, preserving oracle-parity layouts."""
+    shuffle payload, clamped to [floor, cap]. Calibrated on a TPC-H
+    Q17 join at 1000x (11 GB lineitem -> ~246 partitions, the
+    measured win); at gate SF it returns the floor, preserving
+    oracle-parity layouts."""
     if input_bytes < 0:
         raise ValueError(f"input_bytes must be >= 0, got {input_bytes}")
     floor = DEFAULT_SHUFFLE_PARTITIONS if floor is None else floor
@@ -71,27 +71,15 @@ def _local_input_bytes(*paths: str) -> int:
     return total
 
 
-def apply_scale_profile(spark: SparkSession, *table_paths: str) -> int:
-    """Set ``spark.sql.shuffle.partitions`` from the job's input
-    volume (see :func:`scale_shuffle_partitions`) and return the
-    chosen count. Call before the action, with the paths the job
-    actually reads. Fire-and-forget — for a SHARED session use
-    :func:`scale_profile`, the context-manager variant that restores
-    the previous value on exit (gates never call either — they pin
-    the parity layout)."""
-    n = scale_shuffle_partitions(_local_input_bytes(*table_paths))
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    return n
-
-
 @contextmanager
 def scale_profile(spark: SparkSession, *table_paths: str):
-    """Context-manager form of :func:`apply_scale_profile` for shared
-    sessions (round-11 advice): sizes ``spark.sql.shuffle.partitions``
-    from the input volume for the duration of the block, then restores
-    the caller's previous value — so library entry points (plans/etl,
-    the CLI ops) get the measured-correct layout at 100 TB without
-    perturbing whatever layout the surrounding session pinned.
+    """Size ``spark.sql.shuffle.partitions`` from the job's input
+    volume (see :func:`scale_shuffle_partitions`) for the duration of
+    the block, then restore the caller's previous value — so library
+    entry points (plans/etl, the CLI ops) get the measured-correct
+    layout at 100 TB without perturbing whatever layout the
+    surrounding session pinned. Pass the paths the block actually
+    reads; gates never call it — they pin the parity layout.
 
     The floor is the session's CURRENT partition count, not the
     static default: at gate/test SF the formula lands below it, so

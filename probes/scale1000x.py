@@ -1,26 +1,18 @@
 """1000x probe: three orders of magnitude past the gate SF.
 
-Rounds 7-9 established the 10x sweep (every headline query) and the
-100x spot-probe (near-dup batch family, q17, stateful streaming).
-This probe pushes the FLAGSHIP path one more decade — sf0.1 x 1000 =
-600M lineitem rows / 100M events, i.e. TPC-H sf100-equivalent fact
-volume on a single box — to answer the brief's question directly:
-would the plan still be the plan you'd want at a cluster-sized input?
+Pushes the flagship paths one decade past the 100x spot-probes —
+sf0.1 x 1000 = 600M lineitem rows / 100M events on a single box — to
+answer one question: is the plan still the plan you would want at a
+cluster-sized input?
 
-Probes (1x vs 1000x, wall + shuffle/spill/input via the bench
-poller):
+Probes (1x vs Nx, wall + shuffle/spill/input via the bench poller):
 
-* ``tpch_q1_pricing_summary`` — the flagship aggregate: partial-agg
-  to 6 groups, shuffle must stay O(groups x partitions), never O(n);
-* ``tpch_q6_forecast_revenue`` — the scan stack: predicate pushdown
-  + map-side fold, shuffle ~zero at any n;
-* ``tpch_q17_small_qty_revenue`` — the decorrelated join AFTER its
-  broadcast->shuffle phase transition (plan-pinned in
-  tests/test_plans.py; post-transition linearity proven at 100x in
-  r9 — this extends the measured line to 1000x);
+* ``pricing_summary`` — the flagship aggregate: partial-agg to a
+  handful of groups, shuffle must stay O(groups x partitions), never
+  O(n);
 * ``silver_pipeline_events`` — the reference's end-to-end
-  bronze->silver path: dedup window + two 60-row rolling windows
-  over 1000x the keys at constant per-key density.
+  bronze->silver path: dedup window + 60-row rolling windows over
+  Nx the keys at constant per-key density.
 
 Data generation uses an EXPLODE-based replicator equivalent to
 sources/synthetic.scale_up_tables for id-shift-only tables (same
@@ -31,8 +23,8 @@ SELF-CHECKED at factor 3 (exceptAll both ways against
 scale_up_tables' output) before anything is measured, so the fast
 path cannot drift from the documented generator.
 
-Run:  python probes/scale1000x.py [factor]     (default 1000)
-Writes /tmp/scale1000x.json and prints one JSON line per probe.
+Run:  python probes/scale1000x.py [factor] [probe,probe]  (default 1000)
+Writes /tmp/scale1000x.json and prints one JSON line per probe per size.
 """
 
 from __future__ import annotations
@@ -49,15 +41,13 @@ sys.path.insert(
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 PROBES = [
-    "tpch_q1_pricing_summary",
-    "tpch_q6_forecast_revenue",
-    "tpch_q17_small_qty_revenue",
+    "pricing_summary",
     "silver_pipeline_events",
 ]
-# tables the probe queries actually read (silver: events only;
-# q1/q6: lineitem; q17: lineitem+part); everything else passes
-# through unscaled (fixed dims / unread).
-SCALED_TABLES = ["lineitem", "part", "events"]
+# tables the probe queries actually read (pricing: lineitem; silver:
+# events); everything else passes through unscaled (fixed dims /
+# unread).
+SCALED_TABLES = ["lineitem", "events"]
 
 
 def _scale_fast(spark, src_dir, dst_dir, factor, tables):
@@ -138,10 +128,9 @@ def main() -> None:
             file=sys.stderr,
         )
     # unscaled passthroughs so load_table finds every table it asks
-    # for (q17 reads only lineitem+part, silver only events, but a
-    # dangling dir is a foot-gun for future probe additions)
-    for t in ("region", "nation", "customer", "supplier", "orders",
-              "documents", "embeddings"):
+    # for (a dangling dir is a foot-gun for future probe additions)
+    for t in ("region", "nation", "customer", "supplier", "part",
+              "orders", "documents", "embeddings"):
         dst = f"{scaled_dir}/{t}.parquet"
         if not os.path.exists(dst):
             shutil.copy(f"{SF_DIR}/{t}.parquet", dst)
@@ -158,11 +147,9 @@ def main() -> None:
             try:
                 n = fn(spark, d).count()
             except Exception as exc:  # noqa: BLE001
-                # a single probe blowing its heap (the r11 q17@32p
-                # run at an 8 GB driver) must not kill the rest of
-                # the matrix — record the failure as a row and move
-                # on; the profile rerun below is often exactly the
-                # configuration that survives
+                # a single probe blowing its heap must not kill the
+                # rest of the matrix — record the failure as a row
+                # and move on
                 r = {"probe": f"{name}_{label}",
                      "error": f"{type(exc).__name__}: {exc}"[:300]}
                 print(json.dumps(r), flush=True)
@@ -175,52 +162,6 @@ def main() -> None:
             print(json.dumps(r), flush=True)
             results.append(r)
 
-    # q17 again under the input-volume-aware profile (round-10
-    # verdict ask #4): apply_scale_profile derives the
-    # shuffle-partition knob from the scaled input's on-disk bytes —
-    # the same number the r10 manual rerun pinned at 256 — and the
-    # probe row records the measured win over the 32-partition run
-    # above. Conf restored so any probes added later keep parity.
-    if "tpch_q17_small_qty_revenue" in probes:
-        from big_data_for_smart_houses_spark.session import (
-            apply_scale_profile,
-        )
-
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        parts = apply_scale_profile(
-            spark,
-            f"{scaled_dir}/lineitem.parquet",
-            f"{scaled_dir}/part.parquet",
-        )
-        try:
-            fn = QUERIES["tpch_q17_small_qty_revenue"]
-            last_stage, _ = poll(-1)
-            t0 = time.perf_counter()
-            n = fn(spark, scaled_dir).count()
-            wall = round(time.perf_counter() - t0, 1)
-            _, io = poll(last_stage)
-            r = {
-                "probe": f"tpch_q17_small_qty_revenue_{factor}x_profile",
-                "wall_s": wall, "rows": n,
-                "shuffle_partitions": parts, **io,
-            }
-            print(json.dumps(r), flush=True)
-            results.append(r)
-        except Exception as exc:  # noqa: BLE001
-            # same guard as the main loop. NOTE: when the preceding
-            # 32-partition q17 has already churned this JVM's heap
-            # (80+ GB of spill structures at an 8 GB driver), the
-            # profile rerun can OOM HERE even though it completes
-            # reliably in a fresh session (measured 90.2 s standalone
-            # at the same heap) — a back-to-back single-JVM probe
-            # artifact, not a profile defect; run the profile-only
-            # matrix cell in its own process for clean numbers.
-            r = {"probe": f"tpch_q17_small_qty_revenue_{factor}x_profile",
-                 "error": f"{type(exc).__name__}: {exc}"[:300]}
-            print(json.dumps(r), flush=True)
-            results.append(r)
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
     with open("/tmp/scale1000x.json", "w") as fh:
         json.dump(results, fh, indent=1)
 

@@ -37,7 +37,7 @@ def _width_bucket_ref(x: float, lo: float, hi: float, n: int) -> int:
                  allow_nan=False, allow_infinity=False))
 @settings(max_examples=_N, deadline=None)
 def test_width_bucket_oracle_emulation_matches_reference(x):
-    # the LIVE fragment the gate oracle is built from — not a copy
+    # the package fragment itself — not a copy
     from big_data_for_smart_houses_spark.queries.stats_gate import (
         width_bucket_sql,
     )
@@ -60,7 +60,7 @@ def _next_monday_ref(d: dt.date) -> dt.date:
                 max_value=dt.date(2100, 12, 31)))
 @settings(max_examples=_N, deadline=None)
 def test_next_day_oracle_arithmetic_matches_reference(d):
-    # the LIVE fragment the gate oracle is built from — not a copy
+    # the package fragment itself — not a copy
     from big_data_for_smart_houses_spark.queries.stats_gate import (
         next_monday_sql,
     )

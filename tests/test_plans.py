@@ -340,13 +340,6 @@ def test_cms_lookup_broadcasts_sketch(spark):
     assert "BroadcastHashJoin" in plan, plan
 
 
-def test_session_window_single_exchange(spark):
-    """The built-in session_window aggregation pays one key exchange —
-    same budget as the custom sessionize path it parallels."""
-    plan = _plan(spark, "session_window_events")
-    assert plan.count("Exchange hashpartitioning") == 1, plan
-
-
 def test_time_weighted_avg_single_exchange(spark):
     """The TWA aggregate reuses the lead window's key clustering —
     one exchange total."""
@@ -356,15 +349,11 @@ def test_time_weighted_avg_single_exchange(spark):
 
 def test_timeseries_calculus_plan_shapes(spark):
     """Derivative and ratio-to-report each pay exactly one key
-    exchange; the funnel broadcasts the |users|-row click side so the
-    purchase scan never shuffles for the join."""
+    exchange."""
     rp = _plan(spark, "rate_of_change_events")
     assert rp.count("Exchange hashpartitioning") == 1, rp
     sp = _plan(spark, "ratio_to_report_events")
     assert sp.count("Exchange hashpartitioning") == 1, sp
-    fp = _plan(spark, "funnel_click_purchase")
-    assert "BroadcastHashJoin" in fp, fp
-    assert "CartesianProduct" not in fp, fp
 
 
 def test_hopping_and_grouping_sets_expand_once(spark):
@@ -389,16 +378,14 @@ def test_session_paths_single_exchange(spark):
 
 
 def test_user_keyed_joins_carry_no_broadcast_hint(spark):
-    """Funnel and cohort join |users|-row aggregates onto the fact
-    scan. A FORCED broadcast hint on a user-keyed table OOMs at 100 TB
-    (~10^8-10^9 users); the join strategy must be left to AQE, so the
-    optimized logical plan must contain no ResolvedHint — whatever
-    physical join Catalyst then picks at this SF is fine."""
+    """Joins keyed by data-scaled dimensions (users, suppliers, parts)
+    must not carry a FORCED broadcast hint: one on a user-keyed table
+    OOMs at 100 TB (~10^8-10^9 users); the join strategy must be left
+    to AQE, so the optimized logical plan must contain no
+    ResolvedHint — whatever physical join Catalyst then picks at this
+    SF is fine."""
     for name in (
-        "funnel_click_purchase",
-        "cohort_retention_events",
-        # round 6: supplier (10k x SF) and part (200k x SF) are
-        # data-scaled too — their joins must also be hint-free
+        # supplier (10k x SF) and part (200k x SF) are data-scaled
         "supplier_health_scores",
         "part_value_density",
         # round 14: the billing joins are user x month keyed — the
@@ -417,28 +404,16 @@ def test_user_keyed_joins_carry_no_broadcast_hint(spark):
 
 
 def test_round5_gate_plan_shapes(spark):
-    """map/struct family is row-local (zero exchanges); the SCD2 as-of
-    lookup runs on the single-shuffle union form — key exchanges only,
-    no pair-explosion join; the approx-percentile gate runs the sketch
-    as one aggregate (no per-partition global sort)."""
-    plan = _plan(spark, "map_functions_events")
-    assert "Exchange" not in plan, plan
-
+    """The SCD2 as-of lookup runs on the single-shuffle union form —
+    key exchanges only, no pair-explosion join; the approx-percentile
+    gate runs the sketch as one aggregate (no per-partition global
+    sort)."""
     plan = _plan(spark, "scd2_asof_lookup")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
     plan = _plan(spark, "quality_topk_approx_pct")
     assert "percentile_approx" in plan or "approx_percentile" in plan
-
-    # generator + HOF families are row-local: Generate / codegen
-    # lambdas, zero exchanges, no Python evaluation
-    plan = _plan(spark, "generator_functions_documents")
-    assert "Generate" in plan, plan
-    assert "Exchange" not in plan, plan
-    plan = _plan(spark, "hof_functions_documents")
-    assert "Exchange" not in plan, plan
-    assert "BatchEvalPython" not in plan, plan
 
     # the 8 KB Bloom word-table must broadcast into the probe side
     plan = _plan(spark, "bloom_probe_customers")
@@ -554,29 +529,15 @@ def test_copurchase_reuses_basket_exchange(spark):
     assert "CartesianProduct" not in plan, plan
 
 
-def test_tpch_q3_q5_join_strategies(spark):
-    """Q3: the filtered customer dimension must broadcast into the
-    fact-fact join (one shuffled join on orderkey, TakeOrdered for the
-    top-10, never a global sort). Q5: the region→nation→supplier chain
-    must reach the spine as broadcasts."""
-    q3 = _plan(spark, "tpch_q3_shipping_priority")
-    assert "BroadcastHashJoin" in q3, q3
-    assert "TakeOrderedAndProject" in q3, q3
-    q5 = _plan(spark, "tpch_q5_region_volume")
-    assert q5.count("BroadcastHashJoin") >= 3, q5
-    assert "CartesianProduct" not in q5, q5
-
-
 def test_round5_gate_shuffle_budgets(spark):
-    """Shuffle budgets of the second-wave gates: the moment and
-    navigation families are single-exchange (one keyed agg / one
+    """Shuffle budgets of the second-wave gates: the moment family
+    and the rolling median are single-exchange (one keyed agg / one
     keyed window); the KL diagnostic carries at most 4 keyed
     exchanges — two count aggregations, the token-keyed vocab join,
     the final per-group sum — with the corpus total folded in as a
     broadcast scalar, never a fifth exchange."""
     for name, budget in (
         ("stats_moments_lineitem", 1),
-        ("navigation_functions_events", 1),
         ("rolling_median_events", 1),
         ("source_kl_documents", 4),
     ):
@@ -585,95 +546,12 @@ def test_round5_gate_shuffle_budgets(spark):
         assert "CartesianProduct" not in p, name
 
 
-def test_round6_tpch_shapes(spark):
-    """Q19's disjunctive envelope must push into BOTH scans (the
-    quantity OR-bounds reach lineitem, the brand/size OR-bounds reach
-    part) — the defining property of the query; Q4's EXISTS must plan
-    as a semi join (orders never duplicated); Q22's only nested-loop
-    join is the broadcast of the 1-row stats aggregate."""
-    p = _plan(spark, "tpch_q19_disjunctive")
-    li_scan = next(s for s in p.splitlines() if "lineitem.parquet" in s)
-    part_scan = next(s for s in p.splitlines() if "part.parquet" in s)
-    assert "Or(" in li_scan and "l_quantity" in li_scan, li_scan
-    assert "Or(" in part_scan and "p_brand" in part_scan, part_scan
-
-    p = _plan(spark, "tpch_q4_order_priority")
-    assert "LeftSemi" in p, p
-    assert "CartesianProduct" not in p, p
-
-    p = _plan(spark, "tpch_q22_global_balance")
-    assert "CartesianProduct" not in p, p
-    assert "LeftAnti" in p, p
-
-
 def test_round6_analytic_shuffle_budgets(spark):
     """Linear gap-fill stays within the LOCF family's documented
-    budget; the three-step funnel is single-exchange."""
-    for name, budget in (
-        ("gapfill_linear_events", 3),
-        # three funnel steps, ONE exchange (running-flag windows +
-        # conditional agg share the user clustering) — the property
-        # that makes the shape k-step-scalable
-        ("funnel_three_step_events", 1),
-    ):
-        p = _plan(spark, name)
-        assert p.count("Exchange hashpartitioning") <= budget, (name, p)
-        assert "CartesianProduct" not in p, name
-
-
-def test_tpch_correlated_shapes_decorrelate(spark):
-    """Round-7 TPC-H correlated family: Catalyst must rewrite every
-    correlated subquery into joins — a surviving per-row subquery
-    (SubqueryExec under a filter/project) would execute |rows| times.
-    Q17's scalar-AVG threshold becomes a per-partkey aggregate joined
-    back (two lineitem scans, no more); Q21's EXISTS / NOT EXISTS pair
-    becomes one LeftSemi and one LeftAnti on l_orderkey; Q20's nested
-    IN chain + correlated HAVING becomes semi joins + an aggregate
-    join; Q2's correlated MIN joins the aggregate back on (partkey,
-    acctbal). Nothing plans a CartesianProduct."""
-    p = _plan(spark, "tpch_q17_small_qty_revenue")
-    assert "Subquery" not in p, p
-    assert p.count("lineitem.parquet") == 2, p
+    budget."""
+    p = _plan(spark, "gapfill_linear_events")
+    assert p.count("Exchange hashpartitioning") <= 3, p
     assert "CartesianProduct" not in p, p
-
-    p = _plan(spark, "tpch_q21_waiting_supplier")
-    assert "Subquery" not in p, p
-    assert "LeftSemi" in p, p
-    assert "LeftAnti" in p, p
-    assert "CartesianProduct" not in p, p
-
-    p = _plan(spark, "tpch_q20_excess_supply")
-    assert "Subquery" not in p, p
-    assert "LeftSemi" in p, p
-    assert "CartesianProduct" not in p, p
-
-    p = _plan(spark, "tpch_q2_min_acctbal_supplier")
-    assert "Subquery" not in p, p
-    assert "CartesianProduct" not in p, p
-
-
-def test_tpch_q6_pushdown_and_q16_antijoin(spark):
-    """Q6's four range predicates must ALL reach the lineitem scan
-    (the query is a pure pushdown benchmark — at 100 TB row-group
-    pruning does the work); Q16's null-free NOT IN must plan as a
-    plain anti join, not the null-aware nested loop."""
-    p = _plan(spark, "tpch_q6_forecast_revenue")
-    scan = next(s for s in p.splitlines() if "lineitem.parquet" in s)
-    for frag in ("l_shipdate", "l_discount", "l_quantity"):
-        assert frag in scan, (frag, scan)
-
-    p = _plan(spark, "tpch_q16_supplier_counts")
-    assert "LeftAnti" in p, p
-    assert "BroadcastNestedLoopJoin" not in p, p
-
-
-def test_round7_function_gate_plan_shapes(spark):
-    """The function-family gates keep their scale contracts:
-    agg_completeness is one partial-aggregated shuffle of 3 grouping
-    keys."""
-    p = _plan(spark, "agg_completeness_lineitem")
-    assert p.count("Exchange") == 1, p
-    assert "partial_" in p, p
 
 
 def test_cbo_analyze_statistics_flip_join_strategy(spark):
@@ -863,53 +741,6 @@ def test_global_scan_no_data_sized_single_partition(spark):
     assert "HashAggregate" not in nlines[nidx + 1], naive
 
 
-def test_tpch_q17_broadcast_to_shuffle_phase_transition(spark):
-    """Pin the q17 join phase transition the 10x sweep adjudicated
-    (SCALE.md round-8): at gate SF the decorrelated per-partkey AVG
-    side sits far below the broadcast threshold and the join-back is
-    a BroadcastHashJoin; once the side outgrows the threshold the
-    SAME query must plan the keyed exchange its docstring promises at
-    100 TB. The big side is emulated by disabling the static AND
-    adaptive broadcast thresholds (the size-relative condition, in
-    milliseconds, instead of materializing 10x data): the final
-    adaptive plan must carry SortMergeJoin/ShuffledHashJoin and ZERO
-    BroadcastHashJoins — a future broadcast() hint in the query or an
-    AQE conf change that forces broadcast regardless of size fails
-    one direction or the other."""
-    p = _plan(spark, "tpch_q17_small_qty_revenue")
-    assert "BroadcastHashJoin" in p, p
-
-    prev_thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    prev_aqe_thr = spark.conf.get(
-        "spark.sql.adaptive.autoBroadcastJoinThreshold", None
-    )
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set(
-            "spark.sql.adaptive.autoBroadcastJoinThreshold", "-1"
-        )
-        df = QUERIES["tpch_q17_small_qty_revenue"](spark, SF_DIR)
-        df.collect()
-        jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode
-        plan = df._jdf.queryExecution().explainString(
-            jmode.fromString("formatted")
-        )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thr)
-        if prev_aqe_thr is not None:
-            spark.conf.set(
-                "spark.sql.adaptive.autoBroadcastJoinThreshold",
-                prev_aqe_thr,
-            )
-        else:
-            spark.conf.unset(
-                "spark.sql.adaptive.autoBroadcastJoinThreshold"
-            )
-    assert "BroadcastHashJoin" not in plan, plan
-    assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan, plan
-    assert "CartesianProduct" not in plan, plan
-
-
 def test_hdr_sketch_shuffle_budget(spark):
     """The HDR quantile gate's plan (round 10): each half-build is a
     map-side-combined count aggregate (partial_count below the
@@ -931,11 +762,11 @@ def test_plan_fingerprint_stable_and_plan_sensitive(spark):
     canonicalized executed-plan hash must be (a) STABLE across
     repeated runs of the same query in one session — expression ids,
     lambda counters, RDD ids, UUIDs, paths and callsites are all
-    stripped — and (b) SENSITIVE to a genuine plan change (the
-    q21-class broadcast-threshold flip is exactly a different final
-    adaptive plan). (a) false-positive plan flips would erode the
-    regression bar into noise; (b) false negatives would silently
-    waive real flips as variance."""
+    stripped — and (b) SENSITIVE to a genuine plan change (a
+    broadcast-threshold flip on a hint-free join is exactly a
+    different final adaptive plan). (a) false-positive plan flips
+    would erode the regression bar into noise; (b) false negatives
+    would silently waive real flips as variance."""
     import bench
     from big_data_for_smart_houses_spark.queries import QUERIES
 
@@ -943,11 +774,10 @@ def test_plan_fingerprint_stable_and_plan_sensitive(spark):
     last, _, _ = poll(-1)
     sf = "/root/testdata/sf0.001"
 
-    # (a) stability, on a query with NO known plan bistability —
-    # q21 would be wrong here: its broadcast-threshold boundary is
-    # exactly the documented bistable case and can flip between two
-    # back-to-back runs when neighbouring tests have churned
-    # stats/conf (observed in-suite)
+    # (a) stability, on a query with NO known plan bistability — a
+    # join near its broadcast-threshold boundary would be wrong here:
+    # it can flip between two back-to-back runs when neighbouring
+    # tests have churned stats/conf (observed in-suite)
     stable_fn = QUERIES["gold_daily_energy_events"]
     fps, fpis = [], []
     for _ in range(2):
@@ -960,12 +790,12 @@ def test_plan_fingerprint_stable_and_plan_sensitive(spark):
     assert fps[0] is not None and fps[0] == fps[1], fps
     assert fpis[0] is not None and fpis[0] == fpis[1], fpis
 
-    # (b) sensitivity: forcing the broadcast threshold on the
-    # q21-class join changes static planning — BOTH hashes must move
-    # (the initial hash is the one that escalates to UNEXPLAINED
-    # unconditionally). Pin the threshold for the reference run too,
-    # so the bistability can't race the comparison.
-    fn = QUERIES["tpch_q21_waiting_supplier"]
+    # (b) sensitivity: flipping the broadcast threshold under the
+    # billing statement join (hint-free: AQE picks the strategy)
+    # changes static planning — BOTH hashes must move. Pin the
+    # threshold for the reference run too, so a bistable boundary
+    # can't race the comparison.
+    fn = QUERIES["billing_reconciliation_events"]
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set(

@@ -310,63 +310,6 @@ PLAIN_SPARK_GATES = frozenset({
     "late_shipment_flag",
     "union_dedup_orders",
 })
-# Plain Spark still registered and due for deletion: TPC-H
-# (core.py, tpch_gate.py) and the stats_gate function surfaces.
-# Shrink-only: delete a gate together with its name here.
-PENDING_DELETION = frozenset({
-    "agg_completeness_lineitem",
-    "approx_topk_events",
-    "argmax_functions_events",
-    "array_functions_documents",
-    "array_sort_hof_documents",
-    "cohort_retention_events",
-    "date_functions_events",
-    "datetime_functions_events",
-    "explode_outer_events",
-    "funnel_click_purchase",
-    "funnel_three_step_events",
-    "generator_functions_documents",
-    "hll_reach_events",
-    "hof_functions_documents",
-    "join_types_orders",
-    "json_null_functions_events",
-    "json_schema_profile_events",
-    "kmv_distinct_events",
-    "kmv_jaccard_events",
-    "kmv_merge_events",
-    "mad_outliers_events",
-    "map_functions_events",
-    "map_hof_functions_events",
-    "navigation_functions_events",
-    "regexp_functions_documents",
-    "session_window_events",
-    "setops_events",
-    "string_functions_documents",
-    "theta_sketch_events",
-    "tpch_q10_returned_items",
-    "tpch_q11_important_stock",
-    "tpch_q12_priority_shipping",
-    "tpch_q13_order_distribution",
-    "tpch_q14_promo_revenue",
-    "tpch_q15_top_supplier",
-    "tpch_q16_supplier_counts",
-    "tpch_q17_small_qty_revenue",
-    "tpch_q18_large_orders",
-    "tpch_q19_disjunctive",
-    "tpch_q20_excess_supply",
-    "tpch_q21_waiting_supplier",
-    "tpch_q22_global_balance",
-    "tpch_q2_min_acctbal_supplier",
-    "tpch_q3_shipping_priority",
-    "tpch_q4_order_priority",
-    "tpch_q5_region_volume",
-    "tpch_q6_forecast_revenue",
-    "tpch_q7_volume_shipping",
-    "tpch_q8_market_share",
-    "tpch_q9_product_profit",
-    "trending_types_hourly",
-    "window_completeness_events",
-})
 _PKG = "big_data_for_smart_houses_spark"
 _LOADERS = {"load_table", "configure_for_oracle_parity"}
 
@@ -416,5 +359,4 @@ def test_every_gate_reaches_package_code():
     plain = {
         n for n, fn in _ALL_QUERIES.items() if not _reaches_package_code(fn)
     }
-    allowed = PLAIN_SPARK_GATES | PENDING_DELETION
-    assert plain == allowed, sorted(plain ^ allowed)
+    assert plain == PLAIN_SPARK_GATES, sorted(plain ^ PLAIN_SPARK_GATES)
