@@ -27,6 +27,7 @@ from ..sources.parquet import (
     write_partitioned,
     write_snapshot,
 )
+from ..streaming.ingest import run_available_now
 
 GOLD_TABLES = (
     "daily_energy_consumption",
@@ -101,12 +102,8 @@ def run_bronze_to_silver_incremental(
     # backlog's on-disk volume is the right sizing input; restored
     # after the drain completes.
     with scale_profile(spark, bronze_path):
-        (
-            stream.writeStream.foreachBatch(process)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
+        run_available_now(
+            stream.writeStream.foreachBatch(process), checkpoint, None
         )
 
 

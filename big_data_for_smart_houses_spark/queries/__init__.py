@@ -58,15 +58,43 @@ for _m in _MODULES:
 
 # Every gate whose EXECUTED operator code this round edited: its old
 # green row is evidence about code that no longer exists.
-# - cdc_chunk/crossdoc: text.cdc_chunk_documents staged its expression
-#   pipeline (md5 boundary scan 6x -> 1x per row, posexplode_outer);
-# - dedup_groups/semantic_dedup: dedup.dedup_groups cut the pair
-#   generator's lineage before the edge union.
+# - every streaming gate: staged in a scratch_dir and run through
+#   streaming.ingest.run_available_now; the crash-restart gates share
+#   one restart helper and the join gates one staging function;
+# - compaction/bucketed/binaryfile/pysink: scratch_dir staging; the
+#   bucketed gate now writes through sources.bucketing.write_bucketed;
+# - pandas_udaf_geomean_events: its UDAF's type comes from type hints.
 _TOUCHED_THIS_ROUND: list = [
-    "cdc_chunk_documents",
-    "cdc_crossdoc_documents",
-    "dedup_groups_documents",
-    "semantic_dedup_embeddings",
+    "locf_stream_availablenow",
+    "ewma_stream_availablenow",
+    "stream_join_availablenow",
+    "stream_outer_join_availablenow",
+    "stream_fullouter_join_availablenow",
+    "stream_semi_join_availablenow",
+    "stream_left_anti_availablenow",
+    "stream_dedup_availablenow",
+    "stream_tumbling_availablenow",
+    "stream_merge_availablenow",
+    "stream_restart_availablenow",
+    "stream_rocksdb_availablenow",
+    "synthetic_stream_availablenow",
+    "stream_restart_pystate_availablenow",
+    "stream_torture_availablenow",
+    "stream_upsert_availablenow",
+    "stream_upsert_restart_availablenow",
+    "stream_timeout_sessions_availablenow",
+    "statestore_timeout_rearm_availablenow",
+    "stream_device_sessions_availablenow",
+    "rocksdb_pysessions_availablenow",
+    "statestore_sessions_availablenow",
+    "stream_update_mode_availablenow",
+    "hdr_sketch_stream_availablenow",
+    "billing_stream_availablenow",
+    "compaction_roundtrip_events",
+    "bucketed_join_orders",
+    "binaryfile_bmp_assets",
+    "pysink_roundtrip_orders",
+    "pandas_udaf_geomean_events",
 ]
 
 _CERTIFICATION_FRONT = _next_front(

@@ -15,14 +15,12 @@ every scan carries column pruning + predicate pushdown.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.numeric import clamp01, guarded_div, gate_quantize
 from ..session import configure_for_oracle_parity
-from ..sources.parquet import load_table
+from ..sources.parquet import load_table, scratch_dir
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -1053,7 +1051,7 @@ def q_pysink_roundtrip_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority"
     )
-    tmp = tempfile.mkdtemp(prefix="pysink_gate_")
+    tmp = scratch_dir("pysink_gate_")
     out = f"{tmp}/out"
     o.write.format("jsonl_sink").option("path", out).mode(
         "append"

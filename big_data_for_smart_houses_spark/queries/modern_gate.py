@@ -17,11 +17,12 @@ mapInPandas/UDAF surfaces — no row-at-a-time Python anywhere.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import configure_for_oracle_parity
-from ..sources.parquet import load_table
+from ..sources.parquet import load_table, scratch_dir
 
 QUERIES: dict = {}
 ORACLES: dict = {}
@@ -52,12 +53,11 @@ def q_compaction_roundtrip_events(
     count. Target bytes are set so gate SF lands at a handful of
     files; at 100 TB the same arithmetic yields 128 MB files."""
     import glob
-    import tempfile
 
     from ..sources.parquet import compact_files
 
     ev = load_table(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="compact_gate_")
+    tmp = scratch_dir("compact_gate_")
     small = f"{tmp}/small"
     out = f"{tmp}/compacted"
     ev.repartition(COMPACT_INPUT_FILES).write.mode("overwrite").parquet(small)
@@ -97,8 +97,6 @@ def q_bucketed_join_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     just test_bucketing.py), and returns the joined rows for value
     verification. Write once, join shuffle-free forever — the
     amortization story for every repeated spine join."""
-    import tempfile
-
     from ..sources.bucketing import read_bucketed, write_bucketed
 
     configure_for_oracle_parity(spark)
@@ -110,15 +108,11 @@ def q_bucketed_join_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_totalprice",
         "o_orderpriority",
     )
-    tmp = tempfile.mkdtemp(prefix="bucket_gate_")
+    tmp = scratch_dir("bucket_gate_")
     for name, df in (("_gate_li_bkt", li), ("_gate_o_bkt", o)):
         spark.sql(f"DROP TABLE IF EXISTS {name}")
-        (
-            df.write.mode("overwrite")
-            .bucketBy(BUCKETS, "l_orderkey")
-            .sortBy("l_orderkey")
-            .option("path", f"{tmp}/{name}")
-            .saveAsTable(name)
+        write_bucketed(
+            df, name, "l_orderkey", n_buckets=BUCKETS, path=f"{tmp}/{name}"
         )
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -500,14 +494,14 @@ def q_pandas_udaf_geomean_events(
     100 TB the UDAF aggregates per group AFTER the same keyed
     exchange a built-in agg would use."""
     import numpy as np
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
     from ..functions.numeric import quantize_cols
 
-    # explicit functionType: this module's PEP-563 string annotations
-    # defeat pandas_udf's signature inference
-    @pandas_udf("double", PandasUDFType.GROUPED_AGG)
-    def geomean(v):
+    # Series -> scalar hints make this a grouped-agg UDF; pd is a
+    # module global so the PEP-563 string annotations resolve
+    @pandas_udf("double")
+    def geomean(v: pd.Series) -> float:
         logs = np.sort(np.log(v.to_numpy(dtype="float64")))
         return float(np.exp(logs.sum() / len(logs)))
 
@@ -562,12 +556,11 @@ def q_binaryfile_bmp_assets(
     wrong length breaks the hash. sf_dir is unused: the staged files
     are the data."""
     import os
-    import tempfile
 
     from ..extensions.multimodal import decode_bmp_assets, encode_bmp
 
     configure_for_oracle_parity(spark)
-    tmp = tempfile.mkdtemp(prefix="binaryfile_gate_")
+    tmp = scratch_dir("binaryfile_gate_")
     for i in range(BINARYFILE_N_ASSETS):
         payload = encode_bmp(
             6 + i % 7,

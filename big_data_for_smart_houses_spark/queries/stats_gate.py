@@ -43,32 +43,6 @@ US_PER_HOUR = 3_600_000_000.0
 GAPFILL_STEP_S = 3600
 
 
-# DuckDB emulations of two Spark built-ins DuckDB lacks, for oracles
-# to share. tests/test_function_gate_props.py pins each against a
-# pure-Python reference; no registered oracle uses them at present.
-def width_bucket_sql(expr: str) -> str:
-    """DuckDB lacks width_bucket; with bounds (0, 64, 8) the bucket
-    width is exactly 8, so 1 + floor(x/8) is the same function in
-    closed form."""
-    return (
-        f"""CASE WHEN {expr} < 0 THEN 0
-                     WHEN {expr} >= 64 THEN 9
-                     ELSE 1 + CAST(FLOOR({expr} / 8.0) AS BIGINT)
-                END"""
-    )
-
-
-def next_monday_sql(date_expr: str, ts_expr: str) -> str:
-    """Strictly-after next-Monday in closed-form isodow arithmetic
-    (Spark next_day semantics)."""
-    return (
-        f"""CAST({date_expr} + to_days(CAST(
-         CASE WHEN (1 - isodow({ts_expr}) % 7 + 7) % 7 = 0 THEN 7
-              ELSE (1 - isodow({ts_expr}) % 7 + 7) % 7 END AS INTEGER))
-         AS DATE)"""
-    )
-
-
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     configure_for_oracle_parity(spark)
     return load_table(spark, sf_dir, "events")

@@ -25,14 +25,19 @@ def write_bucketed(
     n_buckets: int = 32,
     sort: bool = True,
     mode: str = "overwrite",
+    path: str | None = None,
 ) -> None:
     """Persist ``df`` as a bucketed (and optionally sorted) catalog
     table. Choose ``n_buckets`` so one bucket of the larger table fits
     an executor's memory at target scale; both sides of a co-located
-    join must use the same key and bucket count."""
+    join must use the same key and bucket count. ``path`` places the
+    table's files there (an external table); without it the table is
+    managed, under the session's warehouse directory."""
     writer = df.write.mode(mode).bucketBy(n_buckets, key)
     if sort:
         writer = writer.sortBy(key)
+    if path is not None:
+        writer = writer.option("path", path)
     writer.saveAsTable(name)
 
 

@@ -11,7 +11,10 @@ predicate pushdown, and multi-file unions are Catalyst built-ins
 
 from __future__ import annotations
 
+import atexit
 import datetime as dt
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -47,6 +50,24 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             {c: F.col(c).cast("timestamp") for c in ntz_cols}
         )
     return df
+
+
+_SCRATCH_ROOT: str | None = None
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh directory for a gate's staged input, checkpoint and sink.
+
+    Every one lives under one root per process, removed with its
+    contents when the interpreter exits. Not sooner: gates return lazy
+    reads over their sinks, and the streaming gates' memo hands the
+    same DataFrame back on later calls, so the files must outlive the
+    call that wrote them."""
+    global _SCRATCH_ROOT
+    if _SCRATCH_ROOT is None:
+        _SCRATCH_ROOT = tempfile.mkdtemp(prefix="smart_house_scratch_")
+        atexit.register(shutil.rmtree, _SCRATCH_ROOT, ignore_errors=True)
+    return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_ROOT)
 
 
 def spread(df: DataFrame, spark: SparkSession) -> DataFrame:

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ..schemas import REQUIRED_TELEMETRY_FIELDS, TELEMETRY_JSON_SCHEMA
 
@@ -97,6 +97,33 @@ def write_bronze_stream(
     elif trigger:
         writer = writer.trigger(processingTime=trigger)
     return writer.start()
+
+
+def run_available_now(
+    writer: DataStreamWriter, checkpoint: str, timeout_s: float | None
+) -> StreamingQuery:
+    """T5 — drain everything available on ``checkpoint`` and stop.
+
+    Starts ``writer`` (unstarted, sink and output mode already set)
+    with ``trigger(availableNow=True)`` and waits for it. A stream
+    that fails raises its own ``StreamingQueryException`` here. A
+    stream still running after ``timeout_s`` seconds is stopped, so it
+    releases the checkpoint, and ``TimeoutError`` is raised;
+    ``timeout_s=None`` waits without bound. Returns the finished
+    query, whose ``recentProgress`` holds the run's batches."""
+    q = (
+        writer.option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    if timeout_s is None:
+        q.awaitTermination()
+    elif not q.awaitTermination(timeout_s):
+        q.stop()
+        raise TimeoutError(
+            f"availableNow query {q.id} did not finish within {timeout_s} s"
+        )
+    return q
 
 
 def kafka_sink(
@@ -188,23 +215,22 @@ def billing_bronze_stream(
     spark: SparkSession,
     raw_dir: str,
     bronze_path: str,
-    checkpoint: str,
-) -> StreamingQuery:
-    """``billing.raw`` topic stand-in -> conform -> bronze.
+) -> DataStreamWriter:
+    """``billing.raw`` topic stand-in -> conform -> bronze, returned as
+    an unstarted writer for :func:`run_available_now`.
 
     JSON file-stream over ``raw_dir`` read with the lenient
     all-string payload schema, projected onto ``BILLING_SCHEMA`` by
     ``conform_to_schema`` (typed nulls for missing fields, try_cast
     for type drift, producer metadata dropped), then appended to a
-    ``billing_period``-partitioned parquet bronze sink under a
-    checkpoint, stamped with the ingestion time (the silver step's
-    supersede order) — re-running on the same checkpoint ingests
-    nothing new (exactly-once, the T6 contract the reference's
+    ``billing_period``-partitioned parquet bronze sink, stamped with
+    the ingestion time (the silver step's supersede order). The
+    runner's checkpoint makes it exactly-once: re-running on the same
+    checkpoint ingests nothing new (the T6 contract the reference's
     ad-hoc re-buffer loop only approximates). Partitioning by period
-    keeps
-    the layout month-cardinality (bounded) while the statement count
-    inside each period scales with users — the same event-date shape
-    as telemetry bronze (T2)."""
+    keeps the layout month-cardinality (bounded) while the statement
+    count inside each period scales with users — the same event-date
+    shape as telemetry bronze (T2)."""
     raw = spark.readStream.schema(BILLING_RAW_READ_SCHEMA).json(raw_dir)
     conformed = conform_to_schema(raw, BILLING_SCHEMA).withColumn(
         # uniform with telemetry bronze (write_bronze_stream): the
@@ -218,9 +244,6 @@ def billing_bronze_stream(
     return (
         conformed.writeStream.format("parquet")
         .option("path", bronze_path)
-        .option("checkpointLocation", checkpoint)
         .partitionBy("billing_period")
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )

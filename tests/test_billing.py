@@ -13,7 +13,6 @@ from __future__ import annotations
 
 import datetime as dt
 import os
-import tempfile
 
 import pytest
 from pyspark.sql import Row
@@ -33,9 +32,8 @@ user_003,2024-01,0.12,15.00,100.0,27.00
 
 
 @pytest.fixture()
-def billing_df(spark):
-    d = tempfile.mkdtemp(prefix="billing_fixture_")
-    path = os.path.join(d, "billing_data.csv")
+def billing_df(spark, tmp_path):
+    path = os.path.join(tmp_path, "billing_data.csv")
     with open(path, "w") as fh:
         fh.write(REFERENCE_SHAPED_CSV)
     return read_billing(spark, path)
@@ -327,32 +325,34 @@ class TestBillingBronzeStream:
     ]
 
     def _run(self, spark, tmp):
-        import os
-
-        from big_data_for_smart_houses_spark.streaming.ingest import (
-            billing_bronze_stream,
-        )
-
         raw_dir = os.path.join(tmp, "raw")
         os.makedirs(raw_dir, exist_ok=True)
         with open(os.path.join(raw_dir, "batch0.json"), "w") as fh:
             fh.write("\n".join(self.RAW_RECORDS) + "\n")
-        q = billing_bronze_stream(
-            spark,
-            raw_dir,
-            os.path.join(tmp, "bronze"),
-            os.path.join(tmp, "ckpt"),
-        )
-        assert q.awaitTermination(120), "bronze ingest did not drain"
+        self._ingest(spark, tmp)
         return spark.read.parquet(os.path.join(tmp, "bronze"))
 
-    def test_conform_drops_metadata_and_recovers_types(self, spark):
-        import tempfile
+    @staticmethod
+    def _ingest(spark, tmp):
+        """One availableNow run of the billing bronze stream over
+        ``tmp/raw`` on the checkpoint ``tmp/ckpt``."""
+        from big_data_for_smart_houses_spark.streaming.ingest import (
+            billing_bronze_stream,
+            run_available_now,
+        )
 
+        run_available_now(
+            billing_bronze_stream(
+                spark, os.path.join(tmp, "raw"), os.path.join(tmp, "bronze")
+            ),
+            os.path.join(tmp, "ckpt"),
+            120,
+        )
+
+    def test_conform_drops_metadata_and_recovers_types(self, spark, tmp_path):
         from big_data_for_smart_houses_spark.schemas import BILLING_SCHEMA
 
-        tmp = tempfile.mkdtemp(prefix="billing_bronze_stream_")
-        bronze = self._run(spark, tmp)
+        bronze = self._run(spark, str(tmp_path))
         # bronze carries exactly the published statement schema plus
         # the ingestion stamp (the partition column round-trips;
         # producer metadata is gone)
@@ -370,27 +370,14 @@ class TestBillingBronzeStream:
         assert rows["9"]["total_cost"] is None
         assert rows["9"]["billing_period"] == "2024-02"
 
-    def test_rerun_on_same_checkpoint_is_exactly_once(self, spark):
-        import os
-        import tempfile
-
-        from big_data_for_smart_houses_spark.streaming.ingest import (
-            billing_bronze_stream,
-        )
-
-        tmp = tempfile.mkdtemp(prefix="billing_bronze_rerun_")
+    def test_rerun_on_same_checkpoint_is_exactly_once(self, spark, tmp_path):
+        tmp = str(tmp_path)
         first = self._run(spark, tmp).count()
         assert first == len(self.RAW_RECORDS)
         # second start() on the SAME checkpoint: the file source's
         # commit log says every staged file is already ingested, so
         # the run drains without appending a single duplicate row
-        q = billing_bronze_stream(
-            spark,
-            os.path.join(tmp, "raw"),
-            os.path.join(tmp, "bronze"),
-            os.path.join(tmp, "ckpt"),
-        )
-        assert q.awaitTermination(120)
+        self._ingest(spark, tmp)
         assert (
             spark.read.parquet(os.path.join(tmp, "bronze")).count() == first
         )
@@ -403,13 +390,7 @@ class TestBillingBronzeStream:
                 ' "total_usage_kwh": "1.0", "total_cost": "5.1",'
                 ' "_source": "billing.raw"}\n'
             )
-        q = billing_bronze_stream(
-            spark,
-            os.path.join(tmp, "raw"),
-            os.path.join(tmp, "bronze"),
-            os.path.join(tmp, "ckpt"),
-        )
-        assert q.awaitTermination(120)
+        self._ingest(spark, tmp)
         assert (
             spark.read.parquet(os.path.join(tmp, "bronze")).count()
             == first + 1

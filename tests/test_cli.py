@@ -3,16 +3,14 @@ subcommands are covered by test_etl_pipeline.py)."""
 
 from __future__ import annotations
 
-import tempfile
-
 import pytest
 
 from big_data_for_smart_houses_spark.cli import main
 
 
 @pytest.fixture()
-def corpus(spark):
-    tmp = tempfile.mkdtemp()
+def corpus(spark, tmp_path):
+    tmp = f"{tmp_path}/corpus"
     rows = [
         (0, "the quick brown fox jumps over the lazy dog today"),
         (1, "the quick brown fox jumps over the lazy dog today"),  # exact dup
@@ -84,10 +82,8 @@ def test_cli_profile_chunk_and_lm_score(spark, corpus):
     assert lm[0].avg_logprob > lm[2].avg_logprob
 
 
-def test_cli_sentence_dedup(spark, corpus):
-    import tempfile as _tf
-
-    tmp = _tf.mkdtemp()
+def test_cli_sentence_dedup(spark, corpus, tmp_path):
+    tmp = str(tmp_path)
     rows = [
         (0, "shared chrome line. unique body zero"),
         (1, "shared chrome line. unique body one"),
@@ -102,10 +98,10 @@ def test_cli_sentence_dedup(spark, corpus):
     assert out[1].cleaned_text == "unique body one"
 
 
-def test_cli_sample_pack_zorder(spark, corpus):
+def test_cli_sample_pack_zorder(spark, corpus, tmp_path):
     from pyspark.sql import functions as F
 
-    tmp = tempfile.mkdtemp()
+    tmp = str(tmp_path)
     docs = spark.range(50).select(
         F.col("id").alias("doc_id"),
         F.concat(F.lit("w"), (F.col("id") % 5).cast("string")).alias("lang"),
@@ -130,10 +126,10 @@ def test_cli_sample_pack_zorder(spark, corpus):
     assert "zorder_key" in zo.columns and zo.count() == 50
 
 
-def test_cli_crossdoc_and_drift(spark, corpus):
+def test_cli_crossdoc_and_drift(spark, corpus, tmp_path):
     from pyspark.sql import functions as F
 
-    tmp = tempfile.mkdtemp()
+    tmp = str(tmp_path)
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 8
     uniq = "one two three four five six seven eight nine ten " * 8
     spark.createDataFrame(

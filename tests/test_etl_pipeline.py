@@ -5,8 +5,6 @@ a no-op (exactly-once)."""
 
 from __future__ import annotations
 
-import tempfile
-
 from big_data_for_smart_houses_spark.operators.gold import (
     daily_business_summary,
     daily_energy_consumption,
@@ -22,8 +20,10 @@ from big_data_for_smart_houses_spark.sources.parquet import write_partitioned
 from pyspark.sql import functions as F
 
 
-def test_end_to_end_etl(spark, telemetry_fixture, catalog_fixture):
-    tmp = tempfile.mkdtemp()
+def test_end_to_end_etl(
+    spark, telemetry_fixture, catalog_fixture, tmp_path
+):
+    tmp = str(tmp_path)
     bronze_path = f"{tmp}/bronze"
     silver_path = f"{tmp}/silver"
     gold_root = f"{tmp}/gold"
@@ -70,12 +70,12 @@ def test_end_to_end_etl(spark, telemetry_fixture, catalog_fixture):
 
 
 def test_silver_to_gold_caches_nothing_and_summary_matches(
-    spark, telemetry_fixture, catalog_fixture
+    spark, telemetry_fixture, catalog_fixture, tmp_path
 ):
     """Gold leaves nothing in the cache manager, and the summary built
     from the written daily/health tables equals the one computed from
     silver in memory."""
-    tmp = tempfile.mkdtemp()
+    tmp = str(tmp_path)
     silver_path, gold_root = f"{tmp}/silver", f"{tmp}/gold"
     write_partitioned(
         bronze_to_silver(telemetry_fixture, catalog_fixture), silver_path

@@ -549,20 +549,20 @@ def test_compaction_preserves_rows_and_reduces_files(spark, n_small):
         compact_files,
     )
 
-    root = tempfile.mkdtemp(prefix="compact_prop_")
-    df = spark.range(2000).selectExpr("id", "id * 2 AS v")
-    df.repartition(n_small * 8).write.mode("overwrite").parquet(
-        f"{root}/in"
-    )
-    n = compact_files(
-        spark, f"{root}/in", f"{root}/out", target_file_bytes=1 << 30
-    )
-    assert n == 1  # everything fits one target-size file
-    assert len(glob.glob(f"{root}/out/part-*.parquet")) == 1
-    got = sorted(
-        (r.id, r.v) for r in spark.read.parquet(f"{root}/out").collect()
-    )
-    assert got == [(i, 2 * i) for i in range(2000)]
+    with tempfile.TemporaryDirectory(prefix="compact_prop_") as root:
+        df = spark.range(2000).selectExpr("id", "id * 2 AS v")
+        df.repartition(n_small * 8).write.mode("overwrite").parquet(
+            f"{root}/in"
+        )
+        n = compact_files(
+            spark, f"{root}/in", f"{root}/out", target_file_bytes=1 << 30
+        )
+        assert n == 1  # everything fits one target-size file
+        assert len(glob.glob(f"{root}/out/part-*.parquet")) == 1
+        got = sorted(
+            (r.id, r.v) for r in spark.read.parquet(f"{root}/out").collect()
+        )
+        assert got == [(i, 2 * i) for i in range(2000)]
 
 
 @settings(max_examples=_ex(20), deadline=None)
@@ -643,14 +643,12 @@ def test_avi_codec_roundtrip(spark, width, height, frames):
     assert m["frame_means"] == frames
 
 
-def test_scale_up_tables_invariants(spark):
+def test_scale_up_tables_invariants(spark, tmp_path):
     """The 10x-sweep scale-up must grow data the way production data
     grows: exact factor x row counts, disjoint per-copy id ranges
     (constant per-key density), unchanged embedding norms (sign masks
     only), linearly-replicated exact-dup structure (per-copy text
     suffix), and fixed dims passed through untouched."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from big_data_for_smart_houses_spark.sources.synthetic import (
@@ -659,7 +657,7 @@ def test_scale_up_tables_invariants(spark):
     )
 
     src = "/root/testdata/sf0.001"
-    dst = tempfile.mkdtemp(prefix="scaleup_prop_")
+    dst = str(tmp_path)
     scale_up_tables(spark, src, dst, 3)
 
     for t in ("events", "documents", "embeddings", "orders"):

@@ -311,7 +311,14 @@ PLAIN_SPARK_GATES = frozenset({
     "union_dedup_orders",
 })
 _PKG = "big_data_for_smart_houses_spark"
-_LOADERS = {"load_table", "configure_for_oracle_parity"}
+# Harness, not operators: loading a table, pinning parity confs,
+# making a scratch directory and running a stream to completion.
+_LOADERS = {
+    "load_table",
+    "configure_for_oracle_parity",
+    "scratch_dir",
+    "run_available_now",
+}
 
 
 def _package_imports(nodes) -> dict:

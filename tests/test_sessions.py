@@ -5,7 +5,6 @@ the watermarked streaming rollup (streaming/aggregates)."""
 from __future__ import annotations
 
 import datetime as dt
-import tempfile
 
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -74,8 +73,8 @@ def test_sessionize_single_shuffle(spark):
     assert plan.count("Exchange") == 1, plan
 
 
-def test_stateful_session_tracker_across_restarts(spark):
-    tmp = tempfile.mkdtemp()
+def test_stateful_session_tracker_across_restarts(spark, tmp_path):
+    tmp = str(tmp_path)
     schema = StructType(
         [
             StructField("device_id", StringType()),
@@ -129,8 +128,8 @@ def test_stateful_session_tracker_across_restarts(spark):
     ]
 
 
-def test_windowed_rollup_watermark_drops_late(spark):
-    tmp = tempfile.mkdtemp()
+def test_windowed_rollup_watermark_drops_late(spark, tmp_path):
+    tmp = str(tmp_path)
     schema = StructType(
         [
             StructField("device_id", StringType()),
@@ -273,11 +272,11 @@ def test_asof_join_overlapping_payload_name(spark):
     assert rows[("b", 50)].payload_asof is None
 
 
-def test_streaming_ewma_matches_batch_across_restarts(spark):
+def test_streaming_ewma_matches_batch_across_restarts(spark, tmp_path):
     from big_data_for_smart_houses_spark.operators.windows import ewma_smooth
     from big_data_for_smart_houses_spark.streaming.stateful import ewma_stream
 
-    tmp = tempfile.mkdtemp()
+    tmp = str(tmp_path)
     schema = StructType(
         [
             StructField("user_id", LongType()),
@@ -336,14 +335,14 @@ def test_streaming_ewma_matches_batch_across_restarts(spark):
         assert abs(got[eid] - v) <= abs(float(np.float32(got[eid])) - got[eid]) + 1e-12
 
 
-def test_streaming_locf_matches_batch_closed_buckets(spark):
+def test_streaming_locf_matches_batch_closed_buckets(spark, tmp_path):
     """locf_stream == batch gap_fill_locf minus each key's final
     (still-open) bucket; the recurrence survives a checkpoint restart
     and carries gap values across micro-batches."""
     from big_data_for_smart_houses_spark.operators.stats import gap_fill_locf
     from big_data_for_smart_houses_spark.streaming.stateful import locf_stream
 
-    tmp = tempfile.mkdtemp()
+    tmp = str(tmp_path)
     schema = StructType(
         [
             StructField("user_id", LongType()),
@@ -409,12 +408,12 @@ def test_streaming_locf_matches_batch_closed_buckets(spark):
     assert {**out1, **out2} == expect
 
 
-def test_streaming_locf_in_bucket_last_wins(spark):
+def test_streaming_locf_in_bucket_last_wins(spark, tmp_path):
     """Two observations in one bucket across micro-batches: the later
     one is the value the closing emit carries."""
     from big_data_for_smart_houses_spark.streaming.stateful import locf_stream
 
-    tmp = tempfile.mkdtemp()
+    tmp = str(tmp_path)
     schema = StructType(
         [
             StructField("user_id", LongType()),
@@ -739,7 +738,7 @@ def test_timeout_label_is_emission_time_metadata():
     assert labels == ["timeout", "timeout"]
 
 
-def test_timeout_sessions_stream_boundary(spark):
+def test_timeout_sessions_stream_boundary(spark, tmp_path):
     """EventTimeTimeout boundary semantics on a real availableNow
     run, pinned for the gate oracle's closure predicate: a timeout at
     EXACTLY the final watermark does NOT fire (strict >), one below
@@ -747,8 +746,6 @@ def test_timeout_sessions_stream_boundary(spark):
     wm=950 s; users 1/2/3 have single events at 850/840/860 s
     (timeouts 950/940/960), user 4's pair (1 s, 1000 s) gap-closes
     in the data batch."""
-    import tempfile
-
     from big_data_for_smart_houses_spark.streaming.stateful import (
         track_sessions_timeout,
     )
@@ -757,7 +754,7 @@ def test_timeout_sessions_stream_boundary(spark):
     df = spark.createDataFrame(
         rows, "user_id long, sec double"
     ).select("user_id", F.timestamp_seconds("sec").alias("ts"))
-    tmp = tempfile.mkdtemp(prefix="timeout_boundary_")
+    tmp = str(tmp_path)
     df.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/staged")
     stream = (
         spark.readStream.schema(df.schema)
@@ -925,7 +922,7 @@ def test_sessions_out_of_order_min_folds_session_start():
     assert state.get == ([60_000_000], [100_000_000], [2])
 
 
-def test_timeout_tracker_state_survives_crash_restart(spark):
+def test_timeout_tracker_state_survives_crash_restart(spark, tmp_path):
     """Crash-recovery for the round-9 pending-interval LIST state: the
     timeout tracker's two-batch planted run is killed by an injected
     foreachBatch failure AFTER batch 0 committed its offsets and
@@ -935,7 +932,6 @@ def test_timeout_tracker_state_survives_crash_restart(spark):
     of an uninterrupted run — lost or corrupted array state would
     double-emit, drop the bridge merge, or resurrect removed keys."""
     import os
-    import tempfile
 
     from pyspark.errors import StreamingQueryException
 
@@ -1031,8 +1027,8 @@ def test_timeout_tracker_state_survives_crash_restart(spark):
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
-        clean = run(tempfile.mkdtemp(prefix="sessrestart_clean_"), False)
-        crashed = run(tempfile.mkdtemp(prefix="sessrestart_crash_"), True)
+        clean = run(f"{tmp_path}/clean", False)
+        crashed = run(f"{tmp_path}/crash", True)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     assert crashed == clean

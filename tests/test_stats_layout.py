@@ -5,8 +5,6 @@ the Z-order key's round-trip + re-layout locality guarantees."""
 from __future__ import annotations
 
 import datetime as dt
-import shutil
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -134,31 +132,26 @@ def test_zorder_key_monotone_in_both_dims(spark, tmp_path=None):
         assert keys == sorted(keys)
 
 
-def test_cluster_by_zorder_writes_disjoint_key_ranges(spark):
+def test_cluster_by_zorder_writes_disjoint_key_ranges(spark, tmp_path):
     """After re-layout, output files cover non-overlapping zorder_key
     ranges (range partition + in-file sort) — the precondition for
     parquet row-group min/max pruning on BOTH clustered columns."""
     rows = [(i % 97, float((i * 31) % 503)) for i in range(2000)]
     df = spark.createDataFrame(rows, "user_id long, value double")
-    out_dir = tempfile.mkdtemp(prefix="zorder_")
-    try:
-        cluster_by_zorder(df, "user_id", "value", n_files=8).write.mode(
-            "overwrite"
-        ).parquet(out_dir)
-        back = spark.read.parquet(out_dir)
-        ranges = (
-            back.groupBy(F.input_file_name().alias("f"))
-            .agg(
-                F.min("zorder_key").alias("lo"), F.max("zorder_key").alias("hi")
-            )
-            .collect()
-        )
-        spans = sorted((r["lo"], r["hi"]) for r in ranges)
-        assert len(spans) > 1
-        for (_, hi_prev), (lo_next, _) in zip(spans, spans[1:]):
-            assert hi_prev <= lo_next
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
+    out_dir = str(tmp_path / "zorder")
+    cluster_by_zorder(df, "user_id", "value", n_files=8).write.mode(
+        "overwrite"
+    ).parquet(out_dir)
+    back = spark.read.parquet(out_dir)
+    ranges = (
+        back.groupBy(F.input_file_name().alias("f"))
+        .agg(F.min("zorder_key").alias("lo"), F.max("zorder_key").alias("hi"))
+        .collect()
+    )
+    spans = sorted((r["lo"], r["hi"]) for r in ranges)
+    assert len(spans) > 1
+    for (_, hi_prev), (lo_next, _) in zip(spans, spans[1:]):
+        assert hi_prev <= lo_next
 
 
 def test_time_weighted_avg_holding_semantics(spark):

@@ -92,8 +92,8 @@ def test_rate_simulator_stream(spark):
         q.stop()
 
 
-def test_bronze_sink_event_date_partitioning(spark):
-    tmp = tempfile.mkdtemp()
+def test_bronze_sink_event_date_partitioning(spark, tmp_path):
+    tmp = str(tmp_path)
     msgs = [
         (_good_msg(1, "2025-07-20T10:00:00+00:00"),),
         (_good_msg(2, "2025-07-21T11:00:00+00:00"),),
@@ -124,7 +124,7 @@ def test_bronze_sink_event_date_partitioning(spark):
     assert spark.read.parquet(f"{tmp}/bronze").count() == 2
 
 
-def test_kafka_wire_format_parity(spark):
+def test_kafka_wire_format_parity(spark, tmp_path):
     """S1/S2 integration minus only the broker PROCESS: records are
     built byte-identically to the reference producer's wire format —
     value = ``json.dumps(payload, default=str).encode("utf-8")``,
@@ -150,7 +150,7 @@ def test_kafka_wire_format_parity(spark):
         TimestampType,
     )
 
-    tmp = tempfile.mkdtemp()
+    tmp = str(tmp_path)
     # producer-faithful payloads: same dict key order as
     # telemetry_sim.generate_telemetry_data, same serializer
     payloads = []
@@ -229,8 +229,10 @@ def test_kafka_wire_format_parity(spark):
     assert {str(r.event_date) for r in bronze.collect()} == {"2025-07-20"}
 
 
-def test_streaming_file_source_incremental(spark, telemetry_fixture):
-    tmp = tempfile.mkdtemp()
+def test_streaming_file_source_incremental(
+    spark, telemetry_fixture, tmp_path
+):
+    tmp = str(tmp_path)
     telemetry_fixture.write.mode("overwrite").parquet(f"{tmp}/bronze_flat")
     stream = silver_stream_from_bronze_files(spark, f"{tmp}/bronze_flat", BRONZE_SCHEMA)
     assert stream.isStreaming
@@ -245,7 +247,7 @@ def test_streaming_file_source_incremental(spark, telemetry_fixture):
     assert spark.sql("SELECT count(*) FROM inc_test").collect()[0][0] == 10
 
 
-def test_synthetic_stream_survives_exhaustion(spark):
+def test_synthetic_stream_survives_exhaustion(spark, tmp_path):
     """The synthetic stream source stops generating at ``n``; the
     query must keep running after that, idle, not die. Once the offset
     stops advancing the engine calls next() on the empty batch the
@@ -257,7 +259,7 @@ def test_synthetic_stream_survives_exhaustion(spark):
 
     register(spark)
     n = 200
-    tmp = tempfile.mkdtemp(prefix="synth_exhaust_")
+    tmp = str(tmp_path)
     q = (
         spark.readStream.format("synthetic_telemetry")
         .option("n", str(n))
@@ -284,7 +286,7 @@ def test_synthetic_stream_survives_exhaustion(spark):
     assert spark.read.parquet(f"{tmp}/out").count() == n
 
 
-def test_synthetic_stream_availablenow_drains_all_rows(spark):
+def test_synthetic_stream_availablenow_drains_all_rows(spark, tmp_path):
     """An availableNow run over the synthetic source must drain every
     row up to ``n`` in one run and stop cleanly, not end after the
     first prefetch."""
@@ -292,7 +294,7 @@ def test_synthetic_stream_availablenow_drains_all_rows(spark):
 
     register(spark)
     n = 2000
-    tmp = tempfile.mkdtemp(prefix="synth_drain_")
+    tmp = str(tmp_path)
     q = (
         spark.readStream.format("synthetic_telemetry")
         .option("n", str(n))
@@ -311,6 +313,89 @@ def test_synthetic_stream_availablenow_drains_all_rows(spark):
     assert out.selectExpr("count(DISTINCT row_id)").first()[0] == n
 
 
+def test_run_available_now_surfaces_the_stream_failure(spark, tmp_path):
+    """A foreachBatch that raises reaches the runner's caller as the
+    stream's own StreamingQueryException, with the batch's error in
+    it, not as a timeout."""
+    from pyspark.errors import StreamingQueryException
+
+    from big_data_for_smart_houses_spark.streaming.ingest import (
+        run_available_now,
+    )
+
+    spark.range(3).write.parquet(f"{tmp_path}/in")
+
+    def fail(_df, _epoch):
+        raise RuntimeError("planted batch failure")
+
+    writer = (
+        spark.readStream.schema("id long")
+        .parquet(f"{tmp_path}/in")
+        .writeStream.foreachBatch(fail)
+    )
+    with pytest.raises(StreamingQueryException, match="planted batch"):
+        run_available_now(writer, f"{tmp_path}/ckpt", 120)
+
+
+def test_run_available_now_stops_a_stream_past_its_timeout(
+    spark, tmp_path
+):
+    """A batch still running at the timeout: the runner stops the
+    query, so it no longer holds the checkpoint, and raises
+    TimeoutError naming the timeout."""
+    import time
+
+    from big_data_for_smart_houses_spark.streaming.ingest import (
+        run_available_now,
+    )
+
+    spark.range(1).write.parquet(f"{tmp_path}/in")
+
+    def slow(_df, _epoch):
+        time.sleep(3)
+
+    writer = (
+        spark.readStream.schema("id long")
+        .parquet(f"{tmp_path}/in")
+        .writeStream.queryName("runner_timeout_probe")
+        .foreachBatch(slow)
+    )
+    with pytest.raises(TimeoutError, match="within 1 s"):
+        run_available_now(writer, f"{tmp_path}/ckpt", 1)
+    assert "runner_timeout_probe" not in {
+        q.name for q in spark.streams.active
+    }
+
+
+def test_scratch_root_is_removed_at_exit(tmp_path):
+    """scratch_dir's per-process root, with everything made under it,
+    is gone once the process that made it exits. No Spark: a plain
+    interpreter whose temp dir is this test's tmp_path."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    code = (
+        "from big_data_for_smart_houses_spark.sources.parquet import "
+        "scratch_dir\n"
+        "d = scratch_dir('exit_probe_')\n"
+        "open(d + '/data', 'w').write('x')\n"
+        "print(d)\n"
+    )
+    made = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=Path(__file__).resolve().parents[1],
+        env={**os.environ, "TMPDIR": str(tmp_path)},
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout.strip()
+    assert made.startswith(str(tmp_path))
+    assert not os.path.exists(made)
+    assert list(tmp_path.iterdir()) == []
+
+
 def _run_stream(spark, tmp, build, name):
     collected = []
     q = (
@@ -325,14 +410,14 @@ def _run_stream(spark, tmp, build, name):
     return collected
 
 
-def test_dedup_stream_within_watermark(spark):
+def test_dedup_stream_within_watermark(spark, tmp_path):
     import datetime as dt
 
     from big_data_for_smart_houses_spark.streaming.ingest import (
         dedup_stream_within_watermark,
     )
 
-    tmp = tempfile.mkdtemp()
+    tmp = str(tmp_path)
     t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
     rows = [
         ("a", t0, 1.0),
@@ -361,14 +446,14 @@ def test_dedup_stream_within_watermark(spark):
     ]
 
 
-def test_stream_interval_join_bounds(spark):
+def test_stream_interval_join_bounds(spark, tmp_path):
     import datetime as dt
 
     from big_data_for_smart_houses_spark.streaming.joins import (
         stream_interval_join,
     )
 
-    tmp = tempfile.mkdtemp()
+    tmp = str(tmp_path)
     t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
 
     def ts(s):
@@ -404,7 +489,7 @@ def test_stream_interval_join_bounds(spark):
     assert got == [("p1", "c1"), ("p1", "c2")]
 
 
-def test_jsonl_roundtrip_and_corrupt_quarantine(spark):
+def test_jsonl_roundtrip_and_corrupt_quarantine(spark, tmp_path):
     from pyspark.sql.types import (
         DoubleType,
         LongType,
@@ -418,7 +503,7 @@ def test_jsonl_roundtrip_and_corrupt_quarantine(spark):
         write_jsonl,
     )
 
-    tmp = tempfile.mkdtemp()
+    tmp = str(tmp_path)
     lines = [
         '{"doc_id": 1, "text": "alpha", "score": 0.5}',
         '{"doc_id": 2, "text": "beta", "score": 1.5}',
@@ -447,7 +532,7 @@ def test_jsonl_roundtrip_and_corrupt_quarantine(spark):
     ]
 
 
-def test_document_curation_stream_end_to_end(spark):
+def test_document_curation_stream_end_to_end(spark, tmp_path):
     import datetime as _dt
 
     from big_data_for_smart_houses_spark.streaming.docs import (
@@ -457,7 +542,7 @@ def test_document_curation_stream_end_to_end(spark):
         write_curated_stream,
     )
 
-    tmp = tempfile.mkdtemp()
+    tmp = str(tmp_path)
     ts = _dt.datetime(2025, 7, 20, 10, 0, 0)
     good = (
         "the quick brown fox jumps over the lazy dog and keeps on "
@@ -515,7 +600,7 @@ def test_document_curation_stream_end_to_end(spark):
     assert out2.filter(F.col("doc_id") == 6).count() == 1
 
 
-def test_stream_interval_join_full_outer_key_survives(spark):
+def test_stream_interval_join_full_outer_key_survives(spark, tmp_path):
     """Full-outer mode: an unmatched RIGHT row must surface its own
     key (the left key is NULL for it) — pins the coalesce-key fix —
     and only rows final under the watermark emit null-padded."""
@@ -525,7 +610,7 @@ def test_stream_interval_join_full_outer_key_survives(spark):
         stream_interval_join,
     )
 
-    tmp = tempfile.mkdtemp()
+    tmp = str(tmp_path)
     t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
 
     def ts(s):
@@ -571,7 +656,7 @@ def test_stream_interval_join_full_outer_key_survives(spark):
         )
 
 
-def test_stream_interval_join_left_semi(spark):
+def test_stream_interval_join_left_semi(spark, tmp_path):
     """Semi join: multi-match purchase emits exactly ONCE with left
     columns only; unmatched purchase never emits; left_anti raises."""
     import datetime as dt
@@ -582,7 +667,7 @@ def test_stream_interval_join_left_semi(spark):
         stream_interval_join,
     )
 
-    tmp = tempfile.mkdtemp()
+    tmp = str(tmp_path)
     t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
 
     def ts(s):
@@ -623,7 +708,7 @@ def test_stream_interval_join_left_semi(spark):
         )
 
 
-def test_stream_interval_join_left_anti(spark):
+def test_stream_interval_join_left_anti(spark, tmp_path):
     """Anti join emulation (round 10): an unmatched-and-FINAL left
     row emits exactly once with left columns only; a matched row
     never emits; an unmatched row the watermark has not yet proven
@@ -634,7 +719,7 @@ def test_stream_interval_join_left_anti(spark):
         stream_interval_join,
     )
 
-    tmp = tempfile.mkdtemp()
+    tmp = str(tmp_path)
     t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
 
     def ts(s):
@@ -711,7 +796,9 @@ def test_arrow_events_normalizes_timestamp_flavors(tmp_path):
         assert got_us == want, flavor
 
 
-def test_stream_interval_join_watermark_boundary_microseconds(spark):
+def test_stream_interval_join_watermark_boundary_microseconds(
+    spark, tmp_path
+):
     """Pin the join finality bounds to the MICROSECOND (round 10,
     measured): Spark tracks event-time stats in ms, so the global
     watermark is floor_ms(min(max_l, max_r)) - delay, and the join
@@ -728,7 +815,7 @@ def test_stream_interval_join_watermark_boundary_microseconds(spark):
         stream_interval_join,
     )
 
-    tmp = tempfile.mkdtemp()
+    tmp = str(tmp_path)
     us = dt.datetime.fromisoformat
     # max on both sides = ...00:00:00.000700 -> floored watermark
     # W = 18:00:00.000; emission bound = W - 1ms = 17:59:59.999000
@@ -768,7 +855,7 @@ def test_stream_interval_join_watermark_boundary_microseconds(spark):
     assert sorted(r.purchase_id for r in out) == ["at_bound"]
 
 
-def test_session_window_watermark_boundary_microseconds(spark):
+def test_session_window_watermark_boundary_microseconds(spark, tmp_path):
     """Pin the session-window finality bound at sub-ms (round 10,
     measured): a closed session emits iff its µs-precision end is
     <= the MILLISECOND-FLOORED watermark (floor_ms(max ts) - delay),
@@ -792,7 +879,7 @@ def test_session_window_watermark_boundary_microseconds(spark):
         (k, us(v) - dt.timedelta(seconds=60)) for k, v in ends.items()
     ] + [("zmax", m)]
     df = spark.createDataFrame(rows, "user_id string, ts timestamp")
-    tmp = tempfile.mkdtemp()
+    tmp = str(tmp_path)
     df.write.parquet(f"{tmp}/in")
     s = spark.readStream.schema(df.schema).parquet(f"{tmp}/in")
     out = _run_stream(
@@ -930,31 +1017,31 @@ def test_stream_join_finality_property(
             if rid not in matched_r and rt <= w - lb - 1000:
                 expected.add((u, None, rid))
 
-    tmp = tempfile.mkdtemp()
-    spark.createDataFrame(
-        [(u, i, _ts(t)) for u, i, t in l_rows],
-        "user_id long, purchase_id string, p_ts timestamp",
-    ).write.parquet(f"{tmp}/p")
-    spark.createDataFrame(
-        [(u, i, _ts(t)) for u, i, t in r_rows],
-        "user_id long, click_id string, c_ts timestamp",
-    ).write.parquet(f"{tmp}/c")
-    ps = spark.readStream.schema(
-        "user_id long, purchase_id string, p_ts timestamp"
-    ).parquet(f"{tmp}/p")
-    cs = spark.readStream.schema(
-        "user_id long, click_id string, c_ts timestamp"
-    ).parquet(f"{tmp}/c")
-    out = _run_stream(
-        spark,
-        tmp,
-        lambda: stream_interval_join(
-            ps, cs, on="user_id", left_ts="p_ts", right_ts="c_ts",
-            lookback_seconds=_JOIN_LOOKBACK_S,
-            watermark_delay=f"{_JOIN_DELAY_S} seconds", how=mode,
-        ),
-        f"prop_{mode}",
-    )
+    with tempfile.TemporaryDirectory() as tmp:
+        spark.createDataFrame(
+            [(u, i, _ts(t)) for u, i, t in l_rows],
+            "user_id long, purchase_id string, p_ts timestamp",
+        ).write.parquet(f"{tmp}/p")
+        spark.createDataFrame(
+            [(u, i, _ts(t)) for u, i, t in r_rows],
+            "user_id long, click_id string, c_ts timestamp",
+        ).write.parquet(f"{tmp}/c")
+        ps = spark.readStream.schema(
+            "user_id long, purchase_id string, p_ts timestamp"
+        ).parquet(f"{tmp}/p")
+        cs = spark.readStream.schema(
+            "user_id long, click_id string, c_ts timestamp"
+        ).parquet(f"{tmp}/c")
+        out = _run_stream(
+            spark,
+            tmp,
+            lambda: stream_interval_join(
+                ps, cs, on="user_id", left_ts="p_ts", right_ts="c_ts",
+                lookback_seconds=_JOIN_LOOKBACK_S,
+                watermark_delay=f"{_JOIN_DELAY_S} seconds", how=mode,
+            ),
+            f"prop_{mode}",
+        )
     if mode == "left_anti":
         got = {(r.user_id, r.purchase_id) for r in out}
     else:
@@ -1021,33 +1108,33 @@ def test_session_window_finality_property(spark, max_sub, rows):
             if e <= w:
                 expected.add((u, s, e, k))
 
-    tmp = tempfile.mkdtemp()
-    data = [(u, _ts(t)) for u, t in ev] + [(9, _ts(m_us))]
-    spark.createDataFrame(
-        data, "user_id long, ts timestamp"
-    ).write.parquet(f"{tmp}/in")
-    s = spark.readStream.schema("user_id long, ts timestamp").parquet(
-        f"{tmp}/in"
-    )
-    out = _run_stream(
-        spark,
-        tmp,
-        lambda: (
-            s.withWatermark("ts", f"{_SESSION_DELAY_S} seconds")
-            .groupBy(
-                "user_id",
-                F.session_window("ts", f"{_SESSION_GAP_S} seconds"),
-            )
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(
-                "user_id",
-                F.col("session_window.start").alias("s"),
-                F.col("session_window.end").alias("e"),
-                "n",
-            )
-        ),
-        "prop_session",
-    )
+    with tempfile.TemporaryDirectory() as tmp:
+        data = [(u, _ts(t)) for u, t in ev] + [(9, _ts(m_us))]
+        spark.createDataFrame(
+            data, "user_id long, ts timestamp"
+        ).write.parquet(f"{tmp}/in")
+        s = spark.readStream.schema("user_id long, ts timestamp").parquet(
+            f"{tmp}/in"
+        )
+        out = _run_stream(
+            spark,
+            tmp,
+            lambda: (
+                s.withWatermark("ts", f"{_SESSION_DELAY_S} seconds")
+                .groupBy(
+                    "user_id",
+                    F.session_window("ts", f"{_SESSION_GAP_S} seconds"),
+                )
+                .agg(F.count(F.lit(1)).alias("n"))
+                .select(
+                    "user_id",
+                    F.col("session_window.start").alias("s"),
+                    F.col("session_window.end").alias("e"),
+                    "n",
+                )
+            ),
+            "prop_session",
+        )
 
     def _us_of(d):
         # collected timestamps come back naive in the session tz
