@@ -1,13 +1,23 @@
 #!/usr/bin/env python
-"""Benchmark the headline queries at $SPARK_GRAFT_SF_DIR (default
+"""Time the HEADLINE gate queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-Prints ONE JSON line:
-  {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+    python bench.py
+    SPARK_GRAFT_BENCH_ONLY=a,b SPARK_GRAFT_BENCH_RUNS=1 python bench.py
 
-Each query is forced end-to-end with the noop sink (full computation,
-no driver collect). A tiny warm-up query first so JVM/codegen startup
-is not billed to the first benchmark entry.
+Each query is forced end to end into the noop sink (full computation,
+no driver collect) N_RUNS times; its time is the minimum. The first
+run of each query also records its stage I/O and plan fingerprints.
+The silver pipeline's time is turned into events/s, the unit of the
+reference's published throughput.
+
+Writes the full result to BENCH_LOCAL.json and prints a compact JSON
+line as the last stdout line:
+  {"metric": "...", "value": N, "unit": "sec", "sf": ..., "n_queries": N,
+   "queries": {slowest 5}, "queries_note": "...",
+   "silver_throughput_events_per_s": N}
+It does not compare runs: perfbench/ decides whether a change is slower,
+and probes/scale_curve.py measures the pipeline at larger sizes.
 """
 
 from __future__ import annotations
@@ -197,402 +207,10 @@ if _only:
 
 # N_RUNS > 1 bounds run-to-run variance: per-query time is the MIN
 # across runs (the least-noisy estimator of the plan's cost on an
-# otherwise-idle machine); the reported value stays the sum of
-# per-query times so round-over-round numbers remain comparable.
-# n=3: with min-of-2, a single noisy run still sets half the floor.
+# otherwise-idle machine); the reported value is the sum of per-query
+# times. n=3: with min-of-2, a single noisy run still sets half the
+# floor.
 N_RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-
-
-def _bench_stream_boot(spark) -> float:
-    """Time a minimal availableNow stream (1-row parquet in, parquet
-    out) through ``run_available_now`` — the fixed startup cost shared
-    by every streaming gate, on the gates' own start/await path.
-    Min over N_RUNS, fresh checkpoint each run (matching how the
-    gates themselves execute)."""
-    import shutil
-    import tempfile
-    import time
-
-    from big_data_for_smart_houses_spark.streaming.ingest import (
-        run_available_now,
-    )
-
-    root = tempfile.mkdtemp(prefix="bench_stream_boot_")
-    try:
-        spark.range(1).write.mode("overwrite").parquet(f"{root}/in")
-        schema = spark.read.parquet(f"{root}/in").schema
-        best = None
-        for i in range(N_RUNS):
-            t0 = time.perf_counter()
-            run_available_now(
-                spark.readStream.schema(schema)
-                .parquet(f"{root}/in")
-                .writeStream.format("parquet")
-                .option("path", f"{root}/out{i}"),
-                f"{root}/ckpt{i}",
-                120,
-            )
-            t = round(time.perf_counter() - t0, 3)
-            best = t if best is None else min(best, t)
-        return best
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def _bench_compaction(spark, capture=None) -> dict[str, float]:
-    """Small-file tax, measured: the same full-scan aggregate over the
-    events table fragmented into 256 files vs compacted output
-    (sources/parquet.py:compact_files). The delta is pure per-file
-    overhead (open/footer/task-schedule) — the cost the compaction
-    operator exists to delete, which grows linearly with file count
-    at a fixed data size.
-
-    ``capture(name)`` hooks the main loop's fingerprint/io pollers
-    (round-12 verdict ask #2: these plans — the compaction payoff —
-    ARE the thing benchmarked, so they must be in query_plan_fp);
-    ``capture(None)`` discards the setup writes' executions so they
-    are never attributed to the first scan."""
-    import shutil
-    import tempfile
-    import time
-
-    from pyspark.sql import functions as F
-
-    from big_data_for_smart_houses_spark.sources.parquet import (
-        compact_files,
-    )
-
-    root = tempfile.mkdtemp(prefix="bench_compaction_")
-    try:
-        ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
-        ev.repartition(256).write.mode("overwrite").parquet(
-            f"{root}/small"
-        )
-        compact_files(
-            spark,
-            f"{root}/small",
-            f"{root}/compacted",
-            target_file_bytes=32 * 1024 * 1024,
-        )
-        if capture is not None:
-            capture(None)
-        results: dict[str, float] = {}
-        for run in range(N_RUNS):
-            for name, path in (
-                ("scan_small_files", f"{root}/small"),
-                ("scan_compacted", f"{root}/compacted"),
-            ):
-                t0 = time.perf_counter()
-                spark.read.parquet(path).agg(
-                    F.count(F.lit(1)), F.sum("value")
-                ).write.mode("overwrite").format("noop").save()
-                t = round(time.perf_counter() - t0, 3)
-                results[name] = min(results.get(name, t), t)
-                if run == 0 and capture is not None:
-                    capture(name)
-        return results
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-# Queries probed by the 10x nonlinear-blowup sweep: the most
-# expensive batch entries with join/iteration/window structure (the
-# shapes where O(n^k) hides at small SF — round 6's two O(gap²)
-# windows were found exactly this way). Streaming gates are excluded:
-# their cost is fixed machinery, measured by stream_boot_s.
-SCALE10X_FACTOR = 10
-SCALE10X_FLAG_RATIO = 15.0
-SCALE10X_PROBES = [
-    "logreg_quality_planted",
-    "semantic_dedup_embeddings",
-    "embedding_neardup_pairs",
-    "simhash_dedup_documents",
-    "minhash_dedup_documents",
-    "pagerank_user_transitions",
-    "dedup_groups_documents",
-    "embedding_ann_ivf",
-    "embedding_ann_lsh",
-    "cdc_crossdoc_documents",
-    "contrastive_triplets_documents",
-    "bucketed_join_orders",
-    "cms_token_counts",
-    "editdist_recall_planted",
-    "ppjoin_pairs_documents",
-    "bigram_lm_documents",
-    "source_kl_documents",
-    "dedup_exact_documents",
-    "zipf_slope_documents",
-    "bpe_pair_counts_documents",
-    "bpe_train_documents",
-    "inverted_index_documents",
-    "sessionize_events",
-    "gapfill_linear_events",
-    "rolling_median_events",
-    # round-7 late wave: streaming execution gates scale with STATE
-    # and staged input
-    "stream_upsert_availablenow",
-    # round-7 fifth wave: new iterative supersteps (k-means broadcast
-    # assignment, Bellman-Ford frontier) and the full-outer stream
-    # join's two-sided state
-    "kmeans_embeddings",
-    "sssp_weighted_transitions",
-    "stream_fullouter_join_availablenow",
-    # round-7 sixth wave: prefix-filter candidate volume (PPJoin),
-    # the distributed scan family (2 balanced shuffles — must stay
-    # linear), and its order-statistics/skyline riders
-    "global_rownum_orders",
-    "concurrency_sweepline_events",
-    "skyline_parts",
-    "weighted_quantiles_orders",
-    "gini_customer_orders",
-    "ks_statistic_events",
-    "ntile_scan_orders",
-    "trailing_active_users_events",
-    "asof_nearest_events",
-    # round 9: the deletion-neighborhood join's candidate volume
-    # (L+1 keys per string — must stay linear in rows), the
-    # pending-interval session trackers' state growth, and the
-    # Python-writer sink's per-partition fan-out
-    "edit1_neighborhood_customer",
-    "minhash_incremental_recall",
-    "bpe_apply_documents",
-    "bpe_rankmap_documents",
-    "stream_device_sessions_availablenow",
-    "stream_timeout_sessions_availablenow",
-    "pysink_roundtrip_orders",
-    # round 10: the HDR sketch's counter volume (bucket count is
-    # bounded by the value RANGE, not rows — shuffle should grow
-    # sublinearly), its streaming partial-merge variant, and the
-    # left-anti join's state volume
-    "hdr_quantile_sketch_events",
-    "hdr_sketch_stream_availablenow",
-    "stream_left_anti_availablenow",
-    # round 11: the remaining applyInPandasWithState pair — the EWMA
-    # fold (O(keys) state, per-key numpy fold) and LOCF gap-fill
-    # (open-bucket accumulator + bounded gap materialization);
-    # device/timeout session trackers already sweep above
-    "ewma_stream_availablenow",
-    "locf_stream_availablenow",
-    # round 12: the d>2 skyline's local/merge path — phase-1 local
-    # skylines must keep the merge union small as parts grow
-    # (probes/skyline10x.py measures the union directly)
-    "skyline3d_parts",
-]
-
-
-def _bench_scale10x(spark) -> dict:
-    """Nonlinear-blowup sweep (env SPARK_GRAFT_SCALE10X=1): run each
-    probe query at 1x and at a deterministic 10x scale-up
-    (sources/synthetic.py:scale_up_tables — 10x the keys, constant
-    per-key density, linear dup structure) and report BOTH the
-    wall-time ratio and the shuffle-write-bytes ratio. rows x10 with
-    wall ratio > SCALE10X_FLAG_RATIO flags a superlinear query;
-    shuffle growth > row-growth x 1.5 (same 15x bar) with a
-    non-trivial absolute size flags a scale-killer hiding behind
-    local[32]'s free shuffle — bytes that become NETWORK at 1000
-    executors even when local wall time stays flat. One timed run
-    per side — the signal sought is 15x-vs-10x, far above noise."""
-    import shutil
-    import tempfile
-    import time
-
-    from big_data_for_smart_houses_spark.queries import QUERIES
-    from big_data_for_smart_houses_spark.sources.synthetic import (
-        scale_up_tables,
-    )
-
-    root = tempfile.mkdtemp(prefix="bench_scale10x_")
-    out: dict = {}
-    poll = _stage_metrics_poller(spark)
-    last_stage, _ = poll(-1)
-    # Streaming gates memoize per (gate, sf_dir); the headline pass
-    # already ran them at SF_DIR, so without this the 1x timing below
-    # would be a memo hit (~0s) and the ratio meaningless.
-    prev_memo = os.environ.get("SPARK_GRAFT_NO_STREAM_MEMO")
-    os.environ["SPARK_GRAFT_NO_STREAM_MEMO"] = "1"
-    try:
-        scale_up_tables(spark, SF_DIR, f"{root}/x10", SCALE10X_FACTOR)
-        for name in SCALE10X_PROBES:
-            fn = QUERIES.get(name)
-            if fn is None:
-                continue
-            try:
-                last_stage, _ = poll(last_stage)
-                t0 = time.perf_counter()
-                fn(spark, SF_DIR).write.mode("overwrite").format(
-                    "noop"
-                ).save()
-                t1 = round(time.perf_counter() - t0, 3)
-                last_stage, io1 = poll(last_stage)
-                t0 = time.perf_counter()
-                fn(spark, f"{root}/x10").write.mode(
-                    "overwrite"
-                ).format("noop").save()
-                t10 = round(time.perf_counter() - t0, 3)
-                last_stage, io10 = poll(last_stage)
-            except Exception as exc:  # noqa: BLE001
-                out[name] = {"error": f"{type(exc).__name__}: {exc}"[:200]}
-                continue
-            ratio = round(t10 / t1, 2) if t1 > 0 else None
-            sw1 = io1["shuffle_write_mb"]
-            sw10 = io10["shuffle_write_mb"]
-            # shuffle growth bar: row-growth (10x) x 1.5 — but only at
-            # a non-trivial absolute size, so a 0.01->0.3 MB startup
-            # artifact can't flag
-            sw_ratio = round(sw10 / sw1, 2) if sw1 > 0.05 else None
-            sw_flag = bool(
-                sw_ratio
-                and sw_ratio > SCALE10X_FACTOR * 1.5
-                and sw10 > 10.0
-            )
-            out[name] = {
-                "t1": t1,
-                "t10": t10,
-                "ratio": ratio,
-                "shuffle_mb_1x": sw1,
-                "shuffle_mb_10x": sw10,
-                "shuffle_ratio": sw_ratio,
-                "flagged": bool(ratio and ratio > SCALE10X_FLAG_RATIO),
-                "shuffle_flagged": sw_flag,
-            }
-            print(
-                f"  scale10x {name}: {t1:.2f}s -> {t10:.2f}s"
-                f" ({ratio}x); shuffle {sw1:.1f} -> {sw10:.1f} MB"
-                f" ({sw_ratio}x)",
-                file=sys.stderr,
-            )
-        # Skyline DISTINCT-GROWTH contract (round-12 verdict ask #7):
-        # the value-replicating scale-up above keeps skyline3d's
-        # distinct-point count constant (the dedup absorbs the 10x),
-        # so the sweep row alone cannot catch a frontier-size
-        # regression. This permanent entry re-projects the third
-        # dimension from the raw partkey modulo a prime so distinct
-        # points genuinely grow ~10x, then ASSERTS the operator's
-        # scale contract — the phase-1 local-skyline union the single
-        # merge task receives must stay near the true frontier
-        # (sublinear), never near the input. The union is measured by
-        # an independent copy of the dominance kernel
-        # (probes/skyline10x._local_survivors) so the operator under
-        # test stays untouched. Flag bar: union growing as fast as
-        # half the distinct growth, or past 1% of distinct points,
-        # means local dominance stopped pruning — the merge task
-        # becomes the 100 TB bottleneck.
-        try:
-            from pyspark.sql import functions as F
-
-            from probes.skyline10x import _local_survivors
-
-            def _wide_pts(d):
-                return (
-                    spark.read.parquet(f"{d}/part.parquet")
-                    .select(
-                        F.col("p_retailprice").alias("_s0"),
-                        (-F.col("p_size")).alias("_s1"),
-                        (-(F.col("p_partkey") % 10007)).alias("_s2"),
-                    )
-                    .distinct()
-                )
-            p1, p10 = _wide_pts(SF_DIR), _wide_pts(f"{root}/x10")
-            d1, d10 = p1.count(), p10.count()
-            u1, u10 = _local_survivors(p1), _local_survivors(p10)
-            growth = d10 / max(d1, 1)
-            # The binding contract is ABSOLUTE: the merge task's
-            # input must stay ~the frontier size, never near the
-            # input — 1% of distinct points is ~60x the measured
-            # union at the standing config (128 of 200k). Guards:
-            # below ~10k distinct the partitions hold too few points
-            # for local dominance to prune (small-input geometry,
-            # same idea as the shuffle bar's >10 MB floor), and the
-            # growth-ratio rule needs a stable base (frontier sizes
-            # in the low tens are integer-lumpy: the measured 13 ->
-            # 128 is healthy log^2 growth, not a regression).
-            union_flagged = bool(
-                d10 > 10_000
-                and (
-                    u10 > 0.01 * d10
-                    or (u1 >= 100 and u10 > u1 * growth * 0.5)
-                )
-            )
-            out["skyline3d_distinct_growth"] = {
-                "distinct_1x": d1,
-                "distinct_10x": d10,
-                "union_1x": u1,
-                "union_10x": u10,
-                "flagged": union_flagged,
-            }
-            print(
-                f"  scale10x skyline3d_distinct_growth: union {u1} ->"
-                f" {u10} over distinct {d1} -> {d10}"
-                f" (flagged={union_flagged})",
-                file=sys.stderr,
-            )
-        except Exception as exc:  # noqa: BLE001
-            out["skyline3d_distinct_growth"] = {
-                "error": f"{type(exc).__name__}: {exc}"[:200]
-            }
-        return out
-    finally:
-        if prev_memo is None:
-            os.environ.pop("SPARK_GRAFT_NO_STREAM_MEMO", None)
-        else:
-            os.environ["SPARK_GRAFT_NO_STREAM_MEMO"] = prev_memo
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def _bench_skew(spark, capture=None) -> dict[str, float]:
-    """Time the same skewed shuffle join plain vs salted. The fact is
-    the events table with every user_id % 5 == 0 collapsed onto key 0
-    (one key = ~20% of rows); plain hashes that key into ONE shuffle
-    partition, salted spreads it over 16. Reported as min over
-    N_RUNS, same estimator as the headline entries.
-
-    ``capture(name)`` hooks the main loop's fingerprint/io pollers
-    (round-12 verdict ask #2: the salt fan-out plan is the thing
-    benchmarked); ``capture(None)`` discards the dim-write setup."""
-    import shutil
-    import tempfile
-    import time
-
-    from pyspark.sql import functions as F
-
-    from big_data_for_smart_houses_spark.operators.skew import salted_join
-
-    ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    fact = ev.select(
-        F.when((F.col("user_id") % 5) == 0, 0)
-        .otherwise(F.col("user_id"))
-        .alias("k"),
-        "value",
-        "ts",
-    )
-    tmp = tempfile.mkdtemp(prefix="bench_skew_dim_")
-    try:
-        fact.select("k").distinct().withColumn(
-            "attr", F.md5(F.col("k").cast("string"))
-        ).write.mode("overwrite").parquet(tmp)
-        dim = spark.read.parquet(tmp)
-        if capture is not None:
-            capture(None)
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            results: dict[str, float] = {}
-            for run in range(N_RUNS):
-                for name, df in (
-                    ("skew_join_plain", fact.join(dim, "k")),
-                    ("skew_join_salted", salted_join(fact, dim, on="k")),
-                ):
-                    t0 = time.perf_counter()
-                    df.write.mode("overwrite").format("noop").save()
-                    t = round(time.perf_counter() - t0, 3)
-                    results[name] = min(results.get(name, t), t)
-                    if run == 0 and capture is not None:
-                        capture(name)
-            return results
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _stage_metrics_poller(spark):
@@ -775,9 +393,8 @@ def main() -> None:
     # warm-up: JVM, codegen, parquet footer caches
     spark.read.parquet(f"{SF_DIR}/region.parquet").count()
 
-    # One failing query must not zero out the whole round's numbers
-    # (round 3 lost every timing to a single AnalysisException): record
-    # the error, skip the query in later runs, keep benchmarking.
+    # One failing query must not lose every other timing: record the
+    # error, skip the query in later runs, keep benchmarking.
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
     query_io: dict[str, dict] = {}
@@ -796,15 +413,14 @@ def main() -> None:
         poll_fp = None
         last_exec_id = -1
 
-    def _micro_capture(name):
-        """io + plan-fingerprint capture for one entry, polled AFTER it
+    def capture(name):
+        """io + plan-fingerprint capture for one query, polled AFTER it
         runs so AQE plans are final. Both are properties of the plan,
-        not the run, so callers capture on the first (cold) run only:
+        not the run, so the loop captures on the first (cold) run only:
         each poll walks every retained StageData over py4j, and polling
         warm runs would bill wall time to every min-of-N timing for no
-        new data. ``name=None`` polls-and-discards (setup writes, a
-        failed query) so those executions are never billed to the next
-        named entry."""
+        new data. ``name=None`` polls-and-discards (a failed query) so
+        those executions are never billed to the next query."""
         nonlocal last_stage_id, last_exec_id, poll_stages, poll_fp
         if poll_stages is not None:
             try:
@@ -832,10 +448,9 @@ def main() -> None:
                 continue
             # Streaming gates execute TWICE (cold + warm), not N_RUNS
             # times: the min is the warm number (codegen/worker
-            # startup amortized — same quantity r6's min-of-3
-            # reported, at one fewer full stream per gate), and the
-            # memo is bypassed below so the warm run is a REAL
-            # end-to-end stream, never a cache read.
+            # startup amortized), and the memo is bypassed above so
+            # the warm run is a REAL end-to-end stream, never a cache
+            # read.
             if name.endswith("_availablenow") and run > 1:
                 continue
             t0 = time.perf_counter()
@@ -846,54 +461,13 @@ def main() -> None:
                 errors[name] = f"{type(exc).__name__}: {exc}"[:300]
                 print(f"  [{run}] {name}: ERROR {errors[name]}", file=sys.stderr)
                 if run == 0:
-                    _micro_capture(None)
+                    capture(None)
                 continue
             t = round(time.perf_counter() - t0, 3)
             timings[name] = min(timings.get(name, t), t)
             if run == 0:
-                _micro_capture(name)
+                capture(name)
             print(f"  [{run}] {name}: {t:.3f}s", file=sys.stderr)
-
-    # Stream-boot baseline: the fixed cost every `*_availablenow`
-    # gate pays before its first row (query start + checkpoint init +
-    # one empty-ish micro-batch). Recorded so round-over-round
-    # streaming-gate deltas can be read net of boot noise — a gate
-    # that moved by ~stream_boot_s moved by NOTHING.
-    try:
-        out_boot = _bench_stream_boot(spark)
-    except Exception as exc:  # noqa: BLE001
-        errors["stream_boot"] = f"{type(exc).__name__}: {exc}"[:300]
-        out_boot = None
-
-    # Skew microbenchmark (performance signal for the salting path —
-    # correctness is gated separately by salted_join_orders): one key
-    # owns 20% of the fact rows; the dim is written out first so its
-    # construction isn't billed, and broadcast is disabled so the join
-    # actually shuffles (at 100 TB the dim wouldn't broadcast — this
-    # measures the shape that exists at scale). AQE skew-split stays ON
-    # for the plain side: the delta reported is salting vs what AQE
-    # alone does at this partition size.
-    try:
-        skew_t = _bench_skew(spark, capture=_micro_capture)
-        timings.update(skew_t)
-    except Exception as exc:  # noqa: BLE001
-        errors["skew_bench"] = f"{type(exc).__name__}: {exc}"[:300]
-
-    # Small-file-tax microbenchmark (the compaction operator's
-    # standing perf signal, like skew for salting)
-    try:
-        timings.update(_bench_compaction(spark, capture=_micro_capture))
-    except Exception as exc:  # noqa: BLE001
-        errors["compaction_bench"] = f"{type(exc).__name__}: {exc}"[:300]
-
-    # Opt-in 10x nonlinear-blowup sweep (several extra minutes):
-    # SPARK_GRAFT_SCALE10X=1 python bench.py
-    scale10x = None
-    if os.environ.get("SPARK_GRAFT_SCALE10X"):
-        try:
-            scale10x = _bench_scale10x(spark)
-        except Exception as exc:  # noqa: BLE001
-            errors["scale10x_bench"] = f"{type(exc).__name__}: {exc}"[:300]
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     out = {
@@ -903,10 +477,6 @@ def main() -> None:
         "queries": timings,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
-    if out_boot is not None:
-        out["stream_boot_s"] = out_boot
-    if scale10x is not None:
-        out["scale10x"] = scale10x
     if query_io:
         out["query_io"] = query_io
     if query_fp:
@@ -918,8 +488,8 @@ def main() -> None:
     # comparison never needs hand arithmetic.
     silver_t = timings.get("silver_pipeline_events")
     if silver_t:
-        # Best of SIX: the three interleaved runs above plus three
-        # dedicated back-to-back runs here at end-of-bench, when the
+        # Best of the N_RUNS interleaved runs above plus three
+        # dedicated back-to-back runs here at the end, when the
         # JVM/codegen/page cache are as warm as they get.
         n_events = spark.read.parquet(f"{SF_DIR}/events.parquet").count()
         fn = QUERIES.get("silver_pipeline_events")
@@ -933,13 +503,12 @@ def main() -> None:
     if errors:
         out["errors"] = errors
     payload = json.dumps(out)
-    # The driver keeps only the TAIL of stdout (~2000 chars) and
-    # parses the FINAL line: the full per-query JSON (250+ timings +
-    # query_io) blew past that window in rounds 6-7, leaving the round
-    # artifact with "parsed": null. Persist the complete JSON next to
-    # this script (committed per round), then print a compact summary
-    # — same schema, "queries" trimmed to the slowest 5 — as the LAST
-    # stdout line so the driver's parse always succeeds.
+    # A reader that keeps only the tail of stdout (~2000 chars) and
+    # parses the final line cannot hold the full per-query JSON
+    # (timings + query_io + plan fingerprints). Persist the complete
+    # JSON next to this script, then print a compact summary — same
+    # schema, "queries" trimmed to the slowest 5 — as the LAST stdout
+    # line.
     local = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                          "BENCH_LOCAL.json")
     with open(local, "w") as fh:

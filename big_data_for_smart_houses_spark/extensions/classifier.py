@@ -142,7 +142,7 @@ def train_logreg_hashed(
                 # order), which the GD fixpoint and every gate margin
                 # tolerate by construction. Measured on the sf0.1 gate:
                 # 2.2x end to end (8 iterations, 3 exchanges -> 1 per
-                # iteration; plans/r14/logreg_quality_planted_*.txt).
+                # iteration).
                 err = feats.select(
                     id_col,
                     features_col,

@@ -69,12 +69,11 @@ def _salted_bucket(id_col: str, salt: int, buckets: int) -> Column:
     (< B each, <= ~1e12 at the largest modulus) and can never leave
     int64, for ANY int64 id. The naive ``id * mult`` overflows at
     id > 2^63/multiplier (≈ 4.1e6 at salt=1000 — reachable by real
-    corpus ids, and by the 100x scale probes' strided ids), silently
-    wrapping with ANSI off and throwing with ANSI on; the factored
-    form yields BIT-IDENTICAL buckets inside that envelope and stays
-    correct beyond it. Oracles replaying ``(id * K) % B`` in SQL are
-    unaffected at gate-scale ids (DuckDB would error loudly on a
-    genuine overflow, not drift)."""
+    corpus ids), silently wrapping with ANSI off and throwing with
+    ANSI on; the factored form yields BIT-IDENTICAL buckets inside
+    that envelope and stays correct beyond it. Oracles replaying
+    ``(id * K) % B`` in SQL are unaffected at gate-scale ids (DuckDB
+    would error loudly on a genuine overflow, not drift)."""
     mult = KNUTH + salt * SALT_STRIDE
     return F.pmod(
         F.pmod(F.col(id_col), F.lit(buckets)) * F.lit(mult % buckets),

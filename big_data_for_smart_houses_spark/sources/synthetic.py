@@ -156,134 +156,3 @@ class SyntheticTelemetryStreamReader(DataSourceStreamReader):
 
     def read(self, partition: _Slice):
         return _generate(partition)
-
-
-# ---------------------------------------------------------------------------
-# Deterministic scale-up (round 7): replicate the driver testdata by
-# an integer factor for nonlinear-blowup sweeps
-# ---------------------------------------------------------------------------
-
-# Added to every per-copy id: larger than any id in any testdata table
-# so copies never collide, and referential integrity holds WITHIN a
-# copy (fact keys and their dimension keys shift together).
-SCALE_KEY_STRIDE = 100_000_000
-
-# id columns shifted per copy, by table (nation/region keys stay put —
-# dimensions that are genuinely fixed-cardinality don't scale with
-# data volume, matching how a real warehouse grows)
-_SCALE_ID_COLS = {
-    "events": ["event_id", "user_id"],
-    "documents": ["doc_id"],
-    "embeddings": ["vec_id"],
-    "orders": ["o_orderkey", "o_custkey"],
-    "lineitem": ["l_orderkey", "l_partkey", "l_suppkey"],
-    "customer": ["c_custkey"],
-    "supplier": ["s_suppkey"],
-    "part": ["p_partkey"],
-}
-
-
-def scale_up_tables(
-    spark,
-    src_dir: str,
-    dst_dir: str,
-    factor: int,
-    tables: list[str] | None = None,
-) -> None:
-    """Materialize ``factor``× copies of the testdata tables under
-    ``dst_dir`` — the input for the O(n^k) blowup sweep (SCALE.md):
-    run a query at 1× and at factor×, and a wall-time ratio well above
-    the factor exposes superlinear behavior that small-SF gates hide
-    (round 6 found two O(gap²) windows exactly this way).
-
-    The scale-up grows the data the way production data grows:
-
-    * every id column shifts by ``copy · SCALE_KEY_STRIDE`` so per-key
-      densities stay CONSTANT and key cardinality grows ``factor``×
-      (more users/orders/docs — not hotter ones), with referential
-      integrity intact within each copy;
-    * document text gets a per-copy suffix token so exact/near-dup
-      structure replicates linearly instead of every doc acquiring
-      ``factor-1`` planted twins (which would grow pair counts
-      quadratically — a data-SHAPE change, not a scale-up);
-    * embeddings get a per-copy deterministic sign mask (copy 0 is
-      the identity) — norms unchanged, within-copy geometry identical,
-      cross-copy cosines decorrelated, so ANN/near-dup workloads
-      scale in n rather than in planted duplicates;
-    * nation/region pass through unscaled (fixed-cardinality dims).
-
-    Everything is column-expression work — no RNG, no driver-side
-    rows; reruns are bit-identical.
-    """
-    from pyspark.sql import functions as F
-
-    tables = tables or [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]
-    for t in tables:
-        df = spark.read.parquet(f"{src_dir}/{t}.parquet")
-        if t in ("region", "nation"):
-            df.write.mode("overwrite").parquet(f"{dst_dir}/{t}.parquet")
-            continue
-        copies = []
-        for i in range(factor):
-            c = df
-            for col in _SCALE_ID_COLS.get(t, []):
-                c = c.withColumn(
-                    col, F.col(col) + F.lit(i * SCALE_KEY_STRIDE)
-                )
-            if t == "documents" and i > 0:
-                # Suffix the copy tag onto EVERY word, not just the
-                # document end: a trailing suffix leaves cross-copy
-                # shingle sets ~90% shared, so at any realistic
-                # near-dup threshold every doc still acquired
-                # factor-1 twins and pair counts grew QUADRATICALLY
-                # (round 8 measured 311 → 251k true pairs at 10×) —
-                # exactly the data-shape change this generator
-                # documents avoiding. Per-word tagging keeps the
-                # within-copy shingle structure ISOMORPHIC to copy 0
-                # (same blocking-bucket sizes, planted dups stay
-                # near-dups) while making cross-copy shingles
-                # disjoint (jaccard 0), so dup structure replicates
-                # linearly. (An interleaved standalone tag token was
-                # tried and rejected: every 2-gram then contains the
-                # tag, degenerating shingle blocking to unigram
-                # buckets — OOM at 10×.)
-                c = c.withColumn(
-                    "text",
-                    F.regexp_replace(F.col("text"), r"(\S+)", f"$1c{i}"),
-                ).withColumn("n_chars", F.length(F.col("text")))
-            if t == "customer" and i > 0:
-                # Same linear-dup contract for NAME strings (round 9
-                # — the 10x sweep caught edit-distance pair counts
-                # going quadratic because verbatim c_name copies gave
-                # every name factor-1 identical twins and every
-                # edit-1 pair a full copy x copy cross product):
-                # append a DOUBLED-digit copy tag ("1" -> "11",
-                # "12" -> "1122"). Any two distinct copy tags differ
-                # by >= 2 edits (same length: one differing source
-                # digit occupies two positions; different lengths:
-                # >= 2 appended chars), and copy 0 is untagged (>= 2
-                # appended chars away) — so cross-copy edit distance
-                # is >= 2 everywhere and edit-1 structure replicates
-                # EXACTLY per copy, while within-copy pairwise
-                # distances are untouched (common suffix).
-                tag = "".join(ch * 2 for ch in str(i))
-                c = c.withColumn(
-                    "c_name", F.concat(F.col("c_name"), F.lit(tag))
-                )
-            if t == "embeddings" and i > 0:
-                c = c.withColumn(
-                    "embedding",
-                    F.expr(
-                        f"transform(embedding, (x, j) -> x * CAST("
-                        f"1 - 2 * ((CAST({i} AS INT) >> (j % 8)) & 1)"
-                        f" AS FLOAT))"
-                    ),
-                )
-            copies.append(c)
-        out = copies[0]
-        for c in copies[1:]:
-            out = out.unionByName(c)
-        out.write.mode("overwrite").parquet(f"{dst_dir}/{t}.parquet")

@@ -34,8 +34,6 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-import pytest
-
 from big_data_for_smart_houses_spark.operators.sessions import sessionize
 from big_data_for_smart_houses_spark.operators.cleaning import dedup_keep_first
 
@@ -641,101 +639,6 @@ def test_avi_codec_roundtrip(spark, width, height, frames):
         len(frames),
     )
     assert m["frame_means"] == frames
-
-
-def test_scale_up_tables_invariants(spark, tmp_path):
-    """The 10x-sweep scale-up must grow data the way production data
-    grows: exact factor x row counts, disjoint per-copy id ranges
-    (constant per-key density), unchanged embedding norms (sign masks
-    only), linearly-replicated exact-dup structure (per-copy text
-    suffix), and fixed dims passed through untouched."""
-    from pyspark.sql import functions as F
-
-    from big_data_for_smart_houses_spark.sources.synthetic import (
-        SCALE_KEY_STRIDE,
-        scale_up_tables,
-    )
-
-    src = "/root/testdata/sf0.001"
-    dst = str(tmp_path)
-    scale_up_tables(spark, src, dst, 3)
-
-    for t in ("events", "documents", "embeddings", "orders"):
-        n_src = spark.read.parquet(f"{src}/{t}.parquet").count()
-        n_dst = spark.read.parquet(f"{dst}/{t}.parquet").count()
-        assert n_dst == 3 * n_src, (t, n_src, n_dst)
-    assert spark.read.parquet(f"{dst}/nation.parquet").count() == 25
-
-    ev = spark.read.parquet(f"{dst}/events.parquet")
-    per_copy = (
-        ev.groupBy((F.col("event_id") / SCALE_KEY_STRIDE).cast("int"))
-        .count()
-        .collect()
-    )
-    assert sorted(r["count"] for r in per_copy) == [1000, 1000, 1000]
-
-    # norms preserved: sign masks never change magnitude
-    emb_src = spark.read.parquet(f"{src}/embeddings.parquet")
-    emb_dst = spark.read.parquet(f"{dst}/embeddings.parquet")
-    norm = F.aggregate(
-        F.transform("embedding", lambda x: x * x),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    s0 = emb_src.agg(F.sum(norm)).first()[0]
-    s3 = emb_dst.agg(F.sum(norm)).first()[0]
-    assert abs(s3 - 3 * s0) < 1e-3 * abs(s0), (s0, s3)
-
-    # exact-dup structure replicates LINEARLY: per-copy suffixes mean
-    # a text duplicated k times in the source is duplicated k times
-    # in each copy, never merged across copies
-    docs = spark.read.parquet(f"{dst}/documents.parquet")
-    src_groups = (
-        spark.read.parquet(f"{src}/documents.parquet")
-        .groupBy("text").count().groupBy("count").count().collect()
-    )
-    dst_groups = docs.groupBy("text").count().groupBy("count").count().collect()
-    src_hist = {r[0]: r[1] for r in src_groups}
-    dst_hist = {r[0]: r[1] for r in dst_groups}
-    assert dst_hist == {k: 3 * v for k, v in src_hist.items()}
-
-    # NEAR-dup structure replicates linearly too (round-8 regression):
-    # the old end-of-document suffix left cross-copy shingle sets ~90%
-    # shared, so every doc acquired factor-1 near-dup twins at any
-    # realistic threshold and the 10x sweep measured a quadratic
-    # corpus-shape artifact instead of the algorithm. Per-word tags
-    # must make cross-copy pairs IMPOSSIBLE at even a loose threshold.
-    from big_data_for_smart_houses_spark.extensions import dedup as _dd
-
-    pairs = _dd.ngram_jaccard_pairs(docs, threshold=0.2)
-    cross = pairs.filter(
-        (F.col("id1") / SCALE_KEY_STRIDE).cast("int")
-        != (F.col("id2") / SCALE_KEY_STRIDE).cast("int")
-    ).count()
-    assert cross == 0, f"{cross} cross-copy near-dup pairs"
-
-    # EDIT-distance structure replicates linearly too (round-9
-    # regression): verbatim c_name copies gave every name factor-1
-    # identical twins and every edit-1 pair a copy x copy cross
-    # product — quadratic pair growth the sweep flagged at 26.7x
-    # wall. Doubled-digit copy tags must push every cross-copy name
-    # pair to distance >= 2, and replicate within-copy pair counts
-    # exactly per copy.
-    cust = spark.read.parquet(f"{dst}/customer.parquet")
-    e1 = _dd.deletion_neighborhood_pairs(
-        cust, id_col="c_custkey", text_col="c_name"
-    )
-    cross_e1 = e1.filter(
-        (F.col("id1") / SCALE_KEY_STRIDE).cast("int")
-        != (F.col("id2") / SCALE_KEY_STRIDE).cast("int")
-    ).count()
-    assert cross_e1 == 0, f"{cross_e1} cross-copy edit-1 pairs"
-    n_src_pairs = _dd.deletion_neighborhood_pairs(
-        spark.read.parquet(f"{src}/customer.parquet"),
-        id_col="c_custkey",
-        text_col="c_name",
-    ).count()
-    assert e1.count() == 3 * n_src_pairs
 
 
 class TestGlobalScanProperty:

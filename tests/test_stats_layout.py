@@ -117,7 +117,7 @@ def test_interleave_bits_round_trip(spark):
         assert (r["a"], r["b"]) == (r["ra"], r["rb"])
 
 
-def test_zorder_key_monotone_in_both_dims(spark, tmp_path=None):
+def test_zorder_key_monotone_in_both_dims(spark):
     """Growing either dimension (other fixed) never decreases the
     key — the property range-pruning on the key relies on."""
     rows = [(i, float(j)) for i in range(0, 100, 7) for j in range(0, 100, 7)]
